@@ -12,9 +12,14 @@ object Plans {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     // `all` = EVERY query (the SCALE.md shuffle-inventory set). The
     // Clusters.assign consumers (dedup_clusters, mm_phash_clusters and
-    // their capped/persisted forms, dedup_clusters_persisted) run the
-    // star-contraction loop's per-round actions while the DataFrame is
-    // CONSTRUCTED; what this main then explains is the one
+    // their capped/persisted forms, dedup_clusters_persisted) compute
+    // their star edges while the DataFrame is CONSTRUCTED: the edge dedup
+    // shuffle, then one per-round test action (a structural check that
+    // also counts the edges), and either more star-contraction rounds or,
+    // once the edge count is within Clusters.FinishEdges, a union-find
+    // finish in one task behind a lazy checkpoint. Every current surface
+    // graph is under the bound, so none runs a round. What this main then
+    // explains is the one
     // post-contraction final tree — the interpretation the inventory
     // documents uniformly, instead of excluding an inconsistent subset
     // (round-12 ADVICE). Per-round plans are dedup_clusters' budgeted

@@ -124,17 +124,22 @@ object Dedup {
     * common-shingle keys.
     *
     * Scale shape: one shingle→minhash scan shared across all combos
-    * (persisted, released after use); per combo the band keys explode
-    * ×bands into a keyed count, and every output (including the pair
-    * volumes, via Σ C(g,2) on group SIZES) is arithmetic on the bucket
-    * histogram — no pair is ever materialized. */
+    * (checkpointed); per combo the band keys explode ×bands into a keyed
+    * count, and every output (including the pair volumes, via Σ C(g,2)
+    * on group SIZES) is arithmetic on the bucket histogram — no pair is
+    * ever materialized.
+    *
+    * Runs the signature shuffle when called, not at the result's action.
+    * The checkpoint is reliable only when the context has a checkpoint
+    * directory; otherwise its blocks are executor-local and not
+    * recomputed if an executor is lost (see `scaffold`). */
   def lshTuning(docs: DataFrame, n: Int = 2, totalHashes: Int = 8,
       combos: Seq[(Int, Int)] = Seq((8, 1), (4, 2), (2, 4)),
       maxBucket: Int = DefaultMaxBucket, s0: Double = 0.8): DataFrame = {
     require(combos.nonEmpty && combos.forall { case (b, r) => b * r == totalHashes },
       s"every (bands, rowsPerBand) must multiply to $totalHashes")
-    val sigs = minhashSignatures(docs, n, totalHashes).persist()
-    val out = combos.map { case (bands, rowsPerBand) =>
+    val sigs = scaffold(minhashSignatures(docs, n, totalHashes))
+    combos.map { case (bands, rowsPerBand) =>
       val keys = (0 until bands).map { b =>
         concat_ws(":", (lit(b.toString) +:
           (0 until rowsPerBand).map(r =>
@@ -161,7 +166,6 @@ object Dedup {
           col("pairs_banded"), col("pairs_capped"),
           lit(sCurveP).as("p_at_s0"))
     }.reduce(_ unionByName _)
-    graft.operators.CacheLifecycle.releaseAfterUse(out, Seq(sigs))
   }
 
   /** Banded pair join over an existing signature frame — the body of
@@ -198,6 +202,27 @@ object Dedup {
     * ×10.9 at ×10 data vs ×100.8 uncapped). */
   val DefaultMaxBucket: Int = 32
 
+  /** Lineage-truncated scaffolding for a frame one result reads more than
+    * once: a RELIABLE `checkpoint()` when the context has a checkpoint
+    * directory (`sc.setCheckpointDir`, the deployment's durability
+    * choice, as in [[Clusters.starEdges]]), else a lazy
+    * `localCheckpoint(false)`. Either way the shuffle stages below it run
+    * when the calling function builds its result, not at the caller's
+    * action (the reliable form also writes the blocks then). Local blocks
+    * live on the executors: one lost with its executor is not recomputed,
+    * and a later action on the result fails with "Checkpoint block not
+    * found" — on a multi-executor cluster, set a checkpoint directory.
+    *
+    * Not persist + [[graft.operators.CacheLifecycle.releaseAfterUse]]:
+    * that release's non-cascading `unpersist` re-plans any cached,
+    * not-yet-loaded frame whose plan contains the released one, and the
+    * caller persisting [[scalableCandidates]] was the observed case.
+    * Checkpoint blocks never enter the CacheManager; the ContextCleaner
+    * reclaims them once the frame is unreferenced. */
+  private def scaffold(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
+    else df.localCheckpoint(false)
+
   /** SCALE-default candidate set for retention composites (the cluster
     * index, [[graft.llm.Corpus.filterFunnel]], `dedup_clusters`):
     * [[minhashCandidates]] with the [[DefaultMaxBucket]] hot-bucket cap,
@@ -212,12 +237,18 @@ object Dedup {
     * for [[Clusters.assign]]. Composites therefore inherit neither the
     * measured quadratic nor a recall hole on verbatim dups; the uncapped
     * [[minhashCandidates]] stays available as the exact-recall opt-in.
-    * The signature frame is persisted so the band join and the star
-    * edges share one shingle→minhash scan (Bench clears cache per rep). */
+    * The signature frame is checkpointed so the band join and the star
+    * edges share one shingle→minhash scan; a caller may persist the
+    * result safely (no release of the signatures re-plans it).
+    *
+    * Runs the signature shuffle when called, not at the result's action.
+    * The checkpoint is reliable only when the context has a checkpoint
+    * directory; otherwise its blocks are executor-local and not
+    * recomputed if an executor is lost (see `scaffold`). */
   def scalableCandidates(docs: DataFrame, n: Int = 2, bands: Int = 4,
       rowsPerBand: Int = 2, maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val nh = bands * rowsPerBand
-    val sigs = minhashSignatures(docs, n, nh).persist()
+    val sigs = scaffold(minhashSignatures(docs, n, nh))
     val sigCols = (0 until nh).map(i => s"m$i")
     val groups = sigs.groupBy(sigCols.map(col): _*)
       .agg(min(col("doc_id")).as("a_id"), count(lit(1)).as("_g"))
@@ -226,10 +257,7 @@ object Dedup {
     val edges = sigs.join(groups, sigCols)
       .filter(col("doc_id") > col("a_id"))
       .select(col("a_id"), col("doc_id").as("b_id"))
-    graft.operators.CacheLifecycle.releaseAfterUse(
-      bandedPairs(sigs, bands, rowsPerBand, maxBucket)
-        .unionByName(edges).distinct(),
-      Seq(sigs))
+    bandedPairs(sigs, bands, rowsPerBand, maxBucket).unionByName(edges).distinct()
   }
 
   /** Winnowing-fingerprint dedup candidates (Schleimer et al. '03 — the
@@ -727,6 +755,12 @@ object Dedup {
     *
     * Pairs where either doc has no `verifyN`-gram (shorter than `verifyN`
     * words) are dropped — similarity at that resolution is undefined.
+    *
+    * Runs the candidate pipeline's shuffles (signatures, bands, pair
+    * join) when called, not at the result's action. The candidate
+    * checkpoint is reliable only when the context has a checkpoint
+    * directory; otherwise its blocks are executor-local and not
+    * recomputed if an executor is lost (see `scaffold`).
     */
   def verifyCandidates(
       docs: DataFrame,
@@ -734,11 +768,13 @@ object Dedup {
       verifyN: Int = 3, threshold: Double = 0.8,
       maxBucket: Int = Int.MaxValue): DataFrame = {
     // the candidate list rides into BOTH the intersection chain and the
-    // pair-back join: persisted (it is the banding-bounded pair list —
+    // pair-back join: checkpointed (it is the banding-bounded pair list —
     // linear by design) so the signature/band/self-join pipeline behind it
-    // runs once, not once per reference (round-18: −1.2 s at sf0.1/32c)
-    val cand = minhashCandidates(docs, bandN, bands, rowsPerBand, maxBucket)
-      .persist()
+    // runs once, not once per reference (round-18: −1.2 s at sf0.1/32c).
+    // Checkpointed, not persisted + released: releasing a persisted `cand`
+    // re-planned a caller's cached scalableCandidates frame, whose plan
+    // contains this one (see scaffold)
+    val cand = scaffold(minhashCandidates(docs, bandN, bands, rowsPerBand, maxBucket))
     val sh = shingles(docs, verifyN)
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
     val inter = cand
@@ -746,7 +782,7 @@ object Dedup {
       .join(sh.select(col("doc_id").as("b_id"), col("shingle")), Seq("b_id", "shingle"))
       .groupBy("a_id", "b_id")
       .agg(count(lit(1)).as("n_inter"))
-    val out = cand
+    cand
       .join(inter, Seq("a_id", "b_id"), "left")
       .join(sizes.select(col("doc_id").as("a_id"), col("n_sh").as("a_sh")), "a_id")
       .join(sizes.select(col("doc_id").as("b_id"), col("n_sh").as("b_sh")), "b_id")
@@ -754,7 +790,6 @@ object Dedup {
         (coalesce(col("n_inter"), lit(0L)).cast("double") /
           (col("a_sh") + col("b_sh") - coalesce(col("n_inter"), lit(0L)))).as("jaccard"))
       .withColumn("verified", col("jaccard") >= threshold)
-    graft.operators.CacheLifecycle.releaseAfterUse(out, Seq(cand))
   }
 
   /** SimHash (Charikar '02) over distinct shingles, `bits`-wide: bit b of the
@@ -909,16 +944,22 @@ object Dedup {
     * k-column signature rows onto the pair list (pair list ≪ corpus); the
     * exact side reuses the [[verifyCandidates]] shingle-level join-chain
     * shape. Integer match counts; two exact double divisions; |a−b| of
-    * exact doubles is exact. */
+    * exact doubles is exact.
+    *
+    * Runs the signature and candidate shuffles when called, not at the
+    * result's action. Both checkpoints are reliable only when the context
+    * has a checkpoint directory; otherwise their blocks are
+    * executor-local and not recomputed if an executor is lost (see
+    * `scaffold`). */
   def minhashCalibration(docs: DataFrame, n: Int = 2, bands: Int = 4,
       rowsPerBand: Int = 2, maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val k = bands * rowsPerBand
     // sigs feeds the band join AND both per-side estimate joins; cand
-    // feeds the estimate AND the exact chain — persist both (one doc-keyed
-    // signature row per doc; the banding-bounded pair list) so the
-    // shingle→minhash pipeline runs once (round-18)
-    val sigs = minhashSignatures(docs, n, k).persist()
-    val cand = bandedPairs(sigs, bands, rowsPerBand, maxBucket).persist()
+    // feeds the estimate AND the exact chain — checkpoint both (one
+    // doc-keyed signature row per doc; the banding-bounded pair list) so
+    // the shingle→minhash pipeline runs once (round-18)
+    val sigs = scaffold(minhashSignatures(docs, n, k))
+    val cand = scaffold(bandedPairs(sigs, bands, rowsPerBand, maxBucket))
     val aSig = sigs.select(
       col("doc_id").as("a_id") +: (0 until k).map(i => col(s"m$i").as(s"am$i")): _*)
     val bSig = sigs.select(
@@ -939,7 +980,7 @@ object Dedup {
       .join(sh.select(col("doc_id").as("b_id"), col("shingle")), Seq("b_id", "shingle"))
       .groupBy("a_id", "b_id")
       .agg(count(lit(1)).as("n_inter"))
-    val out = est
+    est
       .join(inter, Seq("a_id", "b_id"), "left")
       .join(sizes.select(col("doc_id").as("a_id"), col("n_sh").as("a_sh")), "a_id")
       .join(sizes.select(col("doc_id").as("b_id"), col("n_sh").as("b_sh")), "b_id")
@@ -948,7 +989,6 @@ object Dedup {
           (col("a_sh") + col("b_sh") - coalesce(col("n_inter"), lit(0L))))
       .withColumn("abs_err", abs(col("est_jaccard") - col("exact_jaccard")))
       .select("a_id", "b_id", "est_jaccard", "exact_jaccard", "abs_err")
-    graft.operators.CacheLifecycle.releaseAfterUse(out, Seq(sigs, cand))
   }
 
   /** SOURCE-level n-gram containment matrix: for every ordered source pair

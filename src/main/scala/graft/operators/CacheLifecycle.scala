@@ -37,6 +37,12 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * convergence LOOP (`Dedup.clusters`' checkpointed star contraction,
   * `GlobalOrder`'s range-boundary frames) keeps explicit management
   * instead, because those run many actions over the same lineage.
+  *
+  * Known race: the release's `unpersist(false)` runs on the listener-bus
+  * thread after the action and re-plans every cached, not-yet-loaded
+  * frame whose plan contains the released one, so a caller that persists
+  * a frame built over this scaffolding may recompute it. Scaffolding a
+  * caller may also cache uses a checkpoint instead (`Dedup.scaffold`).
   */
 object CacheLifecycle {
 

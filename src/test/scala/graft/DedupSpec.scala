@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.llm.{Dedup, Sampling, Similarity}
+import graft.testutil.JobCounter
 
 /** LLM-pipeline operator semantics on planted data: exact dup collapse,
   * MinHash/Jaccard recall on planted near-duplicates, LSH candidate
@@ -970,10 +971,12 @@ class DedupSpec extends SparkSpec {
 
   test("connected components: long path converges within the O(log n) budget") {
     // a 64-node path is the worst case for label propagation (diameter 63);
-    // alternating stars must still collapse it to a single root-1 cluster
+    // alternating stars must still collapse it to a single root-1 cluster.
+    // finishEdges = 0: the star loop runs, not the one-task finish
     val pairs = (1L until 64L).map(i => (i, i + 1)).toDF("a_id", "b_id")
     val docs = (1L to 64L).toDF("doc_id")
-    val out = graft.llm.Clusters.assign(docs, pairs).collect()
+    val out = graft.llm.Clusters.assignStars(
+      docs, graft.llm.Clusters.contract(pairs, 20, None, finishEdges = 0)._1).collect()
     assert(out.length === 64)
     assert(out.forall(r => r.getLong(1) == 1L && r.getLong(2) == 64L))
   }
@@ -983,9 +986,10 @@ class DedupSpec extends SparkSpec {
     // ~127 rounds; alternating stars must land well inside 2·log2(128)+2.
     val pairs = (1L until 128L).map(i => (i, i + 1)).toDF("a_id", "b_id")
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    // finishEdges = 0: the star loop runs, not the one-task finish
     for (ckpt <- Seq(None, Some(dir))) {
-      val (stars, rounds) = graft.llm.Clusters.starEdgesWithRounds(
-        pairs, maxIter = 20, checkpointDir = ckpt)
+      val (stars, rounds) = graft.llm.Clusters.contract(
+        pairs, maxIter = 20, checkpointDir = ckpt, finishEdges = 0)
       assert(rounds <= 16, s"chain must collapse in O(log n) rounds, took $rounds (ckpt=$ckpt)")
       // final graph is a star: every node points at root 1
       val edges = stars.collect().map(r => (r.getLong(0), r.getLong(1))).sorted
@@ -995,6 +999,143 @@ class DedupSpec extends SparkSpec {
     val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
       .filter(p => java.nio.file.Files.isRegularFile(p)).count()
     assert(wrote > 0, "reliable checkpoint must persist round blocks to the dir")
+    // at the default bound the chain is small: the one-task union-find
+    // finish returns the same star edges without a contraction round
+    for (ckpt <- Seq(None, Some(dir))) {
+      val (stars, rounds) = graft.llm.Clusters.starEdgesWithRounds(pairs, checkpointDir = ckpt)
+      assert(rounds === 0, s"a graph under the edge bound runs no star round (ckpt=$ckpt)")
+      assert(stars.collect().map(r => (r.getLong(0), r.getLong(1))).sorted ===
+        (2L to 128L).map(i => (i, 1L)).toArray, s"ckpt=$ckpt")
+    }
+  }
+
+  test("connected components: one-task finish and star loop return identical rows") {
+    // seeded random graphs mixing every shape the contraction must handle:
+    // chains, stars, cliques, isolated pairs, duplicate and reversed pairs,
+    // self-loops, plus docs that appear in no pair
+    for (seed <- 1 to 4) {
+      val rnd = new scala.util.Random(seed)
+      val edges = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
+      var next = 0L
+      // n unused ids in random order; the id after them stays a singleton
+      def fresh(n: Int): IndexedSeq[Long] = {
+        val ids = rnd.shuffle((0 until n).map(next + _))
+        next += n + 1
+        ids
+      }
+      for (_ <- 0 until 3) {
+        val c = fresh(2 + rnd.nextInt(30))
+        edges ++= c.zip(c.tail)
+        val st = fresh(2 + rnd.nextInt(10))
+        edges ++= st.tail.map(x => (x, st.head))
+        val q = fresh(2 + rnd.nextInt(5))
+        edges ++= (for (a <- q; b <- q if a < b) yield (a, b))
+        val pr = fresh(2)
+        edges += ((pr(0), pr(1)))
+      }
+      edges ++= rnd.shuffle(edges.toList).take(5).map(_.swap)
+      edges ++= rnd.shuffle(edges.toList).take(5)
+      edges ++= edges.take(3).map { case (a, _) => (a, a) }
+      val nDocs = next + 5
+      val pairs = rnd.shuffle(edges.toList).toDF("a_id", "b_id")
+      val docs = (0L until nDocs).toDF("doc_id")
+      def rows(out: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long)] =
+        out.orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      // the graph is no star forest (the loop needs rounds), so a 0-round
+      // result at the default bound is the finish's
+      val (loopStars, loopRounds) = graft.llm.Clusters.contract(pairs, 20, None, finishEdges = 0)
+      assert(loopRounds > 0, s"seed $seed")
+      assert(graft.llm.Clusters.starEdgesWithRounds(pairs)._2 === 0, s"seed $seed: finish path")
+      val loop = rows(graft.llm.Clusters.assignStars(docs, loopStars))
+      val finish = rows(graft.llm.Clusters.assign(docs, pairs))
+      assert(finish === loop, s"seed $seed")
+      // in-test union-find: doc → (min id of its component, component size)
+      val parent = scala.collection.mutable.Map[Long, Long]()
+      def find(x: Long): Long = parent.get(x) match {
+        case Some(p) if p != x => val r = find(p); parent(x) = r; r
+        case _ => x
+      }
+      edges.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      val root = (0L until nDocs).map(d => d -> find(d)).toMap
+      val size = root.values.groupBy(identity).map { case (r, m) => r -> m.size.toLong }
+      assert(finish === (0L until nDocs).map(d => (d, root(d), size(root(d)))), s"seed $seed")
+    }
+  }
+
+  test("connected components: the finish takes over mid-loop once the edge count drops") {
+    // 20 five-cliques chained end to end: 219 edges, most of them
+    // redundant. A bound just under that forces the first round; the
+    // contracted graph is under it but not yet a star forest
+    val cliques = (0L until 20L).flatMap { c =>
+      val q = (0L until 5L).map(5 * c + _)
+      (for (a <- q; b <- q if a < b) yield (a, b)) ++ (if (c > 0) Seq((5 * c - 1, 5 * c)) else Nil)
+    }
+    val pairs = cliques.toDF("a_id", "b_id")
+    val (loopStars, loopRounds) = graft.llm.Clusters.contract(pairs, 20, None, finishEdges = 0)
+    val (stars, rounds) = graft.llm.Clusters.contract(pairs, 20, None, finishEdges = cliques.size - 1)
+    assert(rounds === 1 && loopRounds > 1, s"finish after $rounds rounds, loop took $loopRounds")
+    def edges(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted
+    assert(edges(stars) === (1L until 100L).map(i => (i, 0L)).toArray)
+    assert(edges(loopStars) === edges(stars))
+  }
+
+  test("connected components: a small graph costs a fixed number of jobs") {
+    // ~300-node planted chains: the star loop ran two actions per round;
+    // the one-task finish must not bring per-round jobs back
+    val pairs = (0L until 300L).filter(_ % 50 != 49).map(i => (i, i + 1)).toDF("a_id", "b_id")
+    val docs = (0L until 300L).toDF("doc_id")
+    val (rows, counts) = JobCounter(spark)(graft.llm.Clusters.assign(docs, pairs).collect())
+    assert(rows.length === 300)
+    assert(rows.forall(r => r.getLong(1) == r.getLong(0) / 50 * 50 && r.getLong(2) == 50L))
+    assert(counts.jobs <= 6, s"Clusters.assign on a small graph ran ${counts.jobs} jobs")
+  }
+
+  test("verifyCandidates does not re-plan a caller's persisted candidate frame") {
+    // verifyCandidates' own candidate list shares its plan with
+    // scalableCandidates: a persist + async release of it re-planned the
+    // caller's persisted, not-yet-loaded frame (a new cache entry), which
+    // then recomputed its shuffles on read.
+    // 60 planted groups: a random 20-word doc, a one-word edit of it, and
+    // an unrelated doc
+    val rnd = new scala.util.Random(7)
+    def words(): Seq[String] = Seq.fill(20)(s"w${rnd.nextInt(400)}")
+    val docs = (0L until 60L).flatMap { i =>
+      val base = words()
+      Seq((3 * i, base.mkString(" ")), (3 * i + 1, base.updated(5, "edit").mkString(" ")),
+        (3 * i + 2, words().mkString(" ")))
+    }.toDF("doc_id", "text")
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val sc = spark.sparkContext
+    def cached(df: org.apache.spark.sql.DataFrame) = session.sharedState.cacheManager
+      .lookupCachedData(session, df.queryExecution.analyzed).map(_.cachedRepresentation)
+    val before = sc.getPersistentRDDs.keySet
+    val pairs = Dedup.scalableCandidates(docs).persist()
+    try {
+      val entry = cached(pairs)
+      assert(entry.isDefined)
+      Dedup.verifyCandidates(docs, maxBucket = Dedup.DefaultMaxBucket)
+        .write.mode("overwrite").format("noop").save()
+      // every listener (a release included) has run before the check
+      org.apache.spark.ListenerBusDrain(sc)
+      assert(cached(pairs).exists(_ eq entry.get), "the persisted candidate frame was re-planned")
+      val first = pairs.collect().toSet
+      assert(first.nonEmpty)
+      val (reads, counts) = JobCounter(spark)(Seq(pairs.collect(), pairs.collect()))
+      assert(counts.shuffleStages === 0,
+        s"re-reading the persisted pairs ran ${counts.shuffleStages} shuffle stages")
+      reads.foreach(r => assert(r.toSet === first))
+    } finally {
+      pairs.unpersist(true)
+      // drop the checkpoint blocks this test left, so suites that count
+      // persistent RDDs do not see them
+      sc.getPersistentRDDs.foreach { case (id, rdd) =>
+        if (!before.contains(id)) rdd.unpersist(blocking = true)
+      }
+    }
   }
 
   test("mixture weights: α=1/2 flattens the head, exact on perfect squares") {

@@ -141,6 +141,38 @@ class Hash31Spec extends SparkSpec {
     }
   }
 
+  test("pqBestCodes: permuted or repeated s-groups are rejected identically on both paths") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types._
+    val emb = Literal.create(Seq(1.0f, 2.0f, 3.0f, 4.0f), ArrayType(FloatType))
+    val cbType = ArrayType(StructType(Seq(StructField("s", IntegerType),
+      StructField("code", LongType), StructField("sub", ArrayType(DoubleType)),
+      StructField("c_dot", DoubleType))))
+    def encode(cb: Seq[(Int, Long, Seq[Double], Double)]) = {
+      val e = graft.functions.PqBestCodes(
+        emb, Literal.create(cb.map(org.apache.spark.sql.Row.fromTuple), cbType), 2)
+      // interpreted (nullSafeEval) and generated code, called directly
+      (() => e.eval(InternalRow.empty),
+        () => GenerateUnsafeProjection.generate(Seq(e)).apply(InternalRow.empty))
+    }
+    val (s0, s1) = ((0, 0L, Seq(1.0, 0.0), 1.0), (1, 0L, Seq(0.0, 1.0), 1.0))
+    val (goodInterp, goodCodegen) = encode(Seq(s0, s1))
+    val good = goodInterp().asInstanceOf[InternalRow]
+    assert(good.getArray(0).toLongArray().toSeq === Seq(0L, 0L))
+    assert(goodCodegen().getStruct(0, 2).getArray(0).toLongArray().toSeq === Seq(0L, 0L))
+    // complete but permuted (the codes would land in the wrong subspace),
+    // and complete plus a repeated group
+    for (cb <- Seq(Seq(s1, s0), Seq(s0, s1, s0))) {
+      val (interp, codegen) = encode(cb)
+      val a = intercept[IllegalArgumentException](interp()).getMessage
+      val b = intercept[IllegalArgumentException](codegen()).getMessage
+      assert(a.contains("pq_best_codes"), a)
+      assert(a === b, s"codebook $cb: interpreted and codegen errors differ")
+    }
+  }
+
   test("pqBestCodes/nearestCentroid reject integral element types at analysis time") {
     import spark.implicits._
     val intEmb = Seq(Seq(1, 2, 3, 4)).toDF("embedding")
