@@ -9,7 +9,7 @@ package graft.cdc
   * data path attaches through the handlers: `startSnapshot` emits the
   * seed-row INSERT batch ([[Capture.snapshot]] output), `startTailing`
   * starts the StreamingQuery over the tail stream
-  * ([[graft.streaming.Streams]]), and `stop` stops it. `pause`/`resume`
+  * ([[graft.streaming.StreamsV2]]), and `stop` stops it. `pause`/`resume`
   * drive the controller's [[Consumer.PauseGate]], so a `foreachBatch`
   * consumer guarded by [[Consumer.PauseGate.guard]] stops applying while
   * PAUSED and the backlog builds in the source — the reference's paused

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * Batch-replay form: with the full feed known, every txn is complete and the
   * commit floor degenerates to the global order, so the result is the
   * deterministic ordered apply log. The streaming form (incremental buffering
-  * + watermark floor) lives in `graft.streaming.TxnStream`.
+  * + watermark floor) is `graft.streaming.StreamsV2.applyOnCommitStream`.
   */
 object Txn {
 

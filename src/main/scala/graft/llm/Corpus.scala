@@ -84,7 +84,8 @@ object Corpus {
     * counts are per-row projections (the token array is named once,
     * `quality`'s staged-projection discipline), and the only join is
     * stream-static — append mode, no watermark, no streaming state. The
-    * same call works in batch (oracled as `corpus_admission`); the
+    * same call works in batch (oracled as `corpus_admission`) and on a
+    * stream without any [[graft.streaming.StreamsV2]] operator; the
     * streaming parity is pinned in StreamingSpec.
     */
   def admissionGate(arrivals: DataFrame, corpus: DataFrame): DataFrame =
@@ -820,7 +821,7 @@ object Corpus {
     * order until their source's running total passes the budget. This is
     * the INGEST-time quota — caps a runaway crawler feed at write time —
     * where [[tokenBudget]] is the curation-time global cut by quality.
-    * The streaming twin ([[graft.streaming.Streams.budgetAdmissionStream]])
+    * The streaming twin ([[graft.streaming.StreamsV2.budgetAdmissionStream]])
     * carries the same running total as keyed state across micro-batches and
     * must agree with this batch form on ordered arrivals.
     *

@@ -81,8 +81,8 @@ object DebeziumSource {
     * `consumer.mjs:434-440`): `readStream.format("kafka")` →
     * CAST(value AS STRING) → [[decode]], with the (topic, partition,
     * offset) triple passed through for exactly-once dedup downstream
-    * (`Streams.dedupOffsets` on exactly those columns, `consumer.mjs:
-    * 122-143`).
+    * (`Dataset.dropDuplicatesWithinWatermark` on exactly those columns,
+    * under a watermark the caller sets; `consumer.mjs:122-143`).
     *
     * Gated on `spark.graft.kafka.enabled=true`: this sandbox ships neither
     * a broker nor the `spark-sql-kafka` connector jar, so the path can

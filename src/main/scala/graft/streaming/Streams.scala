@@ -1,17 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-
-/** Structured-Streaming forms of the stateful CDC operators.
+/** Wire and state types of the streaming operators, and the pure per-batch
+  * folds that define their semantics.
   *
-  * The batch-replay forms in `graft.cdc` are the deterministic oracles; these
-  * are the unbounded-stream equivalents built on the public
-  * `[flat]mapGroupsWithState` API (no custom physical plans), as SURVEY §2.9
-  * prescribes. State is keyed — per txn or per row key — so it shards across
-  * executors; timeouts bound state growth (the reference keeps buffers
-  * forever, `src/changefeed/model.ts:176-205`; at 100 TB that leaks, so every
-  * operator here takes a TTL).
+  * Each `*Fold` takes the carried state and one micro-batch of a key's rows
+  * and returns the next state and the emitted rows; chopped == one-shot on
+  * the documented arrival order (FoldPropertiesSpec). The operators that
+  * run them on a stream are in [[StreamsV2]].
   */
 object Streams {
 
@@ -40,120 +35,13 @@ object Streams {
       txId: String, nEvents: Int, commitTs: Long, firstLsn: Long,
       events: Seq[Event])
 
-  /** Keyed buffer state for txn assembly (public: Spark codegen needs
-    * accessible accessors on state encoder classes). */
-  case class TxnBuf(events: Seq[Event])
-
-  /** Txn assembly (`src/changefeed/model.ts:176-205`, `web/App.tsx:2115-2156`):
-    * buffer events per txId until `count >= total` (or a `last` marker),
-    * then emit the whole transaction, events sorted by `txIndex`
-    * (`model.ts:196`). Incomplete txns are dropped after `ttlMs` processing
-    * time — the safety valve the reference lacks.
-    */
-  def assembleTxns(
-      events: Dataset[Event],
-      ttlMs: Long = 60000L): Dataset[AssembledTxn] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    // ttlMs <= 0 disables the timeout entirely — with ProcessingTimeTimeout
-    // armed, a zero-interval trigger busy-loops empty micro-batches just to
-    // evaluate timers; tests (and bounded replays) don't want that.
-    val timeoutConf =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    events
-      .groupByKey(_.txId)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
-        (txId: String, incoming: Iterator[Event], state: GroupState[TxnBuf]) => {
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val buf = (state.getOption.map(_.events).getOrElse(Seq.empty) ++ incoming).toList
-            if (Streams.txnComplete(buf)) {
-              state.remove()
-              val sorted = buf.sortBy(e => (e.txIndex, e.lsn))
-              Iterator.single(AssembledTxn(
-                txId, sorted.size,
-                sorted.map(_.commitTs).max,
-                sorted.map(_.lsn).min,
-                sorted))
-            } else {
-              state.update(TxnBuf(buf))
-              if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
-              Iterator.empty
-            }
-          }
-        })
-  }
-
-  /** Apply-on-commit with the commit floor as an event-time watermark
-    * (`src/changefeed/model.ts:169-244`, SURVEY §2.9: the floor — min
-    * commitTs over in-flight events — IS the watermark). Transactions
-    * assemble per txId; a *complete* transaction is held in state until the
-    * watermark passes its commitTs (drifted stragglers keep the watermark —
-    * and therefore every commit-later txn — back), then emits. Incomplete
-    * txns are dropped as soon as the watermark passes their max buffered
-    * commitTs — no extra lateness beyond `watermarkDelay` is granted (the
-    * event-time timeout is `max(commitTs, watermark + 1)`).
-    *
-    * Note: `txnComplete` counts duplicate deliveries toward `total`
-    * (reference-faithful, `model.ts:178-186`), so at-least-once sources must
-    * run `dedupOffsets` upstream of assembly.
-    */
-  def applyOnCommitStream(
-      events: Dataset[Event],
-      watermarkDelay: String = "10 seconds"): Dataset[AssembledTxn] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, timestamp_millis}
-    val watermarked = events
-      .withColumn("event_time", timestamp_millis(col("commitTs")))
-      .withWatermark("event_time", watermarkDelay)
-      .as[Event]
-    watermarked
-      .groupByKey(_.txId)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        (txId: String, incoming: Iterator[Event], state: GroupState[TxnBuf]) => {
-          def assembled(buf: Seq[Event]): AssembledTxn = {
-            val sorted = buf.sortBy(e => (e.txIndex, e.lsn)).toList
-            AssembledTxn(txId, sorted.size, sorted.map(_.commitTs).max,
-              sorted.map(_.lsn).min, sorted)
-          }
-          if (state.hasTimedOut) {
-            val buf = state.getOption.map(_.events).getOrElse(Seq.empty)
-            state.remove()
-            if (Streams.txnComplete(buf)) Iterator.single(assembled(buf)) else Iterator.empty
-          } else {
-            val buf = (state.getOption.map(_.events).getOrElse(Seq.empty) ++ incoming).toList
-            val commitTs = buf.map(_.commitTs).max
-            if (Streams.txnComplete(buf) && state.getCurrentWatermarkMs() >= commitTs) {
-              state.remove()
-              Iterator.single(assembled(buf))
-            } else {
-              state.update(TxnBuf(buf))
-              // hold until the floor (watermark) passes the commit
-              state.setTimeoutTimestamp(math.max(commitTs, state.getCurrentWatermarkMs() + 1))
-              Iterator.empty
-            }
-          }
-        })
-  }
-
   /** Materialized destination row emitted by the streaming apply. */
   case class RowState(
       tbl: String, pk: String, valV: Option[Double], kV: Option[Long],
       version: Long, deleted: Boolean, lastLsn: Long = 0L)
 
-  /** Streaming merge-upsert apply keyed by (tbl, pk) — the unbounded form of
-    * `ApplyEngine.applyState`: delete clears, partial payloads merge
-    * (`src/domain/storage.ts:137-164`). Emits the post-image after each
-    * micro-batch's events for the key (ordered by lsn within the batch).
-    * Deleted keys emit a `deleted = true` tombstone and drop their state.
-    */
-  /** One apply step for a batch of same-key events — the shared fold of
-    * [[applyStream]] and its `transformWithState` twin
-    * ([[StreamsV2.applyStream]]): events process in lsn order, delete
+  /** One apply step for a batch of same-key events — the fold of
+    * [[StreamsV2.applyStream]]: events process in lsn order, delete
     * resets to a tombstone, partial payloads merge over the current
     * image. */
   def applyFold(key: (String, String), start: Option[RowState],
@@ -175,78 +63,12 @@ object Streams {
     }
   }
 
-  def applyStream(
-      events: Dataset[Event],
-      ttlMs: Long = 3600000L): Dataset[RowState] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val timeoutConf =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    events
-      .groupByKey(e => (e.tbl, e.pk))
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
-        (key: (String, String), incoming: Iterator[Event], state: GroupState[RowState]) => {
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val next = applyFold(key, state.getOption, incoming.toSeq)
-            if (next.deleted) state.remove()
-            else {
-              state.update(next)
-              if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
-            }
-            Iterator.single(next)
-          }
-        })
-  }
-
-  /** Streaming polling capture (`sim/engines/PollingEngine.ts:59-84` as an
-    * unbounded stream): tumbling event-time windows of `pollIntervalMs` per
-    * key, emitting only the latest state per (key, window) once the
-    * watermark closes the window — the poll's lossy-by-design semantics
-    * (intermediate versions never leave the aggregation). Uses windowed
-    * `max_by` on event time, so state per key-window is O(1).
-    */
-  def pollStream(
-      events: Dataset[Event],
-      pollIntervalMs: Long = 1000L,
-      watermarkDelay: String = "10 seconds"): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val interval = s"$pollIntervalMs milliseconds"
-    events
-      .withColumn("event_time", timestamp_millis(col("commitTs")))
-      .withWatermark("event_time", watermarkDelay)
-      .groupBy(window(col("event_time"), interval), col("tbl"), col("pk"))
-      .agg(
-        max_by(struct(col("opCode"), col("valV"), col("kV"), col("lsn")), col("lsn")).as("latest"),
-        count(lit(1)).as("ops_in_window"))
-      .select(
-        col("tbl"), col("pk"),
-        col("window.end").as("poll_ts"),
-        col("latest.opCode").as("op_code"),
-        col("latest.valV").as("after_val"),
-        col("latest.kV").as("after_k"),
-        col("ops_in_window"))
-  }
-
-  /** Exactly-once ingestion dedup (`consumer.mjs:122-143` offset-dedup):
-    * drop replayed events by (topic, partition, offset) within the watermark
-    * — `dropDuplicatesWithinWatermark` keyed on the offset triple. `df` must
-    * carry an event-time column already watermarked by the caller.
-    */
-  def dedupOffsets[T](ds: Dataset[T], cols: Seq[String]): Dataset[T] =
-    ds.dropDuplicatesWithinWatermark(cols)
-
   /** Token-bucket carry-over state for the streaming throttle. */
   case class ThrottleState(tick: Long, allowance: Double, usedThisTick: Int)
 
   /** One micro-batch step of the token-bucket drain: fold `incoming`
     * (any order; sorted internally) through the bucket, returning the
-    * carried state and the drained events. Shared by the
-    * `flatMapGroupsWithState` and `transformWithState` forms so the two
-    * APIs cannot drift semantically. */
+    * carried state and the drained events ([[StreamsV2.throttleStream]]). */
   def throttleFold(
       st: ThrottleState,
       incoming: Seq[graft.cdc.Consumer.DeliveryIn],
@@ -276,41 +98,13 @@ object Streams {
     (ThrottleState(tick, allowance, used), out)
   }
 
-  /** Streaming consumer throttle — the unbounded form of
-    * `Consumer.throttleDrain` (`web/App.tsx:2106-2113,2185-2201`): the
-    * per-lane token bucket (tick, allowance, used) lives in keyed state and
-    * carries across micro-batches, so a lane's drain schedule is identical
-    * no matter how the stream is chopped into batches. Within a batch,
-    * events drain in (availableAt, seq) order — the same order the batch
-    * fold consumes. State is O(1) per lane; lanes shard with the shuffle.
-    */
-  def throttleStream(
-      events: Dataset[graft.cdc.Consumer.DeliveryIn],
-      rate: Double,
-      stepMs: Long = 50L,
-      batchCap: Int = 50): Dataset[graft.cdc.Consumer.DeliveryOut] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .groupByKey(_.method)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (method: String, incoming: Iterator[graft.cdc.Consumer.DeliveryIn],
-         state: GroupState[ThrottleState]) => {
-          val st = state.getOption.getOrElse(ThrottleState(0L, 0.0, 0))
-          val (next, out) = throttleFold(st, incoming.toSeq, rate, stepMs, batchCap)
-          state.update(next)
-          out.iterator
-        })
-  }
-
   /** Per-partition queue state for the streaming broker delivery. */
   case class BrokerQueueState(tick: Long, usedThisTick: Int)
 
   /** One micro-batch step of the FIFO broker delivery: fold `incoming` (any
     * order; sorted by lsn internally — the enqueue order) through the
-    * per-partition (tick, used) queue state. Shared by the
-    * `flatMapGroupsWithState` and `transformWithState` forms so the two
-    * APIs cannot drift. */
+    * per-partition (tick, used) queue state
+    * ([[StreamsV2.brokerDeliverStream]]). */
   def brokerFold(
       part: Int,
       st: BrokerQueueState,
@@ -330,32 +124,6 @@ object Streams {
     (BrokerQueueState(tick, used), out)
   }
 
-  /** Streaming exact broker delivery — the unbounded form of
-    * `Consumer.brokerDeliverExact` (`model.ts:246-263` `pollBroker`): each
-    * partition's (tick, used) queue state is keyed state, so per-tick caps
-    * and head-of-line FIFO order carry across micro-batches. Within a
-    * batch, events process in enqueue (lsn) order — the queue order the
-    * reference maintains. Exactly-once FIFO requires lsn-ordered arrival
-    * per partition (the broker's own guarantee).
-    */
-  def brokerDeliverStream(
-      events: Dataset[graft.cdc.Consumer.BrokerIn],
-      tickMs: Long = 50L,
-      maxApplyPerTick: Int = 4): Dataset[graft.cdc.Consumer.BrokerOut] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .groupByKey(_.part)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (part: Int, incoming: Iterator[graft.cdc.Consumer.BrokerIn],
-         state: GroupState[BrokerQueueState]) => {
-          val st = state.getOption.getOrElse(BrokerQueueState(0L, 0))
-          val (next, out) = brokerFold(part, st, incoming.toSeq, tickMs, maxApplyPerTick)
-          state.update(next)
-          out.iterator
-        })
-  }
-
   /** A pending drift-broker stack entry (public for the state encoder). */
   case class DriftEntry(lsn: Long, t: Long, availableAt: Long, dropped: Boolean)
 
@@ -364,31 +132,10 @@ object Streams {
     * the same bound the reference's in-memory queue carries. */
   case class DriftQueueState(tick: Long, stack: Seq[DriftEntry])
 
-  /** Streaming exact drift-on broker delivery — the unbounded form of
-    * `Consumer.brokerDeliverDriftExact` (`model.ts:141-149,246-263`): with
-    * commit drift every event is spliced into the queue FRONT, so pending
-    * events form a LIFO stack and a drifted head blocks older events. The
-    * per-partition (clock, stack) carries in keyed state across
-    * micro-batches.
-    *
-    * A batch can only simulate ticks strictly BEFORE its own latest arrival
-    * tick — a later micro-batch may still deliver arrivals for that tick,
-    * and they would stack on top and change what pops — so the final tick's
-    * arrivals are pushed pending and its drain defers to the next batch.
-    * That makes the fold exact under ARBITRARY micro-batch boundaries (the
-    * only requirement is per-partition lsn-ordered arrival, the broker's
-    * own guarantee — same as [[brokerDeliverStream]]). The tail of the
-    * stream stays pending until either (a) `ttlMs` fires with no new
-    * arrivals — the processing-time timeout drains the stack to empty — or
-    * (b) a bounded replay appends a flush sentinel (an event with `t` past
-    * every real arrival); tests use (b) so no timer wall-clock enters the
-    * assertion.
-    */
-  /** One micro-batch step of the drift-broker LIFO drain — the core shared
-    * by the `flatMapGroupsWithState` and `transformWithState` forms (the
-    * two APIs cannot drift). Simulates ticks strictly BEFORE the batch's
-    * latest arrival tick, pushes the final tick's arrivals pending (their
-    * drain belongs to the next batch — see [[brokerDeliverDriftStream]]'s
+  /** One micro-batch step of the drift-broker LIFO drain. Simulates ticks
+    * strictly BEFORE the batch's latest arrival tick, pushes the final
+    * tick's arrivals pending (their drain belongs to the next batch — see
+    * [[StreamsV2.brokerDeliverDriftStream]]'s
     * exactness argument), and returns the carried (clock, stack) state.
     * `flush = true` means no more arrivals are coming: drain to empty. */
   def driftFold(
@@ -451,44 +198,11 @@ object Streams {
     }
   }
 
-  def brokerDeliverDriftStream(
-      events: Dataset[graft.cdc.Consumer.DriftIn],
-      tickMs: Long = 50L,
-      maxApplyPerTick: Int = 4,
-      ttlMs: Long = 0L): Dataset[graft.cdc.Consumer.BrokerOut] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val timeoutConf =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    events
-      .groupByKey(_.part)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
-        (part: Int, incoming: Iterator[graft.cdc.Consumer.DriftIn],
-         state: GroupState[DriftQueueState]) => {
-          val st = state.getOption.getOrElse(DriftQueueState(0L, Seq.empty))
-          if (state.hasTimedOut) {
-            // no more arrivals coming: drain to empty
-            val (_, out) = driftFold(part, st, Seq.empty, tickMs, maxApplyPerTick, flush = true)
-            state.remove()
-            out.iterator
-          } else {
-            val (next, out) = driftFold(part, st, incoming.toSeq, tickMs, maxApplyPerTick)
-            state.update(next)
-            if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
-            out.iterator
-          }
-        })
-  }
-
   /** A consumed-lag sample in lane delivery order. */
   case class LagSample(method: String, ord1: Long, ord2: Long, lagMs: Long)
 
   /** Rolling-percentile snapshot emitted after each micro-batch per lane. */
   case class LagSnapshot(method: String, p50: Double, p95: Double, maxLag: Long, windowN: Int)
-
-  /** Ring-buffer state: the last ≤ N lag samples in delivery order. */
-  case class LagRingState(samples: Seq[Long])
 
   /** Exact interpolating percentile over a sorted sample array — the
     * reference's `percentile` (`src/engine/metrics.ts:131-139`:
@@ -502,45 +216,6 @@ object Streams {
     else sorted(lo) + (idx - lo) * (sorted(hi) - sorted(lo))
   }
 
-  /** Streaming rolling lag percentiles — the live form of the reference's
-    * MetricsStore (`src/engine/metrics.ts:42-44,97-139`): a per-lane ring
-    * buffer of the LAST `lastN` lag samples carried in keyed state, with a
-    * p50/p95/max snapshot emitted after every micro-batch — the number the
-    * dashboard actually shows on a long-running feed. Batch counterpart
-    * (same slice, same interpolation): `MetricsAgg.lagPercentilesRolling`.
-    * Within a batch, samples append in delivery order (ord1, ord2); state
-    * is O(lastN) per lane and lanes shard with the shuffle.
-    */
-  def lagRollingStream(
-      samples: Dataset[LagSample],
-      lastN: Int = 2000): Dataset[LagSnapshot] = {
-    val spark = samples.sparkSession
-    import spark.implicits._
-    samples
-      .groupByKey(_.method)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (method: String, incoming: Iterator[LagSample], state: GroupState[LagRingState]) => {
-          val arrived = incoming.toSeq.sortBy(s => (s.ord1, s.ord2)).map(_.lagMs)
-          val ring = (state.getOption.map(_.samples).getOrElse(Seq.empty) ++ arrived)
-            .takeRight(lastN).toIndexedSeq
-          if (ring.isEmpty) Iterator.empty
-          else {
-            state.update(LagRingState(ring))
-            val sorted = ring.sorted
-            // HALF_UP to 3 places — same rounding as the batch form's
-            // `round(percentile(...), 3)`
-            def r3(x: Double): Double =
-              BigDecimal(x).setScale(3, BigDecimal.RoundingMode.HALF_UP).toDouble
-            Iterator.single(LagSnapshot(
-              method,
-              r3(percentile(sorted, 0.5)),
-              r3(percentile(sorted, 0.95)),
-              sorted.last,
-              ring.length))
-          }
-        })
-  }
-
   /** A schema change with its version transition assigned. */
   case class VersionedSchemaChange(
       tbl: String, action: String, column: String, commitTs: Long,
@@ -549,20 +224,9 @@ object Streams {
   /** Per-table version counter state (public for the state encoder). */
   case class SchemaVersionState(version: Int)
 
-  /** Streaming schema-change capture: the unbounded form of
-    * `SchemaEvolution.capture` — a per-table monotone version counter
-    * (`bumpSchemaVersion`, `src/modes/logBased.ts:210-217`;
-    * destination max rule `storage.ts:144-146`) carried in keyed state, so
-    * version transitions continue correctly across micro-batches. Within a
-    * batch, changes apply in the batch form's deterministic
-    * (commitTs, column) order. Per-lane emission timing is a stateless
-    * projection on top (`SchemaEvolution.captureLanes`' lane explode works
-    * unchanged on a streaming frame).
-    */
   /** One micro-batch step of the per-table version counter: changes apply
-    * in the batch form's deterministic (commitTs, column) order. Shared by
-    * the `flatMapGroupsWithState` and `transformWithState` forms so the
-    * two APIs cannot drift. */
+    * in the batch form's deterministic (commitTs, column) order
+    * ([[StreamsV2.schemaCaptureStream]]). */
   def schemaFold(
       version: Int,
       incoming: Seq[graft.cdc.SchemaEvolution.SchemaChange])
@@ -578,22 +242,6 @@ object Streams {
     (v, out)
   }
 
-  def schemaCaptureStream(
-      changes: Dataset[graft.cdc.SchemaEvolution.SchemaChange]): Dataset[VersionedSchemaChange] = {
-    val spark = changes.sparkSession
-    import spark.implicits._
-    changes
-      .groupByKey(_.tbl)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (tbl: String, incoming: Iterator[graft.cdc.SchemaEvolution.SchemaChange],
-         state: GroupState[SchemaVersionState]) => {
-          val (v, out) = schemaFold(
-            state.getOption.map(_.version).getOrElse(1), incoming.toSeq)
-          state.update(SchemaVersionState(v))
-          out.iterator
-        })
-  }
-
   /** One tagged row of an as-of stream: build rows (`isBuild`) carry the
     * lookup value, probe rows get enriched. */
   case class AsOfIn(key: Long, ts: Long, isBuild: Boolean, id: Long)
@@ -605,25 +253,7 @@ object Streams {
   /** Latest build row seen per key. */
   case class AsOfState(ts: Long, id: Long)
 
-  /** Streaming form of [[graft.operators.AsOfJoin]]: enrich a probe stream
-    * with the latest at-or-before build row per key, both sides arriving on
-    * ONE tagged stream (union the two feeds upstream — the same trick as the
-    * batch form, which makes batch↔streaming parity exact instead of
-    * approximate).
-    *
-    * Within a micro-batch, rows fold in (ts, tag) order with builds first on
-    * ties — identical to the batch window's sort. Across batches the latest
-    * build per key rides in keyed ValueState, so a probe in a later batch
-    * still sees it. The one semantic difference from batch, inherent to
-    * streaming: a build row arriving in a LATER batch than a probe with a
-    * larger ts cannot retro-enrich it (the probe already emitted). Feed
-    * ordering is the source's contract — bound skew with a watermark
-    * upstream if the feeds can interleave across batches.
-    *
-    * State is O(1) per key (one (ts, id) pair) — no TTL needed beyond the
-    * usual key-cardinality bound, but `ttlMs` evicts idle keys anyway.
-    */
-  /** The in-batch as-of fold shared by both streaming API forms: rows sort
+  /** The in-batch as-of fold of [[StreamsV2.asOfStream]]: rows sort
     * in (ts, tag) order with builds first on ties — inclusive as-of,
     * matching the batch form's window order — and the latest build carries
     * forward. Returns (next state, enriched probes). */
@@ -645,30 +275,6 @@ object Streams {
       }
     }
     (latest, out.result())
-  }
-
-  def asOfStream(rows: Dataset[AsOfIn], ttlMs: Long = 3600000L): Dataset[AsOfOut] = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    val timeoutConf =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    rows
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
-        (key: Long, incoming: Iterator[AsOfIn], state: GroupState[AsOfState]) => {
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val (latest, out) = asOfFold(key, state.getOption, incoming.toSeq)
-            latest.foreach { s =>
-              state.update(s)
-              if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
-            }
-            out.iterator
-          }
-        })
   }
 
   /** A document arriving at the ingest gate: (source, doc id, token count). */
@@ -699,42 +305,7 @@ object Streams {
     (used, out)
   }
 
-  /** Streaming per-source token-budget admission — the ingest-time quota
-    * gate: state is ONE long (tokens consumed) per source, carried across
-    * micro-batches, so a runaway feed is cut off at write time without any
-    * global coordination. Keyed by source ⇒ shards across executors; the
-    * single-counter-per-key state is exactly-once under checkpoint resume
-    * (FailureDrillSpec). A strict GLOBAL budget would serialize the world
-    * through one key — the per-source shard is the scalable contract, and
-    * the curation-time global cut stays a batch job
-    * ([[graft.llm.Corpus.tokenBudget]]). */
-  def budgetAdmissionStream(
-      rows: Dataset[BudgetIn],
-      budgetPerSource: Long = 2000L,
-      ttlMs: Long = 3600000L): Dataset[BudgetOut] = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    val timeoutConf =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    rows
-      .groupByKey(_.source)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
-        (key: String, incoming: Iterator[BudgetIn], state: GroupState[Long]) => {
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val (used, out) = budgetFold(key, state.getOption, incoming.toSeq,
-              budgetPerSource)
-            state.update(used)
-            if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
-            out.iterator
-          }
-        })
-  }
-
-  // ─────────────────── event analytics twins (funnel / retention) ────────
+  // ─────────────────── event analytics (funnel / retention / …) ──────────
 
   /** A product event on the stream: user, type, event time in millis
     * (the batch forms read `ts div 1000000` off the nanos column —
@@ -753,7 +324,7 @@ object Streams {
   case class FunnelProgress(times: Seq[Long])
 
   /** One funnel step for a batch of same-user events — the shared fold
-    * both the stream and its tests drive ([[funnelStream]]). First-touch
+    * both the stream and its tests drive ([[StreamsV2.funnelStream]]). First-touch
     * semantics on ORDERED ARRIVALS (events non-decreasing in `tMs` across
     * the feed — the same arrival-order contract [[budgetFold]] states):
     * stage k+1 completes at the first step-(k+1) event STRICTLY after
@@ -780,41 +351,6 @@ object Streams {
     (FunnelProgress(times), out.toSeq)
   }
 
-  /** Streaming ordered-conversion funnel — the incremental twin of
-    * [[graft.operators.EventAnalytics.funnel]]: per-user stage progress
-    * as keyed state (≤ |steps| longs per user — sharded by user across
-    * executors, TTL-evicted), one [[FunnelAdvance]] per (user, stage)
-    * ever, so the downstream per-stage count is an append-only aggregate
-    * a 100 TB events pipeline maintains instead of re-scanning history.
-    * Parity and the kill/resume drill: EventStreamSpec /
-    * FailureDrillSpec. */
-  def funnelStream(
-      events: Dataset[EventIn],
-      steps: Seq[String] = Seq("signup", "click", "purchase"),
-      ttlMs: Long = 0L): Dataset[FunnelAdvance] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val timeoutConf =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    events
-      .groupByKey(_.userId)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
-        (_: Long, incoming: Iterator[EventIn],
-            state: GroupState[FunnelProgress]) => {
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val (progress, out) =
-              funnelFold(steps, state.getOption, incoming.toSeq)
-            state.update(progress)
-            if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
-            out.iterator
-          }
-        })
-  }
-
   /** An observed transition: `userId` went `fromType` → `toType` at
     * `tMs` (the destination event's time). `count(*) group by fromType,
     * toType` over the emitted stream equals the batch
@@ -828,7 +364,7 @@ object Streams {
   case class LastEvent(eventType: String, tMs: Long, eventId: Long)
 
   /** One transition step for a batch of same-user events — shared fold
-    * of [[transitionsStream]] and its tests. Events process in
+    * of [[StreamsV2.transitionsStream]] and its tests. Events process in
     * (tMs, eventId) order (the batch form's total order); each event
     * after the first emits the (previous → current) pair. Chopped ==
     * one-shot on ordered arrivals, the [[funnelFold]] contract. */
@@ -843,39 +379,6 @@ object Streams {
       last = Some(LastEvent(ty, t, id))
     }
     (last, out.toSeq)
-  }
-
-  /** Streaming twin of the batch transition matrix — the keyed-state
-    * form with the SMALLEST possible state: one previous-event tuple per
-    * user, carried across micro-batches. Each arriving event emits its
-    * (previous → current) pair, so the transition matrix downstream is
-    * an append-only count per (from, to) instead of a re-scan with a
-    * `lead` window over all history. `events` rows are
-    * (eventId, eventType, tMs) keyed by the grouping below. */
-  def transitionsStream(
-      events: Dataset[(Long, Long, String, Long)],
-      ttlMs: Long = 0L): Dataset[TransitionOut] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val timeoutConf =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    events
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
-        (uid: Long, incoming: Iterator[(Long, Long, String, Long)],
-            state: GroupState[LastEvent]) => {
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val (last, out) = transitionsFold(uid, state.getOption,
-              incoming.map(e => (e._2, e._3, e._4)).toSeq)
-            last.foreach(state.update)
-            if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
-            out.iterator
-          }
-        })
   }
 
   /** A retention mark: `userId` (cohort of `cohortDay`) was active on
@@ -897,7 +400,7 @@ object Streams {
       cohortDay: Long, emitted: Seq[Long], pending: Seq[Long])
 
   /** One retention step for a batch of same-user events — shared fold of
-    * [[retentionStream]] and its tests. Cohort day = the user's FIRST
+    * [[StreamsV2.retentionStream]] and its tests. Cohort day = the user's FIRST
     * signup day (on time-ordered arrivals that is the batch `min`); any
     * active day ≥ cohort day emits once. Within a batch, arrival order
     * does not matter (sets, not sequences); across batches the ordered-
@@ -929,39 +432,6 @@ object Streams {
       if (cohort < 0) pending.toSeq.sorted else Seq.empty), out)
   }
 
-  /** Streaming cohort-retention twin of
-    * [[graft.operators.EventAnalytics.retention]]: per-user (cohort day,
-    * marked-day set) keyed state, one [[RetentionMark]] per (user,
-    * active day) ever — the retention triangle becomes an append-only
-    * count per (cohortDay, dayOffset) instead of a daily re-scan of the
-    * events history. Pre-signup same-day activity is buffered in
-    * `pending` so stream == batch even when the activity row arrives
-    * before its user's signup row. Parity: EventStreamSpec. */
-  def retentionStream(
-      events: Dataset[EventIn],
-      ttlMs: Long = 0L): Dataset[RetentionMark] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val timeoutConf =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    events
-      .groupByKey(_.userId)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
-        (uid: Long, incoming: Iterator[EventIn],
-            state: GroupState[RetentionState]) => {
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val (next, out) = retentionFold(uid, state.getOption, incoming.toSeq)
-            state.update(next)
-            if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
-            out.iterator
-          }
-        })
-  }
-
   /** A daily-activity mark: `userId` was active on `day` (epoch days),
     * `isNew` iff that day is the user's first-ever active day. Each
     * (user, day) emits AT MOST ONCE, so over the emitted stream
@@ -977,27 +447,15 @@ object Streams {
     * `everActive` survives TTL eviction as a tombstone (the day set is
     * dropped, the one boolean stays) so a re-appearing user is never
     * re-counted as `new` — without it, eviction would reset the fold to
-    * first-contact and inflate `new_users` by one per evicted returnee.
-    *
-    * CHECKPOINT COMPATIBILITY: adding `everActive` (round 13) changed the
-    * `GroupState` encoder schema of [[activityStream]] — a production
-    * query resuming a checkpoint written by the pre-round-13 shape will
-    * fail or misdecode state (the case-class default does NOT apply to
-    * already-serialized rows); resume requires a fresh checkpoint
-    * (replay or batch-backfill the state, the FailureDrillSpec recipe).
-    * The `transformWithState` twin does NOT share this limitation: with
-    * the Avro state encoding (StateSchemaV3) a V2 processor adds a
-    * nullable state field and resumes the SAME checkpoint, old rows
-    * decoding with the field defaulted — proven by the FailureDrillSpec
-    * schema-evolution drill. */
+    * first-contact and inflate `new_users` by one per evicted returnee. */
   case class ActivityState(days: Seq[Long], everActive: Boolean = true)
 
   /** One DAU step for a batch of same-user events — shared fold of
-    * [[activityStream]] and its tests. Within a batch arrival order does
+    * [[StreamsV2.activityStream]] and its tests. Within a batch arrival order does
     * not matter (day sets); across batches the ordered-arrival contract
     * of [[funnelFold]] applies: a day earlier than the recorded first
     * would re-write history the batch `min` already settled, so feeds
-    * are time-ordered (the same contract every twin in this file rides). */
+    * are time-ordered (the same contract every fold in this file rides). */
   def activityFold(
       userId: Long,
       start: Option[ActivityState],
@@ -1017,51 +475,14 @@ object Streams {
     (ActivityState(seen.toSeq.sorted), out)
   }
 
-  /** Streaming DAU / new-vs-returning twin of
-    * [[graft.operators.EventAnalytics.newVsReturning]]: per-user
-    * active-day-set keyed state, one [[DayActive]] per (user, day) ever.
-    * Aggregating the emitted stream by day reproduces the batch ledger
-    * (dau / new_users / returning_users) at any point in time.
-    * Parity: EventStreamSpec. */
-  def activityStream(
-      events: Dataset[EventIn],
-      ttlMs: Long = 0L): Dataset[DayActive] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val timeoutConf =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    events
-      .groupByKey(_.userId)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
-        (uid: Long, incoming: Iterator[EventIn],
-            state: GroupState[ActivityState]) => {
-          if (state.hasTimedOut) {
-            // eviction drops the DEDUP set but keeps a one-boolean
-            // tombstone (everActive=true, no further timeout): a
-            // re-appearing user's days re-emit as returning, never as a
-            // second `new` — the conservative direction. DAU may
-            // overcount a TTL-evicted user's REVISITED day (its dedup
-            // evidence is gone); `new_users` never inflates.
-            state.update(ActivityState(Seq.empty, everActive = true))
-            Iterator.empty
-          } else {
-            val (next, out) = activityFold(uid, state.getOption, incoming.toSeq)
-            state.update(next)
-            if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
-            out.iterator
-          }
-        })
-  }
-
   /** A growth-accounting mark: in `week`, `userId` classified as `kind`
     * (`new` / `retained` / `resurrected` / `churned` — churned rows carry
     * the week the user went MISSING, the batch attribution). Conditional
     * counts per week over the emitted stream equal the event-driven rows
     * of [[graft.operators.EventAnalytics.growthAccounting]]; the
     * trailing silent-churn rows (users who never return) additionally
-    * need a clock — they emit on TTL eviction ([[growthStream]]'s
-    * timeout path), the same evidence a batch re-run would only gain
+    * need a clock — they emit on TTL eviction ([[StreamsV2.growthStream]]'s
+    * timer path), the same evidence a batch re-run would only gain
     * from a later max-week. */
   case class GrowthMark(userId: Long, week: Long, kind: String)
 
@@ -1070,19 +491,11 @@ object Streams {
     * TTL-eviction path). The tombstone keeps (lastWeek, churned=true)
     * past eviction so a returning user classifies as `resurrected` —
     * consistent with the churn already emitted — never as a second
-    * `new`, which is what a bare state.remove() would produce.
-    *
-    * CHECKPOINT COMPATIBILITY: adding `churned` (round 13) changed the
-    * `GroupState` encoder schema of [[growthStream]] — resuming a
-    * pre-round-13 checkpoint fails or misdecodes state (defaults don't
-    * apply to already-serialized rows); resume needs a fresh checkpoint
-    * (see the [[ActivityState]] note — and its V2 contrast: the
-    * `transformWithState` twin evolves nullable state fields in place
-    * under the Avro encoding). */
+    * `new`, which is what dropping the state would produce. */
   case class GrowthState(lastWeek: Long, churned: Boolean = false)
 
   /** One growth step for a batch of same-user events — shared fold of
-    * [[growthStream]] and its tests. Weeks process ascending (ordered-
+    * [[StreamsV2.growthStream]] and its tests. Weeks process ascending (ordered-
     * arrival contract): first-ever week emits `new`, consecutive weeks
     * `retained`, a gap emits `churned` AT lastWeek+1 (the week the user
     * went missing) plus `resurrected` at the return week — exactly the
@@ -1117,57 +530,6 @@ object Streams {
     (GrowthState(last, churnOut), out.toSeq)
   }
 
-  /** Streaming weekly growth-accounting twin of
-    * [[graft.operators.EventAnalytics.growthAccounting]]: ONE long of
-    * keyed state per user (the last active week), each classification
-    * emitted the moment its evidence arrives. With ttlMs=0 the
-    * event-driven kinds (new/retained/resurrected + gap churn) stream
-    * exactly. Silent churn — a user who never returns — has no closing
-    * event, so it emits on TTL eviction as `churned` at lastWeek+1,
-    * mirroring what the batch ledger attributes once max-week passes
-    * the user's silence; the evicted key keeps a (lastWeek,
-    * churned=true) tombstone, so a user who RETURNS after eviction
-    * classifies `resurrected` — the batch gap pair — never a second
-    * `new`. TTL trade-off (documented contract, pinned in
-    * EventStreamSpec): if the TTL fires before the user's gap is real
-    * (they return in week lastWeek+1), the stream has emitted
-    * churned+resurrected where the batch ledger says `retained` — an
-    * append-only stream cannot retract an eviction-time mark; choose
-    * ttlMs ≫ the week cadence.
-    * Parity: EventStreamSpec (event-driven rows + derived trailing churn
-    * == the batch ledger; post-eviction return pinned). */
-  def growthStream(
-      events: Dataset[EventIn],
-      ttlMs: Long = 0L): Dataset[GrowthMark] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val timeoutConf =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    events
-      .groupByKey(_.userId)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
-        (uid: Long, incoming: Iterator[EventIn],
-            state: GroupState[GrowthState]) => {
-          if (state.hasTimedOut) {
-            // emit the silent churn, but KEEP (lastWeek, churned=true)
-            // as a tombstone (no further timeout; the state is one long
-            // + one boolean, so there is nothing worth evicting): a
-            // return classifies `resurrected`, matching the batch
-            // ledger's gap pair instead of a spurious second `new`
-            val evicted = state.getOption.filter(s => s.lastWeek >= 0 && !s.churned)
-            evicted.foreach(s =>
-              state.update(GrowthState(s.lastWeek, churned = true)))
-            evicted.map(s => GrowthMark(uid, s.lastWeek + 1, "churned")).iterator
-          } else {
-            val (next, out) = growthFold(uid, state.getOption, incoming.toSeq)
-            state.update(next)
-            if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
-            out.iterator
-          }
-        })
-  }
-
   /** An attributed purchase on the stream: `userId` bought for
     * `valueTicks` (value × 100, exact money) at `tMs`, credited to
     * `channel` — the latest prior touch type, or "direct". Summing
@@ -1183,7 +545,7 @@ object Streams {
       tMs: Long, valueTicks: Long)
 
   /** One attribution step for a batch of same-user events — shared fold
-    * of [[attributionStream]] and its tests. Events process in
+    * of [[StreamsV2.attributionStream]] and its tests. Events process in
     * (tMs, eventId) order (the batch window's total order): a touch
     * updates the carried channel, a purchase emits credited to the
     * carried channel BEFORE this event — exactly the batch form's
@@ -1207,41 +569,6 @@ object Streams {
     (lastTouch, out.toSeq)
   }
 
-  /** Streaming last-touch attribution twin of
-    * [[graft.operators.EventAnalytics.attribution]]: the keyed state is
-    * ONE carried touch tuple per user (the same minimal shape as
-    * [[transitionsStream]]); every purchase emits exactly once, already
-    * credited, so the channel ledger downstream is an append-only
-    * (count, ticks) aggregate instead of a re-windowed scan of all
-    * history. Money stays integer ticks end to end. Parity:
-    * EventStreamSpec; restart: FailureDrillSpec. */
-  def attributionStream(
-      events: Dataset[AttrIn],
-      touchTypes: Set[String] = Set("click", "view"),
-      ttlMs: Long = 0L): Dataset[AttributionOut] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val timeoutConf =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    events
-      .groupByKey(_.userId)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
-        (uid: Long, incoming: Iterator[AttrIn],
-            state: GroupState[LastEvent]) => {
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val (last, out) =
-              attributionFold(uid, touchTypes, state.getOption, incoming.toSeq)
-            last.foreach(state.update)
-            if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
-            out.iterator
-          }
-        })
-  }
-
   /** A running RFM snapshot for one user: last purchase day, purchase
     * count, and exact money in integer ticks (×100). The LATEST mark per
     * user, joined with a reference "now" day of the consumer's choosing,
@@ -1257,7 +584,7 @@ object Streams {
   case class RfmState(lastDay: Long, frequency: Long, ticks: Long)
 
   /** One RFM step for a batch of same-user events — shared fold of
-    * [[rfmStream]] and its tests. Only purchases move the totals; a
+    * [[StreamsV2.rfmStream]] and its tests. Only purchases move the totals; a
     * batch with ≥1 purchase emits ONE superseding mark (marks are
     * snapshots, not deltas — the consumer keeps the latest per user,
     * which makes replay after an exactly-once sink upsert idempotent).
@@ -1281,45 +608,6 @@ object Streams {
     }
   }
 
-  /** Streaming RFM twin of [[graft.operators.EventAnalytics.rfm]]: the
-    * keyed state is three longs per purchasing user; every purchase
-    * batch emits a superseding running snapshot, so the segmentation
-    * table downstream is a latest-mark-per-user upsert plus the fixed
-    * scoring projection — never a re-scan of purchase history. Money
-    * stays integer ticks end to end (ticks / 100 = the batch
-    * DECIMAL(18,2) monetary). Parity: EventStreamSpec; restart:
-    * FailureDrillSpec. */
-  def rfmStream(
-      events: Dataset[AttrIn],
-      ttlMs: Long = 0L): Dataset[RfmMark] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val timeoutConf =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    events
-      .groupByKey(_.userId)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
-        (uid: Long, incoming: Iterator[AttrIn],
-            state: GroupState[RfmState]) => {
-          if (state.hasTimedOut) {
-            // the totals ARE the product — evicting them would corrupt
-            // every later mark, so TTL only drops users the sink has
-            // already seen the final mark of; a re-appearing purchaser
-            // restarts their totals, which the docstring's
-            // latest-mark-wins consumer surfaces as a visible reset
-            // rather than silently wrong arithmetic
-            state.remove()
-            Iterator.empty
-          } else {
-            val (next, out) = rfmFold(uid, state.getOption, incoming.toSeq)
-            next.foreach(state.update)
-            if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
-            out.iterator
-          }
-        })
-  }
-
   /** One cohort-LTV mark: `entry=true` announces the user joining the
     * `cohortDay` cohort (counting these per cohort gives the batch
     * `cohort_size`); `entry=false` is one attributed purchase at
@@ -1336,7 +624,7 @@ object Streams {
   case class LtvState(cohortDay: Long)
 
   /** One cohort-LTV step for a batch of same-user events — shared fold
-    * of [[ltvStream]] and its tests. The cohort day settles FIRST from
+    * of [[StreamsV2.ltvStream]] and its tests. The cohort day settles FIRST from
     * the batch's earliest signup (in-batch order free, like
     * [[activityFold]]), then purchases with day ≥ cohortDay emit one
     * mark each — the batch form's `_pd >= cohort_day` filter applied at
@@ -1367,42 +655,6 @@ object Streams {
     (LtvState(cohort), out.toSeq)
   }
 
-  /** Streaming cohort-LTV twin of
-    * [[graft.operators.EventAnalytics.cohortLtv]]: ONE long of keyed
-    * state per user (the signup cohort day); every purchase emits
-    * already cohort-attributed, so the LTV triangle downstream is an
-    * append-only (cohortDay, weekOffset) aggregate instead of a
-    * re-join of all purchases against all signups. Money stays integer
-    * ticks end to end. TTL note: evicting a user forgets their cohort
-    * — their LATER purchases drop from the triangle (the conservative
-    * direction: revenue undercounts, cohort sizes never double-count,
-    * because the entry mark is emitted exactly once before any
-    * eviction). Parity: EventStreamSpec; restart: FailureDrillSpec. */
-  def ltvStream(
-      events: Dataset[AttrIn],
-      ttlMs: Long = 0L): Dataset[LtvMark] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val timeoutConf =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    events
-      .groupByKey(_.userId)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
-        (uid: Long, incoming: Iterator[AttrIn],
-            state: GroupState[LtvState]) => {
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val (next, out) = ltvFold(uid, state.getOption, incoming.toSeq)
-            if (next.cohortDay >= 0) state.update(next)
-            if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
-            out.iterator
-          }
-        })
-  }
-
   /** One heartbeat tick of a capture lane: table, lsn, event time. */
   case class OpTick(tbl: String, lsn: Long, t: Long)
 
@@ -1415,7 +667,7 @@ object Streams {
   case class TickState(lsn: Long, t: Long)
 
   /** One monitor step for a batch of same-table ticks — the shared fold
-    * of [[heartbeatStream]] and its tests. Ticks process in lsn order
+    * of [[StreamsV2.heartbeatStream]] and its tests. Ticks process in lsn order
     * (the batch form's total order); chopped == one-shot on
     * lsn-ordered feeds (the [[transitionsFold]] contract). */
   def heartbeatFold(
@@ -1458,7 +710,7 @@ object Streams {
       validFrom: Long, v: Option[Double], kk: Option[Long])
 
   /** One SCD2 step for a batch of same-key ops — the shared fold of
-    * [[scd2Stream]] and its tests. Ops process in lsn order; chopped ==
+    * [[StreamsV2.scd2Stream]] and its tests. Ops process in lsn order; chopped ==
     * one-shot on lsn-ordered feeds (the [[transitionsFold]] contract):
     * every op closes the previous version (emitting it), a non-delete
     * opens the next one with the image merged over the previous. */
@@ -1480,130 +732,5 @@ object Streams {
           if (o.setsK) Some(o.kk) else open.flatMap(_.kk)))
     }
     (st, out.toSeq)
-  }
-
-  /** Streaming SCD Type-2 dimension builder — the incremental twin of
-    * [[graft.cdc.ApplyEngine.scd2]]: per (tbl, pk) the state is the op
-    * counter plus the one OPEN version; each arriving op emits the
-    * version it closes (exactly once, in Append mode) and a non-delete
-    * opens the next. The emitted feed equals the batch history's
-    * `is_current = false` rows at any point — the open (current)
-    * versions live only in state, like open sessions in [[sessionStream]].
-    * A warehouse consuming this feed appends closed versions and
-    * maintains current rows from the companion apply stream, so the
-    * dimension table needs no rebuild scan at 100 TB.
-    * Parity + chop-invariance: StreamingSpec; per-key state is O(1). */
-  def scd2Stream(
-      ops: Dataset[ScdIn],
-      ttlMs: Long = 0L): Dataset[ScdOut] = {
-    val spark = ops.sparkSession
-    import spark.implicits._
-    val timeoutConf =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    ops
-      .groupByKey(o => (o.tbl, o.pk))
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
-        (key: (String, String), incoming: Iterator[ScdIn],
-            state: GroupState[ScdState]) => {
-          if (state.hasTimedOut) {
-            // TTL eviction must not LOSE the key's current version: emit
-            // the open version with the ScdEvictedOpen sentinel as its
-            // validTo so the downstream append feed still closes every
-            // version it ever saw opened (a silently dropped open row is
-            // a dimension history that never ends).
-            val evicted = state.getOption.filter(_.open).map(p =>
-              ScdOut(key._1, key._2, p.openVer, p.validFrom,
-                ScdEvictedOpen, p.v, p.kk))
-            state.remove()
-            evicted.iterator
-          } else {
-            val (next, out) = scd2Fold(state.getOption, incoming.toSeq)
-            next.foreach(state.update)
-            if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
-            out.iterator
-          }
-        })
-  }
-
-  /** Streaming liveness monitor — the incremental twin of
-    * [[graft.cdc.Capture.heartbeatGaps]]' stall count: ONE (lsn, t)
-    * tuple of keyed state per table, a [[StallOut]] emitted exactly once
-    * per above-threshold gap, the moment its closing tick arrives — so
-    * the alerting path downstream is an append-only feed instead of a
-    * re-windowed scan of the lane history. `count by tbl` over the
-    * emitted stream equals the batch ledger's `n_stalls` at any point.
-    * Parity: StreamingSpec; state is one tuple per TABLE (the smallest
-    * keyed state in the repo), so restart recovery is covered by the
-    * transitions/attribution drills' shape. */
-  def heartbeatStream(
-      ticks: Dataset[OpTick],
-      stallMs: Long = 60000L,
-      ttlMs: Long = 0L): Dataset[StallOut] = {
-    val spark = ticks.sparkSession
-    import spark.implicits._
-    val timeoutConf =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    ticks
-      .groupByKey(_.tbl)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
-        (_: String, incoming: Iterator[OpTick],
-            state: GroupState[TickState]) => {
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val (last, out) =
-              heartbeatFold(stallMs, state.getOption, incoming.toSeq)
-            last.foreach(state.update)
-            if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
-            out.iterator
-          }
-        })
-  }
-
-  /** Streaming gap sessionization — the incremental twin of
-    * [[graft.operators.Sessions.sessionize]], and the reason that batch
-    * operator was built on the native `session_window` aggregate in the
-    * first place: the SAME declarative plan runs here under a watermark,
-    * with Spark's UpdatingSessionsExec machinery owning the hard parts
-    * (per-key session merge in the state store, watermark-driven close,
-    * exactly-once emission from the checkpoint) instead of a hand-rolled
-    * keyed-state fold.
-    *
-    * Semantics: a session extends while same-user events arrive within
-    * `gapMs`; in Append mode a (user, session) row emits ONCE, when the
-    * event-time watermark (max seen time − `watermarkDelayMs`) passes the
-    * session's end — so the output is the closed-session feed, equal to
-    * the batch [[graft.operators.Sessions.sessionize]] rows for every
-    * session the watermark has closed (parity: EventStreamSpec; a
-    * session SPANNING a crash must merge across restart: the
-    * FailureDrillSpec drill). Late events beyond the allowance are
-    * dropped by the watermark, exactly the loss
-    * [[graft.cdc.Capture.watermarkCurve]] prices.
-    *
-    * Scale shape: one shuffle keyed by user, per-key state bounded by
-    * OPEN sessions only (closed ones are evicted at emission) — the
-    * 100 TB form is this same plan with the state store on RocksDB. */
-  def sessionStream(
-      events: Dataset[EventIn],
-      gapMs: Long = 28800000L,
-      watermarkDelayMs: Long = 0L): DataFrame = {
-    import org.apache.spark.sql.functions._
-    events.toDF()
-      .select(
-        col("userId").as("user_id"),
-        timestamp_millis(col("tMs")).as("_t"))
-      .withWatermark("_t", s"$watermarkDelayMs milliseconds")
-      .groupBy(
-        col("user_id"),
-        session_window(col("_t"), s"$gapMs milliseconds").as("_w"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(
-        col("user_id"),
-        unix_millis(col("_w.start")).as("session_start"),
-        unix_millis(col("_w.end")).as("session_end"),
-        col("n_events"))
   }
 }

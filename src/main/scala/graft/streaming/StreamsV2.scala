@@ -1,34 +1,74 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
-/** `transformWithState` (Spark 4.x `StatefulProcessor`) forms of the two
-  * hottest keyed-state operators — txn assembly and the rolling-lag ring.
+/** Structured-Streaming forms of the stateful CDC, event-analytics and
+  * corpus operators — the one streaming front-end.
   *
-  * Semantics are identical to the `flatMapGroupsWithState` forms in
-  * [[Streams]] (parity-asserted in StreamingSpec); what changes is the state
-  * plumbing:
+  * The batch-replay forms in `graft.cdc` / `graft.operators` are the
+  * deterministic oracles; these are their unbounded-stream equivalents.
+  * Every keyed operator is a `transformWithState` processor over a pure
+  * per-batch fold in [[Streams]] (`applyFold`, `throttleFold`, …), so the
+  * semantics are testable without Spark (FoldPropertiesSpec) and a
+  * processor owns only the state plumbing:
   *
-  *   - the buffer is a NAMED, TYPED `ListState` instead of one opaque
-  *     case-class blob — the RocksDB state store appends an arriving event
-  *     as its own key-value entry instead of rewriting the whole buffer
-  *     value on every micro-batch, which is the operational win at scale
-  *     (large in-flight transactions under drift);
-  *   - state TTL is declarative (`TTLConfig`) — the runtime expires
-  *     abandoned buffers per-entry, replacing the manual
-  *     `ProcessingTimeTimeout` + `setTimeoutDuration` bookkeeping (and its
-  *     zero-interval-trigger busy-loop pitfall).
+  *   - named, typed `ValueState` / `ListState` — the RocksDB state store
+  *     appends an arriving event as its own key-value entry instead of
+  *     rewriting the whole buffer on every micro-batch (large in-flight
+  *     transactions under drift);
+  *   - declarative TTL (`TTLConfig`), or one processing-time timer per key
+  *     where expiry must emit something (growth churn, the SCD2 open
+  *     version, the drift-broker flush);
+  *   - event-time timers where the watermark decides emission
+  *     ([[applyOnCommitStream]]).
+  *
+  * Polling capture and gap sessionization are Spark's own windowed
+  * aggregates ([[pollStream]], [[sessionStream]]): there Spark's aggregate
+  * owns the state and no hand-written fold exists.
+  *
+  * State is keyed (per txn, row key, lane, user, …), so it shards across
+  * executors. Every buffering operator takes a TTL — the reference keeps
+  * buffers forever (`src/changefeed/model.ts:176-205`), which at 100 TB
+  * leaks; `ttlMs <= 0` disables expiry (bounded replays, tests).
   *
   * Requires the RocksDB state store provider
   * (`spark.sql.streaming.stateStore.providerClass` →
-  * `...state.RocksDBStateStoreProvider`); the HDFS-backed default does not
-  * support `transformWithState`. The `flatMapGroupsWithState` forms remain
-  * the portable default.
+  * `org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider`);
+  * the HDFS-backed default does not support `transformWithState`.
   */
 object StreamsV2 {
 
-  import Streams.{AssembledTxn, Event, LagSample, LagSnapshot}
+  import Streams._
+
+  private def ttlAndMode(ttlMs: Long): (TTLConfig, TimeMode) =
+    if (ttlMs > 0)
+      (TTLConfig(java.time.Duration.ofMillis(ttlMs)), TimeMode.ProcessingTime())
+    else (TTLConfig.NONE, TimeMode.None())
+
+  private def timerMode(ttlMs: Long): TimeMode =
+    if (ttlMs > 0) TimeMode.ProcessingTime() else TimeMode.None()
+
+  /** The processor behind every operator whose whole state is one named
+    * `ValueState[S]` per key: `step` folds a micro-batch of the key's rows
+    * onto the stored state and returns (state to store, output). `None`
+    * leaves the stored state as it was. Expiry, if any, is the declarative
+    * `ttl` — a silent drop. */
+  class FoldProcessor[K, I, S, O](name: String, enc: Encoder[S], ttl: TTLConfig)(
+      step: (K, Option[S], Seq[I]) => (Option[S], Seq[O]))
+      extends StatefulProcessor[K, I, O] {
+    @transient private var st: ValueState[S] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      st = getHandle.getValueState(name, enc, ttl)
+
+    override def handleInputRows(
+        key: K, rows: Iterator[I], timerValues: TimerValues): Iterator[O] = {
+      val (next, out) = step(key, if (st.exists()) Some(st.get()) else None, rows.toSeq)
+      next.foreach(st.update)
+      out.iterator
+    }
+  }
 
   /** Txn-assembly processor: buffer per txId until complete
     * (`src/changefeed/model.ts:176-205` — same completion rule as
@@ -63,21 +103,286 @@ object StreamsV2 {
     }
   }
 
-  /** Txn assembly on `transformWithState` — drop-in for
-    * [[Streams.assembleTxns]]. `ttlMs <= 0` disables expiry (bounded
-    * replays / tests). */
+  /** Txn assembly (`src/changefeed/model.ts:176-205`, `web/App.tsx:2115-2156`):
+    * buffer events per txId until `count >= total` (or a `last` marker),
+    * then emit the whole transaction, events sorted by `txIndex`
+    * (`model.ts:196`). Incomplete txns expire after `ttlMs` processing
+    * time — the safety valve the reference lacks. */
   def assembleTxns(
       events: Dataset[Event],
       ttlMs: Long = 60000L): Dataset[AssembledTxn] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val (ttl, mode) =
-      if (ttlMs > 0)
-        (TTLConfig(java.time.Duration.ofMillis(ttlMs)), TimeMode.ProcessingTime())
-      else (TTLConfig.NONE, TimeMode.None())
+    val (ttl, mode) = ttlAndMode(ttlMs)
     events
       .groupByKey(_.txId)
       .transformWithState(new TxnAssemblyProcessor(ttl), mode, OutputMode.Append())
+  }
+
+  /** Commit-floor apply processor: the txn buffer is a `ListState` and the
+    * hold is ONE event-time timer per txn at `max(commitTs, watermark) + 1`.
+    * A timer fires once the watermark reaches it, so a complete txn is
+    * released when the watermark strictly passes its commit, and an
+    * incomplete one is dropped then. Buffer and timer both live in the
+    * state store and survive a restart. */
+  class CommitFloorProcessor
+      extends StatefulProcessor[String, Event, AssembledTxn] {
+    @transient private var buf: ListState[Event] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      buf = getHandle.getListState("floorBuf", Encoders.product[Event], TTLConfig.NONE)
+
+    private def assembled(txId: String, events: List[Event]): AssembledTxn = {
+      val sorted = events.sortBy(e => (e.txIndex, e.lsn))
+      AssembledTxn(txId, sorted.size, sorted.map(_.commitTs).max,
+        sorted.map(_.lsn).min, sorted)
+    }
+
+    override def handleInputRows(
+        txId: String, rows: Iterator[Event],
+        timerValues: TimerValues): Iterator[AssembledTxn] = {
+      val incoming = rows.toList
+      val all = buf.get().toList ++ incoming
+      val commitTs = all.map(_.commitTs).max
+      val wm = timerValues.getCurrentWatermarkInMs()
+      getHandle.listTimers().foreach(getHandle.deleteTimer)
+      if (Streams.txnComplete(all) && wm > commitTs) {
+        buf.clear()
+        Iterator.single(assembled(txId, all))
+      } else {
+        buf.appendList(incoming.toArray)
+        // hold until the floor (watermark) passes the commit
+        getHandle.registerTimer(math.max(commitTs, wm) + 1)
+        Iterator.empty
+      }
+    }
+
+    override def handleExpiredTimer(
+        txId: String, timerValues: TimerValues,
+        expiredTimerInfo: ExpiredTimerInfo): Iterator[AssembledTxn] = {
+      val all = buf.get().toList
+      buf.clear()
+      if (Streams.txnComplete(all)) Iterator.single(assembled(txId, all))
+      else Iterator.empty
+    }
+  }
+
+  /** Apply-on-commit with the commit floor as an event-time watermark
+    * (`src/changefeed/model.ts:169-244`, SURVEY §2.9: the floor — min
+    * commitTs over in-flight events — IS the watermark). Transactions
+    * assemble per txId; a *complete* transaction is held until the
+    * watermark strictly passes its commitTs (drifted stragglers keep the
+    * watermark — and therefore every commit-later txn — back), then emits.
+    * Incomplete txns are dropped as soon as the watermark passes their max
+    * buffered commitTs — no extra lateness beyond `watermarkDelay` is
+    * granted.
+    *
+    * Note: `txnComplete` counts duplicate deliveries toward `total`
+    * (reference-faithful, `model.ts:178-186`), so at-least-once sources must
+    * drop replays upstream of assembly (`dropDuplicatesWithinWatermark` on
+    * the offset triple). */
+  def applyOnCommitStream(
+      events: Dataset[Event],
+      watermarkDelay: String = "10 seconds"): Dataset[AssembledTxn] = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, timestamp_millis}
+    events
+      .withColumn("event_time", timestamp_millis(col("commitTs")))
+      .withWatermark("event_time", watermarkDelay)
+      .as[Event]
+      .groupByKey(_.txId)
+      .transformWithState(new CommitFloorProcessor, TimeMode.EventTime(), OutputMode.Append())
+  }
+
+  /** Row-apply processor: one `ValueState[RowState]` per live key, the step
+    * is [[Streams.applyFold]]. Delete emits the tombstone and CLEARS the
+    * state; TTL expiry of an idle key's state is a silent drop. */
+  class ApplyProcessor(ttl: TTLConfig)
+      extends StatefulProcessor[(String, String), Event, RowState] {
+    @transient private var row: ValueState[RowState] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      row = getHandle.getValueState(
+        "rowImage", Encoders.product[RowState], ttl)
+
+    override def handleInputRows(
+        key: (String, String), rows: Iterator[Event],
+        timerValues: TimerValues): Iterator[RowState] = {
+      val start = if (row.exists()) Some(row.get()) else None
+      val next = Streams.applyFold(key, start, rows.toSeq)
+      if (next.deleted) row.clear() else row.update(next)
+      Iterator.single(next)
+    }
+  }
+
+  /** Streaming merge-upsert apply keyed by (tbl, pk) — the unbounded form of
+    * `ApplyEngine.applyState`: delete clears, partial payloads merge
+    * (`src/domain/storage.ts:137-164`). Emits the post-image after each
+    * micro-batch's events for the key (ordered by lsn within the batch).
+    * Deleted keys emit a `deleted = true` tombstone and drop their state. */
+  def applyStream(
+      events: Dataset[Event],
+      ttlMs: Long = 3600000L): Dataset[RowState] = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    val (ttl, mode) = ttlAndMode(ttlMs)
+    events
+      .groupByKey(e => (e.tbl, e.pk))
+      .transformWithState(new ApplyProcessor(ttl), mode, OutputMode.Append())
+  }
+
+  /** Streaming polling capture (`sim/engines/PollingEngine.ts:59-84` as an
+    * unbounded stream): tumbling event-time windows of `pollIntervalMs` per
+    * key, emitting only the latest state per (key, window) once the
+    * watermark closes the window — the poll's lossy-by-design semantics
+    * (intermediate versions never leave the aggregation). A windowed
+    * `max_by` on lsn, so state per key-window is O(1) and Spark's aggregate
+    * owns it. A row arriving after the watermark closed its window is
+    * dropped, never re-opens the window. The same call on a static Dataset
+    * is the batch form. */
+  def pollStream(
+      events: Dataset[Event],
+      pollIntervalMs: Long = 1000L,
+      watermarkDelay: String = "10 seconds"): DataFrame = {
+    import org.apache.spark.sql.functions._
+    val interval = s"$pollIntervalMs milliseconds"
+    events
+      .withColumn("event_time", timestamp_millis(col("commitTs")))
+      .withWatermark("event_time", watermarkDelay)
+      .groupBy(window(col("event_time"), interval), col("tbl"), col("pk"))
+      .agg(
+        max_by(struct(col("opCode"), col("valV"), col("kV"), col("lsn")), col("lsn")).as("latest"),
+        count(lit(1)).as("ops_in_window"))
+      .select(
+        col("tbl"), col("pk"),
+        col("window.end").as("poll_ts"),
+        col("latest.opCode").as("op_code"),
+        col("latest.valV").as("after_val"),
+        col("latest.kV").as("after_k"),
+        col("ops_in_window"))
+  }
+
+  /** Streaming consumer throttle — the unbounded form of
+    * `Consumer.throttleDrain` (`web/App.tsx:2106-2113,2185-2201`): the
+    * per-lane token bucket (tick, allowance, used) is keyed state carried
+    * across micro-batches, so a lane's drain schedule is identical no
+    * matter how the stream is chopped. Within a batch, events drain in
+    * (availableAt, seq) order ([[Streams.throttleFold]]). */
+  def throttleStream(
+      events: Dataset[graft.cdc.Consumer.DeliveryIn],
+      rate: Double,
+      stepMs: Long = 50L,
+      batchCap: Int = 50,
+      ttlMs: Long = 0L): Dataset[graft.cdc.Consumer.DeliveryOut] = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    val (ttl, mode) = ttlAndMode(ttlMs)
+    events
+      .groupByKey(_.method)
+      .transformWithState(
+        new FoldProcessor[String, graft.cdc.Consumer.DeliveryIn, ThrottleState,
+            graft.cdc.Consumer.DeliveryOut](
+          "bucket", Encoders.product[ThrottleState], ttl)((_, st, rows) => {
+          val (next, out) = throttleFold(
+            st.getOrElse(ThrottleState(0L, 0.0, 0)), rows, rate, stepMs, batchCap)
+          (Some(next), out)
+        }),
+        mode, OutputMode.Append())
+  }
+
+  /** Streaming exact broker delivery — the unbounded form of
+    * `Consumer.brokerDeliverExact` (`model.ts:246-263` `pollBroker`): each
+    * partition's (tick, used) queue state is keyed, so per-tick caps and
+    * head-of-line FIFO order carry across micro-batches
+    * ([[Streams.brokerFold]]). Exactly-once FIFO requires lsn-ordered
+    * arrival per partition (the broker's own guarantee). */
+  def brokerDeliverStream(
+      events: Dataset[graft.cdc.Consumer.BrokerIn],
+      tickMs: Long = 50L,
+      maxApplyPerTick: Int = 4): Dataset[graft.cdc.Consumer.BrokerOut] = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    events
+      .groupByKey(_.part)
+      .transformWithState(
+        new FoldProcessor[Int, graft.cdc.Consumer.BrokerIn, BrokerQueueState,
+            graft.cdc.Consumer.BrokerOut](
+          "queue", Encoders.product[BrokerQueueState], TTLConfig.NONE)((part, st, rows) => {
+          val (next, out) = brokerFold(
+            part, st.getOrElse(BrokerQueueState(0L, 0)), rows, tickMs, maxApplyPerTick)
+          (Some(next), out)
+        }),
+        TimeMode.None(), OutputMode.Append())
+  }
+
+  /** Drift-broker (LIFO) processor: the per-partition (clock, pending
+    * stack) in one `ValueState` — not a ListState, because the stack
+    * mutates at its HEAD (every arrival prepends, every drain pops). The
+    * fold is [[Streams.driftFold]]. `ttlMs > 0` arms one processing-time
+    * timer, slid on every batch; if it fires with no new arrivals the stack
+    * drains to empty. */
+  class DriftBrokerProcessor(tickMs: Long, maxApplyPerTick: Int, ttlMs: Long)
+      extends StatefulProcessor[Int, graft.cdc.Consumer.DriftIn, graft.cdc.Consumer.BrokerOut] {
+    @transient private var queue: ValueState[DriftQueueState] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      queue = getHandle.getValueState(
+        "driftQueue", Encoders.product[DriftQueueState], TTLConfig.NONE)
+
+    private def current: DriftQueueState =
+      if (queue.exists()) queue.get() else DriftQueueState(0L, Seq.empty)
+
+    override def handleInputRows(
+        part: Int, rows: Iterator[graft.cdc.Consumer.DriftIn],
+        timerValues: TimerValues): Iterator[graft.cdc.Consumer.BrokerOut] = {
+      val (next, out) = Streams.driftFold(part, current, rows.toSeq, tickMs, maxApplyPerTick)
+      queue.update(next)
+      if (ttlMs > 0) {
+        // slide the idle deadline: drop the old timer, arm a fresh one
+        getHandle.listTimers().foreach(getHandle.deleteTimer)
+        getHandle.registerTimer(timerValues.getCurrentProcessingTimeInMs() + ttlMs)
+      }
+      out.iterator
+    }
+
+    override def handleExpiredTimer(
+        part: Int, timerValues: TimerValues,
+        expiredTimerInfo: ExpiredTimerInfo): Iterator[graft.cdc.Consumer.BrokerOut] = {
+      val (_, out) = Streams.driftFold(part, current, Seq.empty, tickMs, maxApplyPerTick, flush = true)
+      queue.clear()
+      out.iterator
+    }
+  }
+
+  /** Streaming exact drift-on broker delivery — the unbounded form of
+    * `Consumer.brokerDeliverDriftExact` (`model.ts:141-149,246-263`): with
+    * commit drift every event is spliced into the queue FRONT, so pending
+    * events form a LIFO stack and a drifted head blocks older events.
+    *
+    * A batch can only simulate ticks strictly BEFORE its own latest arrival
+    * tick — a later micro-batch may still deliver arrivals for that tick,
+    * and they would stack on top and change what pops — so the final tick's
+    * arrivals are pushed pending and their drain defers to the next batch.
+    * That makes the fold exact under ARBITRARY micro-batch boundaries (the
+    * only requirement is per-partition lsn-ordered arrival, as for
+    * [[brokerDeliverStream]]). The tail of the stream stays pending until
+    * either (a) `ttlMs` passes with no new arrivals — the timer drains the
+    * stack to empty — or (b) a bounded replay appends a flush sentinel (an
+    * event with `t` past every real arrival); tests use (b), so no wall
+    * clock enters the assertion. */
+  def brokerDeliverDriftStream(
+      events: Dataset[graft.cdc.Consumer.DriftIn],
+      tickMs: Long = 50L,
+      maxApplyPerTick: Int = 4,
+      ttlMs: Long = 0L): Dataset[graft.cdc.Consumer.BrokerOut] = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    events
+      .groupByKey(_.part)
+      .transformWithState(
+        new DriftBrokerProcessor(tickMs, maxApplyPerTick, ttlMs), timerMode(ttlMs),
+        OutputMode.Append())
   }
 
   /** Rolling-lag ring processor: the last ≤ `lastN` lag samples per lane
@@ -98,6 +403,8 @@ object StreamsV2 {
       else {
         ring.put(kept.toArray)
         val sorted = kept.sorted
+        // HALF_UP to 3 places — same rounding as the batch form's
+        // `round(percentile(...), 3)`
         def r3(x: Double): Double =
           BigDecimal(x).setScale(3, BigDecimal.RoundingMode.HALF_UP).toDouble
         Iterator.single(LagSnapshot(
@@ -110,8 +417,12 @@ object StreamsV2 {
     }
   }
 
-  /** Rolling lag percentiles on `transformWithState` — drop-in for
-    * [[Streams.lagRollingStream]]. */
+  /** Streaming rolling lag percentiles — the live form of the reference's
+    * MetricsStore (`src/engine/metrics.ts:42-44,97-139`): a per-lane ring
+    * of the LAST `lastN` lag samples, with a p50/p95/max snapshot emitted
+    * after every micro-batch. Batch counterpart (same slice, same
+    * interpolation): `MetricsAgg.lagPercentilesRolling`. Within a batch,
+    * samples append in delivery order (ord1, ord2). */
   def lagRollingStream(
       samples: Dataset[LagSample],
       lastN: Int = 2000): Dataset[LagSnapshot] = {
@@ -122,187 +433,195 @@ object StreamsV2 {
       .transformWithState(new LagRingProcessor(lastN), TimeMode.None(), OutputMode.Append())
   }
 
-  /** Funnel-progress processor: per-user first-completion times as ONE
-    * small `ValueState` (≤ |steps| longs), the shared
-    * [[Streams.funnelFold]] doing the semantics — v1/v2 parity by
-    * construction, same as the throttle/broker/lag processors. */
-  class FunnelProcessor(steps: Seq[String], ttl: TTLConfig)
-      extends StatefulProcessor[Long, Streams.EventIn, Streams.FunnelAdvance] {
-    @transient private var progress:
-      org.apache.spark.sql.streaming.ValueState[Streams.FunnelProgress] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      progress = getHandle.getValueState("funnelProgress",
-        Encoders.product[Streams.FunnelProgress], ttl)
-
-    override def handleInputRows(
-        uid: Long, rows: Iterator[Streams.EventIn],
-        timerValues: TimerValues): Iterator[Streams.FunnelAdvance] = {
-      val (next, out) =
-        Streams.funnelFold(steps, Option(progress.get()), rows.toSeq)
-      progress.update(next)
-      out.iterator
-    }
+  /** Streaming schema-change capture: the unbounded form of
+    * `SchemaEvolution.capture` — a per-table monotone version counter
+    * (`bumpSchemaVersion`, `src/modes/logBased.ts:210-217`; destination max
+    * rule `storage.ts:144-146`) carried across micro-batches
+    * ([[Streams.schemaFold]]). Per-lane emission timing is a stateless
+    * projection on top (`SchemaEvolution.captureLanes`' lane explode works
+    * unchanged on a streaming frame). */
+  def schemaCaptureStream(
+      changes: Dataset[graft.cdc.SchemaEvolution.SchemaChange])
+      : Dataset[VersionedSchemaChange] = {
+    val spark = changes.sparkSession
+    import spark.implicits._
+    changes
+      .groupByKey(_.tbl)
+      .transformWithState(
+        new FoldProcessor[String, graft.cdc.SchemaEvolution.SchemaChange,
+            SchemaVersionState, VersionedSchemaChange](
+          "schemaVersion", Encoders.product[SchemaVersionState], TTLConfig.NONE)(
+          (_, st, rows) => {
+            val (v, out) = schemaFold(st.map(_.version).getOrElse(1), rows)
+            (Some(SchemaVersionState(v)), out)
+          }),
+        TimeMode.None(), OutputMode.Append())
   }
 
-  /** Ordered-conversion funnel on `transformWithState` — drop-in for
-    * [[Streams.funnelStream]] (parity-asserted in EventStreamSpec). */
+  /** Streaming form of [[graft.operators.AsOfJoin]]: enrich a probe stream
+    * with the latest at-or-before build row per key, both sides arriving on
+    * ONE tagged stream (union the two feeds upstream — the batch form's
+    * trick, which makes batch↔streaming parity exact).
+    *
+    * Within a micro-batch, rows fold in (ts, tag) order with builds first on
+    * ties ([[Streams.asOfFold]]); across batches the latest build per key
+    * rides in keyed state, so a probe in a later batch still sees it. The
+    * one semantic difference from batch, inherent to streaming: a build
+    * row arriving in a LATER batch than a probe with a larger ts cannot
+    * retro-enrich it (the probe already emitted) — bound skew with a
+    * watermark upstream if the feeds can interleave across batches. State
+    * is one (ts, id) pair per key; `ttlMs` evicts idle keys. */
+  def asOfStream(rows: Dataset[AsOfIn], ttlMs: Long = 3600000L): Dataset[AsOfOut] = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    val (ttl, mode) = ttlAndMode(ttlMs)
+    rows
+      .groupByKey(_.key)
+      .transformWithState(
+        new FoldProcessor[Long, AsOfIn, AsOfState, AsOfOut](
+          "latestBuild", Encoders.product[AsOfState], ttl)(asOfFold),
+        mode, OutputMode.Append())
+  }
+
+  /** Streaming per-source token-budget admission — the ingest-time quota
+    * gate: state is ONE long (tokens consumed) per source, carried across
+    * micro-batches ([[Streams.budgetFold]]), so a runaway feed is cut off at
+    * write time without any global coordination; exactly-once under
+    * checkpoint resume (FailureDrillSpec). A strict GLOBAL budget would
+    * serialize the world through one key — the per-source shard is the
+    * scalable contract, and the curation-time global cut stays a batch job
+    * ([[graft.llm.Corpus.tokenBudget]]). TTL expiry drops the counter. */
+  def budgetAdmissionStream(
+      rows: Dataset[BudgetIn],
+      budgetPerSource: Long = 2000L,
+      ttlMs: Long = 3600000L): Dataset[BudgetOut] = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    val (ttl, mode) = ttlAndMode(ttlMs)
+    rows
+      .groupByKey(_.source)
+      .transformWithState(
+        new FoldProcessor[String, BudgetIn, Long, BudgetOut](
+          "usedTokens", Encoders.scalaLong, ttl)((source, st, in) => {
+          val (used, out) = budgetFold(source, st, in, budgetPerSource)
+          (Some(used), out)
+        }),
+        mode, OutputMode.Append())
+  }
+
+  /** Streaming ordered-conversion funnel — the incremental twin of
+    * [[graft.operators.EventAnalytics.funnel]]: per-user stage progress
+    * (≤ |steps| longs) as keyed state, one [[Streams.FunnelAdvance]] per
+    * (user, stage) ever ([[Streams.funnelFold]]), so the downstream
+    * per-stage count is an append-only aggregate instead of a re-scan of
+    * history. */
   def funnelStream(
-      events: Dataset[Streams.EventIn],
+      events: Dataset[EventIn],
       steps: Seq[String] = Seq("signup", "click", "purchase"),
-      ttlMs: Long = 0L): Dataset[Streams.FunnelAdvance] = {
+      ttlMs: Long = 0L): Dataset[FunnelAdvance] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val (ttl, mode) =
-      if (ttlMs > 0)
-        (TTLConfig(java.time.Duration.ofMillis(ttlMs)), TimeMode.ProcessingTime())
-      else (TTLConfig.NONE, TimeMode.None())
+    val (ttl, mode) = ttlAndMode(ttlMs)
     events
       .groupByKey(_.userId)
-      .transformWithState(new FunnelProcessor(steps, ttl), mode, OutputMode.Append())
+      .transformWithState(
+        new FoldProcessor[Long, EventIn, FunnelProgress, FunnelAdvance](
+          "funnelProgress", Encoders.product[FunnelProgress], ttl)((_, st, rows) => {
+          val (next, out) = funnelFold(steps, st, rows)
+          (Some(next), out)
+        }),
+        mode, OutputMode.Append())
   }
 
-  /** Transition-matrix processor: ONE previous-event tuple of
-    * `ValueState` per user — the fold is [[Streams.transitionsFold]],
-    * shared with the `flatMapGroupsWithState` form. TTL expiry clears
-    * the carried tuple (declarative `TTLConfig`, like the v1 form's
-    * plain eviction — a re-appearing user simply starts a new chain). */
-  class TransitionsProcessor(ttl: TTLConfig)
-      extends StatefulProcessor[Long, (Long, Long, String, Long), Streams.TransitionOut] {
-    @transient private var last: org.apache.spark.sql.streaming.ValueState[Streams.LastEvent] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      last = getHandle.getValueState(
-        "lastEvent", Encoders.product[Streams.LastEvent], ttl)
-
-    override def handleInputRows(
-        userId: Long, rows: Iterator[(Long, Long, String, Long)],
-        timerValues: TimerValues): Iterator[Streams.TransitionOut] = {
-      val start = if (last.exists()) Some(last.get()) else None
-      val (next, out) = Streams.transitionsFold(userId, start,
-        rows.map(e => (e._2, e._3, e._4)).toSeq)
-      next.foreach(last.update)
-      out.iterator
-    }
-  }
-
-  /** Streaming transition matrix on `transformWithState` — drop-in for
-    * [[Streams.transitionsStream]]. `ttlMs <= 0` disables expiry. */
+  /** Streaming twin of the batch transition matrix: one previous-event
+    * tuple of state per user ([[Streams.transitionsFold]]); each arriving
+    * event emits its (previous → current) pair, so the matrix downstream is
+    * an append-only count per (from, to) instead of a `lead` window over all
+    * history. `events` rows are (userId, eventId, eventType, tMs). TTL
+    * expiry drops the tuple: a re-appearing user starts a new chain. */
   def transitionsStream(
       events: Dataset[(Long, Long, String, Long)],
-      ttlMs: Long = 0L): Dataset[Streams.TransitionOut] = {
+      ttlMs: Long = 0L): Dataset[TransitionOut] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val (ttl, mode) =
-      if (ttlMs > 0)
-        (TTLConfig(java.time.Duration.ofMillis(ttlMs)), TimeMode.ProcessingTime())
-      else (TTLConfig.NONE, TimeMode.None())
+    val (ttl, mode) = ttlAndMode(ttlMs)
     events
       .groupByKey(_._1)
-      .transformWithState(new TransitionsProcessor(ttl), mode, OutputMode.Append())
+      .transformWithState(
+        new FoldProcessor[Long, (Long, Long, String, Long), LastEvent, TransitionOut](
+          "lastEvent", Encoders.product[LastEvent], ttl)((uid, st, rows) =>
+          transitionsFold(uid, st, rows.map(e => (e._2, e._3, e._4)))),
+        mode, OutputMode.Append())
   }
 
-  /** Retention processor: (cohortDay, emitted-day set, pending) per user
-    * — the fold is [[Streams.retentionFold]], shared with the v1 form
-    * (including the pre-signup same-day `pending` buffer). */
-  class RetentionProcessor(ttl: TTLConfig)
-      extends StatefulProcessor[Long, Streams.EventIn, Streams.RetentionMark] {
-    @transient private var st: org.apache.spark.sql.streaming.ValueState[Streams.RetentionState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState(
-        "retention", Encoders.product[Streams.RetentionState], ttl)
-
-    override def handleInputRows(
-        userId: Long, rows: Iterator[Streams.EventIn],
-        timerValues: TimerValues): Iterator[Streams.RetentionMark] = {
-      val start = if (st.exists()) Some(st.get()) else None
-      val (next, out) = Streams.retentionFold(userId, start, rows.toSeq)
-      st.update(next)
-      out.iterator
-    }
-  }
-
-  /** Streaming retention triangle on `transformWithState` — drop-in for
-    * [[Streams.retentionStream]]. `ttlMs <= 0` disables expiry. */
+  /** Streaming cohort-retention twin of
+    * [[graft.operators.EventAnalytics.retention]]: per-user (cohort day,
+    * marked-day set) state, one [[Streams.RetentionMark]] per (user, active
+    * day) ever ([[Streams.retentionFold]]). Pre-signup same-day activity is
+    * buffered in `pending`, so stream == batch even when the activity row
+    * arrives before its user's signup row. */
   def retentionStream(
-      events: Dataset[Streams.EventIn],
-      ttlMs: Long = 0L): Dataset[Streams.RetentionMark] = {
+      events: Dataset[EventIn],
+      ttlMs: Long = 0L): Dataset[RetentionMark] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val (ttl, mode) =
-      if (ttlMs > 0)
-        (TTLConfig(java.time.Duration.ofMillis(ttlMs)), TimeMode.ProcessingTime())
-      else (TTLConfig.NONE, TimeMode.None())
+    val (ttl, mode) = ttlAndMode(ttlMs)
     events
       .groupByKey(_.userId)
-      .transformWithState(new RetentionProcessor(ttl), mode, OutputMode.Append())
+      .transformWithState(
+        new FoldProcessor[Long, EventIn, RetentionState, RetentionMark](
+          "retention", Encoders.product[RetentionState], ttl)((uid, st, rows) => {
+          val (next, out) = retentionFold(uid, st, rows)
+          (Some(next), out)
+        }),
+        mode, OutputMode.Append())
   }
 
-  /** Last-touch attribution processor: ONE carried touch tuple per user
-    * — the fold is [[Streams.attributionFold]], shared with the v1
-    * form; every purchase emits already credited. */
-  class AttributionProcessor(touchTypes: Set[String], ttl: TTLConfig)
-      extends StatefulProcessor[Long, Streams.AttrIn, Streams.AttributionOut] {
-    @transient private var touch: org.apache.spark.sql.streaming.ValueState[Streams.LastEvent] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      touch = getHandle.getValueState(
-        "lastTouch", Encoders.product[Streams.LastEvent], ttl)
-
-    override def handleInputRows(
-        userId: Long, rows: Iterator[Streams.AttrIn],
-        timerValues: TimerValues): Iterator[Streams.AttributionOut] = {
-      val start = if (touch.exists()) Some(touch.get()) else None
-      val (next, out) =
-        Streams.attributionFold(userId, touchTypes, start, rows.toSeq)
-      next.foreach(touch.update)
-      out.iterator
-    }
-  }
-
-  /** Streaming last-touch attribution on `transformWithState` — drop-in
-    * for [[Streams.attributionStream]]. `ttlMs <= 0` disables expiry. */
+  /** Streaming last-touch attribution twin of
+    * [[graft.operators.EventAnalytics.attribution]]: ONE carried touch tuple
+    * per user ([[Streams.attributionFold]]); every purchase emits exactly
+    * once, already credited, so the channel ledger downstream is an
+    * append-only (count, ticks) aggregate. Money stays integer ticks. */
   def attributionStream(
-      events: Dataset[Streams.AttrIn],
+      events: Dataset[AttrIn],
       touchTypes: Set[String] = Set("click", "view"),
-      ttlMs: Long = 0L): Dataset[Streams.AttributionOut] = {
+      ttlMs: Long = 0L): Dataset[AttributionOut] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val (ttl, mode) =
-      if (ttlMs > 0)
-        (TTLConfig(java.time.Duration.ofMillis(ttlMs)), TimeMode.ProcessingTime())
-      else (TTLConfig.NONE, TimeMode.None())
+    val (ttl, mode) = ttlAndMode(ttlMs)
     events
       .groupByKey(_.userId)
-      .transformWithState(new AttributionProcessor(touchTypes, ttl), mode, OutputMode.Append())
+      .transformWithState(
+        new FoldProcessor[Long, AttrIn, LastEvent, AttributionOut](
+          "lastTouch", Encoders.product[LastEvent], ttl)((uid, st, rows) =>
+          attributionFold(uid, touchTypes, st, rows)),
+        mode, OutputMode.Append())
   }
 
   /** [[Streams.ActivityState]] plus the last-touch processing time the
-    * timer-based TTL eviction needs (V2 has no `setTimeoutDuration`; a
-    * timer is registered per batch and a stale-timer guard compares
-    * against `lastTouchMs`). */
+    * timer-based TTL eviction needs (a timer is registered per batch and a
+    * stale-timer guard compares against `lastTouchMs`). */
   case class ActivityStateV2(days: Seq[Long], everActive: Boolean,
       lastTouchMs: Long)
 
-  /** DAU / new-vs-returning processor — the `transformWithState` form of
-    * [[Streams.activityStream]], same fold ([[Streams.activityFold]]),
-    * same TTL-eviction contract: expiry drops the day SET but keeps the
-    * one-boolean `everActive` tombstone, so a re-appearing user is never
-    * a second `new`. */
+  /** DAU / new-vs-returning processor over [[Streams.activityFold]]. TTL
+    * expiry drops the day SET but keeps the one-boolean `everActive`
+    * tombstone, so a re-appearing user's days re-emit as returning, never
+    * as a second `new` — the conservative direction (DAU may overcount a
+    * TTL-evicted user's revisited day; `new_users` never inflates). */
   class ActivityProcessor(ttlMs: Long)
-      extends StatefulProcessor[Long, Streams.EventIn, Streams.DayActive] {
-    @transient private var st: org.apache.spark.sql.streaming.ValueState[ActivityStateV2] = _
+      extends StatefulProcessor[Long, EventIn, DayActive] {
+    @transient private var st: ValueState[ActivityStateV2] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       st = getHandle.getValueState(
         "activity", Encoders.product[ActivityStateV2], TTLConfig.NONE)
 
     override def handleInputRows(
-        userId: Long, rows: Iterator[Streams.EventIn],
-        timerValues: TimerValues): Iterator[Streams.DayActive] = {
+        userId: Long, rows: Iterator[EventIn],
+        timerValues: TimerValues): Iterator[DayActive] = {
       val start = if (st.exists()) {
-        val s = st.get(); Some(Streams.ActivityState(s.days, s.everActive))
+        val s = st.get(); Some(ActivityState(s.days, s.everActive))
       } else None
       val (next, out) = Streams.activityFold(userId, start, rows.toSeq)
       val now = timerValues.getCurrentProcessingTimeInMs()
@@ -321,7 +640,7 @@ object StreamsV2 {
 
     override def handleExpiredTimer(
         userId: Long, timerValues: TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[Streams.DayActive] = {
+        expiredTimerInfo: ExpiredTimerInfo): Iterator[DayActive] = {
       // a timer registered before a later touch is STALE — only evict
       // when the key has been silent for a full TTL
       if (st.exists() &&
@@ -331,41 +650,42 @@ object StreamsV2 {
     }
   }
 
-  /** Streaming DAU on `transformWithState` — drop-in for
-    * [[Streams.activityStream]]. `ttlMs <= 0` disables expiry. */
+  /** Streaming DAU / new-vs-returning twin of
+    * [[graft.operators.EventAnalytics.newVsReturning]]: per-user
+    * active-day-set state, one [[Streams.DayActive]] per (user, day) ever.
+    * Aggregating the emitted stream by day reproduces the batch ledger
+    * (dau / new_users / returning_users) at any point in time. */
   def activityStream(
-      events: Dataset[Streams.EventIn],
-      ttlMs: Long = 0L): Dataset[Streams.DayActive] = {
+      events: Dataset[EventIn],
+      ttlMs: Long = 0L): Dataset[DayActive] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val mode = if (ttlMs > 0) TimeMode.ProcessingTime() else TimeMode.None()
     events
       .groupByKey(_.userId)
-      .transformWithState(new ActivityProcessor(ttlMs), mode, OutputMode.Append())
+      .transformWithState(new ActivityProcessor(ttlMs), timerMode(ttlMs), OutputMode.Append())
   }
 
   /** [[Streams.GrowthState]] plus the last-touch processing time (same
     * stale-timer discipline as [[ActivityStateV2]]). */
   case class GrowthStateV2(lastWeek: Long, churned: Boolean, lastTouchMs: Long)
 
-  /** Growth-accounting processor — the `transformWithState` form of
-    * [[Streams.growthStream]], same fold ([[Streams.growthFold]]), same
-    * eviction contract: expiry emits the silent `churned` row and keeps
-    * the (lastWeek, churned=true) tombstone so a return classifies
-    * `resurrected`, never a second `new`. */
+  /** Growth-accounting processor over [[Streams.growthFold]]: expiry emits
+    * the silent `churned` row and keeps the (lastWeek, churned=true)
+    * tombstone, so a return classifies `resurrected`, never a second
+    * `new`. */
   class GrowthProcessor(ttlMs: Long)
-      extends StatefulProcessor[Long, Streams.EventIn, Streams.GrowthMark] {
-    @transient private var st: org.apache.spark.sql.streaming.ValueState[GrowthStateV2] = _
+      extends StatefulProcessor[Long, EventIn, GrowthMark] {
+    @transient private var st: ValueState[GrowthStateV2] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       st = getHandle.getValueState(
         "growth", Encoders.product[GrowthStateV2], TTLConfig.NONE)
 
     override def handleInputRows(
-        userId: Long, rows: Iterator[Streams.EventIn],
-        timerValues: TimerValues): Iterator[Streams.GrowthMark] = {
+        userId: Long, rows: Iterator[EventIn],
+        timerValues: TimerValues): Iterator[GrowthMark] = {
       val start = if (st.exists()) {
-        val s = st.get(); Some(Streams.GrowthState(s.lastWeek, s.churned))
+        val s = st.get(); Some(GrowthState(s.lastWeek, s.churned))
       } else None
       val (next, out) = Streams.growthFold(userId, start, rows.toSeq)
       val now = timerValues.getCurrentProcessingTimeInMs()
@@ -380,462 +700,106 @@ object StreamsV2 {
 
     override def handleExpiredTimer(
         userId: Long, timerValues: TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[Streams.GrowthMark] = {
+        expiredTimerInfo: ExpiredTimerInfo): Iterator[GrowthMark] = {
       if (st.exists() &&
           timerValues.getCurrentProcessingTimeInMs() - st.get().lastTouchMs >= ttlMs) {
         val s = st.get()
         if (s.lastWeek >= 0 && !s.churned) {
           st.update(s.copy(churned = true))
-          return Iterator.single(
-            Streams.GrowthMark(userId, s.lastWeek + 1, "churned"))
+          return Iterator.single(GrowthMark(userId, s.lastWeek + 1, "churned"))
         }
       }
       Iterator.empty
     }
   }
 
-  /** Streaming growth accounting on `transformWithState` — drop-in for
-    * [[Streams.growthStream]]. `ttlMs <= 0` disables expiry. */
+  /** Streaming weekly growth-accounting twin of
+    * [[graft.operators.EventAnalytics.growthAccounting]]: one last-active
+    * week of state per user, each classification emitted the moment its
+    * evidence arrives. With `ttlMs = 0` the event-driven kinds
+    * (new/retained/resurrected + gap churn) stream exactly. Silent churn —
+    * a user who never returns — has no closing event, so it emits on TTL
+    * expiry as `churned` at lastWeek+1, what the batch ledger attributes
+    * once max-week passes the user's silence.
+    *
+    * TTL trade-off (pinned in EventStreamSpec): if the TTL fires before the
+    * user's gap is real (they return in week lastWeek+1), the stream has
+    * emitted churned+resurrected where the batch ledger says `retained` —
+    * an append-only stream cannot retract an eviction-time mark; choose
+    * `ttlMs` ≫ the week cadence. */
   def growthStream(
-      events: Dataset[Streams.EventIn],
-      ttlMs: Long = 0L): Dataset[Streams.GrowthMark] = {
+      events: Dataset[EventIn],
+      ttlMs: Long = 0L): Dataset[GrowthMark] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val mode = if (ttlMs > 0) TimeMode.ProcessingTime() else TimeMode.None()
     events
       .groupByKey(_.userId)
-      .transformWithState(new GrowthProcessor(ttlMs), mode, OutputMode.Append())
+      .transformWithState(new GrowthProcessor(ttlMs), timerMode(ttlMs), OutputMode.Append())
   }
 
-  /** RFM processor: one 3-long `ValueState` per purchasing user — the
-    * running (lastDay, frequency, ticks). The fold is
-    * [[Streams.rfmFold]], the SAME function the
-    * `flatMapGroupsWithState` form calls — the two APIs cannot drift.
-    * TTL here is declarative; the [[Streams.rfmStream]] docstring's
-    * eviction caveat (totals ARE the product; expiry resets a
-    * re-appearing purchaser visibly) applies identically. */
-  class RfmProcessor(ttl: TTLConfig)
-      extends StatefulProcessor[Long, Streams.AttrIn, Streams.RfmMark] {
-    @transient private var totals: org.apache.spark.sql.streaming.ValueState[Streams.RfmState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      totals = getHandle.getValueState(
-        "rfmTotals", Encoders.product[Streams.RfmState], ttl)
-
-    override def handleInputRows(
-        userId: Long, rows: Iterator[Streams.AttrIn],
-        timerValues: TimerValues): Iterator[Streams.RfmMark] = {
-      val start = if (totals.exists()) Some(totals.get()) else None
-      val (next, out) = Streams.rfmFold(userId, start, rows.toSeq)
-      next.foreach(totals.update)
-      out.iterator
-    }
-  }
-
-  /** Streaming RFM on `transformWithState` — drop-in for
-    * [[Streams.rfmStream]]. `ttlMs <= 0` disables expiry. */
+  /** Streaming RFM twin of [[graft.operators.EventAnalytics.rfm]]: three
+    * running totals per purchasing user ([[Streams.rfmFold]]); every
+    * purchase batch emits a superseding snapshot, so the segmentation table
+    * downstream is a latest-mark-per-user upsert plus the fixed scoring
+    * projection. Money stays integer ticks. TTL expiry drops the totals: a
+    * re-appearing purchaser restarts them, which the latest-mark-wins
+    * consumer surfaces as a visible reset rather than wrong arithmetic. */
   def rfmStream(
-      events: Dataset[Streams.AttrIn],
-      ttlMs: Long = 0L): Dataset[Streams.RfmMark] = {
+      events: Dataset[AttrIn],
+      ttlMs: Long = 0L): Dataset[RfmMark] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val (ttl, mode) =
-      if (ttlMs > 0)
-        (TTLConfig(java.time.Duration.ofMillis(ttlMs)), TimeMode.ProcessingTime())
-      else (TTLConfig.NONE, TimeMode.None())
+    val (ttl, mode) = ttlAndMode(ttlMs)
     events
       .groupByKey(_.userId)
-      .transformWithState(new RfmProcessor(ttl), mode, OutputMode.Append())
+      .transformWithState(
+        new FoldProcessor[Long, AttrIn, RfmState, RfmMark](
+          "rfmTotals", Encoders.product[RfmState], ttl)(rfmFold),
+        mode, OutputMode.Append())
   }
 
-  /** Cohort-LTV processor: one long of `ValueState` per user (the signup
-    * cohort day). The fold is [[Streams.ltvFold]] — shared with the
-    * `flatMapGroupsWithState` form. TTL expiry forgets a cohort, so a
-    * user's LATER purchases drop from the triangle (the conservative
-    * direction — the entry mark emitted exactly once before expiry, so
-    * cohort sizes never double-count). */
-  class LtvProcessor(ttl: TTLConfig)
-      extends StatefulProcessor[Long, Streams.AttrIn, Streams.LtvMark] {
-    @transient private var cohort: org.apache.spark.sql.streaming.ValueState[Streams.LtvState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      cohort = getHandle.getValueState(
-        "ltvCohort", Encoders.product[Streams.LtvState], ttl)
-
-    override def handleInputRows(
-        userId: Long, rows: Iterator[Streams.AttrIn],
-        timerValues: TimerValues): Iterator[Streams.LtvMark] = {
-      val start = if (cohort.exists()) Some(cohort.get()) else None
-      val (next, out) = Streams.ltvFold(userId, start, rows.toSeq)
-      if (next.cohortDay >= 0) cohort.update(next)
-      out.iterator
-    }
-  }
-
-  /** Streaming cohort LTV on `transformWithState` — drop-in for
-    * [[Streams.ltvStream]]. `ttlMs <= 0` disables expiry. */
+  /** Streaming cohort-LTV twin of
+    * [[graft.operators.EventAnalytics.cohortLtv]]: one cohort day of state
+    * per user ([[Streams.ltvFold]]); every purchase emits already
+    * cohort-attributed, so the LTV triangle downstream is an append-only
+    * (cohortDay, weekOffset) aggregate. TTL expiry forgets a cohort — the
+    * user's LATER purchases drop from the triangle (revenue undercounts;
+    * cohort sizes never double-count, the entry mark emitted once). */
   def ltvStream(
-      events: Dataset[Streams.AttrIn],
-      ttlMs: Long = 0L): Dataset[Streams.LtvMark] = {
+      events: Dataset[AttrIn],
+      ttlMs: Long = 0L): Dataset[LtvMark] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val (ttl, mode) =
-      if (ttlMs > 0)
-        (TTLConfig(java.time.Duration.ofMillis(ttlMs)), TimeMode.ProcessingTime())
-      else (TTLConfig.NONE, TimeMode.None())
+    val (ttl, mode) = ttlAndMode(ttlMs)
     events
       .groupByKey(_.userId)
-      .transformWithState(new LtvProcessor(ttl), mode, OutputMode.Append())
-  }
-
-  /** Token-bucket throttle processor: one small `ValueState` per lane —
-    * the scalar-state counterpart to the ListState buffers above (the
-    * bucket is (tick, allowance, used); RocksDB rewrites one tiny value
-    * per lane per batch). The drain math is [[Streams.throttleFold]],
-    * the SAME function the `flatMapGroupsWithState` form calls — the two
-    * APIs cannot drift. */
-  class ThrottleProcessor(rate: Double, stepMs: Long, batchCap: Int, ttl: TTLConfig)
-      extends StatefulProcessor[String, graft.cdc.Consumer.DeliveryIn, graft.cdc.Consumer.DeliveryOut] {
-    @transient private var bucket: org.apache.spark.sql.streaming.ValueState[Streams.ThrottleState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      bucket = getHandle.getValueState(
-        "bucket", Encoders.product[Streams.ThrottleState], ttl)
-
-    override def handleInputRows(
-        method: String, rows: Iterator[graft.cdc.Consumer.DeliveryIn],
-        timerValues: TimerValues): Iterator[graft.cdc.Consumer.DeliveryOut] = {
-      val st =
-        if (bucket.exists()) bucket.get()
-        else Streams.ThrottleState(0L, 0.0, 0)
-      val (next, out) = Streams.throttleFold(st, rows.toSeq, rate, stepMs, batchCap)
-      bucket.update(next)
-      out.iterator
-    }
-  }
-
-  /** Consumer throttle on `transformWithState` — drop-in for
-    * [[Streams.throttleStream]]. `ttlMs <= 0` disables expiry. */
-  def throttleStream(
-      events: Dataset[graft.cdc.Consumer.DeliveryIn],
-      rate: Double,
-      stepMs: Long = 50L,
-      batchCap: Int = 50,
-      ttlMs: Long = 0L): Dataset[graft.cdc.Consumer.DeliveryOut] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val (ttl, mode) =
-      if (ttlMs > 0)
-        (TTLConfig(java.time.Duration.ofMillis(ttlMs)), TimeMode.ProcessingTime())
-      else (TTLConfig.NONE, TimeMode.None())
-    events
-      .groupByKey(_.method)
       .transformWithState(
-        new ThrottleProcessor(rate, stepMs, batchCap, ttl), mode, OutputMode.Append())
+        new FoldProcessor[Long, AttrIn, LtvState, LtvMark](
+          "ltvCohort", Encoders.product[LtvState], ttl)((uid, st, rows) => {
+          val (next, out) = ltvFold(uid, st, rows)
+          (Some(next).filter(_.cohortDay >= 0), out)
+        }),
+        mode, OutputMode.Append())
   }
 
-  /** As-of enrichment processor: the latest build row per key in one
-    * `ValueState` — the minimal-state operator of the family (one (ts, id)
-    * pair per key, rewritten only when a newer build arrives). The in-batch
-    * fold is [[Streams.asOfFold]], the SAME function the
-    * `flatMapGroupsWithState` form calls — the two APIs cannot drift. */
-  class AsOfProcessor(ttl: TTLConfig)
-      extends StatefulProcessor[Long, Streams.AsOfIn, Streams.AsOfOut] {
-    @transient private var latest: org.apache.spark.sql.streaming.ValueState[Streams.AsOfState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      latest = getHandle.getValueState(
-        "latestBuild", Encoders.product[Streams.AsOfState], ttl)
-
-    override def handleInputRows(
-        key: Long, rows: Iterator[Streams.AsOfIn],
-        timerValues: TimerValues): Iterator[Streams.AsOfOut] = {
-      val st = if (latest.exists()) Some(latest.get()) else None
-      val (next, out) = Streams.asOfFold(key, st, rows.toSeq)
-      next.foreach(latest.update)
-      out.iterator
-    }
-  }
-
-  /** Streaming as-of enrichment on `transformWithState` — drop-in for
-    * [[Streams.asOfStream]]. `ttlMs <= 0` disables expiry. */
-  def asOfStream(
-      rows: Dataset[Streams.AsOfIn],
-      ttlMs: Long = 3600000L): Dataset[Streams.AsOfOut] = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    val (ttl, mode) =
-      if (ttlMs > 0)
-        (TTLConfig(java.time.Duration.ofMillis(ttlMs)), TimeMode.ProcessingTime())
-      else (TTLConfig.NONE, TimeMode.None())
-    rows
-      .groupByKey(_.key)
-      .transformWithState(new AsOfProcessor(ttl), mode, OutputMode.Append())
-  }
-
-  /** FIFO broker-delivery processor: one (tick, used) `ValueState` per
-    * partition. The drain math is [[Streams.brokerFold]], the SAME
-    * function the `flatMapGroupsWithState` form calls — the two APIs
-    * cannot drift. */
-  class BrokerDeliveryProcessor(tickMs: Long, maxApplyPerTick: Int)
-      extends StatefulProcessor[Int, graft.cdc.Consumer.BrokerIn, graft.cdc.Consumer.BrokerOut] {
-    @transient private var queue: org.apache.spark.sql.streaming.ValueState[Streams.BrokerQueueState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      queue = getHandle.getValueState(
-        "queue", Encoders.product[Streams.BrokerQueueState], TTLConfig.NONE)
-
-    override def handleInputRows(
-        part: Int, rows: Iterator[graft.cdc.Consumer.BrokerIn],
-        timerValues: TimerValues): Iterator[graft.cdc.Consumer.BrokerOut] = {
-      val st = if (queue.exists()) queue.get() else Streams.BrokerQueueState(0L, 0)
-      val (next, out) = Streams.brokerFold(part, st, rows.toSeq, tickMs, maxApplyPerTick)
-      queue.update(next)
-      out.iterator
-    }
-  }
-
-  /** Exact FIFO broker delivery on `transformWithState` — drop-in for
-    * [[Streams.brokerDeliverStream]]. */
-  def brokerDeliverStream(
-      events: Dataset[graft.cdc.Consumer.BrokerIn],
-      tickMs: Long = 50L,
-      maxApplyPerTick: Int = 4): Dataset[graft.cdc.Consumer.BrokerOut] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .groupByKey(_.part)
-      .transformWithState(
-        new BrokerDeliveryProcessor(tickMs, maxApplyPerTick), TimeMode.None(), OutputMode.Append())
-  }
-
-  /** Drift-broker (LIFO) processor: the per-partition (clock, pending
-    * stack) in one `ValueState`. A ValueState, not a ListState, on
-    * purpose: the stack mutates at its HEAD (every arrival prepends, every
-    * drain pops), so the append-only ListState write pattern buys nothing
-    * here — the value rewrite is the honest cost of LIFO state. The fold
-    * is [[Streams.driftFold]], the SAME function the
-    * `flatMapGroupsWithState` form calls — the two APIs cannot drift.
-    *
-    * `ttlMs > 0` arms a processing-time timer re-registered on every
-    * batch; if it fires with no new arrivals the stack drains to empty
-    * (same terminal semantics as v1's ProcessingTimeTimeout). Bounded
-    * replays use a flush sentinel instead, so no wall clock enters tests. */
-  class DriftBrokerProcessor(tickMs: Long, maxApplyPerTick: Int, ttlMs: Long)
-      extends StatefulProcessor[Int, graft.cdc.Consumer.DriftIn, graft.cdc.Consumer.BrokerOut] {
-    @transient private var queue: org.apache.spark.sql.streaming.ValueState[Streams.DriftQueueState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      queue = getHandle.getValueState(
-        "driftQueue", Encoders.product[Streams.DriftQueueState], TTLConfig.NONE)
-
-    override def handleInputRows(
-        part: Int, rows: Iterator[graft.cdc.Consumer.DriftIn],
-        timerValues: TimerValues): Iterator[graft.cdc.Consumer.BrokerOut] = {
-      val st = if (queue.exists()) queue.get() else Streams.DriftQueueState(0L, Seq.empty)
-      val (next, out) = Streams.driftFold(part, st, rows.toSeq, tickMs, maxApplyPerTick)
-      queue.update(next)
-      if (ttlMs > 0) {
-        // slide the idle deadline: drop the old timer, arm a fresh one
-        getHandle.listTimers().foreach(getHandle.deleteTimer)
-        getHandle.registerTimer(timerValues.getCurrentProcessingTimeInMs() + ttlMs)
-      }
-      out.iterator
-    }
-
-    override def handleExpiredTimer(
-        part: Int, timerValues: TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo)
-        : Iterator[graft.cdc.Consumer.BrokerOut] = {
-      val st = if (queue.exists()) queue.get() else Streams.DriftQueueState(0L, Seq.empty)
-      val (_, out) = Streams.driftFold(part, st, Seq.empty, tickMs, maxApplyPerTick, flush = true)
-      queue.clear()
-      out.iterator
-    }
-  }
-
-  /** Exact drift-on (LIFO) broker delivery on `transformWithState` —
-    * drop-in for [[Streams.brokerDeliverDriftStream]]. */
-  def brokerDeliverDriftStream(
-      events: Dataset[graft.cdc.Consumer.DriftIn],
-      tickMs: Long = 50L,
-      maxApplyPerTick: Int = 4,
-      ttlMs: Long = 0L): Dataset[graft.cdc.Consumer.BrokerOut] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val mode = if (ttlMs > 0) TimeMode.ProcessingTime() else TimeMode.None()
-    events
-      .groupByKey(_.part)
-      .transformWithState(
-        new DriftBrokerProcessor(tickMs, maxApplyPerTick, ttlMs), mode, OutputMode.Append())
-  }
-
-  /** Schema-capture processor: the per-table monotone version counter in
-    * one tiny `ValueState`. The versioning is [[Streams.schemaFold]], the
-    * SAME function the `flatMapGroupsWithState` form calls — the two APIs
-    * cannot drift. */
-  class SchemaCaptureProcessor
-      extends StatefulProcessor[String, graft.cdc.SchemaEvolution.SchemaChange, Streams.VersionedSchemaChange] {
-    @transient private var version: org.apache.spark.sql.streaming.ValueState[Streams.SchemaVersionState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      version = getHandle.getValueState(
-        "schemaVersion", Encoders.product[Streams.SchemaVersionState], TTLConfig.NONE)
-
-    override def handleInputRows(
-        tbl: String, rows: Iterator[graft.cdc.SchemaEvolution.SchemaChange],
-        timerValues: TimerValues): Iterator[Streams.VersionedSchemaChange] = {
-      val v0 = if (version.exists()) version.get().version else 1
-      val (v, out) = Streams.schemaFold(v0, rows.toSeq)
-      version.update(Streams.SchemaVersionState(v))
-      out.iterator
-    }
-  }
-
-  /** Streaming schema-change capture on `transformWithState` — drop-in
-    * for [[Streams.schemaCaptureStream]]. */
-  def schemaCaptureStream(
-      changes: Dataset[graft.cdc.SchemaEvolution.SchemaChange]): Dataset[Streams.VersionedSchemaChange] = {
-    val spark = changes.sparkSession
-    import spark.implicits._
-    changes
-      .groupByKey(_.tbl)
-      .transformWithState(new SchemaCaptureProcessor, TimeMode.None(), OutputMode.Append())
-  }
-
-  /** Latest row image within one open poll window (public for the state
-    * encoder). */
-  case class PollWinState(
-      opCode: String, valV: Option[Double], kV: Option[Long], lsn: Long, n: Long)
-
-  /** One closed poll window's emission — same fields as
-    * [[Streams.pollStream]]'s row with `poll_ts` as epoch millis. */
-  case class PollOut(
-      tbl: String, pk: String, pollTs: Long, opCode: String,
-      afterVal: Option[Double], afterK: Option[Long], opsInWindow: Long)
-
-  /** Polling-capture processor — the ROW-IMAGE form of the poll lane: per
-    * (tbl, pk) key a `MapState` holds the latest image (max-lsn op, merged
-    * payload fields, op count) of each OPEN tumbling window, and an
-    * event-time timer at each window's end emits the image once the
-    * watermark closes it — the poll's lossy-by-design semantics
-    * (intermediate versions die inside the window state;
-    * `sim/engines/PollingEngine.ts:59-84`).
-    *
-    * vs the v1 windowed `max_by` aggregation ([[Streams.pollStream]]):
-    * same semantics (parity-asserted), but the state is explicit — one
-    * map entry per key per open window, O(1) per entry regardless of ops
-    * per window — and the RocksDB write pattern is per-window-entry
-    * updates instead of aggregation buffers. */
-  class PollProcessor(pollIntervalMs: Long)
-      extends StatefulProcessor[(String, String), Event, PollOut] {
-    @transient private var windows: org.apache.spark.sql.streaming.MapState[Long, PollWinState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      windows = getHandle.getMapState(
-        "openWindows", Encoders.scalaLong, Encoders.product[PollWinState], TTLConfig.NONE)
-
-    override def handleInputRows(
-        key: (String, String), rows: Iterator[Event],
-        timerValues: TimerValues): Iterator[PollOut] = {
-      val wm = timerValues.getCurrentWatermarkInMs()
-      rows.toSeq.sortBy(_.lsn).foreach { e =>
-        val ws = Math.floorDiv(e.commitTs, pollIntervalMs) * pollIntervalMs
-        // late-row guard, matching the v1 windowed aggregation's watermark
-        // filter: a row for a window the watermark already closed must NOT
-        // reopen it (it would emit a duplicate window on the next timer)
-        if (ws + pollIntervalMs > wm) {
-          val cur = if (windows.containsKey(ws)) Some(windows.getValue(ws)) else None
-          val next = cur match {
-            case None => PollWinState(e.opCode, e.valV, e.kV, e.lsn, 1L)
-            case Some(c) =>
-              if (e.lsn >= c.lsn) PollWinState(e.opCode, e.valV, e.kV, e.lsn, c.n + 1)
-              else c.copy(n = c.n + 1)
-          }
-          windows.updateValue(ws, next)
-          getHandle.registerTimer(ws + pollIntervalMs)
-        }
-      }
-      Iterator.empty
-    }
-
-    override def handleExpiredTimer(
-        key: (String, String), timerValues: TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[PollOut] = {
-      // a timer at windowEnd fires once the watermark passes it; emit and
-      // drop every window closed by the current watermark (covers several
-      // windows if the watermark jumped)
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val closed = windows.iterator()
-        .filter { case (ws, _) => ws + pollIntervalMs <= wm }
-        .toSeq.sortBy(_._1)
-      // mutate state eagerly, BEFORE the runtime consumes the returned
-      // iterator — removal inside a lazy map would couple state changes to
-      // output consumption order (partial consumption on error/stop could
-      // leave emitted-but-unremoved windows)
-      val out = closed.map { case (ws, st) =>
-        windows.removeKey(ws)
-        PollOut(key._1, key._2, ws + pollIntervalMs, st.opCode, st.valV, st.kV, st.n)
-      }
-      out.iterator
-    }
-  }
-
-  /** Streaming polling capture on `transformWithState` — the keyed
-    * row-image-state counterpart of [[Streams.pollStream]] (same emitted
-    * rows, `poll_ts` as epoch ms; parity in StreamingSpec).
-    *
-    * Late-data semantics, precisely: `transformWithState` filters input
-    * rows by EVENT TIME against the watermark (a row older than the
-    * watermark never reaches the processor), while the v1 windowed
-    * aggregation filters by WINDOW END (a late row still joins its
-    * window while the window is open). The two coincide whenever
-    * `watermarkDelay` bounds the feed's actual disorder — the contract a
-    * watermark is supposed to encode; under disorder EXCEEDING the
-    * stated delay, v1 may still absorb a late row into an open window
-    * where this form has already dropped it. Size the delay honestly and
-    * the forms are row-identical (randomized parity in StreamingSpec). */
-  def pollStream(
-      events: Dataset[Event],
-      pollIntervalMs: Long = 1000L,
-      watermarkDelay: String = "10 seconds"): Dataset[PollOut] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, timestamp_millis}
-    events
-      .withColumn("event_time", timestamp_millis(col("commitTs")))
-      .withWatermark("event_time", watermarkDelay)
-      .as[Event]
-      .groupByKey(e => (e.tbl, e.pk))
-      .transformWithState(
-        new PollProcessor(pollIntervalMs), TimeMode.EventTime(), OutputMode.Append())
-  }
-
-  /** SCD2 processor — the `transformWithState` form of
-    * [[Streams.scd2Stream]] (the heaviest per-key state of the keyed
-    * family: the OPEN dimension version plus the version counter). The
-    * step is [[Streams.scd2Fold]], the SAME function the
-    * `flatMapGroupsWithState` form calls — the two APIs cannot drift.
-    *
-    * TTL contract matches v1 exactly: eviction emits the OPEN version
+  /** SCD2 processor over [[Streams.scd2Fold]]: the OPEN dimension version
+    * plus the version counter per key. TTL eviction emits the OPEN version
     * with [[Streams.ScdEvictedOpen]] as its `validTo` (a silently dropped
     * open row would be a dimension history that never ends) and then
-    * REMOVES the state entirely — a re-appearing key restarts its version
-    * counter at 1, the v1 `state.remove()` semantics. One pending timer
-    * per key (delete-before-register, the DriftBrokerProcessor
-    * discipline), slid on every batch, so the timer fires only after a
-    * full TTL of silence. */
+    * REMOVES the state — a re-appearing key restarts its version counter at
+    * 1. One pending timer per key, slid on every batch, so it fires only
+    * after a full TTL of silence. */
   class Scd2Processor(ttlMs: Long)
-      extends StatefulProcessor[(String, String), Streams.ScdIn, Streams.ScdOut] {
-    @transient private var st: org.apache.spark.sql.streaming.ValueState[Streams.ScdState] = _
+      extends StatefulProcessor[(String, String), ScdIn, ScdOut] {
+    @transient private var st: ValueState[ScdState] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       st = getHandle.getValueState(
-        "scd2Open", Encoders.product[Streams.ScdState], TTLConfig.NONE)
+        "scd2Open", Encoders.product[ScdState], TTLConfig.NONE)
 
     override def handleInputRows(
-        key: (String, String), rows: Iterator[Streams.ScdIn],
-        timerValues: TimerValues): Iterator[Streams.ScdOut] = {
+        key: (String, String), rows: Iterator[ScdIn],
+        timerValues: TimerValues): Iterator[ScdOut] = {
       val start = if (st.exists()) Some(st.get()) else None
       val (next, out) = Streams.scd2Fold(start, rows.toSeq)
       next.foreach(st.update)
@@ -848,13 +812,13 @@ object StreamsV2 {
 
     override def handleExpiredTimer(
         key: (String, String), timerValues: TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[Streams.ScdOut] = {
+        expiredTimerInfo: ExpiredTimerInfo): Iterator[ScdOut] = {
       val evicted =
         if (st.exists()) {
           val p = st.get()
           if (p.open)
-            Some(Streams.ScdOut(key._1, key._2, p.openVer, p.validFrom,
-              Streams.ScdEvictedOpen, p.v, p.kk))
+            Some(ScdOut(key._1, key._2, p.openVer, p.validFrom,
+              ScdEvictedOpen, p.v, p.kk))
           else None
         } else None
       st.clear()
@@ -862,258 +826,80 @@ object StreamsV2 {
     }
   }
 
-  /** Streaming SCD Type-2 dimension builder on `transformWithState` —
-    * drop-in for [[Streams.scd2Stream]]. `ttlMs <= 0` disables expiry. */
+  /** Streaming SCD Type-2 dimension builder — the incremental twin of
+    * [[graft.cdc.ApplyEngine.scd2]]: each arriving op emits the version it
+    * closes (exactly once, in Append mode) and a non-delete opens the next.
+    * The emitted feed equals the batch history's `is_current = false` rows
+    * at any point — the open (current) versions live only in state. A
+    * warehouse consuming this feed appends closed versions and maintains
+    * current rows from the companion apply stream, so the dimension table
+    * needs no rebuild scan at 100 TB. */
   def scd2Stream(
-      ops: Dataset[Streams.ScdIn],
-      ttlMs: Long = 0L): Dataset[Streams.ScdOut] = {
+      ops: Dataset[ScdIn],
+      ttlMs: Long = 0L): Dataset[ScdOut] = {
     val spark = ops.sparkSession
     import spark.implicits._
-    val mode = if (ttlMs > 0) TimeMode.ProcessingTime() else TimeMode.None()
     ops
       .groupByKey(o => (o.tbl, o.pk))
-      .transformWithState(new Scd2Processor(ttlMs), mode, OutputMode.Append())
+      .transformWithState(new Scd2Processor(ttlMs), timerMode(ttlMs), OutputMode.Append())
   }
 
-  /** Heartbeat processor — the `transformWithState` form of
-    * [[Streams.heartbeatStream]]: one (lsn, t) tuple per table, the
-    * smallest keyed state in the repo. The step is
-    * [[Streams.heartbeatFold]], shared with the v1 form. TTL removes the
-    * tuple silently (v1 semantics — a table going quiet is itself a gap
-    * the NEXT tick will report against whatever state remains). */
-  class HeartbeatProcessor(stallMs: Long, ttlMs: Long)
-      extends StatefulProcessor[String, Streams.OpTick, Streams.StallOut] {
-    @transient private var last: org.apache.spark.sql.streaming.ValueState[Streams.TickState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      last = getHandle.getValueState(
-        "lastTick", Encoders.product[Streams.TickState], TTLConfig.NONE)
-
-    override def handleInputRows(
-        tbl: String, rows: Iterator[Streams.OpTick],
-        timerValues: TimerValues): Iterator[Streams.StallOut] = {
-      val start = if (last.exists()) Some(last.get()) else None
-      val (next, out) = Streams.heartbeatFold(stallMs, start, rows.toSeq)
-      next.foreach(last.update)
-      if (ttlMs > 0) {
-        getHandle.listTimers().foreach(getHandle.deleteTimer)
-        getHandle.registerTimer(timerValues.getCurrentProcessingTimeInMs() + ttlMs)
-      }
-      out.iterator
-    }
-
-    override def handleExpiredTimer(
-        tbl: String, timerValues: TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[Streams.StallOut] = {
-      last.clear()
-      Iterator.empty
-    }
-  }
-
-  /** Streaming liveness monitor on `transformWithState` — drop-in for
-    * [[Streams.heartbeatStream]]. `ttlMs <= 0` disables expiry. */
+  /** Streaming liveness monitor — the incremental twin of
+    * [[graft.cdc.Capture.heartbeatGaps]]' stall count: one (lsn, t) tuple of
+    * state per table ([[Streams.heartbeatFold]]), a [[Streams.StallOut]]
+    * emitted exactly once per above-threshold gap, the moment its closing
+    * tick arrives. `count by tbl` over the emitted stream equals the batch
+    * ledger's `n_stalls` at any point. TTL expiry drops the tuple silently
+    * (a table going quiet is itself a gap the next tick reports). */
   def heartbeatStream(
-      ticks: Dataset[Streams.OpTick],
+      ticks: Dataset[OpTick],
       stallMs: Long = 60000L,
-      ttlMs: Long = 0L): Dataset[Streams.StallOut] = {
+      ttlMs: Long = 0L): Dataset[StallOut] = {
     val spark = ticks.sparkSession
     import spark.implicits._
-    val mode = if (ttlMs > 0) TimeMode.ProcessingTime() else TimeMode.None()
+    val (ttl, mode) = ttlAndMode(ttlMs)
     ticks
       .groupByKey(_.tbl)
-      .transformWithState(new HeartbeatProcessor(stallMs, ttlMs), mode, OutputMode.Append())
-  }
-
-  /** Budget-admission processor — the `transformWithState` form of
-    * [[Streams.budgetAdmissionStream]]: one long (tokens consumed) per
-    * source, declarative TTL (the v1 timeout just removes the counter, so
-    * TTLConfig expresses it exactly — no timer needed). The step is
-    * [[Streams.budgetFold]], shared with the v1 form. */
-  class BudgetProcessor(budgetPerSource: Long, ttl: TTLConfig)
-      extends StatefulProcessor[String, Streams.BudgetIn, Streams.BudgetOut] {
-    @transient private var used: org.apache.spark.sql.streaming.ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      used = getHandle.getValueState("usedTokens", Encoders.scalaLong, ttl)
-
-    override def handleInputRows(
-        source: String, rows: Iterator[Streams.BudgetIn],
-        timerValues: TimerValues): Iterator[Streams.BudgetOut] = {
-      val start = if (used.exists()) Some(used.get()) else None
-      val (next, out) = Streams.budgetFold(source, start, rows.toSeq, budgetPerSource)
-      used.update(next)
-      out.iterator
-    }
-  }
-
-  /** Streaming per-source token-budget admission on `transformWithState` —
-    * drop-in for [[Streams.budgetAdmissionStream]]. `ttlMs <= 0` disables
-    * expiry. */
-  def budgetAdmissionStream(
-      rows: Dataset[Streams.BudgetIn],
-      budgetPerSource: Long = 2000L,
-      ttlMs: Long = 3600000L): Dataset[Streams.BudgetOut] = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    val (ttl, mode) =
-      if (ttlMs > 0)
-        (TTLConfig(java.time.Duration.ofMillis(ttlMs)), TimeMode.ProcessingTime())
-      else (TTLConfig.NONE, TimeMode.None())
-    rows
-      .groupByKey(_.source)
-      .transformWithState(new BudgetProcessor(budgetPerSource, ttl), mode, OutputMode.Append())
-  }
-
-  /** Row-apply processor — the `transformWithState` form of
-    * [[Streams.applyStream]] (merge-upsert keyed by (tbl, pk)): one
-    * `ValueState[RowState]` per live key, the step is
-    * [[Streams.applyFold]] — the SAME function the v1 form calls, so the
-    * two APIs cannot drift. Delete emits the tombstone and CLEARS the
-    * state (v1's `state.remove()`); TTL is declarative — expiry of an
-    * idle key's state is a silent drop in both forms. */
-  class ApplyProcessor(ttl: TTLConfig)
-      extends StatefulProcessor[(String, String), Event, Streams.RowState] {
-    @transient private var row: org.apache.spark.sql.streaming.ValueState[Streams.RowState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      row = getHandle.getValueState(
-        "rowImage", Encoders.product[Streams.RowState], ttl)
-
-    override def handleInputRows(
-        key: (String, String), rows: Iterator[Event],
-        timerValues: TimerValues): Iterator[Streams.RowState] = {
-      val start = if (row.exists()) Some(row.get()) else None
-      val next = Streams.applyFold(key, start, rows.toSeq)
-      if (next.deleted) row.clear() else row.update(next)
-      Iterator.single(next)
-    }
-  }
-
-  /** Streaming merge-upsert apply on `transformWithState` — drop-in for
-    * [[Streams.applyStream]]. `ttlMs <= 0` disables expiry. */
-  def applyStream(
-      events: Dataset[Event],
-      ttlMs: Long = 3600000L): Dataset[Streams.RowState] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val (ttl, mode) =
-      if (ttlMs > 0)
-        (TTLConfig(java.time.Duration.ofMillis(ttlMs)), TimeMode.ProcessingTime())
-      else (TTLConfig.NONE, TimeMode.None())
-    events
-      .groupByKey(e => (e.tbl, e.pk))
-      .transformWithState(new ApplyProcessor(ttl), mode, OutputMode.Append())
-  }
-
-  /** One OPEN gap session: `[start, end)` with `end = last event time +
-    * gap` (the `session_window` convention — two events share a session
-    * iff the later one's time is STRICTLY before the earlier one's end).
-    * `n` counts the session's events. */
-  case class OpenSession(start: Long, end: Long, n: Long)
-
-  /** A closed session — same fields as [[Streams.sessionStream]]'s row
-    * (`session_end` already includes the gap, the `session_window`
-    * convention). */
-  case class SessionOut(
-      userId: Long, sessionStart: Long, sessionEnd: Long, nEvents: Long)
-
-  /** One session-merge step: fold a batch of same-user event times into
-    * the open-session list. Pure interval merge — each event is a
-    * `[t, t+gap)` candidate, sessions merge while the next start is
-    * strictly before the current end (Spark's `session_window` rule, so
-    * this form, the v1 native-aggregate form, and the batch
-    * [[graft.operators.Sessions.sessionize]] agree event-for-event).
-    * Order-insensitive within a batch (the sort owns the order), and a
-    * late-but-within-watermark event can BRIDGE two open sessions — the
-    * case the list state exists for. */
-  def sessionFold(
-      gapMs: Long,
-      open: Seq[OpenSession],
-      arrivalTs: Seq[Long]): Seq[OpenSession] = {
-    val all = (open ++ arrivalTs.map(t => OpenSession(t, t + gapMs, 1L)))
-      .sortBy(s => (s.start, s.end))
-    val out = scala.collection.mutable.ArrayBuffer.empty[OpenSession]
-    all.foreach { s =>
-      if (out.nonEmpty && s.start < out.last.end) {
-        val l = out.last
-        out(out.size - 1) = OpenSession(l.start, math.max(l.end, s.end), l.n + s.n)
-      } else out += s
-    }
-    out.toSeq
-  }
-
-  /** Gap-sessionization processor — the keyed-state form of
-    * [[Streams.sessionStream]] (which rides the native `session_window`
-    * aggregate): per user a `ListState` of OPEN sessions, merged against
-    * each batch's arrivals by [[sessionFold]] and closed by event-time
-    * timers once the watermark passes a session's end. The state is
-    * list-shaped on purpose: out-of-order events within the watermark
-    * allowance can hold several sessions open per user at once (and a
-    * late event can merge two of them), which is exactly what
-    * `UpdatingSessionsExec` tracks internally — here it is explicit,
-    * per-entry in RocksDB, instead of inside an aggregation buffer.
-    *
-    * Emission contract matches v1 append mode: a (user, session) row
-    * emits ONCE, when the watermark passes `session end` (= last event
-    * time + gap). Input rows older than the watermark are dropped by the
-    * runtime before reaching the processor — the same honest-delay caveat
-    * as [[PollProcessor]], plus one boundary: `transformWithState`
-    * filters late rows as `eventTime <= watermark` and the watermark
-    * STARTS at 0, so a row at event time 0 is dropped before the first
-    * batch ever runs (the v1 aggregate keeps it — its filter is on window
-    * END). Event times must be positive, which every epoch-ms feed
-    * satisfies. */
-  class SessionProcessor(gapMs: Long)
-      extends StatefulProcessor[Long, Streams.EventIn, SessionOut] {
-    @transient private var open: ListState[OpenSession] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      open = getHandle.getListState(
-        "openSessions", Encoders.product[OpenSession], TTLConfig.NONE)
-
-    override def handleInputRows(
-        userId: Long, rows: Iterator[Streams.EventIn],
-        timerValues: TimerValues): Iterator[SessionOut] = {
-      val merged = sessionFold(gapMs, open.get().toSeq, rows.map(_.tMs).toSeq)
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val (closed, stillOpen) = merged.partition(_.end <= wm)
-      if (stillOpen.isEmpty) open.clear() else open.put(stillOpen.toArray)
-      getHandle.listTimers().foreach(getHandle.deleteTimer)
-      if (stillOpen.nonEmpty) getHandle.registerTimer(stillOpen.map(_.end).min)
-      closed.sortBy(_.start)
-        .map(s => SessionOut(userId, s.start, s.end, s.n)).iterator
-    }
-
-    override def handleExpiredTimer(
-        userId: Long, timerValues: TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[SessionOut] = {
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val (closed, stillOpen) = open.get().toSeq.partition(_.end <= wm)
-      if (stillOpen.isEmpty) open.clear() else open.put(stillOpen.toArray)
-      // the fired timer is consumed by the runtime; one-timer discipline
-      // means no stale ones remain — just arm the next deadline
-      if (stillOpen.nonEmpty) getHandle.registerTimer(stillOpen.map(_.end).min)
-      closed.sortBy(_.start)
-        .map(s => SessionOut(userId, s.start, s.end, s.n)).iterator
-    }
-  }
-
-  /** Streaming gap sessionization on `transformWithState` — emits the
-    * same closed-session rows as [[Streams.sessionStream]] (as a typed
-    * Dataset; parity in EventStreamSpec). */
-  def sessionStream(
-      events: Dataset[Streams.EventIn],
-      gapMs: Long = 28800000L,
-      watermarkDelayMs: Long = 0L): Dataset[SessionOut] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, timestamp_millis}
-    events
-      .withColumn("event_time", timestamp_millis(col("tMs")))
-      .withWatermark("event_time", s"$watermarkDelayMs milliseconds")
-      .as[Streams.EventIn]
-      .groupByKey(_.userId)
       .transformWithState(
-        new SessionProcessor(gapMs), TimeMode.EventTime(), OutputMode.Append())
+        new FoldProcessor[String, OpTick, TickState, StallOut](
+          "lastTick", Encoders.product[TickState], ttl)((_, st, rows) =>
+          heartbeatFold(stallMs, st, rows)),
+        mode, OutputMode.Append())
+  }
+
+  /** Streaming gap sessionization — the incremental twin of
+    * [[graft.operators.Sessions.sessionize]], which is built on the same
+    * native `session_window` aggregate: here the plan runs under a
+    * watermark, with Spark's session machinery owning per-key session
+    * merge in the state store, watermark-driven close and exactly-once
+    * emission from the checkpoint.
+    *
+    * A session extends while same-user events arrive within `gapMs`; in
+    * Append mode a (user, session) row emits ONCE, when the event-time
+    * watermark (max seen time − `watermarkDelayMs`) passes the session's
+    * end — the closed-session feed, equal to the batch rows for every
+    * session the watermark has closed. Late events beyond the allowance are
+    * dropped by the watermark, exactly the loss
+    * [[graft.cdc.Capture.watermarkCurve]] prices. State is bounded by OPEN
+    * sessions (closed ones are evicted at emission). */
+  def sessionStream(
+      events: Dataset[EventIn],
+      gapMs: Long = 28800000L,
+      watermarkDelayMs: Long = 0L): DataFrame = {
+    import org.apache.spark.sql.functions._
+    events.toDF()
+      .select(
+        col("userId").as("user_id"),
+        timestamp_millis(col("tMs")).as("_t"))
+      .withWatermark("_t", s"$watermarkDelayMs milliseconds")
+      .groupBy(
+        col("user_id"),
+        session_window(col("_t"), s"$gapMs milliseconds").as("_w"))
+      .agg(count(lit(1)).as("n_events"))
+      .select(
+        col("user_id"),
+        unix_millis(col("_w.start")).as("session_start"),
+        unix_millis(col("_w.end")).as("session_end"),
+        col("n_events"))
   }
 }

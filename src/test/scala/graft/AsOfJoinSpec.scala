@@ -52,12 +52,12 @@ class AsOfJoinSpec extends SparkSpec {
 
   test("streaming form: build state crosses batches; single-batch == batch operator") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.Streams
+    import graft.streaming.StreamsV2
     import graft.streaming.Streams.{AsOfIn, AsOfOut}
     implicit val sqlCtx = spark.sqlContext
 
     val input = MemoryStream[AsOfIn]
-    val q = Streams.asOfStream(input.toDS(), ttlMs = 0L)
+    val q = StreamsV2.asOfStream(input.toDS(), ttlMs = 0L)
       .writeStream.format("memory").queryName("asof")
       .outputMode("append").start()
 
@@ -85,7 +85,7 @@ class AsOfJoinSpec extends SparkSpec {
       probe.collect().map(r => AsOfIn(r.getLong(0), r.getLong(1), isBuild = false,
         r.getLong(2)))
     val input2 = MemoryStream[AsOfIn]
-    val q2 = Streams.asOfStream(input2.toDS(), ttlMs = 0L)
+    val q2 = StreamsV2.asOfStream(input2.toDS(), ttlMs = 0L)
       .writeStream.format("memory").queryName("asof2")
       .outputMode("append").start()
     input2.addData(inRows.toIndexedSeq: _*)

@@ -12,7 +12,10 @@ import graft.operators.{CacheLifecycle, EventAnalytics}
   * asynchronously on the listener bus, so assertions poll. */
 class CacheLifecycleSpec extends SparkSpec {
 
-  private def cachedCount: Int = spark.sparkContext.getPersistentRDDs.size
+  /** `CacheManager` entries — the caches `CacheLifecycle` releases. Not
+    * `getPersistentRDDs`: lazy `localCheckpoint` RDDs that other suites
+    * leave behind stay in that map until a GC collects them. */
+  private def cachedCount: Int = org.apache.spark.sql.CacheEntries(spark)
 
   private def eventually(timeoutMs: Long = 10000L)(cond: => Boolean): Boolean = {
     val deadline = System.currentTimeMillis() + timeoutMs

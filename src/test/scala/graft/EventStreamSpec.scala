@@ -4,13 +4,14 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.operators.EventAnalytics
-import graft.streaming.Streams
+import graft.streaming.{Streams, StreamsV2}
 import graft.streaming.Streams.{EventIn, FunnelAdvance, RetentionMark}
 
 /** Batch ↔ streaming parity for the event-analytics twins (round-10
   * verdict, next-round #4): the incremental funnel/retention must agree
   * with the batch oracles on time-ordered feeds, chopped across
-  * micro-batches any way the source pleases.
+  * micro-batches any way the source pleases — and with their shared fold
+  * run once over each user's whole feed.
   */
 class EventStreamSpec extends SparkSpec {
   import org.scalatest.concurrent.Eventually
@@ -74,7 +75,7 @@ class EventStreamSpec extends SparkSpec {
   test("streaming funnel advances equal the batch per-step counts (3 chunks)") {
     import spark.implicits._
     val advances = runChunked[EventIn, FunnelAdvance](
-      in => Streams.funnelStream(in.toDS()), scenario, 3, "funnel_parity")
+      in => StreamsV2.funnelStream(in.toDS()), scenario, 3, "funnel_parity")
       .map(r => (r.getAs[Long]("userId"), r.getAs[Int]("stage"),
         r.getAs[String]("stageName"), r.getAs[Long]("tMs")))
     // at most one advance per (user, stage)
@@ -99,7 +100,7 @@ class EventStreamSpec extends SparkSpec {
   test("streaming retention marks equal the batch triangle (4 chunks)") {
     import spark.implicits._
     val marks = runChunked[EventIn, RetentionMark](
-      in => Streams.retentionStream(in.toDS()), scenario, 4, "retention_parity")
+      in => StreamsV2.retentionStream(in.toDS()), scenario, 4, "retention_parity")
       .map(r => (r.getAs[Long]("userId"), r.getAs[Long]("cohortDay"),
         r.getAs[Long]("dayOffset")))
     assert(marks.distinct.size === marks.size, s"duplicate mark: $marks")
@@ -121,109 +122,95 @@ class EventStreamSpec extends SparkSpec {
     }
   }
 
+  /** Polls `done` while feeding one unrelated user's (id 99) event every
+    * 250 ms. With live processing-time timers the microbatch loop keeps
+    * planning work, so `processAllAvailable` can block; and a due timer
+    * fires only when a batch runs. Assertions must read only other users. */
+  private def nudgeUntil(input: MemoryStream[EventIn], deadline: Long)(
+      done: => Boolean): Unit = {
+    var nudge = 1000L
+    while (!done && System.currentTimeMillis() < deadline) {
+      Thread.sleep(250L)
+      nudge += 1
+      input.addData(EventIn(99L, "view", nudge))
+    }
+  }
+
   test("transformWithState funnel: parity with the flatMapGroupsWithState form") {
     import spark.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val v2 = runChunked[EventIn, FunnelAdvance](
-        in => graft.streaming.StreamsV2.funnelStream(in.toDS()),
-        scenario, 3, "funnel_v2")
-        .map(r => (r.getAs[Long]("userId"), r.getAs[Int]("stage"),
-          r.getAs[String]("stageName"), r.getAs[Long]("tMs"))).sorted
-      val v1 = runChunked[EventIn, FunnelAdvance](
-        in => Streams.funnelStream(in.toDS()), scenario, 3, "funnel_v1")
-        .map(r => (r.getAs[Long]("userId"), r.getAs[Int]("stage"),
-          r.getAs[String]("stageName"), r.getAs[Long]("tMs"))).sorted
-      assert(v2 === v1, "the two state APIs must emit identical advances")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    val steps = Seq("signup", "click", "purchase")
+    val streamed = runChunked[EventIn, FunnelAdvance](
+      in => StreamsV2.funnelStream(in.toDS(), steps), scenario, 3, "funnel_v2")
+      .map(r => (r.getAs[Long]("userId"), r.getAs[Int]("stage"),
+        r.getAs[String]("stageName"), r.getAs[Long]("tMs"))).sorted
+    // the shared fold run once over each user's whole feed
+    val once = scenario.groupBy(_.userId).values.toSeq
+      .flatMap(es => Streams.funnelFold(steps, None, es)._2)
+      .map(a => (a.userId, a.stage, a.stageName, a.tMs)).sorted
+    assert(streamed === once, "carried progress must emit the one-shot advances")
   }
 
   test("transformWithState DAU + growth: parity with the " +
       "flatMapGroupsWithState forms") {
     import spark.implicits._
     import graft.streaming.Streams.{DayActive, GrowthMark}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      def dauRows(tag: String, mk: MemoryStream[EventIn] =>
-          org.apache.spark.sql.Dataset[DayActive]) =
-        runChunked[EventIn, DayActive](mk, scenario, 4, tag)
-          .map(r => (r.getAs[Long]("userId"), r.getAs[Long]("day"),
-            r.getAs[Boolean]("isNew"))).sorted
-      assert(dauRows("dau_v2", in => graft.streaming.StreamsV2.activityStream(in.toDS())) ===
-        dauRows("dau_v1", in => Streams.activityStream(in.toDS())),
-        "the two state APIs must emit identical DAU marks")
-      def growthRows(tag: String, mk: MemoryStream[EventIn] =>
-          org.apache.spark.sql.Dataset[GrowthMark]) =
-        runChunked[EventIn, GrowthMark](mk, growthFeed, 3, tag)
-          .map(r => (r.getAs[Long]("userId"), r.getAs[Long]("week"),
-            r.getAs[String]("kind"))).sorted
-      assert(growthRows("growth_v2", in => graft.streaming.StreamsV2.growthStream(in.toDS())) ===
-        growthRows("growth_v1", in => Streams.growthStream(in.toDS())),
-        "the two state APIs must emit identical growth marks")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    val dau = runChunked[EventIn, DayActive](
+      in => StreamsV2.activityStream(in.toDS()), scenario, 4, "dau_v2")
+      .map(r => (r.getAs[Long]("userId"), r.getAs[Long]("day"),
+        r.getAs[Boolean]("isNew"))).sorted
+    val dauOnce = scenario.groupBy(_.userId).toSeq
+      .flatMap { case (u, es) => Streams.activityFold(u, None, es)._2 }
+      .map(m => (m.userId, m.day, m.isNew)).sorted
+    assert(dau === dauOnce, "carried day sets must emit the one-shot DAU marks")
+    val growth = runChunked[EventIn, GrowthMark](
+      in => StreamsV2.growthStream(in.toDS()), growthFeed, 3, "growth_v2")
+      .map(r => (r.getAs[Long]("userId"), r.getAs[Long]("week"),
+        r.getAs[String]("kind"))).sorted
+    val growthOnce = growthFeed.groupBy(_.userId).toSeq
+      .flatMap { case (u, es) => Streams.growthFold(u, None, es)._2 }
+      .map(m => (m.userId, m.week, m.kind)).sorted
+    assert(growth === growthOnce, "carried last week must emit the one-shot marks")
   }
 
   test("transformWithState transitions + retention + attribution: parity " +
       "with the flatMapGroupsWithState forms") {
     import spark.implicits._
     import graft.streaming.Streams.{AttrIn, AttributionOut, RetentionMark, TransitionOut}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val transFeed = scenario.zipWithIndex.map { case (e, i) =>
-        (e.userId, i.toLong, e.eventType, e.tMs)
-      }
-      def transRows(tag: String, mk: MemoryStream[(Long, Long, String, Long)] =>
-          org.apache.spark.sql.Dataset[TransitionOut]) =
-        runChunked[(Long, Long, String, Long), TransitionOut](mk, transFeed, 3, tag)
-          .map(r => (r.getAs[Long]("userId"), r.getAs[String]("fromType"),
-            r.getAs[String]("toType"), r.getAs[Long]("tMs"))).sorted
-      assert(transRows("trans_v2",
-          in => graft.streaming.StreamsV2.transitionsStream(in.toDS())) ===
-        transRows("trans_v1", in => Streams.transitionsStream(in.toDS())),
-        "the two state APIs must emit identical transition pairs")
-      def retRows(tag: String, mk: MemoryStream[EventIn] =>
-          org.apache.spark.sql.Dataset[RetentionMark]) =
-        runChunked[EventIn, RetentionMark](mk, scenario, 4, tag)
-          .map(r => (r.getAs[Long]("userId"), r.getAs[Long]("cohortDay"),
-            r.getAs[Long]("dayOffset"))).sorted
-      assert(retRows("ret_v2",
-          in => graft.streaming.StreamsV2.retentionStream(in.toDS())) ===
-        retRows("ret_v1", in => Streams.retentionStream(in.toDS())),
-        "the two state APIs must emit identical retention marks")
-      val attrFeed = Seq(
-        AttrIn(0L, 1L, "purchase", 100L, 1000L),
-        AttrIn(1L, 1L, "click", 200L, 0L),
-        AttrIn(2L, 1L, "purchase", 300L, 550L),
-        AttrIn(3L, 2L, "view", 100L, 0L),
-        AttrIn(4L, 2L, "purchase", 200L, 450L))
-      def attrRows(tag: String, mk: MemoryStream[AttrIn] =>
-          org.apache.spark.sql.Dataset[AttributionOut]) =
-        runChunked[AttrIn, AttributionOut](mk, attrFeed, 2, tag)
-          .map(r => (r.getAs[Long]("userId"), r.getAs[String]("channel"),
-            r.getAs[Long]("valueTicks"), r.getAs[Long]("tMs"))).sorted
-      assert(attrRows("attr_v2",
-          in => graft.streaming.StreamsV2.attributionStream(in.toDS())) ===
-        attrRows("attr_v1", in => Streams.attributionStream(in.toDS())),
-        "the two state APIs must emit identical attribution credits")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    val transFeed = scenario.zipWithIndex.map { case (e, i) =>
+      (e.userId, i.toLong, e.eventType, e.tMs)
     }
+    val trans = runChunked[(Long, Long, String, Long), TransitionOut](
+      in => StreamsV2.transitionsStream(in.toDS()), transFeed, 3, "trans_v2")
+      .map(r => (r.getAs[Long]("userId"), r.getAs[String]("fromType"),
+        r.getAs[String]("toType"), r.getAs[Long]("tMs"))).sorted
+    val transOnce = transFeed.groupBy(_._1).toSeq
+      .flatMap { case (u, es) =>
+        Streams.transitionsFold(u, None, es.map(e => (e._2, e._3, e._4)))._2 }
+      .map(t => (t.userId, t.fromType, t.toType, t.tMs)).sorted
+    assert(trans === transOnce, "carried previous event must emit the one-shot pairs")
+    val ret = runChunked[EventIn, RetentionMark](
+      in => StreamsV2.retentionStream(in.toDS()), scenario, 4, "ret_v2")
+      .map(r => (r.getAs[Long]("userId"), r.getAs[Long]("cohortDay"),
+        r.getAs[Long]("dayOffset"))).sorted
+    val retOnce = scenario.groupBy(_.userId).toSeq
+      .flatMap { case (u, es) => Streams.retentionFold(u, None, es)._2 }
+      .map(m => (m.userId, m.cohortDay, m.dayOffset)).sorted
+    assert(ret === retOnce, "carried cohort state must emit the one-shot marks")
+    val attrFeed = Seq(
+      AttrIn(0L, 1L, "purchase", 100L, 1000L),
+      AttrIn(1L, 1L, "click", 200L, 0L),
+      AttrIn(2L, 1L, "purchase", 300L, 550L),
+      AttrIn(3L, 2L, "view", 100L, 0L),
+      AttrIn(4L, 2L, "purchase", 200L, 450L))
+    val attr = runChunked[AttrIn, AttributionOut](
+      in => StreamsV2.attributionStream(in.toDS()), attrFeed, 2, "attr_v2")
+      .map(r => (r.getAs[Long]("userId"), r.getAs[String]("channel"),
+        r.getAs[Long]("valueTicks"), r.getAs[Long]("tMs"))).sorted
+    val attrOnce = attrFeed.groupBy(_.userId).toSeq
+      .flatMap { case (u, es) =>
+        Streams.attributionFold(u, Set("click", "view"), None, es)._2 }
+      .map(o => (o.userId, o.channel, o.valueTicks, o.tMs)).sorted
+    assert(attr === attrOnce, "carried touch must emit the one-shot credits")
   }
 
   test("transformWithState growth TTL: the timer path emits churned and " +
@@ -231,89 +218,58 @@ class EventStreamSpec extends SparkSpec {
     import spark.implicits._
     import graft.streaming.Streams.GrowthMark
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val weekMs = 7L * dayMs
-      val input = MemoryStream[EventIn]
-      val q = graft.streaming.StreamsV2.growthStream(input.toDS(), ttlMs = 200L)
-        .writeStream.format("memory").queryName("growth_ttl_v2")
-        .outputMode("append").start()
-      def rows(): Seq[GrowthMark] =
-        spark.table("growth_ttl_v2").as[GrowthMark].collect().toSeq
-      input.addData(EventIn(1L, "view", 100L))
-      // NO processAllAvailable in this test: with registered
-      // processing-time timers the microbatch loop keeps planning work,
-      // so noNewData never latches and processAllAvailable can block —
-      // the v1 TTL tests' documented hazard, V2-flavored. Pure sink
-      // polling; each nudge (an unrelated user's event) guarantees a
-      // real batch runs after the TTL expires, firing the due timer.
-      // The nudge user may legitimately churn/resurrect between nudges;
-      // every assertion below reads ONLY u1's marks.
-      def u1(): Seq[GrowthMark] = rows().filter(_.userId == 1L)
-      val deadline = System.currentTimeMillis() + 90000L
-      var nudge = 1000L
-      while (!u1().exists(_.kind == "churned") &&
-          System.currentTimeMillis() < deadline) {
-        Thread.sleep(250L)
-        nudge += 1
-        input.addData(EventIn(99L, "view", nudge))
-      }
-      input.addData(EventIn(1L, "view", 4 * weekMs + 100L))
-      while (!u1().exists(_.kind == "resurrected") &&
-          System.currentTimeMillis() < deadline)
-        Thread.sleep(250L)
-      assert(u1().exists(_.kind == "resurrected"),
-        s"the tombstone must resurrect the returning user: ${u1()}")
-      q.stop()
-      val got = u1()
-      spark.catalog.dropTempView("growth_ttl_v2")
-      assert(got.contains(GrowthMark(1L, 0L, "new")))
-      assert(got.contains(GrowthMark(1L, 1L, "churned")),
-        s"V2 timer eviction must close with a churned row; got $got")
-      assert(got.contains(GrowthMark(1L, 4L, "resurrected")),
-        s"V2 post-eviction return must resurrect, got $got")
-      assert(got.count(_.kind == "new") === 1, s"one new ever: $got")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    val weekMs = 7L * dayMs
+    val input = MemoryStream[EventIn]
+    val q = StreamsV2.growthStream(input.toDS(), ttlMs = 200L)
+      .writeStream.format("memory").queryName("growth_ttl_v2")
+      .outputMode("append").start()
+    def u1(): Seq[GrowthMark] = spark.table("growth_ttl_v2").as[GrowthMark]
+      .collect().toSeq.filter(_.userId == 1L)
+    input.addData(EventIn(1L, "view", 100L))
+    val deadline = System.currentTimeMillis() + 90000L
+    nudgeUntil(input, deadline)(u1().exists(_.kind == "churned"))
+    input.addData(EventIn(1L, "view", 4 * weekMs + 100L))
+    while (!u1().exists(_.kind == "resurrected") &&
+        System.currentTimeMillis() < deadline)
+      Thread.sleep(250L)
+    assert(u1().exists(_.kind == "resurrected"),
+      s"the tombstone must resurrect the returning user: ${u1()}")
+    q.stop()
+    val got = u1()
+    spark.catalog.dropTempView("growth_ttl_v2")
+    assert(got.contains(GrowthMark(1L, 0L, "new")))
+    assert(got.contains(GrowthMark(1L, 1L, "churned")),
+      s"timer eviction must close with a churned row; got $got")
+    assert(got.contains(GrowthMark(1L, 4L, "resurrected")),
+      s"post-eviction return must resurrect, got $got")
+    assert(got.count(_.kind == "new") === 1, s"one new ever: $got")
   }
 
   test("transformWithState RFM + LTV: parity with the " +
       "flatMapGroupsWithState forms") {
     import spark.implicits._
     import graft.streaming.Streams.{AttrIn, LtvMark, RfmMark}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      def rfmRows(tag: String, mk: MemoryStream[AttrIn] =>
-          org.apache.spark.sql.Dataset[RfmMark]) =
-        runChunked[AttrIn, RfmMark](mk, moneyFeed, 3, tag)
-          .map(r => (r.getAs[Long]("userId"), r.getAs[Long]("lastDay"),
-            r.getAs[Long]("frequency"), r.getAs[Long]("monetaryTicks"))).sorted
-      assert(rfmRows("rfm_v2", in => graft.streaming.StreamsV2.rfmStream(in.toDS())) ===
-        rfmRows("rfm_v1", in => Streams.rfmStream(in.toDS())),
-        "the two state APIs must emit identical RFM snapshots")
-      def ltvRows(tag: String, mk: MemoryStream[AttrIn] =>
-          org.apache.spark.sql.Dataset[LtvMark]) =
-        runChunked[AttrIn, LtvMark](mk, moneyFeed, 3, tag)
-          .map(r => (r.getAs[Long]("userId"), r.getAs[Long]("cohortDay"),
-            r.getAs[Long]("weekOffset"), r.getAs[Long]("valueTicks"),
-            r.getAs[Boolean]("entry"))).sorted
-      assert(ltvRows("ltv_v2", in => graft.streaming.StreamsV2.ltvStream(in.toDS())) ===
-        ltvRows("ltv_v1", in => Streams.ltvStream(in.toDS())),
-        "the two state APIs must emit identical LTV marks")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    // RFM marks are superseding snapshots: each user's latest streamed
+    // mark must equal the one mark of the fold run once over their feed
+    val rfm = runChunked[AttrIn, RfmMark](
+      in => StreamsV2.rfmStream(in.toDS()), moneyFeed, 3, "rfm_v2")
+      .map(r => (r.getAs[Long]("userId"), r.getAs[Long]("lastDay"),
+        r.getAs[Long]("frequency"), r.getAs[Long]("monetaryTicks")))
+      .groupBy(_._1).values.map(_.maxBy(_._3)).toSeq.sorted
+    val rfmOnce = moneyFeed.groupBy(_.userId).toSeq
+      .flatMap { case (u, es) => Streams.rfmFold(u, None, es)._2 }
+      .map(m => (m.userId, m.lastDay, m.frequency, m.monetaryTicks)).sorted
+    assert(rfm === rfmOnce, "carried totals must reach the one-shot snapshot")
+    val ltv = runChunked[AttrIn, LtvMark](
+      in => StreamsV2.ltvStream(in.toDS()), moneyFeed, 3, "ltv_v2")
+      .map(r => (r.getAs[Long]("userId"), r.getAs[Long]("cohortDay"),
+        r.getAs[Long]("weekOffset"), r.getAs[Long]("valueTicks"),
+        r.getAs[Boolean]("entry"))).sorted
+    val ltvOnce = moneyFeed.groupBy(_.userId).toSeq
+      .flatMap { case (u, es) => Streams.ltvFold(u, None, es)._2 }
+      .map(m => (m.userId, m.cohortDay, m.weekOffset, m.valueTicks, m.entry)).sorted
+    assert(ltv === ltvOnce, "carried cohort must emit the one-shot LTV marks")
   }
-
   test("streaming transitions equal the batch matrix (3 chunks)") {
     import spark.implicits._
     // feed: (userId, eventId, eventType, tMs) — ids mint a total order
@@ -321,7 +277,7 @@ class EventStreamSpec extends SparkSpec {
       (e.userId, i.toLong, e.eventType, e.tMs)
     }
     val out = runChunked[(Long, Long, String, Long), Streams.TransitionOut](
-      in => Streams.transitionsStream(in.toDS()), feed, 3, "trans_parity")
+      in => StreamsV2.transitionsStream(in.toDS()), feed, 3, "trans_parity")
       .map(r => (r.getAs[String]("fromType"), r.getAs[String]("toType")))
     val streamCounts = out.groupBy(identity).view.mapValues(_.size.toLong).toMap
     val batchDfWithIds = feed.toDF("user_id", "event_id", "event_type", "_tms")
@@ -372,7 +328,7 @@ class EventStreamSpec extends SparkSpec {
       AttrIn(7L, 3L, "view", 1000L, 0L),
       AttrIn(8L, 3L, "purchase", 1000L, 200L))   // same ms, lower-id view wins
     val out = runChunked[AttrIn, Streams.AttributionOut](
-      in => Streams.attributionStream(in.toDS()), feed, 3, "attr_parity")
+      in => StreamsV2.attributionStream(in.toDS()), feed, 3, "attr_parity")
       .map(r => (r.getAs[String]("channel"), r.getAs[Long]("valueTicks")))
     val streamLedger = out.groupBy(_._1).view
       .mapValues(v => (v.size.toLong, v.map(_._2).sum)).toMap
@@ -420,7 +376,7 @@ class EventStreamSpec extends SparkSpec {
     import spark.implicits._
     import graft.streaming.Streams.{AttrIn, RfmMark}
     val marks = runChunked[AttrIn, RfmMark](
-      in => Streams.rfmStream(in.toDS()), moneyFeed, 3, "rfm_parity")
+      in => StreamsV2.rfmStream(in.toDS()), moneyFeed, 3, "rfm_parity")
       .map(r => (r.getAs[Long]("userId"), r.getAs[Long]("lastDay"),
         r.getAs[Long]("frequency"), r.getAs[Long]("monetaryTicks")))
     // marks are running snapshots: the latest (max frequency) per user wins
@@ -461,7 +417,7 @@ class EventStreamSpec extends SparkSpec {
     import spark.implicits._
     import graft.streaming.Streams.{AttrIn, LtvMark}
     val marks = runChunked[AttrIn, LtvMark](
-      in => Streams.ltvStream(in.toDS()), moneyFeed, 3, "ltv_parity")
+      in => StreamsV2.ltvStream(in.toDS()), moneyFeed, 3, "ltv_parity")
       .map(r => (r.getAs[Long]("userId"), r.getAs[Long]("cohortDay"),
         r.getAs[Long]("weekOffset"), r.getAs[Long]("valueTicks"),
         r.getAs[Boolean]("entry")))
@@ -563,7 +519,7 @@ class EventStreamSpec extends SparkSpec {
       EventIn(2L, "view", 250000L),                    // new u2 session
       EventIn(99L, "view", 10000000L))
     val closed = runChunked[EventIn, org.apache.spark.sql.Row](
-      in => Streams.sessionStream(in.toDS(), gapMs = 60000L),
+      in => StreamsV2.sessionStream(in.toDS(), gapMs = 60000L),
       feed, 3, "session_parity")
       .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("session_start"),
         r.getAs[Long]("session_end"), r.getAs[Long]("n_events")))
@@ -580,122 +536,46 @@ class EventStreamSpec extends SparkSpec {
     assert(closed.size === 4, "two sessions per real user")
   }
 
-  test("transformWithState sessionization: keyed open-session ListState " +
-      "equals the session_window form and batch sessionize") {
+  test("streaming sessions: an exact-gap event joins the session (== batch " +
+      "sessionize); a late event bridges two open sessions") {
     import spark.implicits._
-    import graft.streaming.StreamsV2.SessionOut
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // the v1 test's feed shifted +1 s off epoch 0 (the TWS late-row
-      // filter drops event time <= the INITIAL watermark of 0 — see the
-      // SessionProcessor docstring); u99 is the watermark-pushing sentinel
-      val feed = Seq(
-        EventIn(1L, "view", 1000L), EventIn(2L, "view", 11000L),
-        EventIn(1L, "view", 31000L),
-        EventIn(1L, "view", 201000L),
-        EventIn(2L, "view", 251000L),
-        EventIn(99L, "view", 10001000L))
-      val v2 = runChunked[EventIn, SessionOut](
-        in => graft.streaming.StreamsV2.sessionStream(in.toDS(), gapMs = 60000L),
-        feed, 3, "session_tws")
-        .map(r => (r.getAs[Long]("userId"), r.getAs[Long]("sessionStart"),
-          r.getAs[Long]("sessionEnd"), r.getAs[Long]("nEvents")))
-        .filter(_._1 != 99L)
-      assert(v2.distinct.size === v2.size, s"duplicate session: $v2")
-      val v1 = runChunked[EventIn, org.apache.spark.sql.Row](
-        in => Streams.sessionStream(in.toDS(), gapMs = 60000L),
-        feed, 3, "session_v1_ref")
-        .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("session_start"),
-          r.getAs[Long]("session_end"), r.getAs[Long]("n_events")))
-        .filter(_._1 != 99L)
-      assert(v2.toSet === v1.toSet,
-        s"keyed-state sessions ${v2.sorted} != session_window ${v1.sorted}")
-      val batch = graft.operators.Sessions.sessionize(
-        feed.filter(_.userId != 99L)
-          .map(e => (e.userId, e.tMs * 1000000L)).toDF("user_id", "ts"),
-        gapMs = 60000L).collect()
-        .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("session_start"),
-          r.getAs[Long]("session_end"), r.getAs[Long]("n_events")))
-      assert(v2.toSet === batch.toSet,
-        s"keyed-state sessions ${v2.sorted} != batch ${batch.sorted}")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  test("pinned V1/V2 boundary divergence: an event at epoch-ms 0 is kept " +
-      "by the session_window form and dropped by the transformWithState twin") {
-    import spark.implicits._
-    import graft.streaming.StreamsV2.SessionOut
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // the documented runtime boundary (SessionProcessor docstring, ADVICE
-      // r14): transformWithState filters late rows as eventTime <= watermark
-      // and the watermark STARTS at 0, so a t=0 row never reaches the
-      // processor; the v1 native aggregate filters on window END and keeps
-      // it. Every epoch-ms feed satisfies t >= 1, so the divergence is
-      // theoretical — this pin keeps it visible instead of silent.
-      val feed = Seq(
-        EventIn(1L, "view", 0L),      // the boundary row
-        EventIn(1L, "view", 10000L),  // same session under gap 60 s
-        EventIn(99L, "view", 10000000L)) // watermark-pushing sentinel
-      val v1 = runChunked[EventIn, org.apache.spark.sql.Row](
-        in => Streams.sessionStream(in.toDS(), gapMs = 60000L),
-        feed, 1, "session_v1_t0")
-        .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("session_start"),
-          r.getAs[Long]("session_end"), r.getAs[Long]("n_events")))
-        .filter(_._1 != 99L)
-      assert(v1 === Seq((1L, 0L, 70000L, 2L)),
-        "v1 keeps the t=0 event (its late filter is on window END)")
-      val v2 = runChunked[EventIn, SessionOut](
-        in => graft.streaming.StreamsV2.sessionStream(in.toDS(), gapMs = 60000L),
-        feed, 1, "session_tws_t0")
-        .map(r => (r.getAs[Long]("userId"), r.getAs[Long]("sessionStart"),
-          r.getAs[Long]("sessionEnd"), r.getAs[Long]("nEvents")))
-        .filter(_._1 != 99L)
-      assert(v2 === Seq((1L, 10000L, 70000L, 1L)),
-        "the TWS runtime drops the t=0 row before the processor sees it")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  test("session fold: interval merge matches session_window semantics " +
-      "(strict gap boundary; late event bridges two open sessions)") {
-    import graft.streaming.StreamsV2.{sessionFold, OpenSession}
     val gap = 60000L
-    // strict boundary: an event exactly gap after the last does NOT merge
-    val exact = sessionFold(gap, Seq.empty, Seq(0L, gap))
-    assert(exact === Seq(OpenSession(0L, gap, 1L), OpenSession(gap, 2 * gap, 1L)),
-      s"gap-exact event must open a NEW session: $exact")
+    // u99 is the far-future sentinel that closes every real session
+    def sessions(name: String, feed: Seq[EventIn], chunks: Int,
+        delayMs: Long = 0L): Seq[(Long, Long, Long, Long)] =
+      runChunked[EventIn, org.apache.spark.sql.Row](
+        in => StreamsV2.sessionStream(in.toDS(), gapMs = gap, watermarkDelayMs = delayMs),
+        feed :+ EventIn(99L, "view", 10000000L), chunks, name)
+        .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("session_start"),
+          r.getAs[Long]("session_end"), r.getAs[Long]("n_events")))
+        .filter(_._1 != 99L).sorted
+    // session_window's boundary: an event exactly gap after the last one
+    // still joins the session, in the stream as in the batch twin
+    val exact = Seq(EventIn(1L, "view", 0L), EventIn(1L, "view", gap))
+    val exactBatch = graft.operators.Sessions.sessionize(
+      exact.map(e => (e.userId, e.tMs * 1000000L)).toDF("user_id", "ts"),
+      gapMs = gap).collect()
+      .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("session_start"),
+        r.getAs[Long]("session_end"), r.getAs[Long]("n_events"))).toSeq
+    assert(sessions("session_exact", exact, 1) === exactBatch)
+    assert(exactBatch === Seq((1L, 0L, 2 * gap, 2L)))
     // one ms inside merges
-    val inside = sessionFold(gap, Seq.empty, Seq(0L, gap - 1))
-    assert(inside === Seq(OpenSession(0L, gap - 1 + gap, 2L)))
-    // a late-but-within-watermark event can bridge two open sessions
-    val open = Seq(OpenSession(0L, gap, 1L), OpenSession(100000L, 100000L + gap, 1L))
-    val bridged = sessionFold(gap, open, Seq(55000L))
-    assert(bridged === Seq(OpenSession(0L, 100000L + gap, 3L)),
-      s"bridging event must merge both open sessions: $bridged")
-    // chop-invariance: feeding in two batches == one batch
-    val oneShot = sessionFold(gap, Seq.empty, Seq(0L, 30000L, 200000L))
-    val chopped = sessionFold(gap, sessionFold(gap, Seq.empty, Seq(0L, 30000L)),
-      Seq(200000L))
-    assert(chopped === oneShot)
+    assert(sessions("session_inside",
+        Seq(EventIn(1L, "view", 0L), EventIn(1L, "view", gap - 1)), 1) ===
+      Seq((1L, 0L, gap - 1 + gap, 2L)))
+    // two sessions open in state after batch 1; a late-but-within-watermark
+    // event in batch 2 bridges them
+    assert(sessions("session_bridge",
+        Seq(EventIn(1L, "view", 0L), EventIn(1L, "view", 100000L),
+          EventIn(1L, "view", 55000L)), 2, delayMs = 100000L) ===
+      Seq((1L, 0L, 100000L + gap, 3L)),
+      "a bridging event must merge both open sessions")
   }
-
   test("streaming DAU marks aggregate to the batch newVsReturning ledger (4 chunks)") {
     import spark.implicits._
     import graft.streaming.Streams.DayActive
     val marks = runChunked[EventIn, DayActive](
-      in => Streams.activityStream(in.toDS()), scenario, 4, "dau_parity")
+      in => StreamsV2.activityStream(in.toDS()), scenario, 4, "dau_parity")
       .map(r => (r.getAs[Long]("userId"), r.getAs[Long]("day"),
         r.getAs[Boolean]("isNew")))
     assert(marks.distinct.size === marks.size, s"duplicate (user, day): $marks")
@@ -744,7 +624,7 @@ class EventStreamSpec extends SparkSpec {
     import graft.streaming.Streams.GrowthMark
     val weekMs = 7L * dayMs
     val marks = runChunked[EventIn, GrowthMark](
-      in => Streams.growthStream(in.toDS()), growthFeed, 3, "growth_parity")
+      in => StreamsV2.growthStream(in.toDS()), growthFeed, 3, "growth_parity")
       .map(r => (r.getAs[Long]("userId"), r.getAs[Long]("week"),
         r.getAs[String]("kind")))
     assert(marks.distinct.size === marks.size, s"duplicate mark: $marks")
@@ -801,20 +681,15 @@ class EventStreamSpec extends SparkSpec {
     import graft.streaming.Streams.GrowthMark
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[EventIn]
-    val q = Streams.growthStream(input.toDS(), ttlMs = 200L)
+    val q = StreamsV2.growthStream(input.toDS(), ttlMs = 200L)
       .writeStream.format("memory").queryName("growth_ttl")
       .outputMode("append").start()
-    // no processAllAvailable: ProcessingTimeTimeout self-triggers batches
-    // continuously, so noNewData never latches — poll the sink instead
-    // (see the scd2 TTL test for the full note)
     input.addData(EventIn(1L, "view", 100L))
-    def rows(): Seq[GrowthMark] =
-      spark.table("growth_ttl").as[GrowthMark].collect().toSeq
-    val deadline = System.currentTimeMillis() + 60000L
+    def rows(): Seq[GrowthMark] = spark.table("growth_ttl").as[GrowthMark]
+      .collect().toSeq.filter(_.userId == 1L)
     // the "new" mark emits from batch 1; the churned row from eviction
-    while (!rows().exists(_.kind == "churned") &&
-        System.currentTimeMillis() < deadline)
-      Thread.sleep(100L)
+    nudgeUntil(input, System.currentTimeMillis() + 90000L)(
+      rows().exists(_.kind == "churned"))
     q.stop()
     val got = rows()
     spark.catalog.dropTempView("growth_ttl")
@@ -866,16 +741,14 @@ class EventStreamSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val weekMs = 7L * dayMs
     val input = MemoryStream[EventIn]
-    val q = Streams.growthStream(input.toDS(), ttlMs = 200L)
+    val q = StreamsV2.growthStream(input.toDS(), ttlMs = 200L)
       .writeStream.format("memory").queryName("growth_ttl_return")
       .outputMode("append").start()
-    def rows(): Seq[GrowthMark] =
-      spark.table("growth_ttl_return").as[GrowthMark].collect().toSeq
+    def rows(): Seq[GrowthMark] = spark.table("growth_ttl_return").as[GrowthMark]
+      .collect().toSeq.filter(_.userId == 1L)
     input.addData(EventIn(1L, "view", 100L))
-    val deadline = System.currentTimeMillis() + 60000L
-    while (!rows().exists(_.kind == "churned") &&
-        System.currentTimeMillis() < deadline)
-      Thread.sleep(100L)
+    val deadline = System.currentTimeMillis() + 90000L
+    nudgeUntil(input, deadline)(rows().exists(_.kind == "churned"))
     // after eviction's churn mark, the user comes back three weeks on
     input.addData(EventIn(1L, "view", 4 * weekMs + 100L))
     while (!rows().exists(_.kind == "resurrected") &&

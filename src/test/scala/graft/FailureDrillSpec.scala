@@ -197,7 +197,7 @@ class FailureDrillSpec extends SparkSpec {
   }
 
   /** Restart drill for the streaming per-source budget gate
-    * (`Streams.budgetAdmissionStream`): the consumed-token counter is
+    * (`StreamsV2.budgetAdmissionStream`): the consumed-token counter is
     * keyed state — a kill between micro-batches must neither reset it
     * (which would re-open a spent budget) nor double-count the batch that
     * committed before the crash. Verdicts over the union of arrivals must
@@ -213,7 +213,7 @@ class FailureDrillSpec extends SparkSpec {
       val arrivals = spark.readStream
         .schema("source STRING, docId LONG, nTokens LONG").json(srcDir.getPath)
         .as[graft.streaming.Streams.BudgetIn]
-      graft.streaming.Streams
+      graft.streaming.StreamsV2
         .budgetAdmissionStream(arrivals, budgetPerSource = 10L, ttlMs = 0L)
         .writeStream
         .option("checkpointLocation", ckpt)
@@ -312,7 +312,7 @@ class FailureDrillSpec extends SparkSpec {
   }
 
   /** Restart drill for streaming sessionization
-    * ([[graft.streaming.Streams.sessionStream]]): the recovery mode a
+    * ([[graft.streaming.StreamsV2.sessionStream]]): the recovery mode a
     * stateless replay cannot fake — a session SPANNING the crash (events
     * on both sides of the kill, inside the gap) must MERGE from the
     * checkpointed open-session state, and every closed session must emit
@@ -331,7 +331,7 @@ class FailureDrillSpec extends SparkSpec {
         .select(col("user_id").as("userId"), lit("view").as("eventType"),
           col("t_ms").as("tMs"))
         .as[graft.streaming.Streams.EventIn]
-      graft.streaming.Streams.sessionStream(typed, gapMs = 60000L)
+      graft.streaming.StreamsV2.sessionStream(typed, gapMs = 60000L)
         .writeStream
         .option("checkpointLocation", ckpt)
         .outputMode("append")
@@ -375,89 +375,6 @@ class FailureDrillSpec extends SparkSpec {
     assert(got.toSet === batch)
   }
 
-  /** Restart drill for the `transformWithState` session form
-    * (`StreamsV2.sessionStream`): the keyed open-session ListState AND
-    * the event-time timers must recover from the RocksDB checkpoint — a
-    * session spanning the crash merges, the recovered timers close every
-    * session exactly once when the watermark passes, and the result
-    * equals batch sessionize on the union. Feed shifted +1 s off epoch 0
-    * (the TWS late-row boundary documented on SessionProcessor). */
-  test("restart drill: V2 session ListState and event-time timers recover; " +
-      "spanning session merges") {
-    import scala.jdk.CollectionConverters._
-    val root = Files.createTempDirectory("session_v2_drill")
-    val srcDir = root.resolve("src").toFile
-    srcDir.mkdirs()
-    val ckpt = root.resolve("ckpt").toString
-    type Sess = (Long, Long, Long, Long)
-    val sessions = new java.util.concurrent.ConcurrentLinkedQueue[Sess]()
-    def startQuery() = {
-      val typed = spark.readStream.schema("user_id LONG, t_ms LONG")
-        .json(srcDir.getPath)
-        .select(col("user_id").as("userId"), lit("view").as("eventType"),
-          col("t_ms").as("tMs"))
-        .as[graft.streaming.Streams.EventIn]
-      graft.streaming.StreamsV2.sessionStream(typed, gapMs = 60000L)
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .foreachBatch(
-          (df: org.apache.spark.sql.Dataset[graft.streaming.StreamsV2.SessionOut],
-              _: Long) =>
-            df.collect().foreach(s => sessions.add(
-              (s.userId, s.sessionStart, s.sessionEnd, s.nEvents))))
-        .start()
-    }
-    def writeEvents(name: String, evs: Seq[(Long, Long)]): Unit =
-      Files.writeString(srcDir.toPath.resolve(name),
-        evs.map { case (u, t) => s"""{"user_id":$u,"t_ms":$t}""" }.mkString("\n"))
-    withRocksDb {
-      // day 1: u1's session OPEN (1 s, 31 s, 51 s; end 111 s), u2's too
-      // (end 71 s); both live only in ListState + their event-time timers
-      writeEvents("day-1.json",
-        Seq((1L, 1000L), (1L, 31000L), (2L, 11000L), (1L, 51000L)))
-      val q1 = startQuery()
-      q1.processAllAvailable()
-      q1.stop() // crash with every session still open
-      assert(sessions.isEmpty, "nothing may close before the watermark moves")
-      // while down: u1's 71 s event lands INSIDE its open session; u3's
-      // far event pushes the watermark past u1/u2's closes on resume
-      writeEvents("day-2.json", Seq((1L, 71000L), (3L, 501000L)))
-      val q2 = startQuery()
-      q2.processAllAvailable()
-      writeEvents("day-3.json", Seq((99L, 10001000L))) // sentinel closes u3
-      q2.processAllAvailable()
-      q2.stop()
-      val got = sessions.asScala.toSeq.filter(_._1 != 99L).distinct
-      assert(got.toSet === Set(
-        (1L, 1000L, 131000L, 4L), // merged ACROSS the crash
-        (2L, 11000L, 71000L, 1L),
-        (3L, 501000L, 561000L, 1L)), s"got $got")
-      // batch==streaming under fault: equals Sessions.sessionize on the union
-      val batch = graft.operators.Sessions.sessionize(
-        Seq((1L, 1000L), (1L, 31000L), (2L, 11000L), (1L, 51000L),
-          (1L, 71000L), (3L, 501000L))
-          .map { case (u, t) => (u, t * 1000000L) }.toDF("user_id", "ts"),
-        gapMs = 60000L).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-      assert(got.toSet === batch)
-    }
-  }
-
-  /** transformWithState needs the RocksDB state store provider; scope it
-    * to the drill and restore the session default afterwards. */
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   /** `failures/restart.sh`, stateful form — the drill the shell script
     * actually runs is killing a LIVE consumer with in-flight state and
     * restarting it from its offsets. Here the consumer is the
@@ -488,27 +405,25 @@ class FailureDrillSpec extends SparkSpec {
         s""""tbl":"t0","pk":"p$lsn","opCode":"u","setsVal":true,"valV":1.5,""" +
         s""""setsK":false,"kV":null,"commitTs":${lsn * 10},"lsn":$lsn}"""
 
-    withRocksDb {
-      // batch 1: tx-a complete; tx-b 1/2; tx-c 2/3 (out of order: last first)
-      Files.writeString(srcDir.toPath.resolve("wal-1.json"), Seq(
-        ev("tx-a", 0, 1, 1L),
-        ev("tx-b", 0, 2, 2L),
-        ev("tx-c", 2, 3, 3L),
-        ev("tx-c", 0, 3, 4L)).mkString("\n"))
-      val q1 = startQuery()
-      q1.processAllAvailable()
-      q1.stop() // crash with tx-b, tx-c half-buffered in RocksDB
-      assert(assembled.toArray.toSeq === Seq(("tx-a", 1, 1L, "0")),
-        "only the complete txn emits before the crash")
-      // source keeps writing while the consumer is down
-      Files.writeString(srcDir.toPath.resolve("wal-2.json"), Seq(
-        ev("tx-b", 1, 2, 5L),
-        ev("tx-c", 1, 3, 6L),
-        ev("tx-d", 0, 1, 7L)).mkString("\n"))
-      val q2 = startQuery() // same checkpoint → offsets AND state recover
-      q2.processAllAvailable()
-      q2.stop()
-    }
+    // batch 1: tx-a complete; tx-b 1/2; tx-c 2/3 (out of order: last first)
+    Files.writeString(srcDir.toPath.resolve("wal-1.json"), Seq(
+      ev("tx-a", 0, 1, 1L),
+      ev("tx-b", 0, 2, 2L),
+      ev("tx-c", 2, 3, 3L),
+      ev("tx-c", 0, 3, 4L)).mkString("\n"))
+    val q1 = startQuery()
+    q1.processAllAvailable()
+    q1.stop() // crash with tx-b, tx-c half-buffered in RocksDB
+    assert(assembled.toArray.toSeq === Seq(("tx-a", 1, 1L, "0")),
+      "only the complete txn emits before the crash")
+    // source keeps writing while the consumer is down
+    Files.writeString(srcDir.toPath.resolve("wal-2.json"), Seq(
+      ev("tx-b", 1, 2, 5L),
+      ev("tx-c", 1, 3, 6L),
+      ev("tx-d", 0, 1, 7L)).mkString("\n"))
+    val q2 = startQuery() // same checkpoint → offsets AND state recover
+    q2.processAllAvailable()
+    q2.stop()
     val out = assembled.toArray(Array.empty[(String, Int, Long, String)]).toSeq
     assert(out.map(_._1).sorted === Seq("tx-a", "tx-b", "tx-c", "tx-d"),
       s"each txn exactly once across the kill: $out")
@@ -516,6 +431,64 @@ class FailureDrillSpec extends SparkSpec {
     assert(byId("tx-b") === (("tx-b", 2, 2L, "0,1")), "recovered buffer + new event")
     assert(byId("tx-c") === (("tx-c", 3, 3L, "0,1,2")), "events sorted by txIndex on emit")
     assert(byId("tx-d") === (("tx-d", 1, 7L, "0")))
+  }
+
+  /** Restart drill for the commit-floor apply
+    * (`StreamsV2.applyOnCommitStream`): a COMPLETE transaction held behind
+    * the watermark lives only in the state store — its buffered events AND
+    * its event-time timer. The kill lands after tx-a completes but before
+    * the watermark passes its commit; after resume the watermark advances
+    * and the recovered timer must emit tx-a exactly once, event-complete.
+    * Incomplete transactions are dropped when the watermark passes them,
+    * never emitted. */
+  test("restart drill: commit-floor apply releases a held txn exactly once after resume") {
+    import graft.streaming.{Streams, StreamsV2}
+    val root = Files.createTempDirectory("restart_floor")
+    val srcDir = root.resolve("src").toFile
+    srcDir.mkdirs()
+    val ckpt = root.resolve("ckpt").toString
+    val emitted = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val schema = "txId STRING, txIndex INT, txTotal INT, last BOOLEAN, tbl STRING, " +
+      "pk STRING, opCode STRING, setsVal BOOLEAN, valV DOUBLE, setsK BOOLEAN, " +
+      "kV LONG, commitTs LONG, lsn LONG"
+    // 1 s of allowed lateness: tx-a (commit 1000) is the newest event of
+    // batch 1, so the watermark after it is 0 and tx-a stays held
+    def startQuery() = StreamsV2.applyOnCommitStream(
+      spark.readStream.schema(schema).json(srcDir.getPath).as[Streams.Event],
+      watermarkDelay = "1 second")
+      .writeStream
+      .option("checkpointLocation", ckpt)
+      .foreachBatch((df: org.apache.spark.sql.Dataset[Streams.AssembledTxn], _: Long) =>
+        df.collect().foreach(t =>
+          emitted.add((t.txId, t.events.map(_.txIndex).mkString(",")))))
+      .start()
+    def ev(txId: String, idx: Int, total: Int, commitTs: Long, lsn: Long): String =
+      s"""{"txId":"$txId","txIndex":$idx,"txTotal":$total,"last":${idx == total - 1},""" +
+        s""""tbl":"t0","pk":"p$lsn","opCode":"u","setsVal":true,"valV":1.5,""" +
+        s""""setsK":false,"kV":null,"commitTs":$commitTs,"lsn":$lsn}"""
+    def got = emitted.toArray(Array.empty[(String, String)]).toSeq
+
+    // tx-x is incomplete (1 of 3); tx-a is complete, last index first
+    Files.writeString(srcDir.toPath.resolve("wal-1.json"), Seq(
+      ev("tx-x", 0, 3, 500L, 1L),
+      ev("tx-a", 1, 2, 1000L, 3L),
+      ev("tx-a", 0, 2, 1000L, 2L)).mkString("\n"))
+    val q1 = startQuery()
+    q1.processAllAvailable()
+    q1.stop() // crash: tx-a complete but held, tx-x buffered
+    assert(got.isEmpty, s"nothing may emit while the floor is behind: $got")
+    // after resume: tx-y's commit moves the watermark to 4000, past tx-a
+    // (1000) and tx-x (500); one more event runs a batch under it
+    Files.writeString(srcDir.toPath.resolve("wal-2.json"),
+      ev("tx-y", 0, 2, 5000L, 4L))
+    val q2 = startQuery()
+    q2.processAllAvailable()
+    Files.writeString(srcDir.toPath.resolve("wal-3.json"),
+      ev("tx-z", 0, 2, 6000L, 5L))
+    q2.processAllAvailable()
+    q2.stop()
+    assert(got === Seq(("tx-a", "0,1")),
+      s"the held txn must emit exactly once after resume, incomplete ones never: $got")
   }
 
   /** `failures/restart.sh` against a REAL database: the consumer's
@@ -647,24 +620,22 @@ class FailureDrillSpec extends SparkSpec {
         df.collect().foreach(assembled.add))
       .start()
 
-    withRocksDb {
-      // phase 1: first six events — tx-a completes, tx-b/c/d half-buffered,
-      // and the drift stack still holds the undrained tail
-      Files.writeString(srcDir.toPath.resolve("wal-1.json"),
-        (1L to 6L).map(evJson).mkString("\n"))
-      val a1 = startHopA(); a1.processAllAvailable()
-      val b1 = startHopB(); b1.processAllAvailable()
-      a1.stop(); b1.stop() // kill BOTH hops with in-flight state
-      assert(assembled.size < 4, "the kill must land mid-pipeline, not after it")
+    // phase 1: first six events — tx-a completes, tx-b/c/d half-buffered,
+    // and the drift stack still holds the undrained tail
+    Files.writeString(srcDir.toPath.resolve("wal-1.json"),
+      (1L to 6L).map(evJson).mkString("\n"))
+    val a1 = startHopA(); a1.processAllAvailable()
+    val b1 = startHopB(); b1.processAllAvailable()
+    a1.stop(); b1.stop() // kill BOTH hops with in-flight state
+    assert(assembled.size < 4, "the kill must land mid-pipeline, not after it")
 
-      // phase 2: the rest of the feed + the flush sentinels, then resume
-      Files.writeString(srcDir.toPath.resolve("wal-2.json"),
-        ((7L to 10L).map(evJson) ++ Seq(sentinelJson(9000L), sentinelJson(9001L)))
-          .mkString("\n"))
-      val a2 = startHopA(); a2.processAllAvailable()
-      val b2 = startHopB(); b2.processAllAvailable()
-      a2.stop(); b2.stop()
-    }
+    // phase 2: the rest of the feed + the flush sentinels, then resume
+    Files.writeString(srcDir.toPath.resolve("wal-2.json"),
+      ((7L to 10L).map(evJson) ++ Seq(sentinelJson(9000L), sentinelJson(9001L)))
+        .mkString("\n"))
+    val a2 = startHopA(); a2.processAllAvailable()
+    val b2 = startHopB(); b2.processAllAvailable()
+    a2.stop(); b2.stop()
 
     val out = assembled.toArray(Array.empty[Streams.AssembledTxn]).toSeq
     assert(out.map(_.txId).sorted === Seq("tx-a", "tx-b", "tx-c", "tx-d"),
@@ -727,16 +698,14 @@ class FailureDrillSpec extends SparkSpec {
       .start()
     def row(seq: Long): String = s"""{"method":"m","seq":$seq,"availableAt":0}"""
 
-    withRocksDb {
-      Files.writeString(srcDir.toPath.resolve("b1.json"), (1 to 4).map(i => row(i)).mkString("\n"))
-      val q1 = startQuery()
-      q1.processAllAvailable()
-      q1.stop() // crash after ticks 1,1,2,2 drained
-      Files.writeString(srcDir.toPath.resolve("b2.json"), (5 to 6).map(i => row(i)).mkString("\n"))
-      val q2 = startQuery()
-      q2.processAllAvailable()
-      q2.stop()
-    }
+    Files.writeString(srcDir.toPath.resolve("b1.json"), (1 to 4).map(i => row(i)).mkString("\n"))
+    val q1 = startQuery()
+    q1.processAllAvailable()
+    q1.stop() // crash after ticks 1,1,2,2 drained
+    Files.writeString(srcDir.toPath.resolve("b2.json"), (5 to 6).map(i => row(i)).mkString("\n"))
+    val q2 = startQuery()
+    q2.processAllAvailable()
+    q2.stop()
     val streamed = drained.toArray(Array.empty[(Long, Long)]).toMap
     val batch = Consumer.throttleDrain(
       (1 to 6).map(i => DeliveryIn("m", i.toLong, 0L)).toDS(), rate = 2.0, stepMs = 1000L)
@@ -746,15 +715,14 @@ class FailureDrillSpec extends SparkSpec {
       "post-restart drains continue at tick 3 — a reset bucket would say 1")
   }
 
-  /** Third state shape across the kill: MapState + EVENT-TIME TIMERS. The
-    * poll processor's open window (latest image + registered window-end
-    * timer) exists only in the checkpoint at the kill; after resume the
-    * watermark advances and the recovered timer must fire and emit the
-    * recovered image — losing either the map entry or the timer loses the
-    * window silently. */
+  /** Third state shape across the kill: a windowed aggregate's buffer
+    * under the watermark. The poll's open window (its `max_by` image and op
+    * count) exists only in the checkpointed state store at the kill; after
+    * resume the watermark advances and the recovered window must close and
+    * emit the recovered image — losing the buffer or the watermark loses
+    * the window silently. */
   test("restart drill: poll row-image MapState and its timers survive the kill") {
     import graft.streaming.{Streams, StreamsV2}
-    import graft.streaming.StreamsV2.PollOut
     val root = Files.createTempDirectory("restart_poll")
     val srcDir = root.resolve("src").toFile
     srcDir.mkdirs()
@@ -768,33 +736,33 @@ class FailureDrillSpec extends SparkSpec {
       pollIntervalMs = 1000L, watermarkDelay = "0 seconds")
       .writeStream
       .option("checkpointLocation", ckpt)
-      .foreachBatch((df: org.apache.spark.sql.Dataset[PollOut], _: Long) =>
-        df.collect().foreach(p => emitted.add((p.pk, p.pollTs, p.opCode, p.opsInWindow))))
+      .foreachBatch((df: DataFrame, _: Long) =>
+        df.collect().foreach(r => emitted.add((r.getAs[String]("pk"),
+          r.getAs[java.sql.Timestamp]("poll_ts").getTime, r.getAs[String]("op_code"),
+          r.getAs[Long]("ops_in_window")))))
       .start()
     def ev(pk: String, op: Long, t: Long, lsn: Long): String =
       s"""{"txId":"tx","txIndex":0,"txTotal":1,"last":true,"tbl":"t0","pk":"$pk",""" +
         s""""opCode":"${if (op == 0) "c" else "u"}","setsVal":true,"valV":$lsn.0,""" +
         s""""setsK":false,"kV":null,"commitTs":$t,"lsn":$lsn}"""
 
-    withRocksDb {
-      // window [0,1000) of key a gets three ops; nothing closes it yet
-      Files.writeString(srcDir.toPath.resolve("w1.json"),
-        Seq(ev("a", 0, 100L, 1L), ev("a", 1, 300L, 2L), ev("a", 1, 700L, 3L)).mkString("\n"))
-      val q1 = startQuery()
-      q1.processAllAvailable()
-      q1.stop() // crash: window open, image + timer only in the checkpoint
-      assert(emitted.isEmpty, "open window must not emit before its timer fires")
-      // watermark-advancing event arrives while the consumer is down
-      Files.writeString(srcDir.toPath.resolve("w2.json"),
-        Seq(ev("b", 0, 5000L, 4L)).mkString("\n"))
-      val q2 = startQuery()
-      q2.processAllAvailable()
-      // close key b's window too, so both emissions are observed
-      Files.writeString(srcDir.toPath.resolve("w3.json"),
-        Seq(ev("c", 0, 9000L, 5L)).mkString("\n"))
-      q2.processAllAvailable()
-      q2.stop()
-    }
+    // window [0,1000) of key a gets three ops; nothing closes it yet
+    Files.writeString(srcDir.toPath.resolve("w1.json"),
+      Seq(ev("a", 0, 100L, 1L), ev("a", 1, 300L, 2L), ev("a", 1, 700L, 3L)).mkString("\n"))
+    val q1 = startQuery()
+    q1.processAllAvailable()
+    q1.stop() // crash: window open, its image only in the checkpoint
+    assert(emitted.isEmpty, "open window must not emit before the watermark closes it")
+    // watermark-advancing event arrives while the consumer is down
+    Files.writeString(srcDir.toPath.resolve("w2.json"),
+      Seq(ev("b", 0, 5000L, 4L)).mkString("\n"))
+    val q2 = startQuery()
+    q2.processAllAvailable()
+    // close key b's window too, so both emissions are observed
+    Files.writeString(srcDir.toPath.resolve("w3.json"),
+      Seq(ev("c", 0, 9000L, 5L)).mkString("\n"))
+    q2.processAllAvailable()
+    q2.stop()
     val out = emitted.toArray(Array.empty[(String, Long, String, Long)]).toSeq.sortBy(_._1)
     assert(out.contains(("a", 1000L, "u", 3L)),
       s"recovered window must emit the recovered image (latest op, 3 ops): $out")
@@ -919,7 +887,7 @@ class FailureDrillSpec extends SparkSpec {
   }
 
   /** Restart drill for the streaming funnel twin
-    * (`Streams.funnelStream`): per-user stage progress is keyed state —
+    * (`StreamsV2.funnelStream`): per-user stage progress is keyed state —
     * a kill between micro-batches must neither reset it (a user halfway
     * down the funnel would re-emit stage 1) nor replay the advances the
     * committed batch already emitted. The advance set over the union of
@@ -937,7 +905,7 @@ class FailureDrillSpec extends SparkSpec {
       val arrivals = spark.readStream
         .schema("userId LONG, eventType STRING, tMs LONG").json(srcDir.getPath)
         .as[graft.streaming.Streams.EventIn]
-      graft.streaming.Streams.funnelStream(arrivals, ttlMs = 0L)
+      graft.streaming.StreamsV2.funnelStream(arrivals, ttlMs = 0L)
         .writeStream
         .option("checkpointLocation", ckpt)
         .foreachBatch(
@@ -984,7 +952,7 @@ class FailureDrillSpec extends SparkSpec {
   }
 
   /** Restart drill for the streaming attribution twin
-    * (`Streams.attributionStream`): the carried last-touch tuple must
+    * (`StreamsV2.attributionStream`): the carried last-touch tuple must
     * survive a kill — a reset would misroute every post-resume purchase
     * to "direct" (revenue silently re-bucketed, the worst kind of wrong).
     * A purchase arriving during the outage must emit exactly once after
@@ -1001,7 +969,7 @@ class FailureDrillSpec extends SparkSpec {
         .schema("eventId LONG, userId LONG, eventType STRING, tMs LONG, valueTicks LONG")
         .json(srcDir.getPath)
         .as[graft.streaming.Streams.AttrIn]
-      graft.streaming.Streams.attributionStream(arrivals)
+      graft.streaming.StreamsV2.attributionStream(arrivals)
         .writeStream
         .option("checkpointLocation", ckpt)
         .foreachBatch(
@@ -1060,7 +1028,7 @@ class FailureDrillSpec extends SparkSpec {
   }
 
   /** Restart drill for the streaming retention twin
-    * (`Streams.retentionStream`): the per-user (cohort, marked-day) state
+    * (`StreamsV2.retentionStream`): the per-user (cohort, marked-day) state
     * must survive a kill — a reset would re-emit day marks the committed
     * batches already counted (double-counted retention) or lose the
     * cohort day entirely. Includes the pre-signup buffering edge across
@@ -1079,7 +1047,7 @@ class FailureDrillSpec extends SparkSpec {
       val arrivals = spark.readStream
         .schema("userId LONG, eventType STRING, tMs LONG").json(srcDir.getPath)
         .as[graft.streaming.Streams.EventIn]
-      graft.streaming.Streams.retentionStream(arrivals, ttlMs = 0L)
+      graft.streaming.StreamsV2.retentionStream(arrivals, ttlMs = 0L)
         .writeStream
         .option("checkpointLocation", ckpt)
         .foreachBatch(
@@ -1118,7 +1086,7 @@ class FailureDrillSpec extends SparkSpec {
       s"buffered pre-signup day must emit once after resume: $got")
   }
 
-  /** Restart drill for the streaming SCD2 builder (`Streams.scd2Stream`):
+  /** Restart drill for the streaming SCD2 builder (`StreamsV2.scd2Stream`):
     * the OPEN version lives only in state — a reset would re-open it at
     * version 1 with a blank image, silently rewriting dimension history.
     * The version spanning the crash must close exactly once after
@@ -1136,7 +1104,7 @@ class FailureDrillSpec extends SparkSpec {
           "setsVal BOOLEAN, v DOUBLE, setsK BOOLEAN, kk LONG")
         .json(srcDir.getPath)
         .as[graft.streaming.Streams.ScdIn]
-      graft.streaming.Streams.scd2Stream(arrivals)
+      graft.streaming.StreamsV2.scd2Stream(arrivals)
         .writeStream
         .option("checkpointLocation", ckpt)
         .foreachBatch(
@@ -1174,7 +1142,7 @@ class FailureDrillSpec extends SparkSpec {
   }
 
   /** Restart drill for the streaming DAU / new-vs-returning twin
-    * (`Streams.activityStream`): the per-user active-day set must survive
+    * (`StreamsV2.activityStream`): the per-user active-day set must survive
     * a kill — a day marked before the crash must not re-emit when the
     * same (user, day) arrives again after resume, and the ONE-isNew-ever
     * invariant must hold across the restart (a resumed user is returning,
@@ -1192,7 +1160,7 @@ class FailureDrillSpec extends SparkSpec {
         .select(col("user_id").as("userId"), lit("view").as("eventType"),
           col("t_ms").as("tMs"))
         .as[graft.streaming.Streams.EventIn]
-      graft.streaming.Streams.activityStream(arrivals)
+      graft.streaming.StreamsV2.activityStream(arrivals)
         .writeStream
         .option("checkpointLocation", ckpt)
         .foreachBatch(
@@ -1236,7 +1204,7 @@ class FailureDrillSpec extends SparkSpec {
   }
 
   /** Restart drill for the streaming growth-accounting twin
-    * (`Streams.growthStream`): the last-active-week state must survive a
+    * (`StreamsV2.growthStream`): the last-active-week state must survive a
     * kill — a user retained across the crash classifies `retained` (not
     * `new` again), and a gap spanning the crash still yields the
     * churned-at-missing-week + resurrected pair exactly once. */
@@ -1253,7 +1221,7 @@ class FailureDrillSpec extends SparkSpec {
         .select(col("user_id").as("userId"), lit("view").as("eventType"),
           col("t_ms").as("tMs"))
         .as[graft.streaming.Streams.EventIn]
-      graft.streaming.Streams.growthStream(arrivals)
+      graft.streaming.StreamsV2.growthStream(arrivals)
         .writeStream
         .option("checkpointLocation", ckpt)
         .foreachBatch(
@@ -1287,7 +1255,7 @@ class FailureDrillSpec extends SparkSpec {
       s"got $got")
   }
 
-  /** Restart drill for the streaming RFM twin (`Streams.rfmStream`): the
+  /** Restart drill for the streaming RFM twin (`StreamsV2.rfmStream`): the
     * three running totals must survive a kill — a post-resume purchase
     * continues the pre-crash frequency/monetary instead of restarting
     * them, and the latest-mark-per-user read stays exact. */
@@ -1306,7 +1274,7 @@ class FailureDrillSpec extends SparkSpec {
           col("event_type").as("eventType"), col("t_ms").as("tMs"),
           col("ticks").as("valueTicks"))
         .as[graft.streaming.Streams.AttrIn]
-      graft.streaming.Streams.rfmStream(arrivals)
+      graft.streaming.StreamsV2.rfmStream(arrivals)
         .writeStream
         .option("checkpointLocation", ckpt)
         .foreachBatch(
@@ -1343,11 +1311,10 @@ class FailureDrillSpec extends SparkSpec {
     assert(latest(1L) === ((1L, 2L, 3L, 3500L)) && latest(2L) === ((2L, 2L, 1L, 700L)))
   }
 
-  /** Restart drill for the `transformWithState` RFM form
-    * (`StreamsV2.rfmStream`): the ValueState running totals must survive
-    * a kill under the RocksDB provider exactly like the
-    * flatMapGroupsWithState form's GroupState — one drill pins that the
-    * V2 state plumbing checkpoints, not just the shared fold math. */
+  /** Restart drill for the RFM running totals (`StreamsV2.rfmStream`)
+    * on a single-user feed: the ValueState must survive a kill under the
+    * RocksDB provider, the post-resume mark continuing the pre-crash
+    * totals. */
   test("restart drill: V2 (transformWithState) RFM totals survive kill under RocksDB") {
     val root = Files.createTempDirectory("rfm_v2_drill")
     val srcDir = root.resolve("src").toFile
@@ -1378,21 +1345,19 @@ class FailureDrillSpec extends SparkSpec {
         evs.map { case (id, u, et, t, v) =>
           s"""{"event_id":$id,"user_id":$u,"event_type":"$et","t_ms":$t,"ticks":$v}"""
         }.mkString("\n"))
-    withRocksDb {
-      writeEvents("b1.json", Seq(
-        (0L, 1L, "purchase", 100L, 1000L), (1L, 1L, "purchase", 200L, 2000L)))
-      val q1 = startQuery()
-      q1.processAllAvailable()
-      q1.stop()
-      writeEvents("b2.json", Seq(
-        (2L, 1L, "purchase", 2 * dayMs + 100L, 500L)))
-      val q2 = startQuery()
-      q2.processAllAvailable()
-      q2.stop()
-      val got = marks.toArray(Array.empty[(Long, Long, Long, Long)]).toSeq
-      assert(got.toSet === Set((1L, 0L, 2L, 3000L), (1L, 2L, 3L, 3500L)),
-        s"V2 post-resume mark must CONTINUE the pre-crash totals: $got")
-    }
+    writeEvents("b1.json", Seq(
+      (0L, 1L, "purchase", 100L, 1000L), (1L, 1L, "purchase", 200L, 2000L)))
+    val q1 = startQuery()
+    q1.processAllAvailable()
+    q1.stop()
+    writeEvents("b2.json", Seq(
+      (2L, 1L, "purchase", 2 * dayMs + 100L, 500L)))
+    val q2 = startQuery()
+    q2.processAllAvailable()
+    q2.stop()
+    val got = marks.toArray(Array.empty[(Long, Long, Long, Long)]).toSeq
+    assert(got.toSet === Set((1L, 0L, 2L, 3000L), (1L, 2L, 3L, 3500L)),
+      s"V2 post-resume mark must CONTINUE the pre-crash totals: $got")
   }
 
   /** Restart drill for the V2 timer path (`StreamsV2.growthStream`): a
@@ -1431,52 +1396,50 @@ class FailureDrillSpec extends SparkSpec {
         evs.map { case (u, t) => s"""{"user_id":$u,"t_ms":$t}""" }.mkString("\n"))
     def u1(): Seq[(Long, Long, String)] =
       marks.toArray(Array.empty[(Long, Long, String)]).toSeq.filter(_._1 == 1L)
-    withRocksDb {
-      // batch 1: u1 first seen (week 0); a 3 s eviction timer is now
-      // registered in the checkpointed state store
-      writeEvents("b1.json", Seq((1L, 100L)))
-      val q1 = startQuery()
-      val d0 = System.currentTimeMillis() + 60000L
-      while (!u1().exists(_._3 == "new") && System.currentTimeMillis() < d0)
-        Thread.sleep(100L)
-      q1.stop() // kill BEFORE the timer fires (the 3 s TTL leaves room)
-      assert(u1().map(_._3) === Seq("new"), s"pre-kill marks: ${u1()}")
-      Thread.sleep(3500L) // the TTL expires while the query is down
-      // resume: the recovered timer must fire once a batch runs — drive
-      // batches with an unrelated user's events (the V2 nudge discipline;
-      // processAllAvailable can block while timers keep the loop busy)
-      val q2 = startQuery()
-      val deadline = System.currentTimeMillis() + 90000L
-      var nudge = 1000L
-      while (!u1().exists(_._3 == "churned") &&
-          System.currentTimeMillis() < deadline) {
-        Thread.sleep(250L)
-        nudge += 1
-        writeEvents(s"nudge$nudge.json", Seq((99L, nudge)))
-      }
-      assert(u1().exists(_._3 == "churned"),
-        s"the recovered timer must emit the silent churn: ${u1()}")
-      // the tombstone written by the post-resume eviction must classify
-      // u1's return as resurrected, never a second new
-      writeEvents("b2.json", Seq((1L, 4 * weekMs + 100L)))
-      while (!u1().exists(_._3 == "resurrected") &&
-          System.currentTimeMillis() < deadline)
-        Thread.sleep(250L)
-      q2.stop()
-      // DISTINCT marks: the foreachBatch queue is an at-least-once sink —
-      // a batch whose commit the kill raced can REPLAY identical rows on
-      // resume (observed: a duplicate (1,0,new)). The state is exactly
-      // once; a real tombstone loss would mint a new mark at a DIFFERENT
-      // week, which distinct does not mask.
-      val got = u1().distinct
-      assert(got.contains((1L, 1L, "churned")) &&
-        got.contains((1L, 4L, "resurrected")) &&
-        got.count(_._3 == "new") === 1,
-        s"churn@1 + resurrect@4 + one new ever, got $got")
+    // batch 1: u1 first seen (week 0); a 3 s eviction timer is now
+    // registered in the checkpointed state store
+    writeEvents("b1.json", Seq((1L, 100L)))
+    val q1 = startQuery()
+    val d0 = System.currentTimeMillis() + 60000L
+    while (!u1().exists(_._3 == "new") && System.currentTimeMillis() < d0)
+      Thread.sleep(100L)
+    q1.stop() // kill BEFORE the timer fires (the 3 s TTL leaves room)
+    assert(u1().map(_._3) === Seq("new"), s"pre-kill marks: ${u1()}")
+    Thread.sleep(3500L) // the TTL expires while the query is down
+    // resume: the recovered timer must fire once a batch runs — drive
+    // batches with an unrelated user's events (the V2 nudge discipline;
+    // processAllAvailable can block while timers keep the loop busy)
+    val q2 = startQuery()
+    val deadline = System.currentTimeMillis() + 90000L
+    var nudge = 1000L
+    while (!u1().exists(_._3 == "churned") &&
+        System.currentTimeMillis() < deadline) {
+      Thread.sleep(250L)
+      nudge += 1
+      writeEvents(s"nudge$nudge.json", Seq((99L, nudge)))
     }
+    assert(u1().exists(_._3 == "churned"),
+      s"the recovered timer must emit the silent churn: ${u1()}")
+    // the tombstone written by the post-resume eviction must classify
+    // u1's return as resurrected, never a second new
+    writeEvents("b2.json", Seq((1L, 4 * weekMs + 100L)))
+    while (!u1().exists(_._3 == "resurrected") &&
+        System.currentTimeMillis() < deadline)
+      Thread.sleep(250L)
+    q2.stop()
+    // DISTINCT marks: the foreachBatch queue is an at-least-once sink —
+    // a batch whose commit the kill raced can REPLAY identical rows on
+    // resume (observed: a duplicate (1,0,new)). The state is exactly
+    // once; a real tombstone loss would mint a new mark at a DIFFERENT
+    // week, which distinct does not mask.
+    val got = u1().distinct
+    assert(got.contains((1L, 1L, "churned")) &&
+      got.contains((1L, 4L, "resurrected")) &&
+      got.count(_._3 == "new") === 1,
+      s"churn@1 + resurrect@4 + one new ever, got $got")
   }
 
-  /** Restart drill for the streaming cohort-LTV twin (`Streams.ltvStream`):
+  /** Restart drill for the streaming cohort-LTV twin (`StreamsV2.ltvStream`):
     * the cohort-day state must survive a kill — a post-resume purchase
     * still lands in the cohort settled before the crash, the entry mark
     * never re-emits, and a purchase replayed by the checkpointed source
@@ -1496,7 +1459,7 @@ class FailureDrillSpec extends SparkSpec {
           col("event_type").as("eventType"), col("t_ms").as("tMs"),
           col("ticks").as("valueTicks"))
         .as[graft.streaming.Streams.AttrIn]
-      graft.streaming.Streams.ltvStream(arrivals)
+      graft.streaming.StreamsV2.ltvStream(arrivals)
         .writeStream
         .option("checkpointLocation", ckpt)
         .foreachBatch(
@@ -1539,8 +1502,8 @@ class FailureDrillSpec extends SparkSpec {
     * resume with image and counter intact; a TTL timer registered BEFORE
     * the kill is recovered from the checkpoint and still evicts (emitting
     * the ScdEvictedOpen row, never dropping it); and the eviction removes
-    * the state entirely, so the key's next insert restarts at version 1 —
-    * the v1 `state.remove()` semantics, drilled through recovery. */
+    * the state entirely, so the key's next insert restarts at version 1,
+    * drilled through recovery. */
   test("restart drill: V2 scd2 recovered timer evicts the open version; " +
       "counter resets after eviction") {
     val root = Files.createTempDirectory("scd2_v2_drill")
@@ -1574,56 +1537,55 @@ class FailureDrillSpec extends SparkSpec {
     def writeRows(name: String, rows: Seq[String]): Unit =
       Files.writeString(srcDir.toPath.resolve(name), rows.mkString("\n"))
     def rows(): Seq[V] = closed.toArray(Array.empty[V]).toSeq
-    withRocksDb {
-      // pre-crash: insert (ver 1) + partial update (ver 2 OPEN, carries k);
-      // a 3 s eviction timer is now in the checkpointed state store
-      writeRows("b1.json", Seq(
-        """{"tbl":"t0","pk":"a","lsn":1,"t":10,"op":"insert","setsVal":true,"v":1.5,"setsK":true,"kk":100}""",
-        """{"tbl":"t0","pk":"a","lsn":2,"t":20,"op":"update","setsVal":true,"v":2.5,"setsK":false,"kk":0}"""))
-      val q1 = startQuery()
-      val d0 = System.currentTimeMillis() + 60000L
-      while (rows().isEmpty && System.currentTimeMillis() < d0)
-        Thread.sleep(100L)
-      q1.stop() // kill BEFORE the timer fires (the 3 s TTL leaves room)
-      // DISTINCT: the foreachBatch queue is at-least-once across a kill
-      // (a raced commit replays identical rows on resume — the growth
-      // drill's observed duplicate); state itself is exactly-once
-      assert(rows().distinct === Seq(("a", 1L, 10L, 20L, Some(1.5), Some(100L))),
-        s"only ver 1 may close before the crash: ${rows()}")
-      Thread.sleep(3500L) // the TTL expires while the query is down
-      // resume: the recovered timer must evict ver 2 once a batch runs —
-      // drive batches with an unrelated key (the V2 nudge discipline)
-      val q2 = startQuery()
-      val deadline = System.currentTimeMillis() + 90000L
-      var nudge = 1000L
-      while (!rows().exists(_._4 == graft.streaming.Streams.ScdEvictedOpen) &&
-          System.currentTimeMillis() < deadline) {
-        Thread.sleep(250L)
-        nudge += 1
-        writeRows(s"nudge$nudge.json", Seq(
-          s"""{"tbl":"t9","pk":"z","lsn":$nudge,"t":$nudge,"op":"insert","setsVal":true,"v":0.0,"setsK":false,"kk":0}"""))
-      }
-      assert(rows().contains(("a", 2L, 20L, graft.streaming.Streams.ScdEvictedOpen,
-        Some(2.5), Some(100L))),
-        s"recovered timer must evict ver 2 with the pre-crash image: ${rows()}")
-      // eviction removed the state: the key's next insert+update restarts
-      // the version counter at 1 with a BLANK image (no k carry-over)
-      writeRows("b2.json", Seq(
-        """{"tbl":"t0","pk":"a","lsn":50,"t":500,"op":"insert","setsVal":true,"v":9.0,"setsK":false,"kk":0}""",
-        """{"tbl":"t0","pk":"a","lsn":51,"t":600,"op":"update","setsVal":true,"v":9.5,"setsK":false,"kk":0}"""))
-      while (!rows().exists(_._3 == 500L) &&
-          System.currentTimeMillis() < deadline)
-        Thread.sleep(250L)
-      q2.stop()
-      val reborn = rows().filter(_._3 == 500L).distinct
-      assert(reborn === Seq(("a", 1L, 500L, 600L, Some(9.0), None)),
-        s"post-eviction history must restart at ver 1 with a blank image: $reborn")
+    // pre-crash: insert (ver 1) + partial update (ver 2 OPEN, carries k);
+    // a 3 s eviction timer is now in the checkpointed state store
+    writeRows("b1.json", Seq(
+      """{"tbl":"t0","pk":"a","lsn":1,"t":10,"op":"insert","setsVal":true,"v":1.5,"setsK":true,"kk":100}""",
+      """{"tbl":"t0","pk":"a","lsn":2,"t":20,"op":"update","setsVal":true,"v":2.5,"setsK":false,"kk":0}"""))
+    val q1 = startQuery()
+    val d0 = System.currentTimeMillis() + 60000L
+    while (rows().isEmpty && System.currentTimeMillis() < d0)
+      Thread.sleep(100L)
+    q1.stop() // kill BEFORE the timer fires (the 3 s TTL leaves room)
+    // DISTINCT: the foreachBatch queue is at-least-once across a kill
+    // (a raced commit replays identical rows on resume — the growth
+    // drill's observed duplicate); state itself is exactly-once
+    assert(rows().distinct === Seq(("a", 1L, 10L, 20L, Some(1.5), Some(100L))),
+      s"only ver 1 may close before the crash: ${rows()}")
+    Thread.sleep(3500L) // the TTL expires while the query is down
+    // resume: the recovered timer must evict ver 2 once a batch runs —
+    // drive batches with an unrelated key (the V2 nudge discipline)
+    val q2 = startQuery()
+    val deadline = System.currentTimeMillis() + 90000L
+    var nudge = 1000L
+    while (!rows().exists(_._4 == graft.streaming.Streams.ScdEvictedOpen) &&
+        System.currentTimeMillis() < deadline) {
+      Thread.sleep(250L)
+      nudge += 1
+      writeRows(s"nudge$nudge.json", Seq(
+        s"""{"tbl":"t9","pk":"z","lsn":$nudge,"t":$nudge,"op":"insert","setsVal":true,"v":0.0,"setsK":false,"kk":0}"""))
     }
+    assert(rows().contains(("a", 2L, 20L, graft.streaming.Streams.ScdEvictedOpen,
+      Some(2.5), Some(100L))),
+      s"recovered timer must evict ver 2 with the pre-crash image: ${rows()}")
+    // eviction removed the state: the key's next insert+update restarts
+    // the version counter at 1 with a BLANK image (no k carry-over)
+    writeRows("b2.json", Seq(
+      """{"tbl":"t0","pk":"a","lsn":50,"t":500,"op":"insert","setsVal":true,"v":9.0,"setsK":false,"kk":0}""",
+      """{"tbl":"t0","pk":"a","lsn":51,"t":600,"op":"update","setsVal":true,"v":9.5,"setsK":false,"kk":0}"""))
+    while (!rows().exists(_._3 == 500L) &&
+        System.currentTimeMillis() < deadline)
+      Thread.sleep(250L)
+    q2.stop()
+    val reborn = rows().filter(_._3 == 500L).distinct
+    assert(reborn === Seq(("a", 1L, 500L, 600L, Some(9.0), None)),
+      s"post-eviction history must restart at ver 1 with a blank image: $reborn")
   }
 
   /** State-schema evolution drill — the capability `transformWithState`
-    * advertises over V1 `GroupState` (where the r13 ActivityState change
-    * was checkpoint-BREAKING: resume needs a fresh checkpoint). With the
+    * advertises over `flatMapGroupsWithState`'s `GroupState` (where an
+    * added state field is checkpoint-BREAKING: resume needs a fresh
+    * checkpoint). With the
     * Avro state encoding (`spark.sql.streaming.stateStore.encodingFormat
     * = avro`, StateSchemaV3), a V2 processor can add a nullable field to
     * its state case class and RESUME THE SAME CHECKPOINT: pre-evolution
@@ -1670,7 +1632,7 @@ class FailureDrillSpec extends SparkSpec {
     val prevEnc = spark.conf.getOption(encKey)
     // avro from the FIRST write: an unsaferow checkpoint cannot evolve
     spark.conf.set(encKey, "avro")
-    try withRocksDb {
+    try {
       writeEvents("day-1.json", Seq((1L, 1000L), (1L, 2000L), (2L, 3000L)))
       val q1 = startQuery(evolved = false)
       q1.processAllAvailable()
@@ -1748,7 +1710,7 @@ class FailureDrillSpec extends SparkSpec {
     val encKey = "spark.sql.streaming.stateStore.encodingFormat"
     val prevEnc = spark.conf.getOption(encKey)
     spark.conf.set(encKey, "avro")
-    try withRocksDb {
+    try {
       // two items buffered pre-evolution, NO flush — the kill lands with
       // the interesting state serialized under the V1 item schema
       writeEvents("b1.json", Seq((1L, "open", 1000L), (1L, "add", 2000L)))
@@ -1783,8 +1745,7 @@ class FailureDrillSpec extends SparkSpec {
     * nullable field must fail loudly with Spark's state-schema
     * incompatibility error (the drill asserts the error chain names the
     * schema problem), never decode garbage or silently reset state. The
-    * documented remedy is the r13 ActivityState one: fresh checkpoint, or
-    * start with avro from the first write. */
+    * remedy: a fresh checkpoint, or avro from the first write. */
   test("schema-evolution drill: an unsaferow checkpoint REFUSES to evolve " +
       "(loud state-schema error, pinned)") {
     import graft.SchemaEvolutionDrill._
@@ -1821,7 +1782,7 @@ class FailureDrillSpec extends SparkSpec {
     // the DEFAULT encoding — explicitly, so the pin survives a session
     // that ran the avro drills first
     spark.conf.set(encKey, "unsaferow")
-    try withRocksDb {
+    try {
       writeEvents("day-1.json", Seq((1L, 1000L), (2L, 2000L)))
       val q1 = startQuery(evolved = false)
       q1.processAllAvailable()

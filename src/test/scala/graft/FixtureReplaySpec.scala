@@ -6,15 +6,23 @@ import org.apache.spark.sql.functions._
 import graft.cdc.{ApplyEngine, CdcOps, Diff}
 import graft.sources.ScenarioSource
 
-/** End-to-end replay of the reference's OWN harness fixtures:
+/** End-to-end replay of the reference's harness fixture set:
   * fixture JSON → `ScenarioSource` normalise → log capture emission →
   * `applyJsonState` reduce, asserting the verifier's gate
   * (`harness/verifier/index.js:169-205`: pass = missing==0 && extra==0 &&
   * ordering==0, state diff all-match; CI additionally requires
   * `total_events >= scenario.ops.length`, `scripts/run-harness-ci.mjs:136,165`).
   * This is the reference's own definition of done for a capture lane.
+  * The fixtures are re-authored from the FIXTURES.md catalogue and load
+  * from the test classpath (`src/test/resources/fixtures`).
   */
 class FixtureReplaySpec extends SparkSpec {
+
+  private val fixtureDir =
+    new java.io.File(getClass.getResource("/fixtures").toURI)
+
+  private def fixture(name: String): String =
+    new java.io.File(fixtureDir, s"$name.json").getPath
 
   private def decodeOp(opCode: org.apache.spark.sql.Column) =
     when(opCode === "d", "delete").when(opCode === "u", "update").otherwise("insert")
@@ -74,8 +82,7 @@ class FixtureReplaySpec extends SparkSpec {
   }
 
   test("EVERY reference harness fixture passes the verifier gate") {
-    val dir = new java.io.File("/root/reference/harness/fixtures")
-    val fixtures = dir.listFiles().filter(_.getName.endsWith(".json")).map(_.getPath).sorted
+    val fixtures = fixtureDir.listFiles().filter(_.getName.endsWith(".json")).map(_.getPath).sorted
     assert(fixtures.length >= 15, "fixture directory unexpectedly small")
     fixtures.foreach { path =>
       withClue(s"fixture $path: ") { assert(replayGate(path) > 0L) }
@@ -83,18 +90,17 @@ class FixtureReplaySpec extends SparkSpec {
   }
 
   test("crud-basic fixture passes the verifier gate (delete ends empty)") {
-    assert(replayGate("/root/reference/harness/fixtures/crud-basic.json") === 3L)
+    assert(replayGate(fixture("crud-basic")) === 3L)
     // trailing delete ⇒ final state empty
-    val scen = ScenarioSource.read(spark, "/root/reference/harness/fixtures/crud-basic.json")
+    val scen = ScenarioSource.read(spark, fixture("crud-basic"))
     val ops = ScenarioSource.normaliseOps(scen)
       .withColumn("ord", row_number().over(Window.orderBy("t", "tbl", "pk")).cast("long"))
     assert(ApplyEngine.applyJsonState(ops).count() === 0L)
   }
 
   test("schema-evolution fixture: implicit widening + nested payloads survive the gate") {
-    assert(replayGate("/root/reference/harness/fixtures/schema-evolution.json") === 4L)
-    val scen = ScenarioSource.read(
-      spark, "/root/reference/harness/fixtures/schema-evolution.json")
+    assert(replayGate(fixture("schema-evolution")) === 4L)
+    val scen = ScenarioSource.read(spark, fixture("schema-evolution"))
     val ops = ScenarioSource.normaliseOps(scen)
       .withColumn("ord", row_number().over(Window.orderBy("t", "tbl", "pk")).cast("long"))
     val state = ApplyEngine.applyJsonState(ops).collect()
@@ -108,10 +114,8 @@ class FixtureReplaySpec extends SparkSpec {
   }
 
   test("orders-items-transactions fixture passes the verifier gate with merged state") {
-    assert(replayGate(
-      "/root/reference/harness/fixtures/orders-items-transactions.json") === 4L)
-    val scen = ScenarioSource.read(
-      spark, "/root/reference/harness/fixtures/orders-items-transactions.json")
+    assert(replayGate(fixture("orders-items-transactions")) === 4L)
+    val scen = ScenarioSource.read(spark, fixture("orders-items-transactions"))
     val ops = ScenarioSource.normaliseOps(scen)
       .withColumn("ord", row_number().over(Window.orderBy("t", "tbl", "pk")).cast("long"))
     val state = ApplyEngine.applyJsonState(ops).collect()

@@ -14,9 +14,8 @@ import graft.streaming.Streams
   * every streaming operator makes ("identical no matter how the stream is
   * chopped"), tested directly on the pure functions over hundreds of
   * random feeds and random chops. No SparkSession: these are the very
-  * folds both the `flatMapGroupsWithState` and `transformWithState` forms
-  * call (which StreamingSpec separately pins to the batch operators), so
-  * a property here covers every API form at once.
+  * folds the `StreamsV2` operators call (which StreamingSpec separately
+  * pins to the batch operators).
   *
   * Each fold's documented arrival contract bounds the chop: broker/drift
   * require per-partition lsn order, throttle (availableAt, seq) order,
@@ -436,36 +435,6 @@ class FoldPropertiesSpec extends AnyFunSuite {
       if (delAt >= 0 && !feed.drop(delAt + 1).exists(_.setsK))
         assert(one.deleted || one.kV.isEmpty,
           s"k must not survive the delete: $feed -> $one")
-    }
-  }
-
-  test("sessionFold: merging a feed in chopped batches == one batch, and " +
-      "the result is a disjoint ascending cover") {
-    import graft.streaming.StreamsV2.{sessionFold, OpenSession}
-    val gap = 10L
-    val feedGen: Gen[List[Long]] = for {
-      n <- Gen.choose(0, 25)
-      ts <- Gen.listOfN(n, Gen.choose(1L, 120L))
-    } yield ts
-    samples(feedGen, 80, 9900L).foreach { feed =>
-      val one = sessionFold(gap, Seq.empty, feed)
-      // disjoint, ascending, counts conserved
-      assert(one.map(_.n).sum === feed.size)
-      one.sliding(2).foreach {
-        case Seq(a, b) => assert(a.end <= b.start, s"overlap in $one")
-        case _ =>
-      }
-      one.foreach(s => assert(s.end > s.start))
-      // chop-invariance: sessions merge across batches through open state
-      samples(chopsGen(feed), 3, feed.hashCode.toLong).foreach { chop =>
-        val merged = chop.foldLeft(Seq.empty[OpenSession]) { (open, batch) =>
-          sessionFold(gap, open, batch)
-        }
-        assert(merged === one, s"sessions diverged: $feed chopped $chop")
-      }
-      // order-insensitive within a batch (the sort owns the order)
-      val rng = new scala.util.Random(feed.hashCode.toLong)
-      assert(sessionFold(gap, Seq.empty, rng.shuffle(feed)) === one)
     }
   }
 }

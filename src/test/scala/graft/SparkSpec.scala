@@ -22,6 +22,10 @@ object SparkSpec {
       // Spark 4.1's async checkpoint-file checksums deadlock in this
       // sandbox (awaitResult never completes when committing state deltas)
       .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
+      // every stateful streaming operator is a `transformWithState`
+      // processor, which the HDFS-backed default store does not support
+      .config("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -1,13 +1,16 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.streaming.Streams
+import graft.streaming.{Streams, StreamsV2}
 import graft.streaming.Streams.{AssembledTxn, Event, RowState}
 
 /** Structured-Streaming operator tests over MemoryStream: txn assembly emits
   * only complete transactions ("keeps transactions atomic under drift",
   * `src/test/unit/changefeed-playground.test.ts:12-63`), and the streaming
-  * apply merges partial payloads across micro-batches.
+  * apply merges partial payloads across micro-batches. Each keyed operator
+  * is checked against its batch twin, and again against its fold run once
+  * over the whole feed (or the operator fed the whole feed in one batch).
   */
 class StreamingSpec extends SparkSpec {
 
@@ -21,7 +24,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Event]
-    val q = Streams.assembleTxns(input.toDS(), ttlMs = 0L)
+    val q = StreamsV2.assembleTxns(input.toDS(), ttlMs = 0L)
       .writeStream.format("memory").queryName("txns")
       .outputMode("append").start()
 
@@ -51,7 +54,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Event]
-    val q = Streams.applyStream(input.toDS(), ttlMs = 0L)
+    val q = StreamsV2.applyStream(input.toDS(), ttlMs = 0L)
       .writeStream.format("memory").queryName("applied")
       .outputMode("append").start()
 
@@ -78,7 +81,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Event]
-    val q = Streams.applyOnCommitStream(input.toDS(), watermarkDelay = "0 seconds")
+    val q = StreamsV2.applyOnCommitStream(input.toDS(), watermarkDelay = "0 seconds")
       .writeStream.format("memory").queryName("floor_txns")
       .outputMode("append").start()
 
@@ -106,7 +109,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Event]
-    val q = Streams.pollStream(input.toDS(), pollIntervalMs = 1000L, watermarkDelay = "0 seconds")
+    val q = StreamsV2.pollStream(input.toDS(), pollIntervalMs = 1000L, watermarkDelay = "0 seconds")
       .writeStream.format("memory").queryName("poll_stream")
       .outputMode("append").start()
     // three ops on one key inside window [0, 1000): only the last survives
@@ -118,11 +121,17 @@ class StreamingSpec extends SparkSpec {
     // advance the watermark past the window with a later event
     input.addData(Event("tx", 0, 1, true, "t0", "b", "c", true, Some(5.0), false, None, 5000L, 4L))
     q.processAllAvailable()
-    input.addData(Event("tx", 0, 1, true, "t0", "c", "c", true, Some(6.0), false, None, 9000L, 5L))
+    // a LATE straggler for key a's long-closed [0,1000) window rides with
+    // the next watermark-advancing event: the watermark drops it, so it
+    // never re-opens the window (no duplicate window emission)
+    input.addData(
+      Event("tx", 0, 1, true, "t0", "a", "u", true, Some(7.0), false, None, 150L, 6L),
+      Event("tx", 0, 1, true, "t0", "c", "c", true, Some(6.0), false, None, 9000L, 5L))
     q.processAllAvailable()
     val rows = spark.table("poll_stream").collect()
     val a = rows.filter(_.getAs[String]("pk") == "a")
     assert(a.length === 1, "one emission per key-window, intermediates lost")
+    assert(a.head.getAs[java.sql.Timestamp]("poll_ts").getTime === 1000L)
     assert(a.head.getAs[Long]("ops_in_window") === 3L)
     assert(a.head.getAs[String]("op_code") === "u")
     assert(a.head.isNullAt(a.head.fieldIndex("after_val")), "latest op set only k")
@@ -141,7 +150,7 @@ class StreamingSpec extends SparkSpec {
         sv, v, sk, k, commitTs = t, lsn = i + 1L)
     }
     val input = MemoryStream[Event]
-    val q = Streams.applyStream(input.toDS(), ttlMs = 0L)
+    val q = StreamsV2.applyStream(input.toDS(), ttlMs = 0L)
       .writeStream.format("memory").queryName("parity")
       .outputMode("append").start()
     events.grouped(math.max(events.size / 3, 1)).foreach { batch =>
@@ -168,10 +177,9 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, Int, Long, java.sql.Timestamp)]
-    val deduped = Streams.dedupOffsets(
-      input.toDF().toDF("topic", "partition", "offset", "ts")
-        .withWatermark("ts", "10 seconds"),
-      Seq("topic", "partition", "offset"))
+    val deduped = input.toDF().toDF("topic", "partition", "offset", "ts")
+      .withWatermark("ts", "10 seconds")
+      .dropDuplicatesWithinWatermark(Seq("topic", "partition", "offset"))
     val q = deduped.writeStream.format("memory").queryName("dedup")
       .outputMode("append").start()
     val t0 = new java.sql.Timestamp(1000000L)
@@ -191,9 +199,8 @@ class StreamingSpec extends SparkSpec {
     def survivors(delay: String): Long = {
       implicit val sqlCtx = spark.sqlContext
       val input = MemoryStream[(Long, java.sql.Timestamp)]
-      val q = Streams.dedupOffsets(
-        input.toDF().toDF("event_id", "ts").withWatermark("ts", delay),
-        Seq("event_id"))
+      val q = input.toDF().toDF("event_id", "ts").withWatermark("ts", delay)
+        .dropDuplicatesWithinWatermark(Seq("event_id"))
         .writeStream.format("memory").queryName(s"wm_parity")
         .outputMode("append").start()
       // batch 1: the live stream advances the watermark to 2000 − delay
@@ -233,7 +240,7 @@ class StreamingSpec extends SparkSpec {
     val batch1 = (1 to 4).map(i => DeliveryIn("m", i.toLong, 0L))
     val batch2 = (5 to 6).map(i => DeliveryIn("m", i.toLong, 0L))
     val input = MemoryStream[DeliveryIn]
-    val q = Streams.throttleStream(input.toDS(), rate = 2.0, stepMs = 1000L)
+    val q = StreamsV2.throttleStream(input.toDS(), rate = 2.0, stepMs = 1000L)
       .writeStream.format("memory").queryName("throttle_stream")
       .outputMode("append").start()
     input.addData(batch1: _*)
@@ -258,7 +265,7 @@ class StreamingSpec extends SparkSpec {
     val batch1 = (1 to 3).map(i => BrokerIn(0, i.toLong, 40L, dropped = i == 2))
     val batch2 = (4 to 5).map(i => BrokerIn(0, i.toLong, 40L, dropped = false))
     val input = MemoryStream[BrokerIn]
-    val q = Streams.brokerDeliverStream(input.toDS(), tickMs = 50L, maxApplyPerTick = 2)
+    val q = StreamsV2.brokerDeliverStream(input.toDS(), tickMs = 50L, maxApplyPerTick = 2)
       .writeStream.format("memory").queryName("broker_stream")
       .outputMode("append").start()
     input.addData(batch1: _*)
@@ -299,7 +306,7 @@ class StreamingSpec extends SparkSpec {
       DriftIn(0, 9000L, 100000L, 100000L, dropped = true),
       DriftIn(1, 9001L, 100000L, 100000L, dropped = true))
     val input = MemoryStream[DriftIn]
-    val q = Streams.brokerDeliverDriftStream(input.toDS(), tickMs = 50L, maxApplyPerTick = 2)
+    val q = StreamsV2.brokerDeliverDriftStream(input.toDS(), tickMs = 50L, maxApplyPerTick = 2)
       .writeStream.format("memory").queryName("drift_stream")
       .outputMode("append").start()
     input.addData(batch1: _*)
@@ -333,7 +340,7 @@ class StreamingSpec extends SparkSpec {
       Seq(LagSample("b", 1L, 1L, 500L), LagSample("b", 2L, 2L, 100L))
     val (batch1, batch2) = all.splitAt(7)
     val input = MemoryStream[LagSample]
-    val q = Streams.lagRollingStream(input.toDS(), lastN = 4)
+    val q = StreamsV2.lagRollingStream(input.toDS(), lastN = 4)
       .writeStream.format("memory").queryName("lag_stream")
       .outputMode("append").start()
     input.addData(batch1: _*)
@@ -366,7 +373,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.Streams.VersionedSchemaChange
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[SchemaChange]
-    val q = Streams.schemaCaptureStream(input.toDS())
+    val q = StreamsV2.schemaCaptureStream(input.toDS())
       .writeStream.format("memory").queryName("schema_stream")
       .outputMode("append").start()
 
@@ -395,142 +402,94 @@ class StreamingSpec extends SparkSpec {
     q.stop()
   }
 
-  /** transformWithState needs the RocksDB state store provider; scope it to
-    * the query and restore the session default afterwards. */
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+  /** Runs `query` over a MemoryStream fed `batches`, one micro-batch each,
+    * and returns every row the memory sink received. */
+  private def runBatches[I: Encoder, O: Encoder](name: String, batches: Seq[Seq[I]])(
+      query: Dataset[I] => Dataset[O]): Seq[O] = {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[I]
+    val q = query(input.toDS())
+      .writeStream.format("memory").queryName(name)
+      .outputMode("append").start()
+    batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
+    val rows = spark.table(name).as[O].collect().toSeq
+    q.stop()
+    spark.catalog.dropTempView(name)
+    rows
   }
 
   test("transformWithState txn assembly: parity with the flatMapGroupsWithState form") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    withRocksDb {
-      val input = MemoryStream[Event]
-      val q = graft.streaming.StreamsV2.assembleTxns(input.toDS(), ttlMs = 0L)
-        .writeStream.format("memory").queryName("txns_tws")
-        .outputMode("append").start()
-      input.addData(
-        ev("tx-1", 0, 3, "t0", "a", "c", 1, v = Some(1.0)),
-        ev("tx-2", 0, 2, "t0", "b", "c", 2, v = Some(2.0)),
-        ev("tx-2", 1, 2, "t1", "b", "u", 3, k = Some(5L)),
-        ev("tx-1", 1, 3, "t1", "a", "u", 4, k = Some(9L)))
-      q.processAllAvailable()
-      val after1 = spark.table("txns_tws").as[AssembledTxn].collect()
-      assert(after1.map(_.txId).toSet === Set("tx-2"),
-        "incomplete tx-1 must stay buffered in ListState")
-      input.addData(ev("tx-1", 2, 3, "t2", "a", "u", 5, v = Some(3.0)))
-      q.processAllAvailable()
-      val after2 = spark.table("txns_tws").as[AssembledTxn].collect()
-      assert(after2.map(_.txId).toSet === Set("tx-1", "tx-2"))
-      val tx1 = after2.find(_.txId == "tx-1").get
-      assert((tx1.nEvents, tx1.events.map(_.txIndex), tx1.commitTs, tx1.firstLsn) ===
-        ((3, Seq(0, 1, 2), tx1.events.map(_.commitTs).max, 1L)))
-      q.stop()
-    }
+    // the chopped feed of the first test against the same operator fed the
+    // whole feed in ONE micro-batch: a chop may delay a txn, never change it
+    val feed = Seq(
+      ev("tx-1", 0, 3, "t0", "a", "c", 1, v = Some(1.0)),
+      ev("tx-2", 0, 2, "t0", "b", "c", 2, v = Some(2.0)),
+      ev("tx-2", 1, 2, "t1", "b", "u", 3, k = Some(5L)),
+      ev("tx-1", 1, 3, "t1", "a", "u", 4, k = Some(9L)),
+      ev("tx-1", 2, 3, "t2", "a", "u", 5, v = Some(3.0)))
+    def run(name: String, batches: Seq[Seq[Event]]) =
+      runBatches[Event, AssembledTxn](name, batches)(StreamsV2.assembleTxns(_, ttlMs = 0L))
+        .sortBy(_.txId)
+    val chopped = run("txns_tws", Seq(feed.take(4), feed.drop(4)))
+    assert(chopped === run("txns_tws_one", Seq(feed)))
+    val tx1 = chopped.find(_.txId == "tx-1").get
+    assert((tx1.nEvents, tx1.events.map(_.txIndex), tx1.commitTs, tx1.firstLsn) ===
+      ((3, Seq(0, 1, 2), tx1.events.map(_.commitTs).max, 1L)))
   }
 
   test("transformWithState throttle: ValueState bucket == batch fold across batches") {
     import spark.implicits._
-    import graft.cdc.Consumer
     import graft.cdc.Consumer.{DeliveryIn, DeliveryOut}
-    implicit val sqlCtx = spark.sqlContext
     val batch1 = (1 to 4).map(i => DeliveryIn("m", i.toLong, 0L))
     val batch2 = (5 to 6).map(i => DeliveryIn("m", i.toLong, 0L))
-    withRocksDb {
-      val input = MemoryStream[DeliveryIn]
-      val q = graft.streaming.StreamsV2.throttleStream(input.toDS(), rate = 2.0, stepMs = 1000L)
-        .writeStream.format("memory").queryName("throttle_tws")
-        .outputMode("append").start()
-      input.addData(batch1: _*)
-      q.processAllAvailable()
-      input.addData(batch2: _*)
-      q.processAllAvailable()
-      val streamed = spark.table("throttle_tws").as[DeliveryOut].collect()
-        .map(e => e.seq -> e.drainTick).toMap
-      val batch = Consumer.throttleDrain((batch1 ++ batch2).toDS(), rate = 2.0, stepMs = 1000L)
-        .collect().map(e => e.seq -> e.drainTick).toMap
-      assert(streamed === batch, "ValueState bucket must survive the batch boundary")
-      assert(streamed(5L) === 3L && streamed(6L) === 3L)
-      q.stop()
-    }
+    val streamed = runBatches[DeliveryIn, DeliveryOut]("throttle_tws", Seq(batch1, batch2))(
+      StreamsV2.throttleStream(_, rate = 2.0, stepMs = 1000L))
+      .map(e => e.seq -> e.drainTick).toMap
+    // the shared fold run once over the whole feed
+    val (_, once) = Streams.throttleFold(Streams.ThrottleState(0L, 0.0, 0),
+      batch1 ++ batch2, rate = 2.0, stepMs = 1000L, batchCap = 50)
+    assert(streamed === once.map(e => e.seq -> e.drainTick).toMap,
+      "ValueState bucket must survive the batch boundary")
+    assert(streamed(5L) === 3L && streamed(6L) === 3L)
   }
 
   test("transformWithState rolling lag ring: parity with batch window and v1 stream") {
     import spark.implicits._
     import graft.streaming.Streams.{LagSample, LagSnapshot}
-    implicit val sqlCtx = spark.sqlContext
     val all = (1L to 10L).map(i => LagSample("a", i, i, i * 10)) ++
       Seq(LagSample("b", 1L, 1L, 500L), LagSample("b", 2L, 2L, 100L))
-    val (batch1, batch2) = all.splitAt(7)
-    withRocksDb {
-      val input = MemoryStream[LagSample]
-      val q = graft.streaming.StreamsV2.lagRollingStream(input.toDS(), lastN = 4)
-        .writeStream.format("memory").queryName("lag_tws")
-        .outputMode("append").start()
-      input.addData(batch1: _*)
-      q.processAllAvailable()
-      input.addData(batch2: _*)
-      q.processAllAvailable()
-      val snaps = spark.table("lag_tws").as[LagSnapshot].collect()
-      val lastByLane = snaps.groupBy(_.method).view.mapValues(_.last).toMap
-      val batch = graft.cdc.MetricsAgg.lagPercentilesRolling(
-        all.toDF("method", "ord1", "ord2", "lag_ms"), lastN = 4)
-        .collect().map(r => r.getAs[String]("method") ->
-          (r.getAs[Double]("p50"), r.getAs[Double]("p95"),
-            r.getAs[Long]("max_lag"), r.getAs[Long]("window_n"))).toMap
-      assert((lastByLane("a").p50, lastByLane("a").p95,
-        lastByLane("a").maxLag, lastByLane("a").windowN.toLong) === batch("a"))
-      assert((lastByLane("b").p50, lastByLane("b").p95,
-        lastByLane("b").maxLag, lastByLane("b").windowN.toLong) === batch("b"))
-      // the ring slid exactly as the v1 stream's did
-      val aSnaps = snaps.filter(_.method == "a")
-      assert(aSnaps.head.maxLag === 70L && aSnaps.last.maxLag === 100L)
-      q.stop()
-    }
+    def run(name: String, batches: Seq[Seq[LagSample]]) =
+      runBatches[LagSample, LagSnapshot](name, batches)(StreamsV2.lagRollingStream(_, lastN = 4))
+    // chopped 7 | 5 against the whole feed in one micro-batch: the final
+    // snapshot per lane must not depend on the chop
+    val snaps = run("lag_tws", Seq(all.take(7), all.drop(7)))
+    def lastByLane(xs: Seq[LagSnapshot]) = xs.groupBy(_.method).view.mapValues(_.last).toMap
+    assert(lastByLane(snaps) === lastByLane(run("lag_tws_one", Seq(all))))
+    // the ring slid across the batch boundary: lags {40..70}, then {70..100}
+    val aSnaps = snaps.filter(_.method == "a")
+    assert(aSnaps.head.maxLag === 70L && aSnaps.last.maxLag === 100L)
   }
 
   test("transformWithState broker delivery: shared fold parity across batches") {
     import spark.implicits._
-    import graft.cdc.Consumer
     import graft.cdc.Consumer.{BrokerIn, BrokerOut}
-    implicit val sqlCtx = spark.sqlContext
     val batch1 = (1 to 3).map(i => BrokerIn(0, i.toLong, 40L, dropped = i == 2))
     val batch2 = (4 to 5).map(i => BrokerIn(0, i.toLong, 40L, dropped = false))
-    withRocksDb {
-      val input = MemoryStream[BrokerIn]
-      val q = graft.streaming.StreamsV2.brokerDeliverStream(
-        input.toDS(), tickMs = 50L, maxApplyPerTick = 2)
-        .writeStream.format("memory").queryName("broker_tws")
-        .outputMode("append").start()
-      input.addData(batch1: _*)
-      q.processAllAvailable()
-      input.addData(batch2: _*)
-      q.processAllAvailable()
-      val streamed = spark.table("broker_tws").as[BrokerOut].collect()
-        .map(e => e.lsn -> e.deliverTick).toMap
-      val batch = Consumer.brokerDeliverExact((batch1 ++ batch2).toDS(),
-        tickMs = 50L, maxApplyPerTick = 2)
-        .collect().map(e => e.lsn -> e.deliverTick).toMap
-      assert(streamed === batch, "ValueState queue must survive the batch boundary")
-      assert(streamed === Map(1L -> 1L, 2L -> 1L, 3L -> 2L, 4L -> 2L, 5L -> 3L))
-      q.stop()
-    }
+    val streamed = runBatches[BrokerIn, BrokerOut]("broker_tws", Seq(batch1, batch2))(
+      StreamsV2.brokerDeliverStream(_, tickMs = 50L, maxApplyPerTick = 2))
+      .map(e => e.lsn -> e.deliverTick).toMap
+    val (_, once) = Streams.brokerFold(0, Streams.BrokerQueueState(0L, 0),
+      batch1 ++ batch2, tickMs = 50L, maxApplyPerTick = 2)
+    assert(streamed === once.map(e => e.lsn -> e.deliverTick).toMap,
+      "ValueState queue must survive the batch boundary")
+    assert(streamed === Map(1L -> 1L, 2L -> 1L, 3L -> 2L, 4L -> 2L, 5L -> 3L))
   }
 
   test("transformWithState drift broker: LIFO stack parity with v1 and batch fold") {
     import spark.implicits._
-    import graft.cdc.Consumer
     import graft.cdc.Consumer.{BrokerOut, DriftIn}
-    implicit val sqlCtx = spark.sqlContext
-    // same planted drift scenario as the v1 test, same mid-tick batch split
+    // the planted drift scenario of the batch-twin test, same mid-tick split
     val all = Seq(
       DriftIn(0, 1L, 10L, 10L, dropped = false),
       DriftIn(0, 2L, 20L, 70L, dropped = false),
@@ -544,122 +503,61 @@ class StreamingSpec extends SparkSpec {
     val flush = Seq(
       DriftIn(0, 9000L, 100000L, 100000L, dropped = true),
       DriftIn(1, 9001L, 100000L, 100000L, dropped = true))
-    withRocksDb {
-      val input = MemoryStream[DriftIn]
-      val q = graft.streaming.StreamsV2.brokerDeliverDriftStream(
-        input.toDS(), tickMs = 50L, maxApplyPerTick = 2)
-        .writeStream.format("memory").queryName("drift_tws")
-        .outputMode("append").start()
-      input.addData(batch1: _*)
-      q.processAllAvailable()
-      input.addData(batch2: _*)
-      q.processAllAvailable()
-      input.addData(flush: _*)
-      q.processAllAvailable()
-      val streamed = spark.table("drift_tws").as[BrokerOut].collect()
-        .filter(_.lsn < 9000L).map(e => e.lsn -> e.deliverTick).toMap
-      val batch = Consumer.brokerDeliverDriftExact(all.toDS(), tickMs = 50L, maxApplyPerTick = 2)
-        .collect().map(e => e.lsn -> e.deliverTick).toMap
-      assert(streamed === batch, "ValueState stack must survive the batch boundary")
-      assert(streamed(4L) === 3L && streamed(3L) === 3L)
-      assert(streamed(5L) === 4L && streamed(2L) === 4L && streamed(1L) === 5L)
-      q.stop()
-    }
+    val streamed = runBatches[DriftIn, BrokerOut]("drift_tws", Seq(batch1, batch2, flush))(
+      StreamsV2.brokerDeliverDriftStream(_, tickMs = 50L, maxApplyPerTick = 2))
+      .filter(_.lsn < 9000L).map(e => e.lsn -> e.deliverTick).toMap
+    // the shared fold run once per partition over its whole feed, then
+    // flushed
+    val once = all.groupBy(_.part).toSeq.flatMap { case (p, feed) =>
+      val (st, out) = Streams.driftFold(p, Streams.DriftQueueState(0L, Seq.empty),
+        feed, tickMs = 50L, maxApplyPerTick = 2)
+      out ++ Streams.driftFold(p, st, Seq.empty, 50L, 2, flush = true)._2
+    }.map(e => e.lsn -> e.deliverTick).toMap
+    assert(streamed === once, "ValueState stack must survive the batch boundary")
+    assert(streamed(4L) === 3L && streamed(3L) === 3L)
+    assert(streamed(5L) === 4L && streamed(2L) === 4L && streamed(1L) === 5L)
   }
 
   test("transformWithState schema capture: version counter parity across batches") {
     import spark.implicits._
     import graft.cdc.SchemaEvolution.SchemaChange
     import graft.streaming.Streams.VersionedSchemaChange
-    implicit val sqlCtx = spark.sqlContext
-    withRocksDb {
-      val input = MemoryStream[SchemaChange]
-      val q = graft.streaming.StreamsV2.schemaCaptureStream(input.toDS())
-        .writeStream.format("memory").queryName("schema_tws")
-        .outputMode("append").start()
-      input.addData(
-        SchemaChange("t0", "ADD_COLUMN", "a", 100L),
-        SchemaChange("t1", "ADD_COLUMN", "z", 150L),
-        SchemaChange("t0", "DROP_COLUMN", "a", 200L))
-      q.processAllAvailable()
-      input.addData(SchemaChange("t0", "ADD_COLUMN", "b", 300L))
-      q.processAllAvailable()
-      val out = spark.table("schema_tws").as[VersionedSchemaChange].collect()
-        .map(c => (c.tbl, c.column, c.prevVersion, c.nextVersion, c.kind)).toSet
-      assert(out === Set(
-        ("t0", "a", 1, 2, "SCHEMA_ADD_COL"),
-        ("t0", "a", 2, 3, "SCHEMA_DROP_COL"),
-        ("t0", "b", 3, 4, "SCHEMA_ADD_COL"),
-        ("t1", "z", 1, 2, "SCHEMA_ADD_COL")))
-      q.stop()
-    }
-  }
-
-  test("transformWithState poll: MapState row-image windows == v1 windowed agg") {
-    import spark.implicits._
-    import graft.streaming.StreamsV2.PollOut
-    implicit val sqlCtx = spark.sqlContext
-    // the v1 poll test's feed: three ops on key a in window [0,1000), then
-    // watermark-advancing events on keys b and c
-    val feed = Seq(
-      Seq(
-        Event("tx", 0, 1, true, "t0", "a", "c", true, Some(1.0), false, None, 100L, 1L),
-        Event("tx", 0, 1, true, "t0", "a", "u", true, Some(2.0), false, None, 300L, 2L),
-        Event("tx", 0, 1, true, "t0", "a", "u", false, None, true, Some(9L), 700L, 3L)),
-      Seq(Event("tx", 0, 1, true, "t0", "b", "c", true, Some(5.0), false, None, 5000L, 4L)),
-      // a LATE straggler for key a's long-closed [0,1000) window rides with
-      // the watermark-advancing event: both forms must drop it (no
-      // duplicate window emission), matching the v1 watermark filter
-      Seq(
-        Event("tx", 0, 1, true, "t0", "a", "u", true, Some(7.0), false, None, 150L, 6L),
-        Event("tx", 0, 1, true, "t0", "c", "c", true, Some(6.0), false, None, 9000L, 5L)))
-
-    val v2 = withRocksDb {
-      val input = MemoryStream[Event]
-      val q = graft.streaming.StreamsV2.pollStream(
-        input.toDS(), pollIntervalMs = 1000L, watermarkDelay = "0 seconds")
-        .writeStream.format("memory").queryName("poll_tws")
-        .outputMode("append").start()
-      feed.foreach { b => input.addData(b: _*); q.processAllAvailable() }
-      val rows = spark.table("poll_tws").as[PollOut].collect()
-        .map(p => (p.tbl, p.pk, p.pollTs, p.opCode, p.afterVal, p.afterK, p.opsInWindow))
-        .sortBy(t => (t._2, t._3))
-      q.stop()
-      rows.toSeq
-    }
-
-    // v1 on the identical feed (poll_ts timestamp → epoch ms for compare)
-    val input1 = MemoryStream[Event]
-    val q1 = Streams.pollStream(input1.toDS(), pollIntervalMs = 1000L, watermarkDelay = "0 seconds")
-      .selectExpr("tbl", "pk", "unix_millis(poll_ts) AS poll_ms", "op_code",
-        "after_val", "after_k", "ops_in_window")
-      .writeStream.format("memory").queryName("poll_v1_cmp")
-      .outputMode("append").start()
-    feed.foreach { b => input1.addData(b: _*); q1.processAllAvailable() }
-    val v1 = spark.table("poll_v1_cmp").collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getString(3),
-        Option(r.get(4)).map(_.asInstanceOf[Double]),
-        Option(r.get(5)).map(_.asInstanceOf[Long]), r.getLong(6)))
-      .sortBy(t => (t._2, t._3)).toSeq
-    q1.stop()
-
-    assert(v2 === v1, "MapState windows must emit exactly the windowed agg's rows")
-    // and the planted semantics hold: key a's window kept only the last
-    // image, emitted ONCE — the late straggler must not reopen it
-    val a = v2.filter(_._2 == "a")
-    assert(a === Seq(("t0", "a", 1000L, "u", None, Some(9L), 3L)))
+    val batch1 = Seq(
+      SchemaChange("t0", "ADD_COLUMN", "a", 100L),
+      SchemaChange("t1", "ADD_COLUMN", "z", 150L),
+      SchemaChange("t0", "DROP_COLUMN", "a", 200L))
+    val batch2 = Seq(SchemaChange("t0", "ADD_COLUMN", "b", 300L))
+    def key(c: VersionedSchemaChange) =
+      (c.tbl, c.column, c.prevVersion, c.nextVersion, c.kind)
+    val out = runBatches[SchemaChange, VersionedSchemaChange](
+      "schema_tws", Seq(batch1, batch2))(StreamsV2.schemaCaptureStream)
+      .map(key).toSet
+    val once = (batch1 ++ batch2).groupBy(_.tbl).values
+      .flatMap(cs => Streams.schemaFold(1, cs)._2).map(key).toSet
+    assert(out === once)
+    assert(out === Set(
+      ("t0", "a", 1, 2, "SCHEMA_ADD_COL"),
+      ("t0", "a", 2, 3, "SCHEMA_DROP_COL"),
+      ("t0", "b", 3, 4, "SCHEMA_ADD_COL"),
+      ("t1", "z", 1, 2, "SCHEMA_ADD_COL")))
   }
 
   test("transformWithState poll: randomized multi-key feeds match v1 exactly") {
     import spark.implicits._
-    import graft.streaming.StreamsV2.PollOut
     implicit val sqlCtx = spark.sqlContext
     // deterministic pseudo-random feeds: several keys, colliding windows,
     // in-batch disorder; a far-future closer drains every window. The
     // watermark delay (6 s) bounds the feed's actual disorder (ts < 6000),
-    // the contract under which the two forms' late-row mechanisms (row
-    // event-time filter vs window-end filter) provably coincide — see the
-    // v2 pollStream scaladoc.
+    // so the stream drops nothing and must emit exactly what the same
+    // windowed aggregate computes over the static feed (minus the closer's
+    // still-open window).
+    def rows(df: DataFrame): Seq[(String, Long, String, Option[Double], Long)] =
+      df.selectExpr("pk", "unix_millis(poll_ts) AS ms", "op_code", "after_val", "ops_in_window")
+        .collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getString(2),
+          Option(r.get(3)).map(_.asInstanceOf[Double]), r.getLong(4)))
+        .filter(_._1 != "zz")
+        .sortBy(t => (t._1, t._2)).toSeq
     for (seed <- Seq(101L, 202L)) {
       val rng = new scala.util.Random(seed)
       val events = (1 to 40).map { i =>
@@ -668,44 +566,23 @@ class StreamingSpec extends SparkSpec {
           rng.nextBoolean(), Some(rng.nextInt(100).toDouble),
           false, None, rng.nextInt(6000).toLong, i.toLong)
       } :+ Event("tx", 0, 1, true, "t0", "zz", "c", true, Some(0.0), false, None, 50000L, 99L)
-      val batches = events.grouped(14).toSeq
-
-      def runV2(): Seq[(String, Long, String, Option[Double], Long)] = withRocksDb {
-        val input = MemoryStream[Event]
-        val q = graft.streaming.StreamsV2.pollStream(
-          input.toDS(), pollIntervalMs = 1000L, watermarkDelay = "6 seconds")
-          .writeStream.format("memory").queryName(s"poll_rnd_v2_$seed")
-          .outputMode("append").start()
-        batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
-        val rows = spark.table(s"poll_rnd_v2_$seed").as[PollOut].collect()
-          .map(p => (p.pk, p.pollTs, p.opCode, p.afterVal, p.opsInWindow))
-          .sortBy(t => (t._1, t._2)).toSeq
-        q.stop()
-        rows
-      }
-      def runV1(): Seq[(String, Long, String, Option[Double], Long)] = {
-        val input = MemoryStream[Event]
-        val q = Streams.pollStream(
-          input.toDS(), pollIntervalMs = 1000L, watermarkDelay = "6 seconds")
-          .selectExpr("pk", "unix_millis(poll_ts) AS ms", "op_code", "after_val", "ops_in_window")
-          .writeStream.format("memory").queryName(s"poll_rnd_v1_$seed")
-          .outputMode("append").start()
-        batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
-        val rows = spark.table(s"poll_rnd_v1_$seed").collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getString(2),
-            Option(r.get(3)).map(_.asInstanceOf[Double]), r.getLong(4)))
-          .sortBy(t => (t._1, t._2)).toSeq
-        q.stop()
-        rows
-      }
-      assert(runV2() === runV1(), s"seed=$seed")
+      val input = MemoryStream[Event]
+      val name = s"poll_rnd_$seed"
+      val q = StreamsV2.pollStream(input.toDS(), pollIntervalMs = 1000L, watermarkDelay = "6 seconds")
+        .writeStream.format("memory").queryName(name)
+        .outputMode("append").start()
+      events.grouped(14).foreach { b => input.addData(b: _*); q.processAllAvailable() }
+      val streamed = rows(spark.table(name))
+      q.stop()
+      val batch = rows(StreamsV2.pollStream(
+        events.toDS(), pollIntervalMs = 1000L, watermarkDelay = "6 seconds"))
+      assert(streamed.nonEmpty && streamed === batch, s"seed=$seed")
     }
   }
 
   test("transformWithState as-of: ValueState parity with the v1 stream across batches") {
     import spark.implicits._
     import graft.streaming.Streams.{AsOfIn, AsOfOut}
-    implicit val sqlCtx = spark.sqlContext
     val batch1 = Seq(
       AsOfIn(1L, 30L, isBuild = true, 300L),
       AsOfIn(1L, 10L, isBuild = true, 100L),
@@ -715,33 +592,18 @@ class StreamingSpec extends SparkSpec {
       AsOfIn(1L, 99L, isBuild = false, 902L), // carried state: ts=30
       AsOfIn(2L, 6L, isBuild = true, 200L),
       AsOfIn(2L, 7L, isBuild = false, 911L))
-
-    def run(name: String, mk: org.apache.spark.sql.Dataset[AsOfIn] =>
-        org.apache.spark.sql.Dataset[AsOfOut]): Seq[(Long, Option[Long])] = {
-      val input = MemoryStream[AsOfIn]
-      val q = mk(input.toDS())
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      input.addData(batch1: _*)
-      q.processAllAvailable()
-      input.addData(batch2: _*)
-      q.processAllAvailable()
-      val out = spark.table(name).as[AsOfOut].collect()
-        .map(o => (o.id, o.matchId)).sortBy(_._1).toSeq
-      q.stop()
-      out
-    }
-
-    val v2 = withRocksDb {
-      run("asof_tws", ds => graft.streaming.StreamsV2.asOfStream(ds, ttlMs = 0L))
-    }
-    val v1 = run("asof_v1", ds => Streams.asOfStream(ds, ttlMs = 0L))
-    assert(v2 === v1, "transformWithState == flatMapGroupsWithState")
-    assert(v2 === Seq(
+    val streamed = runBatches[AsOfIn, AsOfOut]("asof_tws", Seq(batch1, batch2))(
+      StreamsV2.asOfStream(_, ttlMs = 0L))
+      .map(o => (o.id, o.matchId)).sortBy(_._1)
+    // the shared fold run once per key over the whole feed
+    val once = (batch1 ++ batch2).groupBy(_.key).toSeq
+      .flatMap { case (k, rows) => Streams.asOfFold(k, None, rows)._2 }
+      .map(o => (o.id, o.matchId)).sortBy(_._1)
+    assert(streamed === once, "state carried across batches == one-shot fold")
+    assert(streamed === Seq(
       (900L, Some(100L)), (902L, Some(300L)),
       (910L, None), (911L, Some(200L))))
   }
-
   test("streaming chunk plan == batch on live arrivals (stateless explode)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -822,7 +684,7 @@ class StreamingSpec extends SparkSpec {
       (4L, "p q r s", "s1"),                            // 4 → s1 cum 7 ≤ 10
       (5L, "k l m n o", "s1"))                          // 5 → s1 cum 12 > 10
     val input = MemoryStream[graft.streaming.Streams.BudgetIn]
-    val q = graft.streaming.Streams
+    val q = StreamsV2
       .budgetAdmissionStream(input.toDS(), budgetPerSource = 10L, ttlMs = 0L)
       .writeStream.format("memory").queryName("budget_gate")
       .outputMode("append").start()
@@ -1162,7 +1024,7 @@ class StreamingSpec extends SparkSpec {
       OpTick("t0", 3L, 1000L), OpTick("t0", 4L, 91000L),
       OpTick("t0", 5L, 92000L), OpTick("t1", 6L, 200000L))
     val input = MemoryStream[OpTick]
-    val q = Streams.heartbeatStream(input.toDS(), stallMs = 60000L)
+    val q = StreamsV2.heartbeatStream(input.toDS(), stallMs = 60000L)
       .writeStream.format("memory").queryName("hb_parity")
       .outputMode("append").start()
     feed.grouped(2).foreach { b => input.addData(b: _*); q.processAllAvailable() }
@@ -1201,7 +1063,7 @@ class StreamingSpec extends SparkSpec {
       ScdIn("t1", "2", 5L, 15L, "insert", setsVal = false, 0.0, setsK = true, 7L),
       ScdIn("t1", "2", 6L, 25L, "update", setsVal = true, 9.5, setsK = false, 0L))
     val input = MemoryStream[ScdIn]
-    val q = Streams.scd2Stream(input.toDS())
+    val q = StreamsV2.scd2Stream(input.toDS())
       .writeStream.format("memory").queryName("scd2_parity")
       .outputMode("append").start()
     feed.grouped(2).foreach { b => input.addData(b: _*); q.processAllAvailable() }
@@ -1246,20 +1108,24 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.Streams.{ScdIn, ScdOut, ScdEvictedOpen}
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[ScdIn]
-    val q = Streams.scd2Stream(input.toDS(), ttlMs = 200L)
+    val q = StreamsV2.scd2Stream(input.toDS(), ttlMs = 200L)
       .writeStream.format("memory").queryName("scd2_ttl")
       .outputMode("append").start()
-    // batch 1 opens a version for (t0, 1) — nothing closes it.
-    // NOTE: no processAllAvailable here — under ProcessingTimeTimeout the
-    // microbatch engine self-triggers continuously (shouldRunAnotherBatch
-    // is always true for clock-based timeouts), so noNewData never latches
-    // and processAllAvailable blocks forever; TTL tests must POLL the sink.
+    // batch 1 opens a version for (t0, 1) — nothing closes it. A due timer
+    // fires only when a batch runs, so unrelated-key ops drive batches
+    // while the sink is polled (no processAllAvailable under live timers)
     input.addData(ScdIn("t0", "1", 1L, 10L, "insert",
       setsVal = true, 1.0, setsK = true, 100L))
-    def rows(): Seq[ScdOut] = spark.table("scd2_ttl").as[ScdOut].collect().toSeq
-    val deadline = System.currentTimeMillis() + 60000L
-    while (rows().isEmpty && System.currentTimeMillis() < deadline)
-      Thread.sleep(100L)
+    def rows(): Seq[ScdOut] =
+      spark.table("scd2_ttl").as[ScdOut].collect().toSeq.filter(_.tbl == "t0")
+    val deadline = System.currentTimeMillis() + 90000L
+    var nudge = 1000L
+    while (rows().isEmpty && System.currentTimeMillis() < deadline) {
+      Thread.sleep(250L)
+      nudge += 1
+      input.addData(ScdIn("t9", "z", nudge, nudge, "insert",
+        setsVal = true, 0.0, setsK = false, 0L))
+    }
     q.stop()
     val got = rows()
     spark.catalog.dropTempView("scd2_ttl")
@@ -1272,7 +1138,6 @@ class StreamingSpec extends SparkSpec {
 
   test("transformWithState row apply: parity with the flatMapGroupsWithState form") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     val feed = Seq(
       ev("tx", 0, 1, "t0", "a", "c", 1, v = Some(1.0), k = Some(10L)),
       ev("tx", 0, 1, "t0", "a", "u", 2, v = Some(2.0)), // partial: val only
@@ -1280,37 +1145,23 @@ class StreamingSpec extends SparkSpec {
       ev("tx", 0, 1, "t1", "b", "c", 4, v = Some(7.0)),
       ev("tx", 0, 1, "t0", "a", "d", 5), // delete: tombstone + state drop
       ev("tx", 0, 1, "t0", "a", "c", 6, v = Some(9.0))) // re-insert from blank
-    def run(tag: String,
-        mk: MemoryStream[Event] => org.apache.spark.sql.Dataset[RowState]): Seq[RowState] = {
-      val input = MemoryStream[Event]
-      val q = mk(input)
-        .writeStream.format("memory").queryName(tag)
-        .outputMode("append").start()
-      feed.grouped(2).foreach { b => input.addData(b: _*); q.processAllAvailable() }
-      val rows = spark.table(tag).as[RowState].collect().toSeq
-        .sortBy(r => (r.tbl, r.pk, r.lastLsn))
-      q.stop()
-      spark.catalog.dropTempView(tag)
-      rows
-    }
-    withRocksDb {
-      val v2 = run("apply_tws",
-        in => graft.streaming.StreamsV2.applyStream(in.toDS(), ttlMs = 0L))
-      val v1 = run("apply_v1",
-        in => Streams.applyStream(in.toDS(), ttlMs = 0L))
-      assert(v2 === v1, "the two state APIs must emit identical post-images")
-      // the delete reset the image: the re-insert restarts at version 1
-      // with no k carry-over
-      val reborn = v2.filter(r => r.pk == "a" && r.lastLsn == 6L)
-      assert(reborn.map(r => (r.version, r.valV, r.kV, r.deleted)) ===
-        Seq((1L, Some(9.0), None, false)))
-    }
+    val out = runBatches[Event, RowState]("apply_tws", feed.grouped(2).toSeq)(
+      StreamsV2.applyStream(_, ttlMs = 0L))
+    // each key's last post-image == the shared fold run once over its feed
+    val last = out.groupBy(r => (r.tbl, r.pk)).view.mapValues(_.maxBy(_.lastLsn)).toMap
+    val once = feed.groupBy(e => (e.tbl, e.pk))
+      .map { case (k, es) => k -> Streams.applyFold(k, None, es) }
+    assert(last === once, "carried state must reach the one-shot post-image")
+    // the delete reset the image: the re-insert restarts at version 1
+    // with no k carry-over
+    val reborn = out.filter(r => r.pk == "a" && r.lastLsn == 6L)
+    assert(reborn.map(r => (r.version, r.valV, r.kV, r.deleted)) ===
+      Seq((1L, Some(9.0), None, false)))
   }
 
   test("transformWithState scd2: parity with the flatMapGroupsWithState form") {
     import spark.implicits._
     import graft.streaming.Streams.{ScdIn, ScdOut}
-    implicit val sqlCtx = spark.sqlContext
     val feed = Seq(
       ScdIn("t0", "1", 1L, 10L, "insert", setsVal = true, 1.0, setsK = true, 100L),
       ScdIn("t0", "1", 2L, 20L, "update", setsVal = true, 2.0, setsK = false, 0L),
@@ -1318,27 +1169,15 @@ class StreamingSpec extends SparkSpec {
       ScdIn("t0", "1", 4L, 40L, "insert", setsVal = true, 5.0, setsK = false, 0L),
       ScdIn("t1", "2", 5L, 15L, "insert", setsVal = false, 0.0, setsK = true, 7L),
       ScdIn("t1", "2", 6L, 25L, "update", setsVal = true, 9.5, setsK = false, 0L))
-    def run(tag: String,
-        mk: MemoryStream[ScdIn] => org.apache.spark.sql.Dataset[ScdOut]): Set[ScdOut] = {
-      val input = MemoryStream[ScdIn]
-      val q = mk(input)
-        .writeStream.format("memory").queryName(tag)
-        .outputMode("append").start()
-      feed.grouped(2).foreach { b => input.addData(b: _*); q.processAllAvailable() }
-      val rows = spark.table(tag).as[ScdOut].collect().toSet
-      q.stop()
-      spark.catalog.dropTempView(tag)
-      rows
-    }
-    withRocksDb {
-      val v2 = run("scd2_tws", in => graft.streaming.StreamsV2.scd2Stream(in.toDS()))
-      val v1 = run("scd2_v1", in => Streams.scd2Stream(in.toDS()))
-      assert(v2 === v1, "the two state APIs must emit identical closed versions")
-      assert(v2 === Set(
-        ScdOut("t0", "1", 1L, 10L, 20L, Some(1.0), Some(100L)),
-        ScdOut("t0", "1", 2L, 20L, 30L, Some(2.0), Some(100L)),
-        ScdOut("t1", "2", 1L, 15L, 25L, None, Some(7L))))
-    }
+    val out = runBatches[ScdIn, ScdOut]("scd2_tws", feed.grouped(2).toSeq)(
+      StreamsV2.scd2Stream(_)).toSet
+    val once = feed.groupBy(o => (o.tbl, o.pk)).values
+      .flatMap(ops => Streams.scd2Fold(None, ops)._2).toSet
+    assert(out === once, "carried state must close exactly the one-shot versions")
+    assert(out === Set(
+      ScdOut("t0", "1", 1L, 10L, 20L, Some(1.0), Some(100L)),
+      ScdOut("t0", "1", 2L, 20L, 30L, Some(2.0), Some(100L)),
+      ScdOut("t1", "2", 1L, 15L, 25L, None, Some(7L))))
   }
 
   test("transformWithState scd2 TTL: the timer path emits the evicted OPEN " +
@@ -1346,99 +1185,67 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import graft.streaming.Streams.{ScdIn, ScdOut, ScdEvictedOpen}
     implicit val sqlCtx = spark.sqlContext
-    withRocksDb {
-      val input = MemoryStream[ScdIn]
-      val q = graft.streaming.StreamsV2.scd2Stream(input.toDS(), ttlMs = 200L)
-        .writeStream.format("memory").queryName("scd2_ttl_tws")
-        .outputMode("append").start()
-      input.addData(ScdIn("t0", "1", 1L, 10L, "insert",
-        setsVal = true, 1.0, setsK = true, 100L))
-      // V2 nudge discipline (see the growth TTL test): no
-      // processAllAvailable with live processing-time timers — poll the
-      // sink and drive batches with an unrelated key's ops so a batch
-      // runs after the TTL expires, firing the due timer. The nudge key's
-      // own evicted rows are filtered out of every assertion.
-      def t0rows(): Seq[ScdOut] = spark.table("scd2_ttl_tws").as[ScdOut]
-        .collect().toSeq.filter(_.tbl == "t0")
-      val deadline = System.currentTimeMillis() + 90000L
-      var nudge = 1000L
-      while (t0rows().isEmpty && System.currentTimeMillis() < deadline) {
-        Thread.sleep(250L)
-        nudge += 1
-        input.addData(ScdIn("t9", "z", nudge, nudge, "insert",
-          setsVal = true, 0.0, setsK = false, 0L))
-      }
-      q.stop()
-      val got = t0rows()
-      spark.catalog.dropTempView("scd2_ttl_tws")
-      assert(got === Seq(
-        ScdOut("t0", "1", 1L, 10L, ScdEvictedOpen, Some(1.0), Some(100L))),
-        s"eviction must emit the open version exactly once; got $got")
+    val input = MemoryStream[ScdIn]
+    val q = StreamsV2.scd2Stream(input.toDS(), ttlMs = 200L)
+      .writeStream.format("memory").queryName("scd2_ttl_tws")
+      .outputMode("append").start()
+    input.addData(ScdIn("t0", "1", 1L, 10L, "insert",
+      setsVal = true, 1.0, setsK = true, 100L))
+    // no processAllAvailable with live processing-time timers: the
+    // microbatch loop keeps planning work, so noNewData never latches.
+    // Poll the sink and drive batches with an unrelated key's ops so a
+    // batch runs after the TTL expires, firing the due timer. The nudge
+    // key's own evicted rows are filtered out of every assertion.
+    def t0rows(): Seq[ScdOut] = spark.table("scd2_ttl_tws").as[ScdOut]
+      .collect().toSeq.filter(_.tbl == "t0")
+    val deadline = System.currentTimeMillis() + 90000L
+    var nudge = 1000L
+    while (t0rows().isEmpty && System.currentTimeMillis() < deadline) {
+      Thread.sleep(250L)
+      nudge += 1
+      input.addData(ScdIn("t9", "z", nudge, nudge, "insert",
+        setsVal = true, 0.0, setsK = false, 0L))
     }
+    q.stop()
+    val got = t0rows()
+    spark.catalog.dropTempView("scd2_ttl_tws")
+    assert(got === Seq(
+      ScdOut("t0", "1", 1L, 10L, ScdEvictedOpen, Some(1.0), Some(100L))),
+      s"eviction must emit the open version exactly once; got $got")
   }
 
   test("transformWithState heartbeat: parity with the flatMapGroupsWithState form") {
     import spark.implicits._
     import graft.streaming.Streams.{OpTick, StallOut}
-    implicit val sqlCtx = spark.sqlContext
     val feed = Seq(
       OpTick("t0", 1L, 0L), OpTick("t1", 2L, 0L),
       OpTick("t0", 3L, 1000L), OpTick("t0", 4L, 91000L),
       OpTick("t0", 5L, 92000L), OpTick("t1", 6L, 200000L))
-    def run(tag: String,
-        mk: MemoryStream[OpTick] => org.apache.spark.sql.Dataset[StallOut]): Set[StallOut] = {
-      val input = MemoryStream[OpTick]
-      val q = mk(input)
-        .writeStream.format("memory").queryName(tag)
-        .outputMode("append").start()
-      feed.grouped(2).foreach { b => input.addData(b: _*); q.processAllAvailable() }
-      val rows = spark.table(tag).as[StallOut].collect().toSet
-      q.stop()
-      spark.catalog.dropTempView(tag)
-      rows
-    }
-    withRocksDb {
-      val v2 = run("hb_tws",
-        in => graft.streaming.StreamsV2.heartbeatStream(in.toDS(), stallMs = 60000L))
-      val v1 = run("hb_v1",
-        in => Streams.heartbeatStream(in.toDS(), stallMs = 60000L))
-      assert(v2 === v1, "the two state APIs must emit identical stalls")
-      assert(v2 === Set(
-        StallOut("t0", 3L, 4L, 90000L), StallOut("t1", 2L, 6L, 200000L)))
-    }
+    val out = runBatches[OpTick, StallOut]("hb_tws", feed.grouped(2).toSeq)(
+      StreamsV2.heartbeatStream(_, stallMs = 60000L)).toSet
+    val once = feed.groupBy(_.tbl).values
+      .flatMap(ticks => Streams.heartbeatFold(60000L, None, ticks)._2).toSet
+    assert(out === once, "carried tick must find exactly the one-shot stalls")
+    assert(out === Set(
+      StallOut("t0", 3L, 4L, 90000L), StallOut("t1", 2L, 6L, 200000L)))
   }
 
   test("transformWithState budget admission: parity with the " +
       "flatMapGroupsWithState form") {
     import spark.implicits._
     import graft.streaming.Streams.{BudgetIn, BudgetOut}
-    implicit val sqlCtx = spark.sqlContext
     val feed = Seq(
       BudgetIn("web", 1L, 800L), BudgetIn("web", 2L, 900L),
       BudgetIn("books", 3L, 1500L), BudgetIn("web", 4L, 400L),
       BudgetIn("books", 5L, 600L), BudgetIn("web", 6L, 100L))
-    def run(tag: String,
-        mk: MemoryStream[BudgetIn] => org.apache.spark.sql.Dataset[BudgetOut]): Set[BudgetOut] = {
-      val input = MemoryStream[BudgetIn]
-      val q = mk(input)
-        .writeStream.format("memory").queryName(tag)
-        .outputMode("append").start()
-      feed.grouped(2).foreach { b => input.addData(b: _*); q.processAllAvailable() }
-      val rows = spark.table(tag).as[BudgetOut].collect().toSet
-      q.stop()
-      spark.catalog.dropTempView(tag)
-      rows
-    }
-    withRocksDb {
-      val v2 = run("budget_tws",
-        in => graft.streaming.StreamsV2.budgetAdmissionStream(in.toDS(), ttlMs = 0L))
-      val v1 = run("budget_v1",
-        in => Streams.budgetAdmissionStream(in.toDS(), ttlMs = 0L))
-      assert(v2 === v1, "the two state APIs must emit identical verdicts")
-      // the cut happens mid-source: web doc 4 crosses 2000 and is refused
-      assert(v2.find(_.docId == 4L).get.admitted === false)
-      assert(v2.find(_.docId == 2L).get.admitted === true)
-      assert(v2.find(_.docId == 5L).get.admitted === false)
-    }
+    val out = runBatches[BudgetIn, BudgetOut]("budget_tws", feed.grouped(2).toSeq)(
+      StreamsV2.budgetAdmissionStream(_, ttlMs = 0L)).toSet
+    val once = feed.groupBy(_.source).toSeq
+      .flatMap { case (src, rows) => Streams.budgetFold(src, None, rows, 2000L)._2 }.toSet
+    assert(out === once, "carried counter must give the one-shot verdicts")
+    // the cut happens mid-source: web doc 4 crosses 2000 and is refused
+    assert(out.find(_.docId == 4L).get.admitted === false)
+    assert(out.find(_.docId == 2L).get.admitted === true)
+    assert(out.find(_.docId == 5L).get.admitted === false)
   }
 }
