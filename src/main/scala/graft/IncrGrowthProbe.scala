@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.llm.{Corpus, Dedup}
@@ -26,7 +26,8 @@ import graft.sources.Tables
   * smaller batch at larger slices keeps touched-buckets << numBuckets,
   * the production regime). `groupSize` folds that many replicas per
   * increment (default 1) so the 100x slice can grow through ~10
-  * increments instead of 99.
+  * increments instead of 99. Runs under [[GraftSession]] (cores from
+  * `SPARK_GRAFT_CPUS`, default 4), the bench's session.
   */
 object IncrGrowthProbe {
 
@@ -39,14 +40,7 @@ object IncrGrowthProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/tmp/sfr10"
     val outPath = if (args.length > 1) args(1) else "/tmp/incr_growth.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.fallback", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def exec(df: DataFrame): Unit =
       df.write.mode("overwrite").format("noop").save()

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -36,11 +36,21 @@ object Verify {
 
   /** Canonical whole-result hash: sha256 over the SORTED per-row canonical
     * hashes, so row order and partitioning drop out — equal row multisets
-    * hash equal, across sessions, partition counts and rounds. */
+    * hash equal, across sessions, partition counts and rounds.
+    *
+    * Runs without whole-stage codegen: the canonical projection generates
+    * ~1k lines of Java per column, so over a wide result (cdc_log_capture's
+    * 12 columns) one fused method passes the JVM's 64 KB limit and, under
+    * strict codegen, fails to compile; per-operator codegen splits it into
+    * smaller functions. */
   def selfHash(df: DataFrame): String = {
-    val rows = df
+    val conf = df.sparkSession.conf
+    val wholeStage = conf.get("spark.sql.codegen.wholeStage")
+    conf.set("spark.sql.codegen.wholeStage", "false")
+    val rows = try df
       .select(graft.cdc.Canonical.rowHash(df, df.columns.toSeq).as("h"))
       .orderBy("h").collect().map(_.getString(0))
+    finally conf.set("spark.sql.codegen.wholeStage", wholeStage)
     val md = java.security.MessageDigest.getInstance("SHA-256")
     rows.foreach(h => md.update(h.getBytes("UTF-8")))
     md.digest().map("%02x".format(_)).mkString
@@ -51,19 +61,9 @@ object Verify {
     // for local iteration; the driver always runs the full surface
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same cached-plan AQE-coalescing setting as the bench session (see
-      // Bench.scala) — Verify runs under the identical config so the oracle
-      // hash gate attests correctness under the partitioning the bench uses
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART_SIZE", "64k"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the bench's session, so the oracle hash gate attests correctness
+    // under the partitioning and strict codegen the bench runs
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Default double-run set (round-13 widening): the queries whose

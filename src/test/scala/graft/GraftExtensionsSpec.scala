@@ -14,8 +14,7 @@ class GraftExtensionsSpec extends SparkSpec {
       // withExtensions = the programmatic form of spark.sql.extensions
       // (the conf route needs a fresh SparkContext — static conf — which a
       // shared test JVM cannot provide)
-      val ext = SparkSession.builder()
-        .master("local[4]")
+      val ext = GraftSession.builder(4)
         .withExtensions(new GraftExtensions)
         .getOrCreate()
       val r = ext.sql(

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for test suites. */
+/** Shared local SparkSession for test suites: [[GraftSession]] at 4 cores. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
@@ -13,19 +13,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder(4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       // Spark 4.1's async checkpoint-file checksums deadlock in this
-      // sandbox (awaitResult never completes when committing state deltas)
+      // sandbox (awaitResult never completes when committing state deltas);
+      // production keeps them, since they detect corrupt checkpoint files
       .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      // every stateful streaming operator is a `transformWithState`
-      // processor, which the HDFS-backed default store does not support
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
