@@ -1,11 +1,21 @@
 package graft
 
-/** Plan-audit main: prints `explain("formatted")` for representative queries
+import org.apache.spark.sql.execution.FormattedMode
+
+/** Plan-audit main: prints the formatted explain for representative queries
   * so shuffle shape, pushed filters, read schemas, and broadcast choices can
-  * be reviewed (and re-reviewed after changes). Usage:
+  * be reviewed (and re-reviewed after changes). A typed operator's JVM
+  * lambda (`ApplyEngine$$$Lambda$2343/0x…@58e2af93`) prints as
+  * `$Lambda$<fn>`: its number and identity hash move with class-loading
+  * order, so two builds' dumps differ only where a plan did. Usage:
   *   runMain graft.Plans [sfDir] [query ...]
   */
 object Plans {
+
+  /** `explain` text with every JVM lambda identity masked. */
+  private def stable(plan: String): String =
+    plan.replaceAll("\\$Lambda\\$[0-9]+/0x[0-9a-f]+@[0-9a-f]+", "\\$Lambda\\$<fn>")
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     // `all` = EVERY query (the SCALE.md shuffle-inventory set). The
@@ -35,7 +45,8 @@ object Plans {
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       println(s"\n========== $name ==========")
-      SparkEntry.queries(name)(spark, sfDir).explain("formatted")
+      println(stable(SparkEntry.queries(name)(spark, sfDir)
+        .queryExecution.explainString(FormattedMode)))
     }
     spark.stop()
   }

@@ -36,21 +36,11 @@ object Verify {
 
   /** Canonical whole-result hash: sha256 over the SORTED per-row canonical
     * hashes, so row order and partitioning drop out — equal row multisets
-    * hash equal, across sessions, partition counts and rounds.
-    *
-    * Runs without whole-stage codegen: the canonical projection generates
-    * ~1k lines of Java per column, so over a wide result (cdc_log_capture's
-    * 12 columns) one fused method passes the JVM's 64 KB limit and, under
-    * strict codegen, fails to compile; per-operator codegen splits it into
-    * smaller functions. */
+    * hash equal, across sessions, partition counts and rounds. */
   def selfHash(df: DataFrame): String = {
-    val conf = df.sparkSession.conf
-    val wholeStage = conf.get("spark.sql.codegen.wholeStage")
-    conf.set("spark.sql.codegen.wholeStage", "false")
-    val rows = try df
+    val rows = df
       .select(graft.cdc.Canonical.rowHash(df, df.columns.toSeq).as("h"))
       .orderBy("h").collect().map(_.getString(0))
-    finally conf.set("spark.sql.codegen.wholeStage", wholeStage)
     val md = java.security.MessageDigest.getInstance("SHA-256")
     rows.foreach(h => md.update(h.getBytes("UTF-8")))
     md.digest().map("%02x".format(_)).mkString

@@ -16,56 +16,52 @@ object Canonical {
   /** Canonical comparable form of a scalar column: trimmed; numeric strings
     * normalize through an actual numeric round-trip — `'1.50'→'1.5'`,
     * `'007'→'7'`, `'1e3'→'1000'` — matching the reference's `Number()`
-    * coercion (`coerceComparable`, `index.js:84-87`).
+    * coercion (`coerceComparable`, `index.js:84-87`). One expression per
+    * column: the trim, then [[jsNumberString]] as a UDF, so a row hash
+    * over many columns stays far below the JVM's 64 KB method limit
+    * inside one whole-stage codegen method. */
+  def coerceComparable(c: Column): Column = jsNumber(trim(c.cast("string")))
+
+  private val jsNumber =
+    udf((t: String) => if (t == null) null else jsNumberString(t)).withName("js_number_string")
+
+  private val Numeric = java.util.regex.Pattern.compile("^-?[0-9]*\\.?[0-9]+([eE][+-]?[0-9]+)?$")
+
+  /** `String(Number(t))` for a numeric string `t`, else `t` unchanged.
     *
-    * Rendering mirrors ECMAScript `Number::toString` (the reference compares
-    * `String(Number(x))` forms): plain decimal notation exactly for
-    * magnitudes in [1e-6, 1e21), exponential outside it, formatted JS-style
-    * (`1e-7`, `2e+40` — lowercase `e`, explicit `+`, no trailing `.0`
-    * mantissa). Spark's bare double→string cast switches to Java scientific
-    * notation outside [1e-3, 1e7), so the plain range goes through DECIMAL
-    * plain-string rendering (trailing zeros trimmed; scale tiered by
-    * magnitude so every shortest-repr digit fits), and the exponential
-    * range reformats Java's `E`-notation. Residual caveat: the
-    * mantissa digits come from Java's `Double.toString`, whose
+    * Rendering mirrors ECMAScript `Number::toString`: plain decimal
+    * notation exactly for magnitudes in [1e-6, 1e21), exponential outside
+    * it, formatted JS-style (`1e-7`, `2e+40` — lowercase `e`, explicit
+    * `+`, no trailing `.0` mantissa); `-0` renders `0` and an overflowing
+    * `'1e999'` renders `Infinity`. The plain range goes through a DECIMAL
+    * plain string (trailing zeros trimmed; scale tiered by magnitude so
+    * every shortest-repr digit fits: just above 1e-6 a double's ~17
+    * significant digits sit up to 23 places after the point, past 1e15
+    * they need integer digits instead, and by 1e18 doubles are integral),
+    * the exponential range reformats Java's `E`-notation. Residual caveat:
+    * the digits come from Java's `Double.toString`, whose
     * shortest-representation algorithm (pre-JDK-19) can very rarely emit
     * more digits than V8's — both round-trip to the same double. */
-  def coerceComparable(c: Column): Column = {
-    val t = trim(c.cast("string"))
-    val numeric = t.rlike("^-?[0-9]*\\.?[0-9]+([eE][+-]?[0-9]+)?$")
-    val d = t.cast("double")
-    val absd = abs(d)
-    // DECIMAL always renders plain notation with a decimal point, so
-    // trimming trailing zeros then a dangling point is lossless; -0 → 0.
-    // The scale tiers by magnitude: just above 1e-6 a double's ~17
-    // significant digits sit up to 23 places after the point (needs scale
-    // 23), while magnitudes past 1e15 need integer digits instead (scale 18,
-    // then 0 — by 1e18 the ulp is ≫ 1 and doubles are integral).
-    def trimPlain(s: Column): Column = regexp_replace(
-      regexp_replace(regexp_replace(s, "0+$", ""), "\\.$", ""), "^-0$", "0")
-    val tinyPlain = d === 0 || (absd >= lit(1e-6) && absd < lit(1e15))
-    val plain23 = trimPlain(
-      when(tinyPlain, d).otherwise(lit(null)).cast("decimal(38,23)").cast("string"))
-    val midPlain = absd >= lit(1e15) && absd < lit(1e18)
-    val plain18 = trimPlain(
-      when(midPlain, d).otherwise(lit(null)).cast("decimal(38,18)").cast("string"))
-    val bigPlain = absd >= lit(1e18) && absd < lit(1e21)
-    val dec0 = when(bigPlain, d).otherwise(lit(null)).cast("decimal(38,0)")
-    // JS exponential form from Java's E-notation (these ranges always render
-    // E-notation in Java: |d| ≥ 1e21 > 1e7, 0 < |d| < 1e-6 < 1e-3)
-    val s = d.cast("string")
-    val mant = regexp_replace(
-      regexp_extract(s, "^(-?[0-9]+(\\.[0-9]+)?)[eE]", 1), "\\.0$", "")
-    val ex = regexp_extract(s, "[eE]([+-]?[0-9]+)$", 1)
-    val sci = concat(mant, lit("e"),
-      when(ex.startsWith("-"), ex).otherwise(concat(lit("+"), ex)))
-    // Overflowing numeric strings ('1e999') parse to ±Infinity: every plain
-    // branch is null and the sci regexes don't match Java's 'Infinity', so
-    // guard on finiteness — Java prints 'Infinity'/'-Infinity', exactly
-    // JS `String(Number('1e999'))`.
-    val inf = when(absd === lit(Double.PositiveInfinity), d.cast("string"))
-    val canon = coalesce(inf, plain23, plain18, dec0.cast("string"), sci)
-    when(numeric && d.isNotNull, canon).otherwise(t)
+  private def jsNumberString(t: String): String = {
+    if (!Numeric.matcher(t).find()) return t
+    val d = try java.lang.Double.parseDouble(t) catch { case _: NumberFormatException => return t }
+    val a = math.abs(d)
+    def plain(scale: Int): String =
+      new java.math.BigDecimal(java.lang.Double.toString(d))
+        .setScale(scale, java.math.RoundingMode.HALF_UP).toPlainString
+    def trimPlain(p: String): String =
+      p.replaceAll("0+$", "").replaceAll("\\.$", "").replaceAll("^-0$", "0")
+    if (a == Double.PositiveInfinity) java.lang.Double.toString(d)
+    else if (d == 0 || (a >= 1e-6 && a < 1e15)) trimPlain(plain(23))
+    else if (a >= 1e15 && a < 1e18) trimPlain(plain(18))
+    else if (a >= 1e18 && a < 1e21) plain(0)
+    else {
+      // |d| ≥ 1e21 or 0 < |d| < 1e-6: Java always prints E-notation here
+      val s = java.lang.Double.toString(d)
+      val e = s.indexOf('E')
+      val ex = s.substring(e + 1)
+      s.substring(0, e).stripSuffix(".0") + "e" + (if (ex.startsWith("-")) ex else "+" + ex)
+    }
   }
 
   /** Deterministic JSON of selected columns — field order fixed by sorting

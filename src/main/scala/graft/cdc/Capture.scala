@@ -248,19 +248,6 @@ object Capture {
           .cast("double") / count(lit(1))).as("drop_frac"))
   }
 
-  /** Log-compaction audit — Kafka compacted-topic semantics applied to
-    * the capture log: compaction retains only each key's LATEST event (a
-    * delete survives as a tombstone until the key's retention passes),
-    * so the per-table ledger reports what a compacted changefeed topic
-    * would hold — `n_keys` retained records of `n_events` logged, split
-    * into live values and tombstones — and `compaction_ratio`, the
-    * size reduction a downstream bootstrap consumer reads instead of the
-    * full history. `avg_versions` (exact division of longs) is the
-    * overwrite pressure: how many times a hot key was rewritten.
-    *
-    * One (tbl, pk)-keyed argmax by lsn (hash aggregation, map-side
-    * partials) + one table-keyed rollup — the log crosses the wire once,
-    * keyed; nothing sorts. */
   /** Chain-integrity audit — the per-table legality check a changefeed
     * verifier runs on the raw op stream: within each key's lsn order,
     * an insert must open a row (an insert on a live row is
@@ -367,6 +354,19 @@ object Capture {
   // string aggregation buffer, which forces SortAggregate (a full sort of
   // the op stream by (tbl, pk) before the partial agg, at any scale);
   // primitive maxes keep both aggregation levels HashAggregate (round-18).
+  /** Log-compaction audit — Kafka compacted-topic semantics applied to
+    * the capture log: compaction retains only each key's LATEST event (a
+    * delete survives as a tombstone until the key's retention passes),
+    * so the per-table ledger reports what a compacted changefeed topic
+    * would hold — `n_keys` retained records of `n_events` logged, split
+    * into live values and tombstones — and `compaction_ratio`, the
+    * size reduction a downstream bootstrap consumer reads instead of the
+    * full history. `avg_versions` (exact division of longs) is the
+    * overwrite pressure: how many times a hot key was rewritten.
+    *
+    * One (tbl, pk)-keyed argmax by lsn (hash aggregation, map-side
+    * partials) + one table-keyed rollup — the log crosses the wire once,
+    * keyed; nothing sorts. */
   def compactionAudit(ops: DataFrame): DataFrame =
     ops
       .groupBy("tbl", "pk")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions.hash31
+import graft.operators.{BandJoin, CacheLifecycle}
 
 /** Deduplication operators for large-scale training-data pipelines, over the
   * `documents` table (`doc_id, text, lang, source, n_chars`).
@@ -124,41 +125,37 @@ object Dedup {
     * common-shingle keys.
     *
     * Scale shape: one shingle→minhash scan shared across all combos
-    * (checkpointed); per combo the band keys explode ×bands into a keyed
-    * count, and every output (including the pair volumes, via Σ C(g,2)
-    * on group SIZES) is arithmetic on the bucket histogram — no pair is
-    * ever materialized.
+    * (checkpointed); per combo the same band-key frame and bucket-size
+    * table the candidate join caps with ([[bandKeys]],
+    * [[graft.operators.BandJoin.bucketSizes]]), and every output
+    * (including the pair volumes, via Σ C(g,2) on bucket SIZES, under
+    * the join's own cap rule) is arithmetic on that histogram — no pair
+    * is ever materialized.
     *
     * Runs the signature shuffle when called, not at the result's action.
     * The checkpoint is reliable only when the context has a checkpoint
     * directory; otherwise its blocks are executor-local and not
-    * recomputed if an executor is lost (see `scaffold`). */
+    * recomputed if an executor is lost (see `CacheLifecycle.scaffold`). */
   def lshTuning(docs: DataFrame, n: Int = 2, totalHashes: Int = 8,
       combos: Seq[(Int, Int)] = Seq((8, 1), (4, 2), (2, 4)),
       maxBucket: Int = DefaultMaxBucket, s0: Double = 0.8): DataFrame = {
     require(combos.nonEmpty && combos.forall { case (b, r) => b * r == totalHashes },
       s"every (bands, rowsPerBand) must multiply to $totalHashes")
-    val sigs = scaffold(minhashSignatures(docs, n, totalHashes))
+    val sigs = CacheLifecycle.scaffold(minhashSignatures(docs, n, totalHashes))
     combos.map { case (bands, rowsPerBand) =>
-      val keys = (0 until bands).map { b =>
-        concat_ws(":", (lit(b.toString) +:
-          (0 until rowsPerBand).map(r =>
-            col(s"m${b * rowsPerBand + r}").cast("string"))): _*)
-      }
-      val groups = sigs
-        .select(explode(array(keys: _*)).as("bk"))
-        .groupBy("bk").agg(count(lit(1)).as("g"))
-        .filter(col("g") > 1)
+      val sizes = BandJoin.bucketSizes(bandKeys(sigs, bands, rowsPerBand))
+        .filter(col("bucket_size") > 1)
+      val pairsIn = expr("bucket_size * (bucket_size - 1) div 2")
       val sCurveP = {
         val sr = (1 to rowsPerBand).foldLeft(1.0)((acc, _) => acc * s0)
         1.0 - (1 to bands).foldLeft(1.0)((acc, _) => acc * (1.0 - sr))
       }
-      groups.agg(
+      sizes.agg(
         count(lit(1)).as("n_buckets_multi"),
-        coalesce(max("g"), lit(0L)).as("max_bucket"),
-        coalesce(sum(expr("g * (g - 1) div 2")), lit(0L)).as("pairs_banded"),
-        coalesce(sum(when(col("g") <= maxBucket, expr("g * (g - 1) div 2"))
-          .otherwise(0L)), lit(0L)).as("pairs_capped"))
+        coalesce(max("bucket_size"), lit(0L)).as("max_bucket"),
+        coalesce(sum(pairsIn), lit(0L)).as("pairs_banded"),
+        coalesce(sum(when(BandJoin.withinCap(maxBucket), pairsIn).otherwise(0L)), lit(0L))
+          .as("pairs_capped"))
         .select(
           lit(bands.toLong).as("bands"),
           lit(rowsPerBand.toLong).as("rows_per_band"),
@@ -168,60 +165,29 @@ object Dedup {
     }.reduce(_ unionByName _)
   }
 
+  /** `(doc_id, band, key)`: one row per (doc, band), the key being the
+    * band's `rowsPerBand` signature minima joined by `:` — the banded frame
+    * [[BandJoin]] pairs, and the one [[lshTuning]] histograms. */
+  private[graft] def bandKeys(sigs: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
+    sigs.select(
+      col("doc_id"),
+      posexplode(array((0 until bands).map { b =>
+        concat_ws(":", (0 until rowsPerBand).map(r => col(s"m${b * rowsPerBand + r}")): _*)
+      }: _*)).as(Seq("band", "key")))
+
   /** Banded pair join over an existing signature frame — the body of
     * [[minhashCandidates]], split out so [[scalableCandidates]] can share
     * one signature computation between the band join and the star edges. */
   private def bandedPairs(sigs: DataFrame, bands: Int, rowsPerBand: Int,
-      maxBucket: Int): DataFrame = {
-    val banded = sigs.select(
-      col("doc_id"),
-      posexplode(array((0 until bands).map { b =>
-        concat_ws(":", (0 until rowsPerBand).map(r => col(s"m${b * rowsPerBand + r}")): _*)
-      }: _*)).as(Seq("band", "band_key")))
-    // bucket-size pre-agg + key-equality join back: the size table is
-    // bucket-count-sized (small), the filter runs before any pair is
-    // materialized — an oversized bucket costs one count row, not sz²
-    val kept =
-      if (maxBucket == Int.MaxValue) banded
-      else banded.join(
-        banded.groupBy("band", "band_key")
-          .agg(count(lit(1)).as("_bsz"))
-          .filter(col("_bsz") <= maxBucket)
-          .select("band", "band_key"),
-        Seq("band", "band_key"))
-    val a = kept.select(col("band"), col("band_key"), col("doc_id").as("a_id"))
-    val b = kept.select(col("band"), col("band_key"), col("doc_id").as("b_id"))
-    a.join(b, Seq("band", "band_key"))
-      .filter(col("a_id") < col("b_id"))
+      maxBucket: Int): DataFrame =
+    BandJoin.pairs(bandKeys(sigs, bands, rowsPerBand), "doc_id", maxBucket = maxBucket)
       .select("a_id", "b_id")
       .distinct()
-  }
 
   /** Default hot-bucket cap for the SCALE-path candidate set — the value
     * the 10× rehearsal measured back to linear pair growth (SCALE.md:
     * ×10.9 at ×10 data vs ×100.8 uncapped). */
   val DefaultMaxBucket: Int = 32
-
-  /** Lineage-truncated scaffolding for a frame one result reads more than
-    * once: a RELIABLE `checkpoint()` when the context has a checkpoint
-    * directory (`sc.setCheckpointDir`, the deployment's durability
-    * choice, as in [[Clusters.starEdges]]), else a lazy
-    * `localCheckpoint(false)`. Either way the shuffle stages below it run
-    * when the calling function builds its result, not at the caller's
-    * action (the reliable form also writes the blocks then). Local blocks
-    * live on the executors: one lost with its executor is not recomputed,
-    * and a later action on the result fails with "Checkpoint block not
-    * found" — on a multi-executor cluster, set a checkpoint directory.
-    *
-    * Not persist + [[graft.operators.CacheLifecycle.releaseAfterUse]]:
-    * that release's non-cascading `unpersist` re-plans any cached,
-    * not-yet-loaded frame whose plan contains the released one, and the
-    * caller persisting [[scalableCandidates]] was the observed case.
-    * Checkpoint blocks never enter the CacheManager; the ContextCleaner
-    * reclaims them once the frame is unreferenced. */
-  private def scaffold(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint(false)
 
   /** SCALE-default candidate set for retention composites (the cluster
     * index, [[graft.llm.Corpus.filterFunnel]], `dedup_clusters`):
@@ -244,19 +210,12 @@ object Dedup {
     * Runs the signature shuffle when called, not at the result's action.
     * The checkpoint is reliable only when the context has a checkpoint
     * directory; otherwise its blocks are executor-local and not
-    * recomputed if an executor is lost (see `scaffold`). */
+    * recomputed if an executor is lost (see `CacheLifecycle.scaffold`). */
   def scalableCandidates(docs: DataFrame, n: Int = 2, bands: Int = 4,
       rowsPerBand: Int = 2, maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val nh = bands * rowsPerBand
-    val sigs = scaffold(minhashSignatures(docs, n, nh))
-    val sigCols = (0 until nh).map(i => s"m$i")
-    val groups = sigs.groupBy(sigCols.map(col): _*)
-      .agg(min(col("doc_id")).as("a_id"), count(lit(1)).as("_g"))
-      .filter(col("_g") > 1)
-      .drop("_g")
-    val edges = sigs.join(groups, sigCols)
-      .filter(col("doc_id") > col("a_id"))
-      .select(col("a_id"), col("doc_id").as("b_id"))
+    val sigs = CacheLifecycle.scaffold(minhashSignatures(docs, n, nh))
+    val edges = BandJoin.starEdges(sigs, "doc_id", (0 until nh).map(i => s"m$i"))
     bandedPairs(sigs, bands, rowsPerBand, maxBucket).unionByName(edges).distinct()
   }
 
@@ -540,17 +499,7 @@ object Dedup {
       anchorMod: Long = 1L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(minSpan > window, "minSpan must exceed window (collision filter)")
-    val wins = docs
-      .select(col("doc_id"), posexplode(
-        graft.functions.GraftFunctions.rollingHashes(col("text"), window, modulus))
-        .as(Seq("pos", "h")))
-      .filter(if (anchorMod <= 1L) lit(true) else col("h") % anchorMod === 0L)
-    val a = wins.select(col("h"), col("doc_id").as("a_id"), col("pos").as("a_pos"))
-    val b = wins.select(col("h"), col("doc_id").as("b_id"), col("pos").as("b_pos"))
-    val matched = a.join(b, "h")
-      .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"), col("a_pos"),
-        (col("b_pos") - col("a_pos")).as("diag"))
+    val matched = diagonalMatches(docs, window, modulus, anchorMod)
     val spans =
       if (anchorMod <= 1L) {
         // stride-1: matched positions on a diagonal are consecutive, so
@@ -570,6 +519,26 @@ object Dedup {
       .filter(col("span_len") >= minSpan)
       .groupBy("a_id", "b_id")
       .agg(count(lit(1)).as("n_spans"), max("span_len").as("max_span"))
+  }
+
+  /** `(a_id, b_id, a_pos, diag)`: every pair of equal `window`-char hashes
+    * across docs `a_id < b_id`, at a's window position and diagonal
+    * `b_pos − a_pos` — the match set [[substringSpans]] and the
+    * [[substringClean]] family measure runs on. `anchorMod` > 1 keeps only
+    * windows whose hash ≡ 0 (mod `anchorMod`); at 1 every window stays. */
+  private def diagonalMatches(docs: DataFrame, window: Int, modulus: Long,
+      anchorMod: Long = 1L): DataFrame = {
+    val all = docs
+      .select(col("doc_id"), posexplode(
+        graft.functions.GraftFunctions.rollingHashes(col("text"), window, modulus))
+        .as(Seq("pos", "h")))
+    val wins = if (anchorMod <= 1L) all else all.filter(col("h") % anchorMod === 0L)
+    val a = wins.select(col("h"), col("doc_id").as("a_id"), col("pos").as("a_pos"))
+    val b = wins.select(col("h"), col("doc_id").as("b_id"), col("pos").as("b_pos"))
+    a.join(b, "h")
+      .filter(col("a_id") < col("b_id"))
+      .select(col("a_id"), col("b_id"), col("a_pos"),
+        (col("b_pos") - col("a_pos")).as("diag"))
   }
 
   /** Exact-substring CLEANING — the artifact Lee et al. 2021 actually
@@ -670,16 +639,7 @@ object Dedup {
       modulus: Long): (DataFrame, DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
     require(minSpan > window, "minSpan must exceed window (collision filter)")
-    val wins = docs
-      .select(col("doc_id"), posexplode(
-        graft.functions.GraftFunctions.rollingHashes(col("text"), window, modulus))
-        .as(Seq("pos", "h")))
-    val a = wins.select(col("h"), col("doc_id").as("a_id"), col("pos").as("a_pos"))
-    val b = wins.select(col("h"), col("doc_id").as("b_id"), col("pos").as("b_pos"))
-    val matched = a.join(b, "h")
-      .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"), col("a_pos"),
-        (col("b_pos") - col("a_pos")).as("diag"))
+    val matched = diagonalMatches(docs, window, modulus)
     val runW = Window.partitionBy("a_id", "b_id", "diag").orderBy("a_pos")
     // removal intervals on the LATER doc: [s, e) in 0-based chars
     val removals = matched
@@ -760,7 +720,7 @@ object Dedup {
     * join) when called, not at the result's action. The candidate
     * checkpoint is reliable only when the context has a checkpoint
     * directory; otherwise its blocks are executor-local and not
-    * recomputed if an executor is lost (see `scaffold`).
+    * recomputed if an executor is lost (see `CacheLifecycle.scaffold`).
     */
   def verifyCandidates(
       docs: DataFrame,
@@ -773,8 +733,9 @@ object Dedup {
     // runs once, not once per reference (round-18: −1.2 s at sf0.1/32c).
     // Checkpointed, not persisted + released: releasing a persisted `cand`
     // re-planned a caller's cached scalableCandidates frame, whose plan
-    // contains this one (see scaffold)
-    val cand = scaffold(minhashCandidates(docs, bandN, bands, rowsPerBand, maxBucket))
+    // contains this one (see CacheLifecycle.scaffold)
+    val cand = CacheLifecycle.scaffold(
+      minhashCandidates(docs, bandN, bands, rowsPerBand, maxBucket))
     val sh = shingles(docs, verifyN)
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
     val inter = cand
@@ -950,7 +911,7 @@ object Dedup {
     * result's action. Both checkpoints are reliable only when the context
     * has a checkpoint directory; otherwise their blocks are
     * executor-local and not recomputed if an executor is lost (see
-    * `scaffold`). */
+    * `CacheLifecycle.scaffold`). */
   def minhashCalibration(docs: DataFrame, n: Int = 2, bands: Int = 4,
       rowsPerBand: Int = 2, maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val k = bands * rowsPerBand
@@ -958,8 +919,8 @@ object Dedup {
     // feeds the estimate AND the exact chain — checkpoint both (one
     // doc-keyed signature row per doc; the banding-bounded pair list) so
     // the shingle→minhash pipeline runs once (round-18)
-    val sigs = scaffold(minhashSignatures(docs, n, k))
-    val cand = scaffold(bandedPairs(sigs, bands, rowsPerBand, maxBucket))
+    val sigs = CacheLifecycle.scaffold(minhashSignatures(docs, n, k))
+    val cand = CacheLifecycle.scaffold(bandedPairs(sigs, bands, rowsPerBand, maxBucket))
     val aSig = sigs.select(
       col("doc_id").as("a_id") +: (0 until k).map(i => col(s"m$i").as(s"am$i")): _*)
     val bSig = sigs.select(

@@ -8,6 +8,8 @@ import javax.imageio.ImageIO
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.operators.{BandJoin, CacheLifecycle}
+
 /** Multimodal-column plumbing: media payloads as opaque `binary` columns
   * with typed metadata, processed partition-parallel in typed batches (the
   * Scala analogue of the `mapInPandas` batch shape).
@@ -243,42 +245,8 @@ object Multimodal {
     *
     * `maxHamming` must stay ≤ 7 for the recall guarantee; the default IS
     * the pigeonhole bound. */
-  def phashDups(hashes: DataFrame, maxHamming: Int = 7): DataFrame = {
-    require(maxHamming <= 7, "8 bands of 8 bits guarantee recall only to Hamming 7")
-    // the hash frame is read on BOTH sides of the band self-join, and its
-    // lineage holds the full-corpus image decode — localCheckpoint the
-    // 4-longs-per-image frame (~16 MB per 500k images) so the decode runs
-    // once, not once per plan leg (measured: each extra leg is a full
-    // decode pass at 100×). Lazy checkpoint, not persist+release: the
-    // consumers run driver-side contraction loops whose build-time
-    // actions race a release listener (measured as intermittent
-    // 25× reps), while checkpoint blocks are lineage-truncating and
-    // cleaned by the ContextCleaner when the frame is GC'd — the exact
-    // starEdges discipline.
-    val h = hashes.localCheckpoint(false)
-    val banded = h.select(
-      col("doc_id"),
-      col("phash_hi"), col("phash_lo"),
-      posexplode(array((0 until 8).map { j =>
-        if (j < 4) shiftright(col("phash_lo"), 8 * j).bitwiseAND(lit(255L))
-        else shiftright(col("phash_hi"), 8 * (j - 4)).bitwiseAND(lit(255L))
-      }: _*)))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "band_val")
-    val a = banded.select(col("doc_id").as("a_id"), col("phash_hi").as("a_hi"),
-      col("phash_lo").as("a_lo"), col("band"), col("band_val"))
-    val b = banded.select(col("doc_id").as("b_id"), col("phash_hi").as("b_hi"),
-      col("phash_lo").as("b_lo"), col("band"), col("band_val"))
-    val out = a.join(b, Seq("band", "band_val"))
-      .filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id", "a_hi", "a_lo", "b_hi", "b_lo").distinct()
-      .withColumn("hamming",
-        bit_count(col("a_hi").bitwiseXOR(col("b_hi"))).cast("long") +
-          bit_count(col("a_lo").bitwiseXOR(col("b_lo"))).cast("long"))
-      .filter(col("hamming") <= maxHamming)
-      .select("a_id", "b_id", "hamming")
-    out
-  }
+  def phashDups(hashes: DataFrame, maxHamming: Int = 7): DataFrame =
+    phashPairs(hashes, 8, maxHamming, None)
 
   /** Hot-bucket cap for the SCALE-path image pair join
     * ([[phashDupsWide]]) — same discipline as
@@ -313,48 +281,42 @@ object Multimodal {
     * the documented recall trade; the exact [[phashDups]] stays the
     * small-corpus baseline, this form is the prescribed scale default. */
   def phashDupsWide(hashes: DataFrame, maxHamming: Int = 3,
-      maxBucket: Int = DefaultPhashBucketCap): DataFrame = {
-    require(maxHamming <= 3, "4 bands of 16 bits guarantee recall only to Hamming 3")
-    // four plan legs read the hash frame (band self-join ×2, identical-
-    // hash groups, star join-back) and its lineage holds the full-corpus
-    // decode — lazy localCheckpoint so the decode runs once (see
-    // [[phashDups]] for why checkpoint, not persist+release)
-    val h = hashes.localCheckpoint(false)
+      maxBucket: Int = DefaultPhashBucketCap): DataFrame =
+    phashPairs(hashes, 16, maxHamming, Some(maxBucket))
+
+  /** Body of [[phashDups]] (`bandBits` 8) and [[phashDupsWide]]
+    * (`bandBits` 16): the 64-bit hash cut into `64 / bandBits` bands (lo
+    * word first), the [[BandJoin]] self-join carrying both hash words,
+    * the exact Hamming verify. `maxBucket` set = the wide form: hot
+    * buckets capped, identical-hash star edges (Hamming 0) added back.
+    * The hash frame is read by every plan leg and its lineage holds the
+    * full-corpus decode, so it is checkpointed
+    * ([[CacheLifecycle.scaffold]]) and the decode runs once. */
+  private def phashPairs(hashes: DataFrame, bandBits: Int, maxHamming: Int,
+      maxBucket: Option[Int]): DataFrame = {
+    val nBands = 64 / bandBits
+    require(maxHamming < nBands,
+      s"$nBands bands of $bandBits bits guarantee recall only to Hamming ${nBands - 1}")
+    val h = CacheLifecycle.scaffold(hashes)
+    val mask = lit((1L << bandBits) - 1)
     val banded = h.select(
       col("doc_id"),
       col("phash_hi"), col("phash_lo"),
-      posexplode(array((0 until 4).map { j =>
-        if (j < 2) shiftright(col("phash_lo"), 16 * j).bitwiseAND(lit(65535L))
-        else shiftright(col("phash_hi"), 16 * (j - 2)).bitwiseAND(lit(65535L))
-      }: _*)))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "band_val")
-    val kept = banded.join(
-      banded.groupBy("band", "band_val")
-        .agg(count(lit(1)).as("_bsz"))
-        .filter(col("_bsz") <= maxBucket)
-        .select("band", "band_val"),
-      Seq("band", "band_val"))
-    val a = kept.select(col("doc_id").as("a_id"), col("phash_hi").as("a_hi"),
-      col("phash_lo").as("a_lo"), col("band"), col("band_val"))
-    val b = kept.select(col("doc_id").as("b_id"), col("phash_hi").as("b_hi"),
-      col("phash_lo").as("b_lo"), col("band"), col("band_val"))
-    val bandPairs = a.join(b, Seq("band", "band_val"))
-      .filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id", "a_hi", "a_lo", "b_hi", "b_lo").distinct()
+      posexplode(array((0 until nBands).map { j =>
+        if (j < nBands / 2) shiftright(col("phash_lo"), bandBits * j).bitwiseAND(mask)
+        else shiftright(col("phash_hi"), bandBits * (j - nBands / 2)).bitwiseAND(mask)
+      }: _*)).as(Seq("band", "key")))
+    val hashCols = Seq("phash_hi", "phash_lo")
+    val pairs = BandJoin.pairs(banded, "doc_id", hashCols, maxBucket.getOrElse(Int.MaxValue))
+      .select("a_id", "b_id", "a_phash_hi", "a_phash_lo", "b_phash_hi", "b_phash_lo").distinct()
       .withColumn("hamming",
-        bit_count(col("a_hi").bitwiseXOR(col("b_hi"))).cast("long") +
-          bit_count(col("a_lo").bitwiseXOR(col("b_lo"))).cast("long"))
+        bit_count(col("a_phash_hi").bitwiseXOR(col("b_phash_hi"))).cast("long") +
+          bit_count(col("a_phash_lo").bitwiseXOR(col("b_phash_lo"))).cast("long"))
       .filter(col("hamming") <= maxHamming)
       .select("a_id", "b_id", "hamming")
-    val groups = h.groupBy("phash_hi", "phash_lo")
-      .agg(min("doc_id").as("a_id"), count(lit(1)).as("_g"))
-      .filter(col("_g") > 1)
-      .select("phash_hi", "phash_lo", "a_id")
-    val stars = h.join(groups, Seq("phash_hi", "phash_lo"))
-      .filter(col("doc_id") > col("a_id"))
-      .select(col("a_id"), col("doc_id").as("b_id"), lit(0L).as("hamming"))
-    bandPairs.unionByName(stars).distinct()
+    if (maxBucket.isEmpty) pairs
+    else pairs.unionByName(
+      BandJoin.starEdges(h, "doc_id", hashCols).withColumn("hamming", lit(0L))).distinct()
   }
 
   /** Hamming-threshold tuning curve for the image near-dup join — per
@@ -430,19 +392,6 @@ object Multimodal {
           .as("reclaim_frac"))
   }
 
-  /** Modality-mix ledger — the first table a multimodal corpus build
-    * reads: what share of the stored media is stills vs short clips vs
-    * long-form video, in items AND in pixel mass (compute cost is pixel-
-    * proportional, so `pixel_share` is the GPU-hour budget split, not
-    * `doc_share`). Classification runs over the DECODED metadata
-    * ([[metaFromPayloads]] — real `ImageIO` decode of the stored
-    * payloads), so the ledger verifies the decode path end-to-end: frame
-    * count 1 = `image`, 2..60 = `clip`, >60 = `video` (the stub clip
-    * model's domain is 1..120 frames).
-    *
-    * Shape: one metadata pass to a ≤ 3-row modality aggregate (map-side
-    * combine), totals broadcast back — the payloads never leave the
-    * executors and nothing per-document survives the aggregate. */
   /** Pixel-profile ledger — per modality, the brightness and shape
     * envelope of the DECODED rasters: per-frame pixel mass, red-channel
     * total and its mean value (the normalization statistic an image
@@ -472,6 +421,19 @@ object Multimodal {
         col("min_width"), col("max_width"),
         col("min_height"), col("max_height"))
 
+  /** Modality-mix ledger — the first table a multimodal corpus build
+    * reads: what share of the stored media is stills vs short clips vs
+    * long-form video, in items AND in pixel mass (compute cost is pixel-
+    * proportional, so `pixel_share` is the GPU-hour budget split, not
+    * `doc_share`). Classification runs over the DECODED metadata
+    * ([[metaFromPayloads]] — real `ImageIO` decode of the stored
+    * payloads), so the ledger verifies the decode path end-to-end: frame
+    * count 1 = `image`, 2..60 = `clip`, >60 = `video` (the stub clip
+    * model's domain is 1..120 frames).
+    *
+    * Shape: one metadata pass to a ≤ 3-row modality aggregate (map-side
+    * combine), totals broadcast back — the payloads never leave the
+    * executors and nothing per-document survives the aggregate. */
   def modalityMix(meta: DataFrame): DataFrame = {
     val classed = meta.select(
       when(col("n_frames") === 1, "image")

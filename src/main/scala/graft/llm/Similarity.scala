@@ -591,9 +591,6 @@ object Similarity {
       when(proj >= 0, lit(1L << i)).otherwise(lit(0L))
     }.reduce(_ + _)
 
-  /** One row per (vector, band) with the band's bucket key, self-joined on
-    * (band, key): the banded candidate frame, carrying both embeddings for
-    * the exact recheck. */
   /** `(vec_id, embedding, nrm, band, key)` — the banded SRP key frame
     * every LSH candidate path builds on. All band keys come from ONE fused
     * pass over the embedding (the composed per-band form walks the vector
@@ -610,14 +607,13 @@ object Similarity {
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "key")
 
-  private def bandedJoin(emb: DataFrame, nBands: Int, bitsPerBand: Int): DataFrame = {
-    val banded = bandedKeys(emb, nBands, bitsPerBand)
-    val a = banded.select(col("band"), col("key"), col("vec_id").as("a_id"),
-      col("embedding").as("a_emb"), col("nrm").as("a_nrm"))
-    val b = banded.select(col("band"), col("key"), col("vec_id").as("b_id"),
-      col("embedding").as("b_emb"), col("nrm").as("b_nrm"))
-    a.join(b, Seq("band", "key")).filter(col("a_id") < col("b_id"))
-  }
+  /** One row per (vector, band) with the band's bucket key, self-joined on
+    * (band, key) ([[graft.operators.BandJoin.pairs]]): the banded candidate
+    * frame, carrying both embeddings (`a_embedding`, `b_embedding`) and
+    * norms for the exact recheck. */
+  private def bandedJoin(emb: DataFrame, nBands: Int, bitsPerBand: Int): DataFrame =
+    graft.operators.BandJoin.pairs(bandedKeys(emb, nBands, bitsPerBand), "vec_id",
+      Seq("embedding", "nrm"))
 
   /** Distinct banded candidate pairs before the exact recheck — the
     * capacity-planning view: `count()` of this frame is the number of exact
@@ -639,7 +635,8 @@ object Similarity {
   def nearDupPairsBanded(emb: DataFrame, threshold: Double = 0.4,
       nBands: Int = 8, bitsPerBand: Int = 8): DataFrame =
     bandedJoin(emb, nBands, bitsPerBand)
-      .withColumn("cos", dot(col("a_emb"), col("b_emb")) / (col("a_nrm") * col("b_nrm")))
+      .withColumn("cos",
+        dot(col("a_embedding"), col("b_embedding")) / (col("a_nrm") * col("b_nrm")))
       .filter(col("cos") >= threshold)
       .select(col("a_id"), col("b_id"), col("cos").as("cos_sim"))
       .distinct()
@@ -666,7 +663,8 @@ object Similarity {
   def knnGraph(emb: DataFrame, k: Int = 3,
       nBands: Int = 8, bitsPerBand: Int = 8): DataFrame = {
     val cand = bandedJoin(emb, nBands, bitsPerBand)
-      .withColumn("cos", dot(col("a_emb"), col("b_emb")) / (col("a_nrm") * col("b_nrm")))
+      .withColumn("cos",
+        dot(col("a_embedding"), col("b_embedding")) / (col("a_nrm") * col("b_nrm")))
       .select(col("a_id"), col("b_id"), col("cos"))
       .distinct()
     val directed = cand

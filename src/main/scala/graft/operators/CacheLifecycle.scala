@@ -42,7 +42,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * thread after the action and re-plans every cached, not-yet-loaded
   * frame whose plan contains the released one, so a caller that persists
   * a frame built over this scaffolding may recompute it. Scaffolding a
-  * caller may also cache uses a checkpoint instead (`Dedup.scaffold`).
+  * caller may also cache uses a checkpoint instead ([[scaffold]]).
   */
 object CacheLifecycle {
 
@@ -79,4 +79,29 @@ object CacheLifecycle {
     })
     result
   }
+
+  /** Lineage-truncated scaffolding for a frame one result reads more than
+    * once (a signature frame on both sides of a band self-join, a decoded
+    * image-hash frame behind four plan legs): a RELIABLE `checkpoint()`
+    * when the context has a checkpoint directory (`sc.setCheckpointDir`,
+    * the deployment's durability choice, as in
+    * [[graft.llm.Clusters.starEdges]]), else a lazy
+    * `localCheckpoint(false)`. Either way the shuffle stages below it run
+    * when the calling function builds its result, not at the caller's
+    * action (the reliable form also writes the blocks then). Local blocks
+    * live on the executors: one lost with its executor is not recomputed,
+    * and a later action on the result fails with "Checkpoint block not
+    * found" — on a multi-executor cluster, set a checkpoint directory.
+    *
+    * Not persist + [[releaseAfterUse]]: that release's non-cascading
+    * `unpersist` re-plans any cached, not-yet-loaded frame whose plan
+    * contains the released one (a caller persisting
+    * `Dedup.scalableCandidates` was the observed case), and consumers that
+    * run driver-side contraction loops race the release listener with
+    * their build-time actions. Checkpoint blocks never enter the
+    * CacheManager; the ContextCleaner reclaims them once the frame is
+    * unreferenced. */
+  def scaffold(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
+    else df.localCheckpoint(false)
 }

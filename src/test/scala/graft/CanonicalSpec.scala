@@ -82,6 +82,34 @@ class CanonicalSpec extends SparkSpec {
     assert(h1 === h2)
   }
 
+  test("rowHash over 12 columns compiles inside one whole-stage codegen method") {
+    // non-foldable inputs (they depend on `id`), so the projection runs in
+    // generated code, not at optimization time
+    val vals: Seq[(String, Any, String)] = Seq(
+      (" 007 ", "7"), ("1.50", "1.5"), ("abc", "abc"), (10000000L, "10000000"),
+      (1e-7, "1e-7"), ("1e21", "1e+21"), ("-0.0", "0"), ("  x  ", "x"),
+      ("0.000001", "0.000001"), (2.5, "2.5"),
+      ("150000000000000000000", "150000000000000000000"), ("1e999", "Infinity"))
+      .zipWithIndex.map { case ((v, want), i) => (f"c$i%02d", v, want) }
+    val df = spark.range(1).select(vals.map { case (name, v, _) =>
+      when(col("id") >= 0, lit(v)).as(name) }: _*)
+    val names = vals.map(_._1)
+    val out = df.select(Canonical.stableJson(df, names).as("j"),
+      Canonical.rowHash(df, names).as("h"))
+    val r = out.collect().head
+    val json = vals.map { case (n, _, want) => s""""$n":"$want"""" }.mkString("{", ",", "}")
+    assert(r.getString(0) === json)
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(json.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    assert(r.getString(1) === sha)
+    val plan = out.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    assert(plan.find(_.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec])
+      .isDefined, s"projection not whole-stage compiled:\n$plan")
+  }
+
   test("inferColumnType follows the reference rules") {
     val df = Seq(
       ("flag", "true"), ("updated_ts", "1700000000"), ("amount", "12.5"), ("name", "ada")

@@ -1806,4 +1806,24 @@ class DedupSpec extends SparkSpec {
     // the 8x1 value is the closed form 1 - 0.2^8
     assert(math.abs(ps(0) - (1.0 - math.pow(0.2, 8))) < 1e-12)
   }
+
+  test("lshTuning pair volumes equal the shared band join's pre-distinct pair counts") {
+    // planted: a 40-doc verbatim clique (one bucket per band, over the cap),
+    // a near-dup pair and unrelated docs. The (4, 2) ledger row must count
+    // exactly the rows the candidate join emits before its distinct —
+    // uncapped, and at the cap — over the same band-key frame.
+    val hot = (0L until 40L).map(i => (i, "common words repeated across the clique"))
+    val rest = Seq((100L, base), (101L, nearDup), (102L, distinctDoc),
+      (103L, "rare unique phrasing here"), (104L, "rare unique phrasing here"))
+    val docs = (hot ++ rest).toDF("doc_id", "text")
+    val row = Dedup.lshTuning(docs)
+      .filter(col("bands") === 4 && col("rows_per_band") === 2).collect().head
+    val keys = Dedup.bandKeys(Dedup.minhashSignatures(docs, 2, 8), 4, 2)
+    val banded = graft.operators.BandJoin.pairs(keys, "doc_id").count()
+    val capped = graft.operators.BandJoin.pairs(keys, "doc_id",
+      maxBucket = Dedup.DefaultMaxBucket).count()
+    assert(row.getAs[Long]("pairs_banded") === banded)
+    assert(row.getAs[Long]("pairs_capped") === capped)
+    assert(capped < banded && banded >= 4L * (40 * 39 / 2), s"the cap bites: $capped vs $banded")
+  }
 }
