@@ -4,17 +4,24 @@ import org.apache.spark.sql.execution.FormattedMode
 
 /** Plan-audit main: prints the formatted explain for representative queries
   * so shuffle shape, pushed filters, read schemas, and broadcast choices can
-  * be reviewed (and re-reviewed after changes). A typed operator's JVM
-  * lambda (`ApplyEngine$$$Lambda$2343/0x…@58e2af93`) prints as
-  * `$Lambda$<fn>`: its number and identity hash move with class-loading
-  * order, so two builds' dumps differ only where a plan did. Usage:
+  * be reviewed (and re-reviewed after changes). What moves between two
+  * runs of the same code is masked: a typed operator's JVM lambda
+  * (`ApplyEngine$$$Lambda$2343/0x…@58e2af93`) prints as `$Lambda$<fn>`,
+  * an object's identity hash (`KMinValues@28e64ca0`) as `@<obj>`, a temp
+  * index directory (`graft_idx_5060934859848480232__delta_…`) as
+  * `graft_idx_<tmp>` and a run-tagged table or path
+  * (`graft_bq_lineitem_local_1760…_…`) as `_local_<run>_…`. Expression
+  * ids (`#123`) and `plan_id`s are left as they are. Usage:
   *   runMain graft.Plans [sfDir] [query ...]
   */
 object Plans {
 
-  /** `explain` text with every JVM lambda identity masked. */
+  /** `explain` text with the per-run identities masked. */
   private def stable(plan: String): String =
     plan.replaceAll("\\$Lambda\\$[0-9]+/0x[0-9a-f]+@[0-9a-f]+", "\\$Lambda\\$<fn>")
+      .replaceAll("(?<=[A-Za-z0-9_$])@[0-9a-f]{1,8}\\b", "@<obj>")
+      .replaceAll("graft_idx_\\w+", "graft_idx_<tmp>")
+      .replaceAll("_local_[0-9]+", "_local_<run>")
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")

@@ -2,6 +2,7 @@ package graft.cdc
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.streaming.Streams
 
 /** Destination-side apply: fold an ordered change feed into final table state.
   *
@@ -11,11 +12,12 @@ import org.apache.spark.sql.functions._
   * (`next = {...current, ...after}`). Because payloads are partial,
   * last-row-wins per key is wrong — a true ordered fold is required.
   *
-  * Implementation: secondary sort. Repartition by key, sort each partition by
-  * (key, lsn), then a single `mapPartitions` pass folds consecutive rows of
-  * the same key carrying O(1) state per key. This is the shape that survives
-  * 100 TB: one shuffle on the key, no global sort, no per-group buffering
-  * (state is a single row image), no driver-side state.
+  * Implementation: one keyed group per (tbl, pk) — a hash exchange on the
+  * key and a sort by lsn within it — folded through
+  * [[graft.streaming.Streams.applyStep]], the step the streaming apply
+  * ([[graft.streaming.StreamsV2.applyStream]]) runs too. This is the shape
+  * that survives 100 TB: one shuffle on the key, no global sort, no
+  * per-group buffering (state is a single row image), no driver-side state.
   */
 object ApplyEngine {
 
@@ -34,6 +36,7 @@ object ApplyEngine {
     * `version` counts ops applied in the row's current lifetime (since the
     * last delete) — the version counter the destination row would carry
     * (`sim/core/types.ts:1-8`); a trailing delete removes the row.
+    * `updated_at` is the last op's `t`.
     */
   def applyState(ops: DataFrame): DataFrame = {
     val spark = ops.sparkSession
@@ -43,77 +46,24 @@ object ApplyEngine {
       col("sets_val").as("setsVal"), col("val").as("valV"),
       col("sets_k").as("setsK"), col("k").as("kV")).as[OpIn]
 
-    val folded = typed
-      .repartition(col("tbl"), col("pk"))
-      .sortWithinPartitions("tbl", "pk", "lsn")
-      .mapPartitions { it => foldSortedPartition(it) }
+    val folded = typed.groupBy(col("tbl"), col("pk")).as[(String, String), OpIn]
+      .flatMapSortedGroups(col("lsn")) { case ((tbl, pk), keyOps) =>
+        var row = Streams.tombstone(tbl, pk)
+        var updatedAt = 0L
+        keyOps.foreach { op =>
+          row = Streams.applyStep(
+            row, op.op == "delete", op.setsVal, op.valV, op.setsK, op.kV, op.lsn)
+          updatedAt = op.t
+        }
+        if (row.deleted) None
+        else Some(RowOut(tbl, pk, row.valV, row.kV, row.version, updatedAt))
+      }
 
     folded.toDF()
       .select(
         col("tbl"), col("pk"),
         col("valV").as("val"), col("kV").as("k"),
         col("version"), col("updatedAt").as("updated_at"))
-  }
-
-  /** Fold one partition sorted by (tbl, pk, lsn). Emits the final image of
-    * each key when the key changes; O(1) memory. */
-  private[cdc] def foldSortedPartition(it: Iterator[OpIn]): Iterator[RowOut] = {
-    var curKey: (String, String) = null
-    var present = false
-    var v: Option[Double] = None
-    var k: Option[Long] = None
-    var version = 0L
-    var updatedAt = 0L
-
-    def finish(): Option[RowOut] =
-      if (curKey != null && present)
-        Some(RowOut(curKey._1, curKey._2, v, k, version, updatedAt))
-      else None
-
-    new Iterator[RowOut] {
-      private var pending: Option[RowOut] = None
-      private var done = false
-
-      private def advance(): Unit = {
-        while (pending.isEmpty && it.hasNext) {
-          val op = it.next()
-          val key = (op.tbl, op.pk)
-          if (key != curKey) {
-            pending = finish()
-            curKey = key
-            present = false; v = None; k = None; version = 0L; updatedAt = 0L
-          }
-          applyOp(op)
-        }
-        if (pending.isEmpty && !it.hasNext && !done) {
-          pending = finish()
-          done = true
-          curKey = null
-        }
-      }
-
-      private def applyOp(op: OpIn): Unit = {
-        if (op.op == "delete") {
-          present = false; v = None; k = None; version = 0L
-        } else {
-          // merge-upsert: {...current, ...after} — only fields present in
-          // the partial payload overwrite (src/domain/storage.ts:159-163)
-          if (!present) { present = true; v = None; k = None; version = 0L }
-          if (op.setsVal) v = op.valV
-          if (op.setsK) k = op.kV
-          version += 1
-        }
-        updatedAt = op.t
-      }
-
-      override def hasNext: Boolean = { advance(); pending.nonEmpty }
-      override def next(): RowOut = {
-        advance()
-        val r = pending.get
-        pending = None
-        r
-      }
-    }
   }
 
   /** Generic JSON-payload state reduce — the verifier's `reduceState`

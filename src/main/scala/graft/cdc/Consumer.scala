@@ -7,13 +7,17 @@ import org.apache.spark.sql.functions._
   * (`web/App.tsx:2102-2248`, `src/changefeed/model.ts:246-274`):
   * token-bucket throttling and per-tick broker delivery with caps.
   *
-  * These are inherently sequential *per consumer lane*, so they run as a
-  * per-partition fold after partitioning by lane (method) — the same
-  * secondary-sort shape as the apply engine: shuffle on the lane key, sort
-  * within partition, O(1) state. One lane's drain order never depends on
-  * another lane's, so lanes parallelize.
+  * These are inherently sequential *per consumer lane* (or broker
+  * partition), so each runs as one keyed group per lane: a hash exchange on
+  * the lane key, a sort within it, and the per-event step of the matching
+  * streaming fold in [[graft.streaming.Streams]] threaded through the sorted
+  * group from the key's empty state. The batch and stream forms share that
+  * step; one lane's drain order never depends on another lane's, so lanes
+  * parallelize.
   */
 object Consumer {
+
+  import graft.streaming.Streams
 
   case class DeliveryIn(method: String, seq: Long, availableAt: Long)
   case class DeliveryOut(method: String, seq: Long, availableAt: Long, drainTick: Long, drainMs: Long)
@@ -21,8 +25,10 @@ object Consumer {
   /** Token-bucket drain (`web/App.tsx:2106-2113,2185-2201`): every `stepMs`
     * tick, `allowance += rate * stepMs / 1000` capped at `5 * rate`; the
     * consumer drains `min(floor(allowance), batchCap)` available events.
-    * Returns each event's drain tick (and its wall time).
-    */
+    * Returns each event's drain tick (and its wall time). Each lane's events,
+    * in (availableAt, seq) order, go lazily through
+    * [[graft.streaming.Streams.throttleStep]] — O(1) state, no lane-sized
+    * buffering. */
   def throttleDrain(
       events: Dataset[DeliveryIn],
       rate: Double,
@@ -30,42 +36,10 @@ object Consumer {
       batchCap: Int = 50): Dataset[DeliveryOut] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events
-      .repartition(col("method"))
-      .sortWithinPartitions("method", "availableAt", "seq")
-      .mapPartitions { it =>
-        // Streaming fold: drain order equals input order (FIFO per lane),
-        // so each event's drain tick is computable one event at a time with
-        // O(1) state — no lane-sized buffering. The clock jumps straight to
-        // the next relevant tick (idle ticks only accrue allowance, which
-        // the cap bounds, so the jump is lossless; ticking 50 ms at a time
-        // through absolute epoch timestamps would spin forever).
-        val cap = 5 * rate
-        val perTick = rate * stepMs / 1000.0
-        var method: String = null
-        var tick = 0L
-        var allowance = 0.0
-        var usedThisTick = 0
-        it.map { e =>
-          if (e.method != method) {
-            method = e.method
-            tick = 0L; allowance = 0.0; usedThisTick = 0 // per-lane bucket
-          }
-          val needTick = Math.floorDiv(e.availableAt - 1, stepMs) + 1
-          if (needTick > tick) {
-            allowance = math.min(allowance + perTick * (needTick - tick), cap)
-            tick = needTick
-            usedThisTick = 0
-          }
-          while (allowance < 1.0 || usedThisTick >= batchCap) {
-            tick += 1
-            allowance = math.min(allowance + perTick, cap)
-            usedThisTick = 0
-          }
-          allowance -= 1
-          usedThisTick += 1
-          DeliveryOut(e.method, e.seq, e.availableAt, tick, tick * stepMs)
-        }
+    events.groupBy(col("method")).as[String, DeliveryIn]
+      .flatMapSortedGroups(col("availableAt"), col("seq")) { (_, lane) =>
+        new Streams.Threaded(Streams.EmptyBucket, lane,
+          Streams.throttleStep(rate, stepMs, batchCap))
       }
   }
 
@@ -83,10 +57,11 @@ object Consumer {
     * consumption is already ≤ maxApply·partitions — so partitions fold
     * independently and in parallel, exactly.)
     *
-    * Same secondary-sort shape as [[throttleDrain]]: shuffle on the
-    * partition, sort by lsn, O(1) state per queue. This is the exact
-    * counterpart to [[brokerDelivery]]'s closed form (which sorts by
-    * availability and is a lower bound after idle gaps).
+    * Same keyed shape as [[throttleDrain]]: each partition's events, in lsn
+    * order, go lazily through [[graft.streaming.Streams.brokerStep]] with
+    * O(1) state. This is the exact counterpart to [[brokerDelivery]]'s
+    * closed form (which sorts by availability and is a lower bound after
+    * idle gaps).
     */
   def brokerDeliverExact(
       events: Dataset[BrokerIn],
@@ -94,22 +69,10 @@ object Consumer {
       maxApplyPerTick: Int = 4): Dataset[BrokerOut] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events
-      .repartition(col("part"))
-      .sortWithinPartitions("part", "lsn")
-      .mapPartitions { it =>
-        var part = Int.MinValue
-        var tick = 0L
-        var used = 0
-        it.map { e =>
-          if (e.part != part) { part = e.part; tick = 0L; used = 0 }
-          // first tick whose clock (tick·tickMs) has reached availableAt
-          val availTick = Math.floorDiv(e.availableAt - 1, tickMs) + 1
-          if (availTick > tick) { tick = availTick; used = 0 }
-          if (used >= maxApplyPerTick) { tick += 1; used = 0 }
-          used += 1
-          BrokerOut(e.part, e.lsn, e.availableAt, e.dropped, tick, tick * tickMs)
-        }
+    events.groupBy(col("part")).as[Int, BrokerIn]
+      .flatMapSortedGroups(col("lsn")) { (_, queue) =>
+        new Streams.Threaded(Streams.EmptyQueue, queue,
+          Streams.brokerStep(tickMs, maxApplyPerTick))
       }
   }
 
@@ -123,17 +86,12 @@ object Consumer {
     * older event beneath it for a tick. [[brokerDeliverExact]] models the
     * no-drift FIFO queue; this operator reproduces the drift-on trace.
     *
-    * Event-driven per-partition fold: arrivals (sorted by lsn — enqueue
-    * order) are pushed front-first at their arrival tick, then each visited
-    * tick pops at most `maxApplyPerTick` available events off the head. The
-    * clock jumps between relevant ticks (next arrival / next drain), so work
-    * is O(events), not O(ticks). Dropped events consume delivery quota
-    * without delivery (`model.ts:256-259`), exactly like the FIFO form.
-    *
-    * Same shuffle shape as the other exact folds: repartition on the broker
-    * partition, sort by lsn, fold. State is the pending stack — bounded by
-    * the per-partition backlog, the same bound the reference's in-memory
-    * queue carries.
+    * Same keyed shape as the other exact operators: each partition's
+    * arrivals, in lsn (enqueue) order, run through the streaming fold
+    * [[graft.streaming.Streams.driftFold]] as one micro-batch, then a flush
+    * fold drains the stack to empty. Work is O(events), not O(ticks); state
+    * is the pending stack — bounded by the per-partition backlog, the same
+    * bound the reference's in-memory queue carries.
     */
   def brokerDeliverDriftExact(
       events: Dataset[DriftIn],
@@ -141,46 +99,11 @@ object Consumer {
       maxApplyPerTick: Int = 4): Dataset[BrokerOut] = {
     val spark = events.sparkSession
     import spark.implicits._
-    def simulate(evts: scala.collection.Seq[DriftIn]): Iterator[BrokerOut] = {
-      def tickOf(x: Long) = Math.floorDiv(x - 1, tickMs) + 1
-      val out = scala.collection.mutable.ArrayBuffer.empty[BrokerOut]
-      val stack = scala.collection.mutable.ArrayDeque.empty[DriftIn]
-      var i = 0
-      var tick = 0L
-      while (i < evts.length || stack.nonEmpty) {
-        val nextArr = if (i < evts.length) tickOf(evts(i).t) else Long.MaxValue
-        val nextDrain =
-          if (stack.nonEmpty) math.max(tick + 1, tickOf(stack.head.availableAt))
-          else Long.MaxValue
-        val T = math.min(nextArr, nextDrain)
-        while (i < evts.length && tickOf(evts(i).t) <= T) { stack.prepend(evts(i)); i += 1 }
-        var used = 0
-        while (stack.nonEmpty && used < maxApplyPerTick &&
-            tickOf(stack.head.availableAt) <= T) {
-          val e = stack.removeHead()
-          out += BrokerOut(e.part, e.lsn, e.availableAt, e.dropped, T, T * tickMs)
-          used += 1
-        }
-        tick = T
-      }
-      out.iterator
-    }
-    events
-      .repartition(col("part"))
-      .sortWithinPartitions("part", "lsn")
-      .mapPartitions { it =>
-        // consecutive runs of the same part (input is sorted): buffer one
-        // queue's events, simulate, emit, move on
-        new Iterator[Iterator[BrokerOut]] {
-          private val buf = it.buffered
-          def hasNext: Boolean = buf.hasNext
-          def next(): Iterator[BrokerOut] = {
-            val part = buf.head.part
-            val q = scala.collection.mutable.ArrayBuffer.empty[DriftIn]
-            while (buf.hasNext && buf.head.part == part) q += buf.next()
-            simulate(q)
-          }
-        }.flatten
+    events.groupBy(col("part")).as[Int, DriftIn]
+      .flatMapSortedGroups(col("lsn")) { (part, arrivals) =>
+        val (st, out) = Streams.driftFold(
+          part, Streams.EmptyStack, arrivals.toSeq, tickMs, maxApplyPerTick)
+        out ++ Streams.driftFold(part, st, Seq.empty, tickMs, maxApplyPerTick, flush = true)._2
       }
   }
 

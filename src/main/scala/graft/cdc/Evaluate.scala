@@ -23,25 +23,20 @@ object Evaluate {
     * Single-job report: every counter is a 1-row aggregate; they combine via
     * broadcast cross-joins into one row, `pass` is derived as an expression,
     * and `stack` unpivots to (metric, value) — so the whole report is ONE
-    * Spark action regardless of how many metrics it carries. `ops` and
-    * `actual` feed multiple aggregate subtrees, so they are persisted for
-    * that action and released by
-    * [[graft.operators.CacheLifecycle.releaseAfterUse]] once it completes
-    * (inputs the caller already cached are left under the caller's
-    * lifecycle).
+    * Spark action regardless of how many metrics it carries. `actual`
+    * feeds three aggregate subtrees, so it is persisted for that action and
+    * released by [[graft.operators.CacheLifecycle.releaseAfterUse]] once it
+    * completes (an input the caller already cached is left under the
+    * caller's lifecycle); `ops` feeds only the delete count and is read
+    * once.
     */
   def lane(
-      ops0: DataFrame,
+      ops: DataFrame,
       state: DataFrame,
       actual0: DataFrame,
       stateActual: DataFrame): DataFrame = {
-    val fresh = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def cached(df: DataFrame): DataFrame =
-      if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-        fresh += df; df.persist()
-      } else df
-    val ops = cached(ops0)
-    val actual = cached(actual0)
+    val fresh = actual0.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    val actual = if (fresh) actual0.persist() else actual0
     // Pair accounting in CLOSED FORM: `Diff.lanePairs` matches the k-th
     // expected event of a (tbl, opc, pk) group to the k-th actual, so the
     // per-group tallies determine the statuses exactly — matched =
@@ -115,8 +110,8 @@ object Evaluate {
           |  'ordering_issues', inversions,
           |  'state_mismatches', state_mismatches,
           |  'pass', pass) AS (metric, value)""".stripMargin)
-    // release only the frames THIS call persisted; already-cached inputs
-    // stay under their owner's lifecycle
-    graft.operators.CacheLifecycle.releaseAfterUse(report, fresh.toSeq)
+    // release only what THIS call persisted; an already-cached input stays
+    // under its owner's lifecycle
+    graft.operators.CacheLifecycle.releaseAfterUse(report, if (fresh) Seq(actual) else Nil)
   }
 }

@@ -26,23 +26,33 @@ import org.apache.spark.sql.functions._
   */
 object GlobalOrder {
 
-  /** Add a global 1-based rank column (and, if `runningMax` = Some(src, dst),
-    * a running max of `src` over the global order as `dst`) ordered by
-    * `sortCols`. All original columns are preserved. */
-  def rank(
-      df: DataFrame,
-      sortCols: Seq[Column],
-      rankCol: String,
-      runningMax: Option[(String, String)] = None): DataFrame = {
-    val pid = "_go_pid"
-    val localRank = "_go_rn"
-    val localMax = "_go_runmax"
+  /** One running aggregate of [[scan]]: `agg` runs as a window over each
+    * (key, partition) run and as that run's summary; an additive one (count,
+    * sum) adds the summed summaries of earlier partitions, a max takes the
+    * larger of its local value and theirs. */
+  private case class Running(dst: String, agg: Column, additive: Boolean)
 
-    val ranged = df.repartitionByRange(sortCols: _*).withColumn(pid, spark_partition_id())
-    val w = Window.partitionBy(pid).orderBy(sortCols: _*)
-    val cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local0 = ranged.withColumn(localRank, row_number().over(w).cast("long"))
-    // persisted: (a) the partition-summary branches below reuse the ranked
+  /** The prefix scan behind every public form: range-partition on
+    * (key, sort), run each aggregate as a local cumulative window per
+    * (key, partition), summarize each (key, partition), combine the
+    * summaries of the same key's earlier partitions with a tiny triangular
+    * join, and broadcast the offsets back. `keyNames` empty = one global
+    * order. */
+  private def scan(
+      df: DataFrame,
+      keyNames: Seq[String],
+      sortCols: Seq[Column],
+      runs: Seq[Running]): DataFrame = {
+    val pid = "_go_pid"
+    val keyCols = keyNames.map(col)
+    val local = runs.indices.map(i => s"_go_l$i")
+    val summary = runs.indices.map(i => s"_go_s$i")
+    val offset = runs.indices.map(i => s"_go_o$i")
+    val ranged = df.repartitionByRange(keyCols ++ sortCols: _*)
+      .withColumn(pid, spark_partition_id())
+    val cum = Window.partitionBy((keyCols :+ col(pid)): _*).orderBy(sortCols: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    // persisted: (a) the partition-summary branches below reuse the scanned
     // data instead of re-executing its lineage, and (b) the sampled range
     // boundaries (and hence pid assignment) are pinned once — the same
     // cache-for-determinism rule RDD.zipWithIndex callers follow. Sized at
@@ -51,115 +61,74 @@ object GlobalOrder {
     // stays CORRECT without the cache: ranks/prefix sums are boundary-
     // invariant, and within any one action exchange reuse keeps the
     // branches' pid assignment consistent — the cache only saves work).
-    val local = (runningMax match {
-      case Some((src, _)) => local0.withColumn(localMax, max(col(src)).over(cum))
-      case None => local0
-    }).persist()
-
-    val parts = runningMax match {
-      case Some((src, _)) =>
-        local.groupBy(pid).agg(count(lit(1)).as("_go_cnt"), max(col(src)).as("_go_max"))
-      case None =>
-        local.groupBy(pid).agg(count(lit(1)).as("_go_cnt"))
-    }
-    // prefix combine over partition summaries: offsets[p] = Σ cnt[q<p],
-    // prevMax[p] = max over q<p — triangular join of two tiny aggregates
-    val a = parts.select(col(pid).as("_go_p"))
-    val b = parts.withColumnRenamed(pid, "_go_q")
-    val prefixAggs = runningMax match {
-      case Some(_) => Seq(
-        coalesce(sum("_go_cnt"), lit(0L)).as("_go_offset"),
-        max("_go_max").as("_go_prev_max"))
-      case None => Seq(coalesce(sum("_go_cnt"), lit(0L)).as("_go_offset"))
-    }
-    val offsets = a.join(b, col("_go_q") < col("_go_p"), "left")
-      .groupBy("_go_p")
-      .agg(prefixAggs.head, prefixAggs.tail: _*)
-
-    val joined = local.join(broadcast(offsets), col(pid) === col("_go_p"))
-      .withColumn(rankCol, col("_go_offset") + col(localRank))
-    val withMax = runningMax match {
-      case Some((_, dst)) =>
-        joined.withColumn(dst,
-          when(col("_go_prev_max").isNull, col(localMax))
-            .otherwise(greatest(col(localMax), col("_go_prev_max"))))
-      case None => joined
-    }
+    val scanned = runs.zip(local)
+      .foldLeft(ranged) { case (d, (r, l)) => d.withColumn(l, r.agg.over(cum)) }
+      .persist()
+    val parts = scanned.groupBy((keyCols :+ col(pid)): _*)
+      .agg(runs.head.agg.as(summary.head), runs.tail.zip(summary.tail).map {
+        case (r, s) => r.agg.as(s) }: _*)
+    // prefix combine over the summaries of the same key's earlier
+    // partitions: offset[p] = Σ or max over q < p
+    val a = parts.select(keyCols :+ col(pid).as("_go_p"): _*)
+    val b = parts.select(keyNames.map(n => col(n).as(s"_gq_$n")) ++
+      (col(pid).as("_go_q") +: summary.map(col)): _*)
+    val earlier = keyNames.foldRight(col("_go_q") < col("_go_p")) {
+      (n, c) => col(n) === col(s"_gq_$n") && c }
+    val combined = runs.zip(summary).zip(offset).map { case ((r, s), o) =>
+      (if (r.additive) coalesce(sum(s), lit(0L)) else max(s)).as(o) }
+    val offsets = a.join(b, earlier, "left")
+      .groupBy((keyCols :+ col("_go_p")): _*)
+      .agg(combined.head, combined.tail: _*)
+      .select(keyNames.map(n => col(n).as(s"_gk_$n")) ++
+        (col("_go_p") +: offset.map(col)): _*)
+    val sameRun = keyNames.foldRight(col(pid) === col("_go_p")) {
+      (n, c) => col(n) === col(s"_gk_$n") && c }
+    val joined = runs.zip(local).zip(offset)
+      .foldLeft(scanned.join(broadcast(offsets), sameRun)) { case (d, ((r, l), o)) =>
+        d.withColumn(r.dst,
+          if (r.additive) col(o) + col(l)
+          else when(col(o).isNull, col(l)).otherwise(greatest(col(l), col(o))))
+      }
     graft.operators.CacheLifecycle.releaseAfterUse(
-      withMax.drop(pid, localRank, localMax, "_go_p", "_go_offset", "_go_prev_max"),
-      Seq(local))
+      joined.drop(keyNames.map(n => s"_gk_$n") ++ Seq(pid, "_go_p") ++ local ++ offset: _*),
+      Seq(scanned))
   }
 
+  /** Add a global 1-based rank column (and, if `runningMax` = Some(src, dst),
+    * a running max of `src` over the global order as `dst`) ordered by
+    * `sortCols`. All original columns are preserved. The rank is a running
+    * count. */
+  def rank(
+      df: DataFrame,
+      sortCols: Seq[Column],
+      rankCol: String,
+      runningMax: Option[(String, String)] = None): DataFrame =
+    scan(df, Nil, sortCols, Running(rankCol, count(lit(1)), additive = true) +:
+      runningMax.toSeq.map { case (src, dst) => Running(dst, max(col(src)), additive = false) })
+
   /** Distributed prefix sum: `dstCol` = Σ `srcCol` over all rows at or
-    * before this one in `sortCols` order — same shape as [[rank]] (range
-    * partition → local cumulative sum → tiny triangular prefix combine →
-    * broadcast back), no single-partition window anywhere. `sortCols` must
-    * be a total order. */
+    * before this one in `sortCols` order — the same scan as [[rank]], no
+    * single-partition window anywhere. `sortCols` must be a total order. */
   def runningSum(
       df: DataFrame,
       sortCols: Seq[Column],
       srcCol: String,
-      dstCol: String): DataFrame = {
-    val pid = "_go_pid"
-    val localSum = "_go_lsum"
-    val ranged = df.repartitionByRange(sortCols: _*).withColumn(pid, spark_partition_id())
-    val cum = Window.partitionBy(pid).orderBy(sortCols: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = ranged.withColumn(localSum, sum(col(srcCol)).over(cum)).persist()
-    val parts = local.groupBy(pid).agg(sum(col(srcCol)).as("_go_psum"))
-    val a = parts.select(col(pid).as("_go_p"))
-    val b = parts.withColumnRenamed(pid, "_go_q")
-    val offsets = a.join(b, col("_go_q") < col("_go_p"), "left")
-      .groupBy("_go_p")
-      .agg(coalesce(sum("_go_psum"), lit(0L)).as("_go_offset"))
-    graft.operators.CacheLifecycle.releaseAfterUse(
-      local.join(broadcast(offsets), col(pid) === col("_go_p"))
-        .withColumn(dstCol, col("_go_offset") + col(localSum))
-        .drop(pid, localSum, "_go_p", "_go_offset"),
-      Seq(local))
-  }
+      dstCol: String): DataFrame =
+    scan(df, Nil, sortCols, Seq(Running(dstCol, sum(col(srcCol)), additive = true)))
 
   /** Per-KEY distributed prefix sum: `dstCol` = Σ `srcCol` over all rows of
     * the same `keyCols` at or before this one in `sortCols` order. The
     * keyed generalization of [[runningSum]] for when a single key's rows
     * exceed one partition (a `Window.partitionBy(key)` cumsum funnels each
     * key through ONE task — fine for small keys, fatal for a key holding a
-    * 100 TB corpus slice): range-partition on (key, sort) so each key
-    * spans a contiguous partition run, local cumsum per (key, partition),
-    * per-(key, partition) totals combined by a key-local triangular join,
-    * broadcast back. `keyCols ++ sortCols` must be a total order. */
+    * 100 TB corpus slice): range-partitioning on (key, sort) makes each key
+    * span a contiguous partition run, and the prefix combine stays within
+    * the key. `keyCols ++ sortCols` must be a total order. */
   def keyedRunningSum(
       df: DataFrame,
       keyNames: Seq[String],
       sortCols: Seq[Column],
       srcCol: String,
-      dstCol: String): DataFrame = {
-    val pid = "_go_pid"
-    val localSum = "_go_lsum"
-    val keyCols = keyNames.map(col)
-    val ranged = df.repartitionByRange(keyCols ++ sortCols: _*)
-      .withColumn(pid, spark_partition_id())
-    val cum = Window.partitionBy((keyCols :+ col(pid)): _*).orderBy(sortCols: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = ranged.withColumn(localSum, sum(col(srcCol)).over(cum)).persist()
-    val parts = local.groupBy((keyCols :+ col(pid)): _*).agg(sum(col(srcCol)).as("_go_psum"))
-    val a = parts.select(keyCols :+ col(pid).as("_go_p"): _*)
-    val b = parts.select(
-      keyNames.map(n => col(n).as(s"_gq_$n")) ++
-        Seq(col(pid).as("_go_q"), col("_go_psum")): _*)
-    val sameKey = keyNames.map(n => col(n) === col(s"_gq_$n")).reduce(_ && _)
-    val offsets = a.join(b, sameKey && col("_go_q") < col("_go_p"), "left")
-      .groupBy((keyCols :+ col("_go_p")): _*)
-      .agg(coalesce(sum("_go_psum"), lit(0L)).as("_go_offset"))
-    val offsetsR = offsets.select(
-      keyNames.map(n => col(n).as(s"_gk_$n")) ++ Seq(col("_go_p"), col("_go_offset")): _*)
-    val joinCond = keyNames.map(n => col(n) === col(s"_gk_$n")).reduce(_ && _) &&
-      col(pid) === col("_go_p")
-    graft.operators.CacheLifecycle.releaseAfterUse(
-      local.join(broadcast(offsetsR), joinCond)
-        .withColumn(dstCol, col("_go_offset") + col(localSum))
-        .drop(keyNames.map(n => s"_gk_$n") ++
-          Seq(pid, localSum, "_go_p", "_go_offset"): _*),
-      Seq(local))
-  }
+      dstCol: String): DataFrame =
+    scan(df, keyNames, sortCols, Seq(Running(dstCol, sum(col(srcCol)), additive = true)))
 }

@@ -7,6 +7,13 @@ package graft.streaming
   * and returns the next state and the emitted rows; chopped == one-shot on
   * the documented arrival order (FoldPropertiesSpec). The operators that
   * run them on a stream are in [[StreamsV2]].
+  *
+  * The sequential CDC operators (merge-upsert apply, token-bucket
+  * throttle, FIFO broker) are a per-event `*Step` that both forms run: the
+  * fold sorts a micro-batch and threads the step from the carried state;
+  * the batch operator in `graft.cdc` threads it through each key's sorted
+  * group from the key's empty state. The drift broker's batch form runs
+  * [[driftFold]] itself.
   */
 object Streams {
 
@@ -35,94 +42,144 @@ object Streams {
       txId: String, nEvents: Int, commitTs: Long, firstLsn: Long,
       events: Seq[Event])
 
+  /** Thread a per-event `step` from `init` through `events`, lazily: the
+    * emitted rows in order, and the carried state as `state` once they are
+    * consumed. A batch operator maps a key group's sorted iterator through
+    * it; a `*Fold` drains one sorted micro-batch and keeps `state`. */
+  final class Threaded[S, I, O](init: S, events: Iterator[I], step: (S, I) => (S, O))
+      extends Iterator[O] {
+    var state: S = init
+    def hasNext: Boolean = events.hasNext
+    def next(): O = {
+      val (s, o) = step(state, events.next())
+      state = s
+      o
+    }
+  }
+
+  private def thread[S, I, O](st: S, sorted: Seq[I])(step: (S, I) => (S, O)): (S, Seq[O]) = {
+    val t = new Threaded(st, sorted.iterator, step)
+    val out = t.toVector
+    (t.state, out)
+  }
+
   /** Materialized destination row emitted by the streaming apply. */
   case class RowState(
       tbl: String, pk: String, valV: Option[Double], kV: Option[Long],
       version: Long, deleted: Boolean, lastLsn: Long = 0L)
 
-  /** One apply step for a batch of same-key events — the fold of
-    * [[StreamsV2.applyStream]]: events process in lsn order, delete
-    * resets to a tombstone, partial payloads merge over the current
-    * image. */
-  def applyFold(key: (String, String), start: Option[RowState],
-      incoming: Seq[Event]): RowState = {
-    val init = start.getOrElse(
-      RowState(key._1, key._2, None, None, 0L, deleted = true))
-    incoming.sortBy(_.lsn).foldLeft(init) { (cur, e) =>
-      if (e.opCode == "d")
-        RowState(key._1, key._2, None, None, 0L, deleted = true, lastLsn = e.lsn)
-      else {
-        val base = if (cur.deleted) RowState(key._1, key._2, None, None, 0L, deleted = false) else cur
-        base.copy(
-          valV = if (e.setsVal) e.valV else base.valV,
-          kV = if (e.setsK) e.kV else base.kV,
-          version = base.version + 1,
-          deleted = false,
-          lastLsn = e.lsn)
-      }
+  /** A key's image before its first op, and after a delete. */
+  def tombstone(tbl: String, pk: String): RowState =
+    RowState(tbl, pk, None, None, 0L, deleted = true)
+
+  /** One merge-upsert op (`src/domain/storage.ts:137-164`): delete resets to
+    * the tombstone; insert/update shallow-merge the partial payload over the
+    * current image (`{...current, ...after}` — only the fields the op sets
+    * overwrite) and count one more version in the row's current lifetime. */
+  def applyStep(cur: RowState, delete: Boolean, setsVal: Boolean, valV: Option[Double],
+      setsK: Boolean, kV: Option[Long], lsn: Long): RowState =
+    if (delete) tombstone(cur.tbl, cur.pk).copy(lastLsn = lsn)
+    else {
+      val base = if (cur.deleted) tombstone(cur.tbl, cur.pk) else cur
+      base.copy(
+        valV = if (setsVal) valV else base.valV,
+        kV = if (setsK) kV else base.kV,
+        version = base.version + 1,
+        deleted = false,
+        lastLsn = lsn)
     }
-  }
+
+  /** One apply step for a batch of same-key events — the fold of
+    * [[StreamsV2.applyStream]]: events process in lsn order through
+    * [[applyStep]]. */
+  def applyFold(key: (String, String), start: Option[RowState],
+      incoming: Seq[Event]): RowState =
+    incoming.sortBy(_.lsn).foldLeft(start.getOrElse(tombstone(key._1, key._2))) { (cur, e) =>
+      applyStep(cur, e.opCode == "d", e.setsVal, e.valV, e.setsK, e.kV, e.lsn)
+    }
 
   /** Token-bucket carry-over state for the streaming throttle. */
   case class ThrottleState(tick: Long, allowance: Double, usedThisTick: Int)
 
-  /** One micro-batch step of the token-bucket drain: fold `incoming`
-    * (any order; sorted internally) through the bucket, returning the
-    * carried state and the drained events ([[StreamsV2.throttleStream]]). */
-  def throttleFold(
-      st: ThrottleState,
-      incoming: Seq[graft.cdc.Consumer.DeliveryIn],
-      rate: Double, stepMs: Long, batchCap: Int)
-      : (ThrottleState, Seq[graft.cdc.Consumer.DeliveryOut]) = {
+  /** A lane's bucket before its first event. */
+  val EmptyBucket: ThrottleState = ThrottleState(0L, 0.0, 0)
+
+  /** One event through the token bucket (`web/App.tsx:2106-2113,2185-2201`):
+    * every `stepMs` tick, `allowance += rate * stepMs / 1000` capped at
+    * `5 * rate`; a tick drains at most `min(floor(allowance), batchCap)`
+    * events. Drain order is arrival order (FIFO per lane), so the event
+    * drains at the first tick with a token and quota left. The clock jumps
+    * straight to the event's availability tick: idle ticks only accrue
+    * allowance, which the cap bounds, so the jump is lossless (ticking one
+    * step at a time through epoch timestamps would spin forever). */
+  def throttleStep(rate: Double, stepMs: Long, batchCap: Int)(
+      st: ThrottleState, e: graft.cdc.Consumer.DeliveryIn)
+      : (ThrottleState, graft.cdc.Consumer.DeliveryOut) = {
     val cap = 5 * rate
     val perTick = rate * stepMs / 1000.0
     var tick = st.tick
     var allowance = st.allowance
     var used = st.usedThisTick
-    val out = incoming.sortBy(e => (e.availableAt, e.seq)).map { e =>
-      val needTick = Math.floorDiv(e.availableAt - 1, stepMs) + 1
-      if (needTick > tick) {
-        allowance = math.min(allowance + perTick * (needTick - tick), cap)
-        tick = needTick
-        used = 0
-      }
-      while (allowance < 1.0 || used >= batchCap) {
-        tick += 1
-        allowance = math.min(allowance + perTick, cap)
-        used = 0
-      }
-      allowance -= 1
-      used += 1
-      graft.cdc.Consumer.DeliveryOut(e.method, e.seq, e.availableAt, tick, tick * stepMs)
+    val needTick = Math.floorDiv(e.availableAt - 1, stepMs) + 1
+    if (needTick > tick) {
+      allowance = math.min(allowance + perTick * (needTick - tick), cap)
+      tick = needTick
+      used = 0
     }
-    (ThrottleState(tick, allowance, used), out)
+    while (allowance < 1.0 || used >= batchCap) {
+      tick += 1
+      allowance = math.min(allowance + perTick, cap)
+      used = 0
+    }
+    (ThrottleState(tick, allowance - 1, used + 1),
+      graft.cdc.Consumer.DeliveryOut(e.method, e.seq, e.availableAt, tick, tick * stepMs))
   }
+
+  /** One micro-batch step of the token-bucket drain: `incoming` (any
+    * order) drains in (availableAt, seq) order through [[throttleStep]],
+    * returning the carried state and the drained events
+    * ([[StreamsV2.throttleStream]]). */
+  def throttleFold(
+      st: ThrottleState,
+      incoming: Seq[graft.cdc.Consumer.DeliveryIn],
+      rate: Double, stepMs: Long, batchCap: Int)
+      : (ThrottleState, Seq[graft.cdc.Consumer.DeliveryOut]) =
+    thread(st, incoming.sortBy(e => (e.availableAt, e.seq)))(
+      throttleStep(rate, stepMs, batchCap))
 
   /** Per-partition queue state for the streaming broker delivery. */
   case class BrokerQueueState(tick: Long, usedThisTick: Int)
 
-  /** One micro-batch step of the FIFO broker delivery: fold `incoming` (any
-    * order; sorted by lsn internally — the enqueue order) through the
-    * per-partition (tick, used) queue state
-    * ([[StreamsV2.brokerDeliverStream]]). */
+  /** A broker partition's queue before its first event. */
+  val EmptyQueue: BrokerQueueState = BrokerQueueState(0L, 0)
+
+  /** One event off a FIFO broker queue (`model.ts:246-263` `pollBroker`):
+    * events leave in enqueue (lsn) order, an unavailable head blocks
+    * everything behind it, and a tick delivers at most `maxApplyPerTick`;
+    * a dropped event uses quota without being delivered. */
+  def brokerStep(tickMs: Long, maxApplyPerTick: Int)(
+      st: BrokerQueueState, e: graft.cdc.Consumer.BrokerIn)
+      : (BrokerQueueState, graft.cdc.Consumer.BrokerOut) = {
+    // first tick whose clock (tick·tickMs) has reached availableAt
+    val availTick = Math.floorDiv(e.availableAt - 1, tickMs) + 1
+    var tick = st.tick
+    var used = st.usedThisTick
+    if (availTick > tick) { tick = availTick; used = 0 }
+    if (used >= maxApplyPerTick) { tick += 1; used = 0 }
+    (BrokerQueueState(tick, used + 1), graft.cdc.Consumer.BrokerOut(
+      e.part, e.lsn, e.availableAt, e.dropped, tick, tick * tickMs))
+  }
+
+  /** One micro-batch step of the FIFO broker delivery: `incoming` (any
+    * order) drains in lsn order — the enqueue order — through
+    * [[brokerStep]] ([[StreamsV2.brokerDeliverStream]]). */
   def brokerFold(
       part: Int,
       st: BrokerQueueState,
       incoming: Seq[graft.cdc.Consumer.BrokerIn],
       tickMs: Long, maxApplyPerTick: Int)
-      : (BrokerQueueState, Seq[graft.cdc.Consumer.BrokerOut]) = {
-    var tick = st.tick
-    var used = st.usedThisTick
-    val out = incoming.sortBy(_.lsn).map { e =>
-      val availTick = Math.floorDiv(e.availableAt - 1, tickMs) + 1
-      if (availTick > tick) { tick = availTick; used = 0 }
-      if (used >= maxApplyPerTick) { tick += 1; used = 0 }
-      used += 1
-      graft.cdc.Consumer.BrokerOut(
-        e.part, e.lsn, e.availableAt, e.dropped, tick, tick * tickMs)
-    }
-    (BrokerQueueState(tick, used), out)
-  }
+      : (BrokerQueueState, Seq[graft.cdc.Consumer.BrokerOut]) =
+    thread(st, incoming.sortBy(_.lsn))(brokerStep(tickMs, maxApplyPerTick))
 
   /** A pending drift-broker stack entry (public for the state encoder). */
   case class DriftEntry(lsn: Long, t: Long, availableAt: Long, dropped: Boolean)
@@ -131,6 +188,9 @@ object Streams {
     * stack (head first). Stack size is bounded by the partition backlog —
     * the same bound the reference's in-memory queue carries. */
   case class DriftQueueState(tick: Long, stack: Seq[DriftEntry])
+
+  /** A drift-broker partition before its first event. */
+  val EmptyStack: DriftQueueState = DriftQueueState(0L, Seq.empty)
 
   /** One micro-batch step of the drift-broker LIFO drain. Simulates ticks
     * strictly BEFORE the batch's latest arrival tick, pushes the final

@@ -217,7 +217,8 @@ object StreamsV2 {
   }
 
   /** Streaming merge-upsert apply keyed by (tbl, pk) — the unbounded form of
-    * `ApplyEngine.applyState`: delete clears, partial payloads merge
+    * `ApplyEngine.applyState`, over the same per-op step
+    * ([[Streams.applyStep]]): delete clears, partial payloads merge
     * (`src/domain/storage.ts:137-164`). Emits the post-image after each
     * micro-batch's events for the key (ordered by lsn within the batch).
     * Deleted keys emit a `deleted = true` tombstone and drop their state. */
@@ -264,10 +265,11 @@ object StreamsV2 {
   }
 
   /** Streaming consumer throttle — the unbounded form of
-    * `Consumer.throttleDrain` (`web/App.tsx:2106-2113,2185-2201`): the
-    * per-lane token bucket (tick, allowance, used) is keyed state carried
-    * across micro-batches, so a lane's drain schedule is identical no
-    * matter how the stream is chopped. Within a batch, events drain in
+    * `Consumer.throttleDrain` (`web/App.tsx:2106-2113,2185-2201`), over the
+    * same per-event step ([[Streams.throttleStep]]): the per-lane token
+    * bucket (tick, allowance, used) is keyed state carried across
+    * micro-batches, so a lane's drain schedule is identical no matter how
+    * the stream is chopped. Within a batch, events drain in
     * (availableAt, seq) order ([[Streams.throttleFold]]). */
   def throttleStream(
       events: Dataset[graft.cdc.Consumer.DeliveryIn],
@@ -285,17 +287,17 @@ object StreamsV2 {
             graft.cdc.Consumer.DeliveryOut](
           "bucket", Encoders.product[ThrottleState], ttl)((_, st, rows) => {
           val (next, out) = throttleFold(
-            st.getOrElse(ThrottleState(0L, 0.0, 0)), rows, rate, stepMs, batchCap)
+            st.getOrElse(EmptyBucket), rows, rate, stepMs, batchCap)
           (Some(next), out)
         }),
         mode, OutputMode.Append())
   }
 
   /** Streaming exact broker delivery — the unbounded form of
-    * `Consumer.brokerDeliverExact` (`model.ts:246-263` `pollBroker`): each
-    * partition's (tick, used) queue state is keyed, so per-tick caps and
-    * head-of-line FIFO order carry across micro-batches
-    * ([[Streams.brokerFold]]). Exactly-once FIFO requires lsn-ordered
+    * `Consumer.brokerDeliverExact` (`model.ts:246-263` `pollBroker`), over
+    * the same per-event step ([[Streams.brokerStep]]): each partition's
+    * (tick, used) queue state is keyed, so per-tick caps and head-of-line
+    * FIFO order carry across micro-batches ([[Streams.brokerFold]]). Exactly-once FIFO requires lsn-ordered
     * arrival per partition (the broker's own guarantee). */
   def brokerDeliverStream(
       events: Dataset[graft.cdc.Consumer.BrokerIn],
@@ -310,7 +312,7 @@ object StreamsV2 {
             graft.cdc.Consumer.BrokerOut](
           "queue", Encoders.product[BrokerQueueState], TTLConfig.NONE)((part, st, rows) => {
           val (next, out) = brokerFold(
-            part, st.getOrElse(BrokerQueueState(0L, 0)), rows, tickMs, maxApplyPerTick)
+            part, st.getOrElse(EmptyQueue), rows, tickMs, maxApplyPerTick)
           (Some(next), out)
         }),
         TimeMode.None(), OutputMode.Append())
@@ -331,7 +333,7 @@ object StreamsV2 {
         "driftQueue", Encoders.product[DriftQueueState], TTLConfig.NONE)
 
     private def current: DriftQueueState =
-      if (queue.exists()) queue.get() else DriftQueueState(0L, Seq.empty)
+      if (queue.exists()) queue.get() else EmptyStack
 
     override def handleInputRows(
         part: Int, rows: Iterator[graft.cdc.Consumer.DriftIn],
@@ -356,7 +358,8 @@ object StreamsV2 {
   }
 
   /** Streaming exact drift-on broker delivery — the unbounded form of
-    * `Consumer.brokerDeliverDriftExact` (`model.ts:141-149,246-263`): with
+    * `Consumer.brokerDeliverDriftExact` (`model.ts:141-149,246-263`), whose
+    * batch form runs the same fold ([[Streams.driftFold]]): with
     * commit drift every event is spliced into the queue FRONT, so pending
     * events form a LIFO stack and a drifted head blocks older events.
     *

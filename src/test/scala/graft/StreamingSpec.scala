@@ -171,6 +171,36 @@ class StreamingSpec extends SparkSpec {
         if (r.isNullAt(3)) None else Some(r.getLong(3))))).toMap
     assert(streamed === batchState)
     q.stop()
+
+    // seeded random feed: twelve keys over two tables, partial updates, and
+    // deletes followed by re-inserts of the same key (the version resets)
+    val rng = new scala.util.Random(19L)
+    val live = scala.collection.mutable.Set.empty[(String, String)]
+    val feed = (1 to 120).map { i =>
+      val key = (s"t${rng.nextInt(2)}", s"k${rng.nextInt(6)}")
+      val op = if (!live(key)) "c" else if (rng.nextInt(4) == 0) "d" else "u"
+      if (op == "d") live -= key else live += key
+      val sv = op != "d" && rng.nextBoolean()
+      val sk = op != "d" && rng.nextBoolean()
+      Event(s"tx-$i", 0, 1, last = true, key._1, key._2, op,
+        sv, if (sv) Some(rng.nextInt(100).toDouble) else None,
+        sk, if (sk) Some(rng.nextInt(100).toLong) else None,
+        commitTs = i * 10L, lsn = i.toLong)
+    }
+    assert(feed.groupBy(e => (e.tbl, e.pk)).values.exists(_.map(_.opCode).mkString.contains("dc")),
+      "the feed must re-insert a deleted key")
+    val images = runBatches[Event, RowState]("parity_random", feed.grouped(40).toSeq)(
+      StreamsV2.applyStream(_, ttlMs = 0L))
+      .groupBy(r => (r.tbl, r.pk))
+      .map { case (k, rs) => k -> rs.maxBy(_.lastLsn) }
+      .filter(!_._2.deleted)
+      .map { case (k, r) => k -> ((r.valV, r.kV, r.version)) }
+    val opName = Map("c" -> "insert", "u" -> "update", "d" -> "delete")
+    val folded = graft.cdc.ApplyEngine.applyState(graft.sources.WorkloadGen.toOpsDf(spark,
+      feed.map(e => (e.commitTs, e.tbl, e.pk, opName(e.opCode), e.setsVal, e.valV, e.setsK, e.kV))))
+      .as[(String, String, Option[Double], Option[Long], Long, Long)].collect()
+      .map(r => (r._1, r._2) -> ((r._3, r._4, r._5))).toMap
+    assert(images === folded, "random feed: streamed images and versions == batch fold")
   }
 
   test("offset dedup drops replayed events within the watermark") {
@@ -254,6 +284,18 @@ class StreamingSpec extends SparkSpec {
     assert(streamed === batch, "bucket state must survive the batch boundary")
     assert(streamed(5L) === 3L && streamed(6L) === 3L) // 2/tick → ticks 1,1,2,2,3,3
     q.stop()
+
+    // seeded random feed: three lanes, tied availableAt, more events per
+    // tick than the cap; chopped in per-lane (availableAt, seq) order
+    val rng = new scala.util.Random(23L)
+    val feed = (1 to 90).map(i => DeliveryIn(s"m${rng.nextInt(3)}", i.toLong, rng.nextInt(8) * 250L))
+      .sortBy(e => (e.availableAt, e.seq))
+    assert(feed.groupBy(e => (e.method, e.availableAt)).values.exists(_.size > 3))
+    val ticks = runBatches[DeliveryIn, DeliveryOut]("throttle_random", Seq(feed.take(40), feed.drop(40)))(
+      StreamsV2.throttleStream(_, rate = 20.0, stepMs = 100L, batchCap = 3))
+      .map(e => e.seq -> e.drainTick).toMap
+    assert(ticks === Consumer.throttleDrain(feed.toDS(), rate = 20.0, stepMs = 100L, batchCap = 3)
+      .collect().map(e => e.seq -> e.drainTick).toMap, "random feed: streamed == batch drain")
   }
 
   test("streaming broker delivery carries queue state across batches (== batch fold)") {
@@ -281,6 +323,17 @@ class StreamingSpec extends SparkSpec {
     // ticks: (1,1), (2,2), (3) — the drop at lsn 2 consumed tick-1 quota
     assert(streamed === Map(1L -> 1L, 2L -> 1L, 3L -> 2L, 4L -> 2L, 5L -> 3L))
     q.stop()
+
+    // seeded random feed: three partitions, tied availableAt, dropped
+    // events; chopped in lsn order
+    val rng = new scala.util.Random(29L)
+    val feed = (1 to 90).map(i =>
+      BrokerIn(rng.nextInt(3), i.toLong, rng.nextInt(10) * 20L, dropped = rng.nextInt(5) == 0))
+    val ticks = runBatches[BrokerIn, BrokerOut]("broker_random", Seq(feed.take(45), feed.drop(45)))(
+      StreamsV2.brokerDeliverStream(_, tickMs = 50L, maxApplyPerTick = 2))
+      .map(e => e.lsn -> e.deliverTick).toMap
+    assert(ticks === Consumer.brokerDeliverExact(feed.toDS(), tickMs = 50L, maxApplyPerTick = 2)
+      .collect().map(e => e.lsn -> e.deliverTick).toMap, "random feed: streamed == batch delivery")
   }
 
   test("streaming drift broker: LIFO stack state carries across batches (== batch fold)") {
@@ -328,6 +381,23 @@ class StreamingSpec extends SparkSpec {
     assert(streamed(4L) === 3L && streamed(3L) === 3L)
     assert(streamed(5L) === 4L && streamed(2L) === 4L && streamed(1L) === 5L)
     q.stop()
+
+    // seeded random feed: three partitions, several arrivals per tick (tied
+    // t and availableAt), half drifted, dropped events; chopped in lsn order
+    val rng = new scala.util.Random(31L)
+    var t = 0L
+    val feed = (1 to 60).map { i =>
+      t += rng.nextInt(2) * 10L
+      DriftIn(rng.nextInt(3), i.toLong, t, if (rng.nextBoolean()) t + 50L else t,
+        dropped = rng.nextInt(5) == 0)
+    }
+    val sentinels = (0 to 2).map(p => DriftIn(p, 9000L + p, 100000L, 100000L, dropped = true))
+    val ticks = runBatches[DriftIn, BrokerOut]("drift_random",
+      Seq(feed.take(25), feed.drop(25), sentinels))(
+      StreamsV2.brokerDeliverDriftStream(_, tickMs = 50L, maxApplyPerTick = 2))
+      .filter(_.lsn < 9000L).map(e => e.lsn -> e.deliverTick).toMap
+    assert(ticks === Consumer.brokerDeliverDriftExact(feed.toDS(), tickMs = 50L, maxApplyPerTick = 2)
+      .collect().map(e => e.lsn -> e.deliverTick).toMap, "random feed: streamed == batch delivery")
   }
 
   test("streaming rolling lag ring buffer: final snapshot equals the batch window") {
