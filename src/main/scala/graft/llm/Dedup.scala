@@ -105,7 +105,10 @@ object Dedup {
     * duplicates are assumed already removed upstream by [[exactKeep]]
     * (run hash-dedup BEFORE minhash, the standard pipeline order).
     * Default `Int.MaxValue` = no cap (small-corpus exact-recall form);
-    * the capped form is the default SCALE path.
+    * the capped form is the default SCALE path. The bucket size is a
+    * `count(1)` window over the pair join's own (band, key) partitioning
+    * ([[graft.operators.BandJoin.pairs]]): the cap adds no exchange and
+    * no join, and neither form builds a broadcast hash relation.
     */
   def minhashCandidates(docs: DataFrame, n: Int = 2, bands: Int = 4, rowsPerBand: Int = 2,
       maxBucket: Int = Int.MaxValue): DataFrame =
@@ -205,7 +208,11 @@ object Dedup {
     * [[minhashCandidates]] stays available as the exact-recall opt-in.
     * The signature frame is checkpointed so the band join and the star
     * edges share one shingle→minhash scan; a caller may persist the
-    * result safely (no release of the signatures re-plans it).
+    * result safely (no release of the signatures re-plans it). The cached
+    * plan holds no broadcast hash relation: the cap and the star edges
+    * are windows and the pair join sort-merges ([[BandJoin]]), so a
+    * persisted candidate set keeps its rows alive, not a 16 MB
+    * hash-relation page per join.
     *
     * Runs the signature shuffle when called, not at the result's action.
     * The checkpoint is reliable only when the context has a checkpoint

@@ -227,8 +227,12 @@ object Similarity {
     * ordering, same smaller-c_id tie-break) with zero Exchange and zero row
     * fan-out. No null guard: the expression is null only for an EMPTY
     * centroid array (unreachable — the seed is the first nLists corpus
-    * vectors), and a guard would be pushed into the broadcast join
-    * condition, evaluating the argmax twice per row. Returns
+    * vectors), and a guard is pushed into the broadcast join condition,
+    * evaluating the argmax twice per row. Leaving it out does not prevent
+    * that: a consumer that joins on `list_id` gets an inferred
+    * `isnotnull(list_id)`, which lands in the same join condition
+    * (`semDedupBanded`'s band self-join over its copy of this projection
+    * does: `isnotnull(nearest_centroid(…).c_id)` in its plan). Returns
     * (vec_id, list_id, embedding, nrm). */
   private def assignNearest(vectors: DataFrame, centroids: DataFrame): DataFrame =
     vectors.crossJoin(broadcast(centArray(centroids)))
