@@ -7,7 +7,10 @@ Usage:
 
 Counts `(n) <Node>` DETAIL blocks (not tree lines — a reused exchange
 prints once as a detail block), classifying Exchange kind from the
-following `Arguments:` line. Prints the markdown table to stdout.
+following `Arguments:` line. `reused` counts `ReusedExchange` blocks (a
+subtree the planner shares; they show in `graft.Plans --executed` dumps)
+and `cached` counts `InMemoryTableScan` blocks (reads of a persisted
+frame). Prints the markdown table to stdout.
 """
 import re
 import sys
@@ -20,7 +23,8 @@ def main():
     rows = {}
     for i in range(1, len(sections), 2):
         name, body = sections[i], sections[i + 1]
-        counts = {k: 0 for k in ("hash", "range", "single", "bcast", "BHJ", "SMJ")}
+        counts = {k: 0 for k in ("hash", "range", "single", "bcast", "BHJ", "SMJ",
+                                  "reused", "cached")}
         blocks = re.split(r"^\((\d+)\) ", body, flags=re.M)
         for j in range(1, len(blocks), 2):
             block = blocks[j + 1]
@@ -33,6 +37,10 @@ def main():
                 counts[{"hashpartitioning": "hash",
                         "rangepartitioning": "range",
                         "SinglePartition": "single"}[kind]] += 1
+            elif node == "ReusedExchange":
+                counts["reused"] += 1
+            elif node == "InMemoryTableScan":
+                counts["cached"] += 1
             elif node == "BroadcastExchange":
                 counts["bcast"] += 1
             elif node.startswith("BroadcastHashJoin"):
@@ -40,12 +48,13 @@ def main():
             elif node.startswith("SortMergeJoin"):
                 counts["SMJ"] += 1
         rows[name] = counts
-    print("| query | hash | range | single | bcast | BHJ | SMJ |")
-    print("|---|---|---|---|---|---|---|")
+    print("| query | hash | range | single | bcast | BHJ | SMJ | reused | cached |")
+    print("|---|---|---|---|---|---|---|---|---|")
     for name in sorted(rows):
         c = rows[name]
         print(f"| {name} | {c['hash']} | {c['range']} | {c['single']} "
-              f"| {c['bcast']} | {c['BHJ']} | {c['SMJ']} |")
+              f"| {c['bcast']} | {c['BHJ']} | {c['SMJ']} "
+              f"| {c['reused']} | {c['cached']} |")
 
 
 if __name__ == "__main__":

@@ -38,8 +38,9 @@ import org.apache.spark.sql.SparkSession
   *   - `spark.sql.codegen.fallback=false`: a whole-stage-codegen compile
   *     failure fails the query into the `failed` list instead of silently
   *     running 10× slower interpreted;
-  *   - the cache is cleared between reps so queries that persist lineage
-  *     (evaluate, GlobalOrder) measure cold each rep, not cache hits.
+  *   - the cache is cleared between reps, so no rep reads a cache an
+  *     earlier one left (queries scaffold shared frames with checkpoints,
+  *     which every rep rebuilds).
   *
   * Failed queries are excluded from timings, so a failure can never deflate
   * the total.

@@ -12,7 +12,9 @@ import org.apache.spark.sql.execution.FormattedMode
   * `graft_idx_<tmp>` and a run-tagged table or path
   * (`graft_bq_lineitem_local_1760…_…`) as `_local_<run>_…`. Expression
   * ids (`#123`) and `plan_id`s are left as they are. Usage:
-  *   runMain graft.Plans [sfDir] [query ...]
+  *   runMain graft.Plans [sfDir] [--executed] [query ...]
+  * `--executed` runs each query and prints its final adaptive plan, where
+  * a subtree the planner shares shows as `ReusedExchange`.
   */
 object Plans {
 
@@ -39,9 +41,11 @@ object Plans {
     // documents uniformly, instead of excluding an inconsistent subset
     // (round-12 ADVICE). Per-round plans are dedup_clusters' budgeted
     // cost, audited by the SCALE.md contraction-exponent rows, not here.
-    val names = if (args.length > 1 && args(1) == "all")
+    val executed = args.length > 1 && args(1) == "--executed"
+    val given = args.drop(if (executed) 2 else 1).toSeq
+    val names = if (given == Seq("all"))
       SparkEntry.queries.keys.toSeq.sorted
-    else if (args.length > 1) args.drop(1).toSeq
+    else if (given.nonEmpty) given
       else Seq("cdc_apply_state", "cdc_difflane", "q1_lineitem_agg",
         "q_region_revenue", "dedup_jaccard", "ann_cosine_topk",
         "cdc_evaluate", "cdc_txn_apply", "cdc_commit_floor", "ann_ivf_topk",
@@ -52,8 +56,9 @@ object Plans {
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       println(s"\n========== $name ==========")
-      println(stable(SparkEntry.queries(name)(spark, sfDir)
-        .queryExecution.explainString(FormattedMode)))
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      if (executed) df.collect()
+      println(stable(df.queryExecution.explainString(FormattedMode)))
     }
     spark.stop()
   }

@@ -9,7 +9,7 @@ import graft.cdc._
 import graft.functions.GraftFunctions
 import graft.llm.{Chunking, Clusters, Corpus, Dedup, Multimodal, Packing, Pii, Sampling, TextAnalysis}
 import graft.llm.Similarity
-import graft.operators.{AsOfJoin, RangeJoin, SaltedJoin, Sessions}
+import graft.operators.{AsOfJoin, CacheLifecycle, RangeJoin, SaltedJoin, Sessions}
 import graft.sources.{DebeziumSource, Tables}
 
 /** CDC capture / apply / diff / metrics / txn / broker / evaluate queries — one link of the ordered `SparkEntry` trait
@@ -69,13 +69,15 @@ private[graft] trait SparkEntryCdc extends SparkEntryBase {
       // ONE enriched lineage feeds both phases: the seed is the state at
       // the cut, read off the cumulative window images (argmax by lsn over
       // rows at or before the cut) — no second merge fold, no second
-      // parquet scan. Projected before persisting; both phases and the cut
-      // aggregate scan the same cache.
+      // parquet scan. Projected before scaffolding; both phases and the cut
+      // aggregate scan the same checkpoint. The 1-row cut is scaffolded
+      // too: both GlobalOrder scans build their own scaffold over it, and
+      // separate builds share no exchange.
       val state = st(s, dir)
         .select("tbl", "pk", "op", "lsn", "t", "prev_val", "prev_k",
           "cur_val", "cur_k")
-        .persist()
-      val cut = state.agg(expr("(min(t) + max(t)) div 2").as("cut"))
+        .transform(CacheLifecycle.scaffold)
+      val cut = CacheLifecycle.scaffold(state.agg(expr("(min(t) + max(t)) div 2").as("cut")))
       // primitive-buffer aggregation only (round-18): max_by over a struct
       // carrying the `op` STRING forced SortAggregate — a full sort of the
       // pre-cut state stream by (tbl, pk) before the partial agg. The
@@ -105,8 +107,7 @@ private[graft] trait SparkEntryCdc extends SparkEntryBase {
         .select((col("tail_rank") + col("n_snap")).as("offset"),
           lit("tail").as("phase"), col("tbl"), col("pk"), col("op_code"),
           col("after_val").as("val"), col("after_k").as("k"))
-      graft.operators.CacheLifecycle.releaseAfterUse(
-        snap.unionAll(tail).orderBy("offset"), Seq(state))
+      snap.unionAll(tail).orderBy("offset")
     }),
     // DBLog / Debezium incremental snapshot: chunked key-space read
     // interleaved with the tail; chunk rows superseded by in-window log
@@ -145,14 +146,14 @@ private[graft] trait SparkEntryCdc extends SparkEntryBase {
     "cdc_debezium_e2e" -> ((s, dir) => {
       // the feed drives both the envelope round-trip and the direct truth
       // fold; the decoded stream drives txn assembly and the JSON apply —
-      // persist each so the JSON print/parse work runs once per row.
+      // scaffold each so the JSON print/parse work runs once per row.
       // repartition BEFORE the render: the sf inputs are one parquet split,
       // which would serialize the whole per-row JSON round trip on a single
       // thread (at scale the input arrives pre-split; this only fixes up
-      // the local shape). Keyed on (tbl, pk) so the truth-side apply's
-      // window reuses the partitioning instead of re-shuffling.
+      // the local shape). The checkpoint does not record the (tbl, pk)
+      // partitioning, so the truth-side apply's window shuffles again.
       val feed = CdcOps.jsonOps(ops(s, dir).repartition(col("tbl"), col("pk")))
-        .persist()
+        .transform(CacheLifecycle.scaffold)
       val dec = DebeziumSource.decode(
         DebeziumSource.encode(feed), col("value"))
       // lsn = t·10⁶ + event_id is invertible, so the decoded stream
@@ -161,7 +162,7 @@ private[graft] trait SparkEntryCdc extends SparkEntryBase {
         col("ts_ms").as("t"),
         (col("lsn") - col("ts_ms") * lit(1000000L)).as("event_id"),
         col("tbl"), col("pk"), col("op"), col("lsn"), col("after_json"))
-        .persist()
+        .transform(CacheLifecycle.scaffold)
       val txns = Txn.assemble(recOps)
       val actual = ApplyEngine.applyJsonState(recOps, "lsn")
       val truth = ApplyEngine.applyJsonState(feed, "lsn")
@@ -172,16 +173,14 @@ private[graft] trait SparkEntryCdc extends SparkEntryBase {
       val txAgg = txns.agg(
         count(lit(1)).as("txns"),
         sum(col("n_events")).cast("long").as("tx_events"))
-      graft.operators.CacheLifecycle.releaseAfterUse(
-        diff.crossJoin(txAgg)
-          .selectExpr(
-            """stack(4,
-              |  'keys_match', keys_match,
-              |  'keys_mismatch', keys_mismatch,
-              |  'tx_events', tx_events,
-              |  'txns', txns) AS (metric, value)""".stripMargin)
-          .orderBy("metric"),
-        Seq(feed, recOps))
+      diff.crossJoin(txAgg)
+        .selectExpr(
+          """stack(4,
+            |  'keys_match', keys_match,
+            |  'keys_mismatch', keys_mismatch,
+            |  'tx_events', tx_events,
+            |  'txns', txns) AS (metric, value)""".stripMargin)
+        .orderBy("metric")
     }),
 
     // ------------------------------------------------ diff / verification
@@ -315,19 +314,19 @@ private[graft] trait SparkEntryCdc extends SparkEntryBase {
     // ------------------------------------------------ analytics,
     "cdc_evaluate" -> ((s, dir) => {
       // the enriched op-state and poll lane each feed several report
-      // subtrees — persist so the single-job report computes them once.
-      // Project to the columns the report reads BEFORE persisting: the
-      // cached frame (scanned by five subtrees) drops the unused
+      // subtrees — scaffold so the single-job report computes them once.
+      // Project to the columns the report reads BEFORE scaffolding: the
+      // checkpoint (scanned by five subtrees) drops the unused
       // before-images/payload columns the window stage had to compute
       val state = st(s, dir)
         .select("tbl", "pk", "op", "lsn", "t", "ver", "cur_val", "cur_k")
-        .persist()
-      val poll = Capture.poll(state).persist()
+        .transform(CacheLifecycle.scaffold)
+      val poll = Capture.poll(state).transform(CacheLifecycle.scaffold)
       val actual = poll.select(
         col("poll_ts").as("time"), col("src_lsn").as("ord"),
         col("op_code"), col("tbl"), col("pk"))
       // last polled row per key: argmax by poll_window (unique per key) as
-      // a hash aggregation — no per-key sort stage on the cached lane
+      // a hash aggregation — no per-key sort stage on the scaffolded lane
       val pollState = poll
         .groupBy("tbl", "pk")
         .agg(max_by(
@@ -337,10 +336,8 @@ private[graft] trait SparkEntryCdc extends SparkEntryBase {
         .select(col("tbl"), col("pk"),
           col("last.after_val").as("val"), col("last.after_k").as("k"))
       // `state` is a superset of the ops columns — passing it as the op
-      // stream reuses the one cached lineage instead of re-reading parquet
-      graft.operators.CacheLifecycle.releaseAfterUse(
-        Evaluate.lane(state, state, actual, pollState).orderBy("metric"),
-        Seq(state, poll))
+      // stream reuses the one scaffolded lineage instead of re-reading parquet
+      Evaluate.lane(state, state, actual, pollState).orderBy("metric")
     }),
     "cdc_evaluate_log" -> ((s, dir) => {
       // the same harness report over the LOG lane: lossless capture must
@@ -348,15 +345,13 @@ private[graft] trait SparkEntryCdc extends SparkEntryBase {
       // counterpart to the polling-lane cdc_evaluate
       val state = st(s, dir)
         .select("tbl", "pk", "op", "lsn", "t", "prev_val", "prev_k", "cur_val", "cur_k")
-        .persist()
-      val lane = Capture.log(state).persist()
+        .transform(CacheLifecycle.scaffold)
+      val lane = Capture.log(state).transform(CacheLifecycle.scaffold)
       val actual = lane.select(
         col("emitted_ts").as("time"), col("lsn").as("ord"),
         col("op_code"), col("tbl"), col("pk"))
       val replayed = ApplyEngine.replayEvents(lane, "lsn")
-      graft.operators.CacheLifecycle.releaseAfterUse(
-        Evaluate.lane(state, state, actual, replayed).orderBy("metric"),
-        Seq(state, lane))
+      Evaluate.lane(state, state, actual, replayed).orderBy("metric")
     }),
 
     "cdc_commit_floor" -> ((s, dir) => {

@@ -9,7 +9,7 @@ import graft.cdc._
 import graft.functions.GraftFunctions
 import graft.llm.{Chunking, Clusters, Corpus, Dedup, Multimodal, Packing, Pii, Sampling, TextAnalysis}
 import graft.llm.Similarity
-import graft.operators.{AsOfJoin, RangeJoin, SaltedJoin, Sessions}
+import graft.operators.{AsOfJoin, CacheLifecycle, RangeJoin, SaltedJoin, Sessions}
 import graft.sources.{DebeziumSource, Tables}
 
 /** TPC-H-shape relational queries over the orders/lineitem star — one link of the ordered `SparkEntry` trait
@@ -169,7 +169,7 @@ private[graft] trait SparkEntryTpch extends SparkEntryCdc {
       val c = Tables.customer(s, dir).select(
         col("c_custkey"), col("c_mktsegment"),
         floor(col("c_acctbal") * 100).cast("long").as("_bal_cents"))
-        .persist() // the avg branch and the main stream both read it
+        .transform(CacheLifecycle.scaffold) // the avg branch and the main stream both read it
       val avg = c.filter(col("_bal_cents") > 0)
         .agg((sum("_bal_cents").cast("double") / count(lit(1)))
           .as("_avg_cents"))
@@ -177,15 +177,13 @@ private[graft] trait SparkEntryTpch extends SparkEntryCdc {
         .filter(col("o_orderdate") >=
           lit("2000-01-01 00:00:00").cast("timestamp_ntz"))
         .select("o_custkey")
-      graft.operators.CacheLifecycle.releaseAfterUse(
-        c.join(broadcast(avg))
-          .filter(col("_bal_cents").cast("double") > col("_avg_cents"))
-          .join(o, col("c_custkey") === col("o_custkey"), "left_anti")
-          .groupBy("c_mktsegment")
-          .agg(count(lit(1)).as("n_customers"),
-            sum("_bal_cents").as("bal_cents"))
-          .orderBy("c_mktsegment"),
-        Seq(c))
+      c.join(broadcast(avg))
+        .filter(col("_bal_cents").cast("double") > col("_avg_cents"))
+        .join(o, col("c_custkey") === col("o_custkey"), "left_anti")
+        .groupBy("c_mktsegment")
+        .agg(count(lit(1)).as("n_customers"),
+          sum("_bal_cents").as("bal_cents"))
+        .orderBy("c_mktsegment")
     }),
     // TPC-H Q18 shape (large-volume baskets): HAVING-subquery orders whose
     // total quantity clears a threshold, joined back to orders+customer.
@@ -220,15 +218,14 @@ private[graft] trait SparkEntryTpch extends SparkEntryCdc {
             .as("_cents"))
         .groupBy("l_suppkey")
         .agg(sum("_cents").as("revenue_cents"))
-        .persist() // supplier-cardinality; both the max and the join read it
+        // supplier-cardinality; both the max and the join read it
+        .transform(CacheLifecycle.scaffold)
       val mx = rev.agg(max("revenue_cents").as("_max_cents"))
-      graft.operators.CacheLifecycle.releaseAfterUse(
-        rev.join(broadcast(mx), col("revenue_cents") === col("_max_cents"))
-          .join(Tables.supplier(s, dir).select("s_suppkey", "s_name"),
-            col("l_suppkey") === col("s_suppkey"))
-          .select(col("s_suppkey"), col("s_name"), col("revenue_cents"))
-          .orderBy("s_suppkey"),
-        Seq(rev))
+      rev.join(broadcast(mx), col("revenue_cents") === col("_max_cents"))
+        .join(Tables.supplier(s, dir).select("s_suppkey", "s_name"),
+          col("l_suppkey") === col("s_suppkey"))
+        .select(col("s_suppkey"), col("s_name"), col("revenue_cents"))
+        .orderBy("s_suppkey")
     }),
     // TPC-H Q13 shape (order-count distribution): LEFT OUTER join keeps
     // zero-order customers in the histogram; two keyed aggregates — the

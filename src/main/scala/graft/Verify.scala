@@ -93,8 +93,9 @@ object Verify {
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // several queries persist shared lineage for their own single action;
-      // don't let 51 queries' caches accumulate in one session
+      // queries share frames through checkpoints or exchange reuse and
+      // leave no CacheManager entry (CacheLifecycleSpec); clearing only
+      // keeps a cache a failed query left from reaching the next one
       spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.CacheLifecycle
+
 /** The three CDC capture methods as pure `ops → events` transformations in
   * deterministic batch-replay form (the streaming forms live in
   * `graft.streaming`). Semantics follow the reference sim engines; each
@@ -171,7 +173,7 @@ object Capture {
     * range-partitioned key scan, the dedup join keyed by pk. */
   def incrementalSnapshot(stateOps: DataFrame, chunkSize: Int = 64): DataFrame = {
     val state = stateOps.select("tbl", "pk", "op", "lsn", "t", "cur_val", "cur_k")
-      .persist()
+      .transform(CacheLifecycle.scaffold)
     val bounds = state.agg(
       expr("(min(t) + max(t)) div 2").as("cut"),
       max("t").as("max_t"))
@@ -201,7 +203,7 @@ object Capture {
     val tail = state.crossJoin(broadcast(bounds.select(col("cut").as("_cut"))))
       .filter(col("t") > col("_cut"))
       .select(col("tbl"), col("pk"), col("t").as("ev_t"))
-    val ledger = withHw.join(tail, Seq("tbl", "pk"), "left")
+    withHw.join(tail, Seq("tbl", "pk"), "left")
       .groupBy("chunk", "tbl", "pk", "val", "k", "hw")
       .agg(max(when(col("ev_t") <= col("hw"), lit(1)).otherwise(lit(0))).as("_sup"))
       .groupBy("chunk")
@@ -213,7 +215,6 @@ object Capture {
         sum(when(col("_sup") === 0, col("k"))).as("sum_k"),
         sum(when(col("_sup") === 0, floor(col("val") * 1000).cast("long")))
           .as("sum_val_q"))
-    graft.operators.CacheLifecycle.releaseAfterUse(ledger, Seq(state))
   }
 
   /** Watermark-delay tuning curve over the [[backfillAudit]] stream — the

@@ -24,19 +24,16 @@ object Evaluate {
     * broadcast cross-joins into one row, `pass` is derived as an expression,
     * and `stack` unpivots to (metric, value) — so the whole report is ONE
     * Spark action regardless of how many metrics it carries. `actual`
-    * feeds three aggregate subtrees, so it is persisted for that action and
-    * released by [[graft.operators.CacheLifecycle.releaseAfterUse]] once it
-    * completes (an input the caller already cached is left under the
-    * caller's lifecycle); `ops` feeds only the delete count and is read
-    * once.
+    * feeds three aggregate subtrees and `ops` the delete count; both are
+    * read as given, cached or not — a caller whose lane is an expensive
+    * lineage scaffolds it ([[graft.operators.CacheLifecycle.scaffold]]),
+    * as `cdc_evaluate` does with its poll lane.
     */
   def lane(
       ops: DataFrame,
       state: DataFrame,
-      actual0: DataFrame,
+      actual: DataFrame,
       stateActual: DataFrame): DataFrame = {
-    val fresh = actual0.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val actual = if (fresh) actual0.persist() else actual0
     // Pair accounting in CLOSED FORM: `Diff.lanePairs` matches the k-th
     // expected event of a (tbl, opc, pk) group to the k-th actual, so the
     // per-group tallies determine the statuses exactly — matched =
@@ -92,7 +89,7 @@ object Evaluate {
       actual, Seq("tbl"), Seq(col("time"), col("ord")), "ord")
       .agg(count(when(col("inverted"), 1)).as("inversions"))
 
-    val report = pairCounts
+    pairCounts
       .crossJoin(stateDiff)
       .crossJoin(deletes)
       .crossJoin(capturedDeletes)
@@ -110,8 +107,5 @@ object Evaluate {
           |  'ordering_issues', inversions,
           |  'state_mismatches', state_mismatches,
           |  'pass', pass) AS (metric, value)""".stripMargin)
-    // release only what THIS call persisted; an already-cached input stays
-    // under its owner's lifecycle
-    graft.operators.CacheLifecycle.releaseAfterUse(report, if (fresh) Seq(actual) else Nil)
   }
 }

@@ -52,18 +52,15 @@ object GlobalOrder {
       .withColumn(pid, spark_partition_id())
     val cum = Window.partitionBy((keyCols :+ col(pid)): _*).orderBy(sortCols: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // persisted: (a) the partition-summary branches below reuse the scanned
-    // data instead of re-executing its lineage, and (b) the sampled range
-    // boundaries (and hence pid assignment) are pinned once — the same
-    // cache-for-determinism rule RDD.zipWithIndex callers follow. Sized at
-    // one row per input row; the consuming action populates it lazily and
-    // CacheLifecycle releases it after that action (a re-executed result
-    // stays CORRECT without the cache: ranks/prefix sums are boundary-
-    // invariant, and within any one action exchange reuse keeps the
-    // branches' pid assignment consistent — the cache only saves work).
-    val scanned = runs.zip(local)
-      .foldLeft(ranged) { case (d, (r, l)) => d.withColumn(l, r.agg.over(cum)) }
-      .persist()
+    // scaffolded: (a) the partition-summary branches below reuse the
+    // scanned data instead of re-executing its lineage, and (b) the sampled
+    // range boundaries (and hence pid assignment) are pinned once — the
+    // same cache-for-determinism rule RDD.zipWithIndex callers follow. One
+    // row per input row; the range exchange runs when the scan is built
+    // (a re-executed result would stay CORRECT: ranks/prefix sums are
+    // boundary-invariant — the checkpoint only saves work).
+    val scanned = graft.operators.CacheLifecycle.scaffold(runs.zip(local)
+      .foldLeft(ranged) { case (d, (r, l)) => d.withColumn(l, r.agg.over(cum)) })
     val parts = scanned.groupBy((keyCols :+ col(pid)): _*)
       .agg(runs.head.agg.as(summary.head), runs.tail.zip(summary.tail).map {
         case (r, s) => r.agg.as(s) }: _*)
@@ -89,9 +86,7 @@ object GlobalOrder {
           if (r.additive) col(o) + col(l)
           else when(col(o).isNull, col(l)).otherwise(greatest(col(l), col(o))))
       }
-    graft.operators.CacheLifecycle.releaseAfterUse(
-      joined.drop(keyNames.map(n => s"_gk_$n") ++ Seq(pid, "_go_p") ++ local ++ offset: _*),
-      Seq(scanned))
+    joined.drop(keyNames.map(n => s"_gk_$n") ++ Seq(pid, "_go_p") ++ local ++ offset: _*)
   }
 
   /** Add a global 1-based rank column (and, if `runningMax` = Some(src, dst),

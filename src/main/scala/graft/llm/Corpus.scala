@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.CacheLifecycle
+
 /** End-to-end corpus filtering funnel — the composition a pretraining
   * build actually runs: length gate, quality gate, repetition gate
   * (Gopher rules), near-dup representative gate, one verdict per
@@ -803,17 +805,16 @@ object Corpus {
     val scored = TextAnalysis.qualityLogit(docs).select("doc_id", "logit")
     val toks = docs.select(
       col("doc_id"), size(split(col("text"), " ")).cast("long").as("n_tokens"))
-    // persisted: the scoring chain (wide split/HOF expressions) compiles
+    // scaffolded: the scoring chain (wide split/HOF expressions) compiles
     // and runs ONCE — runningSum's range-boundary sampling, local cumsum
     // and partition-summary branches all read the tiny 3-column ledger
-    // from cache instead of re-deriving quality per branch
-    val ledger = scored.join(toks, "doc_id").persist()
-    val out = graft.cdc.GlobalOrder
+    // from the checkpoint instead of re-deriving quality per branch
+    val ledger = scored.join(toks, "doc_id").transform(CacheLifecycle.scaffold)
+    graft.cdc.GlobalOrder
       .runningSum(ledger, Seq(col("logit").desc, col("doc_id")), "n_tokens", "cum_tokens")
       .select(
         col("doc_id"), col("logit"), col("n_tokens"), col("cum_tokens"),
         (col("cum_tokens") <= budget).as("selected"))
-    graft.operators.CacheLifecycle.releaseAfterUse(out, Seq(ledger))
   }
 
   /** Per-source ingestion-order budget gate (batch form): every source gets
@@ -872,7 +873,7 @@ object Corpus {
       .withColumn("pass_gates",
         col("n_tokens") >= minTokens && col("quality_score") >= minQuality &&
           coalesce(col("top_bigram_frac") <= maxTopBigram, lit(true)))
-      .persist()
+      .transform(CacheLifecycle.scaffold)
     def repOf(in: DataFrame, as: String) = in.groupBy("cluster_id")
       .agg(max_by(col("doc_id"),
         struct(col("quality_score"), (-col("doc_id")).as("neg_id"))).as(as))
@@ -882,7 +883,7 @@ object Corpus {
         Seq("cluster_id"), "left")
       .withColumn("kept_a", col("doc_id") === col("rep_all") && col("pass_gates"))
       .withColumn("kept_b", col("doc_id") === coalesce(col("rep_pass"), lit(-1L)))
-    val out = flagged.groupBy("source")
+    flagged.groupBy("source")
       .agg(
         count(lit(1)).as("n_docs"),
         count(when(col("kept_a"), 1)).as("n_kept_dedup_first"),
@@ -895,7 +896,6 @@ object Corpus {
           .as("tokens_dedup_first"),
         coalesce(sum(when(col("kept_b"), col("n_tokens"))), lit(0L))
           .as("tokens_filter_first"))
-    graft.operators.CacheLifecycle.releaseAfterUse(out, Seq(base))
   }
 
   /** Quality-gate threshold sweep — the tuning curve read BEFORE fixing
@@ -981,20 +981,19 @@ object Corpus {
     val sliced = docs.select(
       least(expr(s"n_chars div $bucketWidth"), lit(maxBucket)).as("bucket"),
       (expr("CAST(substring(source, 4) AS BIGINT)") % 2 === 0).as("_a"))
-    // persist the ≤ maxBuckets+1-row frame: the totals read it too, and
-    // without the cache the corpus scan re-expands once per consumer
+    // the ≤ maxBuckets+1-row frame feeds the output and its totals: both
+    // read its exchange, which the planner reuses, so the corpus is
+    // scanned once
     val perBucket = sliced.groupBy("bucket")
       .agg(count(when(col("_a"), 1)).as("cnt_a"),
         count(when(!col("_a"), 1)).as("cnt_b"))
-      .persist()
     val totals = perBucket.agg(
       sum("cnt_a").as("_ta"), sum("cnt_b").as("_tb"))
-    val out = perBucket.crossJoin(broadcast(totals))
+    perBucket.crossJoin(broadcast(totals))
       .select(col("bucket"), col("cnt_a"), col("cnt_b"),
         expr("cnt_a * 1000000L div _ta").as("ppm_a"),
         expr("cnt_b * 1000000L div _tb").as("ppm_b"),
         abs(expr("cnt_a * 1000000L div _ta") -
           expr("cnt_b * 1000000L div _tb")).as("drift_ppm"))
-    graft.operators.CacheLifecycle.releaseAfterUse(out, Seq(perBucket))
   }
 }

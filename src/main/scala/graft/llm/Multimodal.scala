@@ -442,18 +442,17 @@ object Multimodal {
       col("n_frames"),
       (col("width") * col("height") * col("n_frames")).as("_px"))
     // the ≤ 3-row aggregate feeds both the output and its own totals:
-    // persisted so the share denominator does NOT re-run the decode pass
-    // over the media column (CacheLifecycle releases it after the action)
+    // scaffolded so the share denominator does NOT re-run the decode pass
+    // over the media column
     val agg = classed.groupBy("modality").agg(
       count(lit(1)).as("n_docs"),
       sum("n_frames").as("n_frames"),
-      sum("_px").as("n_pixels")).persist()
+      sum("_px").as("n_pixels")).transform(CacheLifecycle.scaffold)
     val totals = agg.agg(sum("n_docs").as("_td"), sum("n_pixels").as("_tp"))
-    val out = agg.crossJoin(broadcast(totals))
+    agg.crossJoin(broadcast(totals))
       .select(col("modality"), col("n_docs"), col("n_frames"), col("n_pixels"),
         (col("n_docs").cast("double") / col("_td")).as("doc_share"),
         (col("n_pixels").cast("double") / col("_tp")).as("pixel_share"))
-    graft.operators.CacheLifecycle.releaseAfterUse(out, Seq(agg))
   }
 
   /** The fixed aspect-ratio ladder for [[aspectBuckets]]:
@@ -517,14 +516,13 @@ object Multimodal {
     val agg = perDoc.groupBy("bucket").agg(
       count(lit(1)).as("n_images"),
       sum("_px").as("native_pixels"),
-      sum("_padded").as("padded_pixels")).persist()
+      sum("_padded").as("padded_pixels")).transform(CacheLifecycle.scaffold)
     val total = agg.agg(sum("n_images").as("_tn"))
-    val out = agg.crossJoin(broadcast(total))
+    agg.crossJoin(broadcast(total))
       .select(col("bucket"), col("n_images"),
         (col("n_images").cast("double") / col("_tn")).as("image_share"),
         col("native_pixels"), col("padded_pixels"),
         ((col("padded_pixels") - col("native_pixels")).cast("double")
           / col("padded_pixels")).as("waste_frac"))
-    graft.operators.CacheLifecycle.releaseAfterUse(out, Seq(agg))
   }
 }

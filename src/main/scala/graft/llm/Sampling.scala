@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions.hash31
+import graft.operators.CacheLifecycle
 
 /** Deterministic sampling for corpus construction.
   *
@@ -326,15 +327,15 @@ object Sampling {
       case (c, _) => sqrt(c)
     }
     // the |sources|-row mass frame feeds both the ledger and its weight
-    // total: persisted so the denominator does not re-tokenize the corpus
+    // total: scaffolded so the denominator does not re-tokenize the corpus
     val perSource = docs
       .select(col("source"), size(split(col("text"), " ")).cast("long").as("_toks"))
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"), sum("_toks").as("n_tokens"))
       .withColumn("weight_q", floor(root * 1000.0).cast("long"))
-      .persist()
+      .transform(CacheLifecycle.scaffold)
     val totals = perSource.agg(sum("weight_q").as("_w_total"))
-    val out = perSource.crossJoin(broadcast(totals))
+    perSource.crossJoin(broadcast(totals))
       .select(
         col("source"), col("n_docs"), col("n_tokens"), col("weight_q"),
         (col("weight_q").cast("double") / col("_w_total")).as("share"),
@@ -342,7 +343,6 @@ object Sampling {
           .as("alloc_tokens"),
         (col("weight_q").cast("double") * budgetTokens /
           (col("_w_total").cast("double") * col("n_tokens"))).as("epochs"))
-    graft.operators.CacheLifecycle.releaseAfterUse(out, Seq(perSource))
   }
 
   /** DSIR-style importance scoring (Data Selection via Importance
@@ -450,18 +450,17 @@ object Sampling {
     * agg + a 1-row totals broadcast — nothing per-document survives. */
   def shardStats(docs: DataFrame, nShards: Int = 16, seed: Int = 42): DataFrame = {
     // the nShards-row aggregate feeds both the ledger and its own total:
-    // persisted so the share denominator does not re-key the corpus
+    // scaffolded so the share denominator does not re-key the corpus
     val perShard = shardKeyed(docs, nShards, seed, 1000003L)
       .groupBy("shard")
       .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("n_tokens"))
-      .persist()
+      .transform(CacheLifecycle.scaffold)
     val totals = perShard.agg(sum("n_tokens").as("_tot"))
-    val out = perShard.crossJoin(broadcast(totals))
+    perShard.crossJoin(broadcast(totals))
       .select(
         col("shard"), col("n_docs"), col("n_tokens"),
         (col("n_tokens").cast("double") / col("_tot")).as("token_share"),
         (col("n_tokens").cast("double") / col("_tot") * nShards).as("balance"))
-    graft.operators.CacheLifecycle.releaseAfterUse(out, Seq(perShard))
   }
 
   /** Per-shard write manifest for [[shardAssign]] — the ledger a shard
@@ -528,9 +527,8 @@ object Sampling {
   def leakageGuardSplit(docs: DataFrame, clusters: DataFrame,
       trainPct: Int = 90, valPct: Int = 5): DataFrame = {
     // four subtrees consume this frame (guard leak, naive leak, moved,
-    // per-split ledger): persisted — projected to the four columns they
+    // per-split ledger): scaffolded — projected to the four columns they
     // read — so the doc↔cluster join and token count run ONCE, not 4×
-    // (CacheLifecycle releases it after the consuming action)
     val assigned = docs
       .join(clusters.select("doc_id", "cluster_id"), Seq("doc_id"))
       .select(
@@ -538,7 +536,7 @@ object Sampling {
         size(split(col("text"), " ")).cast("long").as("_toks"),
         splitFor(col("cluster_id"), trainPct, valPct).as("split"),
         splitFor(col("doc_id"), trainPct, valPct).as("naive_split"))
-      .persist()
+      .transform(CacheLifecycle.scaffold)
     // same-cluster pairs straddling splits, as integer arithmetic on
     // cluster member counts (C(n,2) − Σ_split C(n_s,2) per cluster — the
     // pair set is never re-materialized): computed for BOTH assignments,
@@ -552,7 +550,7 @@ object Sampling {
     val naiveLeak = crossSplitPairs("naive_split", "leaked_pairs_naive")
     val moved = assigned
       .agg(count(when(col("split") =!= col("naive_split"), 1)).as("docs_moved"))
-    val out = assigned
+    assigned
       .groupBy("split")
       .agg(
         count(lit(1)).as("n_docs"),
@@ -561,7 +559,6 @@ object Sampling {
       .crossJoin(broadcast(guardLeak))
       .crossJoin(broadcast(naiveLeak))
       .crossJoin(broadcast(moved))
-    graft.operators.CacheLifecycle.releaseAfterUse(out, Seq(assigned))
   }
 
   /** Split-contamination matrix — [[leakageGuardSplit]]'s audit expanded
@@ -579,26 +576,25 @@ object Sampling {
     * and a ≤ 6-row rollup. */
   def contaminationMatrix(docs: DataFrame, clusters: DataFrame,
       trainPct: Int = 90, valPct: Int = 5): DataFrame = {
-    // both sides of the self-join read this (cluster, split) aggregate:
-    // persisted so the doc↔cluster join runs once, not per side
+    // both sides of the self-join read this (cluster, split) aggregate
+    // through one exchange, which the planner reuses, so the doc↔cluster
+    // join runs once, not per side
     val counts = docs
       .join(clusters.select("doc_id", "cluster_id"), Seq("doc_id"))
       .select(col("cluster_id"),
         splitFor(col("doc_id"), trainPct, valPct).as("split"))
       .groupBy("cluster_id", "split").agg(count(lit(1)).as("_n"))
-      .persist()
     val a = counts.select(col("cluster_id"), col("split").as("split_a"),
       col("_n").as("_na"))
     val b = counts.select(col("cluster_id"), col("split").as("split_b"),
       col("_n").as("_nb"))
-    val out = a.join(b, Seq("cluster_id"))
+    a.join(b, Seq("cluster_id"))
       .filter(col("split_a") <= col("split_b"))
       .groupBy("split_a", "split_b")
       .agg(sum(
         when(col("split_a") === col("split_b"),
           expr("_na * (_na - 1) div 2"))
           .otherwise(col("_na") * col("_nb"))).as("n_pairs"))
-    graft.operators.CacheLifecycle.releaseAfterUse(out, Seq(counts))
   }
 
   /** Cluster-aware k-fold assignment — cross-validation's version of the
@@ -670,18 +666,16 @@ object Sampling {
         col("cluster_id"),
         size(split(col("text"), " ")).cast("long").as("_toks"))
     // the k-row fold aggregate feeds both the ledger and its own total:
-    // persisted so the denominator does not re-run the doc↔cluster join
-    // (CacheLifecycle releases it after the consuming action)
+    // scaffolded so the denominator does not re-run the doc↔cluster join
     val perFold = assigned.groupBy("fold").agg(
       count(lit(1)).as("n_docs"),
       sum("_toks").as("n_tokens"),
-      countDistinct("cluster_id").as("n_clusters")).persist()
+      countDistinct("cluster_id").as("n_clusters")).transform(CacheLifecycle.scaffold)
     val totals = perFold.agg(sum("n_tokens").as("_tot"))
-    val out = perFold.crossJoin(broadcast(totals))
+    perFold.crossJoin(broadcast(totals))
       .select(col("fold"), col("n_docs"), col("n_tokens"), col("n_clusters"),
         (col("n_tokens").cast("double") / col("_tot")).as("token_share"),
         (col("n_tokens").cast("double") / col("_tot") * k).as("balance"))
-    graft.operators.CacheLifecycle.releaseAfterUse(out, Seq(perFold))
   }
 
   /** Deterministic per-source uniform `k`-sample — the distributed

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.operators.CacheLifecycle
+
 /** Similarity search over the `embeddings` table
   * (`vec_id, embedding: array<float>, label`).
   *
@@ -297,16 +299,15 @@ object Similarity {
     */
   def ivfTopK(emb: DataFrame, nLists: Int = 16, nProbe: Int = 4, nQueries: Int = 10, k: Int = 3,
       kmeansIters: Int = 2): DataFrame = {
-    // nLists rows, but an iterated-aggregation lineage behind them — persist
-    // so the assignment and probe branches build the index once, not twice
     val (centroids, assigned) = ivfIndexBuild(emb, nLists, kmeansIters)
     ivfProbe(emb.filter(col("vec_id") < nQueries), centroids, assigned, nProbe, k)
   }
 
   /** Build half of the IVF index: the k-means centroid table (tiny —
     * `nLists` rows) and the per-vector inverted-list assignment (one row per
-    * corpus vector). Centroids are persisted in memory (iterated-aggregation
-    * lineage; every consumer would otherwise rebuild the Lloyd rounds).
+    * corpus vector). Centroids are scaffolded: their Lloyd rounds (an
+    * iterated-aggregation lineage every consumer would otherwise rebuild)
+    * run once, when the index is built.
     *
     * A real pipeline builds this ONCE and amortizes it across every probe
     * batch — that is [[ivfIndexWrite]] / [[ivfIndexLoad]]: written as
@@ -316,7 +317,7 @@ object Similarity {
     * re-scoring the corpus.
     */
   def ivfIndexBuild(emb: DataFrame, nLists: Int = 16, kmeansIters: Int = 2): (DataFrame, DataFrame) = {
-    val centroids = kmeansCentroids(emb, nLists, kmeansIters).persist()
+    val centroids = CacheLifecycle.scaffold(kmeansCentroids(emb, nLists, kmeansIters))
     val withNorm = emb.select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
     (centroids, assignNearest(withNorm, centroids))
   }
@@ -327,7 +328,6 @@ object Similarity {
     val (centroids, assigned) = ivfIndexBuild(emb, nLists, kmeansIters)
     centroids.write.mode("overwrite").parquet(s"$path/centroids")
     assigned.write.mode("overwrite").partitionBy("list_id").parquet(s"$path/lists")
-    centroids.unpersist()
   }
 
   /** Load a prebuilt IVF index written by [[ivfIndexWrite]]. */
@@ -817,9 +817,6 @@ object Similarity {
     * the SQ scores are integer-exact, ties break on neighbor id. */
   def ivfSqTopK(emb: DataFrame, nLists: Int = 16, nProbe: Int = 4,
       nQueries: Int = 10, k: Int = 3, kmeansIters: Int = 2): DataFrame = {
-    // ivfIndexBuild persists the nLists-row centroid frame and leaves it
-    // cached (same convention as ivfTopK): ~KBs per call, and the real
-    // amortized path is the persisted index (IndexCache), which unpersists
     val (centroids, assigned) = ivfIndexBuild(emb, nLists, kmeansIters)
     val lists = withQuantized(assigned)
       .select(col("vec_id").as("n_id"), col("list_id"),
@@ -962,10 +959,10 @@ object Similarity {
 
   /** IVF recall-vs-nProbe sweep — the tuning curve read before fixing the
     * probe count: total exact-top-k hits (and pooled recall) at each probe
-    * setting, over ONE index build. The index (centroids + assignment) and
-    * the exact baseline are computed once and persisted; each probe
-    * setting reuses them, so the sweep costs one k-means + |probes| cheap
-    * probe joins instead of |probes| full index builds.
+    * setting, over ONE index build. The index (centroids + assignment) is
+    * scaffolded and the exact baseline's exchange is reused by every probe
+    * setting, so the sweep costs one k-means + |probes| cheap probe joins
+    * instead of |probes| full index builds.
     *
     * Pooled recall = Σ hits / (nQueries·k) — integer sums, one exact
     * division (per-query recall already exists as `ann_ivf_recall`). */
@@ -982,8 +979,8 @@ object Similarity {
     * join. Integer hit counts, one exact division. */
   def matryoshkaRecall(emb: DataFrame, dims: Seq[Int] = Seq(16, 32, 64),
       nQueries: Int = 10, k: Int = 5): DataFrame = {
-    val exact = cosineTopK(emb, nQueries, k).select(col("q_id"), col("n_id")).persist()
-    val out = dims.map { d =>
+    val exact = cosineTopK(emb, nQueries, k).select(col("q_id"), col("n_id"))
+    dims.map { d =>
       val trunc = emb.select(col("vec_id"), slice(col("embedding"), 1, d).as("embedding"))
       val top = cosineTopK(trunc, nQueries, k).select(col("q_id"), col("n_id"))
       exact.join(broadcast(top), Seq("q_id", "n_id"))
@@ -992,19 +989,16 @@ object Similarity {
     }.reduce(_ unionByName _)
       .withColumn("recall",
         col("n_hits").cast("double") / lit((nQueries * k).toDouble))
-    graft.operators.CacheLifecycle.releaseAfterUse(out, Seq(exact))
   }
 
   def ivfProbeCurve(emb: DataFrame, nLists: Int = 16,
       probes: Seq[Int] = Seq(1, 2, 4, 8), nQueries: Int = 10, k: Int = 3,
       kmeansIters: Int = 2): DataFrame = {
     val (centroids, assigned0) = ivfIndexBuild(emb, nLists, kmeansIters)
-    // persist belongs to THIS path only: the in-memory assignment carries
-    // the whole Lloyd lineage, which every probe of the sweep would
-    // otherwise re-run
-    val assigned = assigned0.persist()
-    val out = ivfProbeCurveFrom(emb, centroids, assigned, probes, nQueries, k)
-    graft.operators.CacheLifecycle.releaseAfterUse(out, Seq(assigned))
+    // scaffolded on THIS path only: every probe of the sweep reads the
+    // in-memory assignment, which would otherwise re-run the corpus argmax
+    val assigned = CacheLifecycle.scaffold(assigned0)
+    ivfProbeCurveFrom(emb, centroids, assigned, probes, nQueries, k)
   }
 
   /** The probe sweep against an ALREADY-BUILT index (in-memory or loaded
@@ -1015,18 +1009,17 @@ object Similarity {
     * the centroid determinism contract (exact BIGINT sums, fixed seeds),
     * so the two forms share one oracle.
     *
-    * Deliberately does NOT persist `assigned`: for a loaded index that
-    * would swap the list-partitioned parquet scan for an
-    * InMemoryRelation SESSION-WIDE (the cache manager substitutes by
-    * plan), destroying the dynamic partition pruning every persisted
-    * probe path is built on — each probe's equality join prunes the scan
-    * to its probed lists instead. */
+    * Deliberately does NOT scaffold `assigned`: for a loaded index that
+    * would swap the list-partitioned parquet scan for a checkpoint,
+    * destroying the dynamic partition pruning every persisted probe path
+    * is built on — each probe's equality join prunes the scan to its
+    * probed lists instead. */
   def ivfProbeCurveFrom(emb: DataFrame, centroids: DataFrame,
       assigned: DataFrame, probes: Seq[Int] = Seq(1, 2, 4, 8),
       nQueries: Int = 10, k: Int = 3): DataFrame = {
-    val exact = cosineTopK(emb, nQueries, k).select(col("q_id"), col("n_id")).persist()
+    val exact = cosineTopK(emb, nQueries, k).select(col("q_id"), col("n_id"))
     val queries = emb.filter(col("vec_id") < nQueries)
-    val out = probes.map { p =>
+    probes.map { p =>
       val ivf = ivfProbe(queries, centroids, assigned, p, k)
         .select(col("q_id"), col("n_id"))
       exact.join(broadcast(ivf), Seq("q_id", "n_id"))
@@ -1035,7 +1028,6 @@ object Similarity {
     }.reduce(_ unionByName _)
       .withColumn("recall",
         col("n_hits").cast("double") / lit((nQueries * k).toDouble))
-    graft.operators.CacheLifecycle.releaseAfterUse(out, Seq(exact))
   }
 
   // ──────────────────── Product quantization (Jégou et al. 2011) ──────────
@@ -1239,12 +1231,11 @@ object Similarity {
   def pqTopK(emb: DataFrame, m: Int = 8, kSub: Int = 32, nQueries: Int = 10,
       k: Int = 5, iters: Int = 2): DataFrame = {
     // ONE 1-row folded codebook array behind the iterated-aggregation
-    // training lineage — persisted so the encode and LUT branches share a
+    // training lineage — scaffolded so the encode and LUT branches share a
     // single fold (and a single training run) instead of each re-deriving
     // cbArray over a cached raw-codebook frame (round-18 fold dedup)
-    val cbA = cbArray(pqCodebooks(emb, m, kSub, iters)).persist()
-    graft.operators.CacheLifecycle.releaseAfterUse(
-      adcTopK(emb, cbA, pqEncodeFolded(emb, cbA, m), m, nQueries, k), Seq(cbA))
+    val cbA = CacheLifecycle.scaffold(cbArray(pqCodebooks(emb, m, kSub, iters)))
+    adcTopK(emb, cbA, pqEncodeFolded(emb, cbA, m), m, nQueries, k)
   }
 
   /** The ADC scoring stage shared by [[pqTopK]] and [[pqPersistedTopK]]:
@@ -1319,9 +1310,9 @@ object Similarity {
       m: Int = 8, kSub: Int = 32, nQueries: Int = 10, k: Int = 5,
       kmeansIters: Int = 2, pqIters: Int = 2): DataFrame = {
     val (centroids, _) = ivfIndexBuild(emb, nLists, kmeansIters)
-    // one persisted FOLD of the trained codebooks, shared by the fused
+    // one scaffolded FOLD of the trained codebooks, shared by the fused
     // list build and the LUT build (round-18 fold dedup)
-    val cbA = cbArray(pqCodebooks(emb, m, kSub, pqIters)).persist()
+    val cbA = CacheLifecycle.scaffold(cbArray(pqCodebooks(emb, m, kSub, pqIters)))
     // FUSED list build (round-17): the coarse assignment and the PQ encode
     // are both per-row projections now, so computing them in ONE pass over
     // the corpus replaces the former assigned ⋈ pqEncode corpus self-join
@@ -1348,11 +1339,10 @@ object Similarity {
       .filter(col("q_id") =!= col("n_id"))
       .withColumn("cos_pq", adcScore(m))
     val w = Window.partitionBy("q_id").orderBy(col("cos_pq").desc, col("n_id"))
-    val out = scored
+    scored
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
       .select(col("q_id"), col("rnk").cast("long").as("rnk"), col("n_id"), col("cos_pq"))
-    graft.operators.CacheLifecycle.releaseAfterUse(out, Seq(cbA))
   }
 
   /** Write the PQ index under `path`: `codebooks/` (m·kSub tiny rows) and
@@ -1361,10 +1351,13 @@ object Similarity {
     * every query batch from. */
   def pqIndexWrite(emb: DataFrame, path: String, m: Int = 8, kSub: Int = 32,
       iters: Int = 2): Unit = {
+    // two writes read the codebooks: persisted for them, released even
+    // when a write fails
     val cb = pqCodebooks(emb, m, kSub, iters).persist()
-    cb.write.mode("overwrite").parquet(s"$path/codebooks")
-    pqEncode(emb, cb, m).write.mode("overwrite").parquet(s"$path/codes")
-    cb.unpersist()
+    try {
+      cb.write.mode("overwrite").parquet(s"$path/codebooks")
+      pqEncode(emb, cb, m).write.mode("overwrite").parquet(s"$path/codes")
+    } finally { cb.unpersist(); () }
   }
 
   /** Load a prebuilt PQ index written by [[pqIndexWrite]]. */

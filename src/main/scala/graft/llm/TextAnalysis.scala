@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions.hash31
+import graft.operators.CacheLifecycle
 
 /** Text-analysis operators for training-data curation over `documents`:
   * quality scoring, token counting, heuristic language scoring, and document
@@ -87,12 +88,11 @@ object TextAnalysis {
         col("n_tokens"))
     val cells = scored.groupBy("source", "band")
       .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("n_tokens"))
-      .persist()
+      .transform(CacheLifecycle.scaffold)
     val totals = cells.groupBy("source").agg(sum("n_docs").as("_src_docs"))
-    val out = cells.join(broadcast(totals), "source")
+    cells.join(broadcast(totals), "source")
       .select(col("source"), col("band"), col("n_docs"), col("n_tokens"),
         (col("n_docs").cast("double") / col("_src_docs")).as("band_frac"))
-    graft.operators.CacheLifecycle.releaseAfterUse(out, Seq(cells))
   }
 
   /** Linear quality-classifier gate — the model-based filter stage of a
@@ -710,7 +710,6 @@ object TextAnalysis {
       .select(explode(split(col("text"), " ")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("wfreq"))
       .withColumn("spaced", array_join(split(col("w"), ""), " "))
-      .persist()
     def pairCounts(in: DataFrame): DataFrame = in
       .withColumn("syms", split(col("spaced"), " "))
       .filter(size(col("syms")) >= 2)
@@ -725,10 +724,9 @@ object TextAnalysis {
         expr("replace(pair, ' ', '')").as("_merged_sym"))
     val round2 = words.crossJoin(broadcast(best))
       .withColumn("spaced", expr("replace(spaced, merge_applied, _merged_sym)"))
-    val out = pairCounts(round2)
+    pairCounts(round2)
       .orderBy(col("pair_count").desc, col("pair")).limit(k)
       .crossJoin(broadcast(best.select("merge_applied")))
-    graft.operators.CacheLifecycle.releaseAfterUse(out, Seq(words))
   }
 
   /** Top-N vocabulary coverage curve — the tokenizer-budget question
@@ -781,19 +779,18 @@ object TextAnalysis {
       .select(explode(split(col("text"), " ")).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("freq"))
     // the <=64-row octave frame feeds both the ledger and its totals:
-    // persisted so the share denominators do not re-explode the corpus
+    // both read its exchange, which the planner reuses, so the corpus is
+    // exploded once
     val perOctave = freqs
       .withColumn("octave", (length(bin(col("freq"))) - 1).cast("long"))
       .groupBy("octave")
       .agg(count(lit(1)).as("n_types"), sum("freq").as("n_tokens"))
-      .persist()
     val totals = perOctave.agg(
       sum("n_types").as("_tot_types"), sum("n_tokens").as("_tot_tokens"))
-    val out = perOctave.crossJoin(broadcast(totals))
+    perOctave.crossJoin(broadcast(totals))
       .select(col("octave"), col("n_types"), col("n_tokens"),
         (col("n_types").cast("double") / col("_tot_types")).as("type_share"),
         (col("n_tokens").cast("double") / col("_tot_tokens")).as("token_share"))
-    graft.operators.CacheLifecycle.releaseAfterUse(out, Seq(perOctave))
   }
 
   /** Top-k collocations by pointwise lift — the bigram-mining query a

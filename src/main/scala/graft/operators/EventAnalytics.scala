@@ -24,7 +24,7 @@ object EventAnalytics {
     * Shape: stage k is `filter(type == step_k) → per-user min time`
     * joined to stage k−1's per-user completion time — each stage one
     * keyed shuffle of USER-cardinality rows (events collapse map-side on
-    * the type filter + min), persisted so the step counts read the
+    * the type filter + min), scaffolded so the step counts read the
     * already-materialized stage instead of replaying the chain. No
     * per-user ordered scan anywhere: first-touch semantics only ever
     * need the per-stage minimum after a threshold, which is an
@@ -42,7 +42,7 @@ object EventAnalytics {
     var prev = events.filter(col("event_type") === steps.head)
       .select(col("user_id"), tMs.as("_t0"))
       .groupBy("user_id").agg(min("_t0").as("_c0"))
-      .persist()
+      .transform(CacheLifecycle.scaffold)
     stages += prev
     for (i <- 1 until steps.length) {
       // windowed form: the step must land within maxGapMs of the previous
@@ -56,7 +56,7 @@ object EventAnalytics {
         .join(prev, "user_id")
         .filter(col(s"_t$i") > col(s"_c${i - 1}") && within)
         .groupBy("user_id").agg(min(s"_t$i").as(s"_c$i"))
-        .persist()
+        .transform(CacheLifecycle.scaffold)
       stages += r
       prev = r
     }
@@ -66,7 +66,7 @@ object EventAnalytics {
           col("n_users"))
     }.reduce(_ unionAll _)
     val first = all.filter(col("step") === 1).select(col("n_users").as("_n1"))
-    val out = all
+    all
       .join(all.select((col("step") + 1).as("step"), col("n_users").as("_np")),
         Seq("step"), "left")
       .crossJoin(broadcast(first))
@@ -80,7 +80,6 @@ object EventAnalytics {
         when(col("_n1") === 0, lit(0.0))
           .otherwise(col("n_users").cast("double") / col("_n1"))
           .as("conv_from_first"))
-    CacheLifecycle.releaseAfterUse(out, stages.toSeq)
   }
 
   /** Hourly-volume anomaly ledger — robust outlier detection on the
@@ -130,21 +129,19 @@ object EventAnalytics {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy(col("_t"), col("event_id"))
     // the |types|^2-row pair count feeds both the matrix and its row
-    // totals: persisted so the totals branch does not re-run the lead
-    // window over the whole stream (CacheLifecycle releases it after use)
+    // totals: both read its exchange, which the planner reuses, so the
+    // lead window over the whole stream runs once
     val pairs = events
       .select(col("user_id"), col("event_id"), tMs.as("_t"), col("event_type"))
       .withColumn("to_type", lead("event_type", 1).over(w))
       .filter(col("to_type").isNotNull)
       .groupBy(col("event_type").as("from_type"), col("to_type"))
       .agg(count(lit(1)).as("n_pairs"))
-      .persist()
     val fromTotals = pairs.groupBy("from_type")
       .agg(sum("n_pairs").as("n_from"))
-    val out = pairs.join(broadcast(fromTotals), "from_type")
+    pairs.join(broadcast(fromTotals), "from_type")
       .select(col("from_type"), col("to_type"), col("n_pairs"), col("n_from"),
         (col("n_pairs").cast("double") / col("n_from")).as("prob"))
-    graft.operators.CacheLifecycle.releaseAfterUse(out, Seq(pairs))
   }
 
   /** Top-k most-travelled 3-step event paths — the sequence-mining
@@ -189,19 +186,18 @@ object EventAnalytics {
   def userActivityOctaves(events: DataFrame): DataFrame = {
     val perUser = events.groupBy("user_id").agg(count(lit(1)).as("_n"))
     // the <=64-row octave frame feeds both the ledger and its totals:
-    // persisted so the share denominators do not re-count the stream
+    // both read its exchange, which the planner reuses, so the stream is
+    // counted once
     val perOctave = perUser
       .withColumn("octave", (length(bin(col("_n"))) - 1).cast("long"))
       .groupBy("octave")
       .agg(count(lit(1)).as("n_users"), sum("_n").as("n_events"))
-      .persist()
     val totals = perOctave.agg(
       sum("n_users").as("_tu"), sum("n_events").as("_te"))
-    val out = perOctave.crossJoin(broadcast(totals))
+    perOctave.crossJoin(broadcast(totals))
       .select(col("octave"), col("n_users"), col("n_events"),
         (col("n_users").cast("double") / col("_tu")).as("user_share"),
         (col("n_events").cast("double") / col("_te")).as("event_share"))
-    graft.operators.CacheLifecycle.releaseAfterUse(out, Seq(perOctave))
   }
 
   /** Daily/rolling active users — DAU, the `windowDays`-day rolling
@@ -215,11 +211,10 @@ object EventAnalytics {
     * calendar, so the fanout is ≤ windowDays rows per user-day. */
   def activeUsers(events: DataFrame, windowDays: Int = 7): DataFrame = {
     val day = expr("(ts div 1000000) div 86400000")
-    // three subtrees (day list, DAU, rolling) read the distinct user-day
-    // set: persisted so the raw stream collapses to it ONCE
-    // (user-day cardinality — far below the event count)
+    // DAU and the rolling count read the distinct user-day set through
+    // one exchange, which the planner reuses (user-day cardinality — far
+    // below the event count); the day list is re-derived from the stream
     val userDays = events.select(col("user_id"), day.as("day")).distinct()
-      .persist()
     val days = userDays.select(col("day").as("_d")).distinct()
     val dau = userDays.groupBy("day").agg(count(lit(1)).as("dau"))
     val rolling = userDays
@@ -227,10 +222,9 @@ object EventAnalytics {
         col("day").between(col("_d") - (windowDays - 1), col("_d")))
       .groupBy(col("_d").as("day"))
       .agg(countDistinct("user_id").as("wau"))
-    val out = dau.join(rolling, "day")
+    dau.join(rolling, "day")
       .select(col("day"), col("dau"), col("wau"),
         (col("dau").cast("double") / col("wau")).as("stickiness"))
-    graft.operators.CacheLifecycle.releaseAfterUse(out, Seq(userDays))
   }
 
   /** Last-touch revenue attribution — every purchase is credited to the
@@ -260,21 +254,20 @@ object EventAnalytics {
       .withColumn("_ch",
         last(when(col("event_type").isin(touchTypes: _*), col("event_type")),
           ignoreNulls = true).over(w))
-    // persist the |channels|-row ledger: the share total reads it too, and
-    // without the cache the windowed corpus scan re-expands once per
-    // consumer (the funnel's CacheLifecycle pattern)
+    // scaffold the |channels|-row ledger: the share total reads it too, and
+    // without it the windowed corpus scan re-expands once per consumer
+    // (the total prunes n_purchases, so the two share no exchange)
     val perChannel = touched.filter(col("event_type") === "purchase")
       .groupBy(coalesce(col("_ch"), lit("direct")).as("channel"))
       .agg(count(lit(1)).as("n_purchases"),
         sum(col("value").cast("decimal(18,2)")).as("_rev"))
-      .persist()
+      .transform(CacheLifecycle.scaffold)
     val total = perChannel.agg(sum("_rev").as("_tot"))
-    val out = perChannel.crossJoin(broadcast(total))
+    perChannel.crossJoin(broadcast(total))
       .select(col("channel"), col("n_purchases"),
         col("_rev").cast("double").as("revenue"),
         (col("_rev").cast("double") / col("_tot").cast("double"))
           .as("revenue_share"))
-    CacheLifecycle.releaseAfterUse(out, Seq(perChannel))
   }
 
   /** Cohort lifetime-value triangle — signup cohorts (first-signup day) ×
@@ -294,12 +287,12 @@ object EventAnalytics {
     * broadcast. */
   def cohortLtv(events: DataFrame): DataFrame = {
     val day = expr("(ts div 1000000) div 86400000")
-    // cohorts feed both the purchase join and the size rollup — persist
+    // cohorts feed both the purchase join and the size rollup — scaffold
     // the user-cardinality frame so the signup scan runs once
     val cohorts = events.filter(col("event_type") === "signup")
       .select(col("user_id"), day.as("_d"))
       .groupBy("user_id").agg(min("_d").as("cohort_day"))
-      .persist()
+      .transform(CacheLifecycle.scaffold)
     val weekly = events.filter(col("event_type") === "purchase")
       .select(col("user_id"), day.as("_pd"),
         col("value").cast("decimal(18,2)").as("_v"))
@@ -313,7 +306,7 @@ object EventAnalytics {
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
     val sizes = cohorts.groupBy("cohort_day")
       .agg(count(lit(1)).as("cohort_size"))
-    val out = weekly
+    weekly
       .withColumn("_crev", sum("_wrev").over(cum))
       .join(broadcast(sizes), "cohort_day")
       .select(col("cohort_day"), col("week_offset"), col("n_purchases"),
@@ -322,7 +315,6 @@ object EventAnalytics {
         col("cohort_size"),
         (col("_crev").cast("double") / col("cohort_size"))
           .as("ltv_per_user"))
-    CacheLifecycle.releaseAfterUse(out, Seq(cohorts))
   }
 
   /** Inter-arrival gap ledger — per event type, the distribution of gaps
@@ -410,7 +402,7 @@ object EventAnalytics {
     * are the cohort sizes by construction.
     *
     * Shape: the [[funnel]] stage chain unchanged (per-stage
-    * user-cardinality aggregates, persisted once), each stage's users
+    * user-cardinality aggregates, scaffolded once), each stage's users
     * carrying their stage-1 week; the rollup is a (≤ weeks × steps)-row
     * aggregate and the per-cohort top broadcasts back. */
   def cohortedFunnel(events: DataFrame,
@@ -422,7 +414,7 @@ object EventAnalytics {
       .select(col("user_id"), tMs.as("_t0"))
       .groupBy("user_id").agg(min("_t0").as("_c0"))
       .withColumn("cohort_week", expr(s"_c0 div $weekMs"))
-      .persist()
+      .transform(CacheLifecycle.scaffold)
     stages += prev
     for (i <- 1 until steps.length) {
       val r = events.filter(col("event_type") === steps(i))
@@ -431,7 +423,7 @@ object EventAnalytics {
           col("cohort_week")), "user_id")
         .filter(col(s"_t$i") > col(s"_c${i - 1}"))
         .groupBy("user_id", "cohort_week").agg(min(s"_t$i").as(s"_c$i"))
-        .persist()
+        .transform(CacheLifecycle.scaffold)
       stages += r
       prev = r
     }
@@ -443,11 +435,10 @@ object EventAnalytics {
     }.reduce(_ unionAll _)
     val tops = perCell.filter(col("step") === 1)
       .select(col("cohort_week"), col("n_users").as("_top"))
-    val out = perCell.join(broadcast(tops), Seq("cohort_week"))
+    perCell.join(broadcast(tops), Seq("cohort_week"))
       .select(col("cohort_week"), col("step"), col("step_name"),
         col("n_users"),
         (col("n_users").cast("double") / col("_top")).as("conv_from_first"))
-    CacheLifecycle.releaseAfterUse(out, stages.toSeq)
   }
 
   /** Bot-cadence filter — the traffic-hygiene gate run before events
@@ -496,18 +487,17 @@ object EventAnalytics {
     * type totals broadcast. */
   def weekdayProfile(events: DataFrame): DataFrame = {
     // the 168x|types|-row cell frame feeds both the heatmap and its
-    // per-type totals: persisted so the stream is counted once
+    // per-type totals: both read its exchange, which the planner reuses,
+    // so the stream is counted once
     val perCell = events
       .groupBy(expr("((ts div 1000000) div 3600000) % 168").as("hour_of_week"),
         col("event_type"))
       .agg(count(lit(1)).as("n_events"))
-      .persist()
     val totals = perCell.groupBy("event_type")
       .agg(sum("n_events").as("_tot"))
-    val out = perCell.join(broadcast(totals), "event_type")
+    perCell.join(broadcast(totals), "event_type")
       .select(col("hour_of_week"), col("event_type"), col("n_events"),
         (col("n_events").cast("double") / col("_tot")).as("share"))
-    graft.operators.CacheLifecycle.releaseAfterUse(out, Seq(perCell))
   }
 
   /** New-vs-returning daily split — growth accounting's first table: per
@@ -516,16 +506,16 @@ object EventAnalytics {
     * exact longs). Read next to [[activeUsers]]' stickiness: growth that
     * is all `new_users` with low stickiness is churn-and-burn.
     *
-    * Shape: the distinct (user, day) set (persisted — the first-day
+    * Shape: the distinct (user, day) set (scaffolded — the first-day
     * aggregate and the join both read it), a user-keyed min, one
     * user-co-partitioned join, a day-keyed rollup. Nothing wider than
     * user-day cardinality ever shuffles. */
   def newVsReturning(events: DataFrame): DataFrame = {
     val day = expr("(ts div 1000000) div 86400000")
     val userDays = events.select(col("user_id"), day.as("day")).distinct()
-      .persist()
+      .transform(CacheLifecycle.scaffold)
     val firstDay = userDays.groupBy("user_id").agg(min("day").as("_first"))
-    val out = userDays.join(firstDay, "user_id")
+    userDays.join(firstDay, "user_id")
       .groupBy("day")
       .agg(
         count(lit(1)).as("dau"),
@@ -533,7 +523,6 @@ object EventAnalytics {
       .select(col("day"), col("dau"), col("new_users"),
         (col("dau") - col("new_users")).as("returning_users"),
         (col("new_users").cast("double") / col("dau")).as("new_frac"))
-    graft.operators.CacheLifecycle.releaseAfterUse(out, Seq(userDays))
   }
 
   /** Cohort retention matrix — users grouped by their first-signup day;
@@ -664,7 +653,7 @@ object EventAnalytics {
     val userWeeks = events
       .select(col("user_id"), expr("((ts div 1000000) div 86400000) div 7").as("week"))
       .distinct()
-      .persist()
+      .transform(CacheLifecycle.scaffold)
     val marked = userWeeks
       .withColumn("_prev", lag(col("week"), 1).over(w))
       .withColumn("_next", lead(col("week"), 1).over(w))
@@ -680,7 +669,7 @@ object EventAnalytics {
       .select(col("r.week").as("week"), col("r.kind").as("kind"))
       .filter(col("kind").isNotNull)
     val maxWeek = userWeeks.agg(max("week").as("_maxw"))
-    val out = kinds
+    kinds
       .crossJoin(broadcast(maxWeek))
       .filter(col("week") <= col("_maxw"))
       .groupBy("week")
@@ -691,7 +680,6 @@ object EventAnalytics {
         count(when(col("kind") === "churned", 1)).as("churned_users"))
       .withColumn("net_growth",
         col("new_users") + col("resurrected_users") - col("churned_users"))
-    CacheLifecycle.releaseAfterUse(out, Seq(userWeeks))
   }
 
   /** PageRank over the event-type transition graph — "which screen/state
@@ -729,7 +717,6 @@ object EventAnalytics {
       .filter(col("to_type").isNotNull)
       .groupBy(col("event_type").as("src"), col("to_type").as("dst"))
       .agg(count(lit(1)).as("n_pairs"))
-      .persist()
     val outTot = pairs.groupBy("src").agg(sum("n_pairs").as("n_out"))
     // integer-ppm outflow share; the decimal product keeps the ppm mint
     // overflow-proof at any edge count
@@ -756,11 +743,10 @@ object EventAnalytics {
           150000L + aggregate(filter(edges, e -> e.dst = n), 0L,
             (acc, e) -> acc + (element_at(mass, e.src) * 17L div 20L)
               * e.w_ppm div 1000000L))))"""))
-    val out = ranked
+    ranked
       .withColumn("_total", expr("aggregate(map_values(mass), 0L, (a, x) -> a + x)"))
       .select(col("_total"), explode(col("mass")).as(Seq("event_type", "mass")))
       .select(col("event_type"), col("mass"),
         (col("mass").cast("double") / col("_total")).as("rank_share"))
-    CacheLifecycle.releaseAfterUse(out, Seq(pairs))
   }
 }

@@ -1,81 +1,43 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-
-import graft.operators.{CacheLifecycle, EventAnalytics}
-
-/** The round-10 hygiene contract: operators that persist per-run
-  * scaffolding must release it once the returned ledger has been
-  * consumed, so a long-lived session running the full surface does not
-  * accumulate dead `CacheManager` entries. The listener fires
-  * asynchronously on the listener bus, so assertions poll. */
+/** The cache-hygiene contract: a query leaves no `CacheManager` entry
+  * behind once its action returns. An operator shares a frame between the
+  * branches of its result either through the planner's exchange reuse or
+  * through a checkpoint ([[graft.operators.CacheLifecycle.scaffold]]),
+  * whose blocks never enter the `CacheManager`; nothing releases a cache
+  * asynchronously, so the count is read right after the action, without
+  * polling. */
 class CacheLifecycleSpec extends SparkSpec {
 
-  /** `CacheManager` entries — the caches `CacheLifecycle` releases. Not
-    * `getPersistentRDDs`: lazy `localCheckpoint` RDDs that other suites
-    * leave behind stay in that map until a GC collects them. */
-  private def cachedCount: Int = org.apache.spark.sql.CacheEntries(spark)
+  private val sf = "/root/testdata/sf0.001"
 
-  private def eventually(timeoutMs: Long = 10000L)(cond: => Boolean): Boolean = {
-    val deadline = System.currentTimeMillis() + timeoutMs
-    while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(50)
-    cond
-  }
+  /** Every query whose builder shares a frame between the branches of its
+    * result (the queries that once persisted one): each family, the
+    * IVF/PQ index builders and the GlobalOrder prefix scans included. */
+  private val sharing = Seq(
+    "ann_ivf_balance", "ann_ivf_recall", "ann_ivf_topk", "ann_ivfpq_topk",
+    "ann_ivfsq_topk", "ann_matryoshka", "ann_pq_recall",
+    "ann_pq_recall_curve", "ann_pq_rerank", "ann_pq_topk", "ann_probe_curve",
+    "bpe_merge_apply", "cdc_commit_floor", "cdc_debezium_e2e",
+    "cdc_evaluate", "cdc_evaluate_log", "cdc_incremental_snapshot",
+    "cdc_snapshot_tail", "cdc_txn_apply", "corpus_budget_by_source",
+    "corpus_drift", "corpus_funnel_order", "corpus_token_budget",
+    "events_attribution", "events_cohort_ltv", "events_dau", "events_funnel",
+    "events_funnel_cohorted", "events_funnel_windowed", "events_gini",
+    "events_growth_accounting", "events_new_vs_returning", "events_pagerank",
+    "events_transitions", "events_user_octaves", "events_weekday_profile",
+    "export_shard_stats", "mix_temperature", "mm_aspect_buckets",
+    "mm_modality_mix", "pack_efficiency", "pack_efficiency_curve",
+    "pack_plan", "q_cold_customers", "q_top_supplier",
+    "quality_source_matrix", "split_contamination_matrix",
+    "split_kfold_clustered", "split_leakage_guard", "vocab_coverage",
+    "vocab_zipf")
 
-  private def exec(df: DataFrame): Unit =
-    df.write.mode("overwrite").format("noop").save()
-
-  private def eventsDf = {
-    import spark.implicits._
-    Seq(
-      (1L, "signup", 1000000L), (1L, "click", 2000000L),
-      (1L, "purchase", 3000000L), (2L, "signup", 1000000L),
-      (2L, "click", 5000000L), (3L, "click", 1000000L))
-      .toDF("user_id", "event_type", "ts")
-  }
-
-  test("funnel releases its stage caches after the consuming action") {
-    spark.catalog.clearCache()
-    assert(cachedCount === 0)
-    val out = EventAnalytics.funnel(eventsDf)
-    exec(out) // populates the stage caches, then the listener releases them
-    assert(eventually()(cachedCount === 0),
-      s"stage caches still resident: $cachedCount")
-  }
-
-  test("release fires on identity match, not on unrelated actions") {
-    spark.catalog.clearCache()
-    val scaffold = eventsDf.persist()
-    val result = CacheLifecycle.releaseAfterUse(
-      scaffold.groupBy("event_type").agg(count(lit(1)).as("n")), Seq(scaffold))
-    exec(eventsDf.select("user_id")) // unrelated: must NOT release
-    Thread.sleep(300)
-    exec(result) // force the cache to actually materialize, then release
-    assert(eventually()(cachedCount === 0),
-      s"scaffold still resident after consuming action: $cachedCount")
-  }
-
-  test("backstop releases a built-but-never-executed query's scaffolding") {
-    spark.catalog.clearCache()
-    val scaffold = eventsDf.persist()
-    exec(scaffold.groupBy("user_id").agg(count(lit(1)))) // materialize cache
-    CacheLifecycle.releaseAfterUse(
-      scaffold.groupBy("event_type").agg(count(lit(1)).as("n")), Seq(scaffold))
-    // the wrapped result is never executed; Backstop unrelated actions
-    // must still flush the scaffold
-    val probe = eventsDf.select("user_id")
-    (1 to CacheLifecycle.Backstop + 1).foreach(_ => exec(probe))
-    assert(eventually()(cachedCount === 0),
-      s"scaffold survived the backstop: $cachedCount")
-  }
-
-  test("incremental snapshot releases its state cache after consumption") {
-    spark.catalog.clearCache()
-    val snap = SparkEntry.queries("cdc_incremental_snapshot")(
-      spark, "/root/testdata/sf0.001")
-    exec(snap)
-    assert(eventually()(cachedCount === 0),
-      s"snapshot state cache still resident: $cachedCount")
-  }
+  for (name <- sharing)
+    test(s"$name leaves no CacheManager entry after its action") {
+      spark.catalog.clearCache()
+      SparkEntry.queries(name)(spark, sf).write.mode("overwrite").format("noop").save()
+      val left = org.apache.spark.sql.CacheEntries(spark)
+      assert(left === 0, s"$name left $left CacheManager entries")
+    }
 }

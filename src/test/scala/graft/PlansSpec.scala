@@ -1,10 +1,19 @@
 package graft
 
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+
 /** Plan-shape pins for the bench's top-cost queries and the SCALE.md
   * claims — the suite fails if a future change regresses a physical plan
   * (a lost broadcast, a surprise cartesian, an extra shuffle on the apply
   * path). Counts are taken from the INITIAL physical plan (pre-AQE), which
-  * is what the planner promises before runtime stats kick in.
+  * is what the planner promises before runtime stats kick in, followed by
+  * the initial plans of the scaffolds (`CacheLifecycle.scaffold`) the
+  * query's builder checkpointed. Exchange reuse only shows once a query
+  * has run, so [[reusedExchanges]] reads it off the final adaptive plan.
   *
   * The 1-row `BroadcastNestedLoopJoin`s some composites carry (a metrics
   * cross-join of single-row aggregates) are legitimate and cheap at any
@@ -95,13 +104,58 @@ class PlansSpec extends SparkSpec {
     // round-15: the bucket-pruned streaming ingest gate (batch form)
     "dedup_ingest_gate_pruned")
 
-  // built once; query construction may run driver-side convergence loops
-  private lazy val plans: Map[String, String] = names.map { n =>
-    n -> SparkEntry.queries(n)(spark, sf).queryExecution.executedPlan.toString()
-  }.toMap
+  /** Per query: the result's executed plan, and the plans of the
+    * scaffolds its builder ran. A scaffold shows in the result's plan only
+    * as `Scan ExistingRDD`, so its lineage is read off the SQL execution
+    * that built it (the way a persisted frame's lineage printed under its
+    * `InMemoryRelation`). A scaffold built inside `IndexCache` belongs to
+    * the once-per-JVM index build, not to the query that happened to build
+    * it first, so it is left out. Built once; query construction may also
+    * run driver-side convergence loops. */
+  private lazy val built: Map[String, (String, String)] = {
+    val scaffolds = ArrayBuffer.empty[String]
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.details.contains("CacheLifecycle") &&
+            !s.details.contains("IndexCache") =>
+          scaffolds.synchronized { scaffolds += s.physicalPlanDescription }
+        case _ => ()
+      }
+    }
+    spark.conf.set("spark.sql.ui.explainMode", "simple")
+    spark.sparkContext.addSparkListener(listener)
+    try names.map { n =>
+      val result = SparkEntry.queries(n)(spark, sf).queryExecution.executedPlan.toString()
+      ListenerBusDrain(spark.sparkContext)
+      n -> (result, scaffolds.synchronized {
+        try scaffolds.mkString("\n") finally scaffolds.clear()
+      })
+    }.toMap
+    finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.conf.unset("spark.sql.ui.explainMode")
+    }
+  }
+
+  /** The result's plan followed by its scaffolds' plans. */
+  private def plans(name: String): String = built(name) match {
+    case (result, scaffolds) => result + "\n" + scaffolds
+  }
 
   private def count(name: String, marker: String): Int =
     marker.r.findAllIn(plans(name)).size
+
+  /** Occurrences in the result's own plan, without its scaffolds. */
+  private def resultCount(name: String, marker: String): Int =
+    marker.r.findAllIn(built(name)._1).size
+
+  /** `ReusedExchange` nodes in the final adaptive plan (runs the query):
+    * a subtree several branches read, shared by the planner. */
+  private def reusedExchanges(name: String): Int = {
+    val df = SparkEntry.queries(name)(spark, sf)
+    df.collect()
+    "ReusedExchange".r.findAllIn(df.queryExecution.executedPlan.toString()).size
+  }
 
   /** Count marker occurrences OUTSIDE `InMemoryRelation` subtrees — the
     * operators that actually execute. The cached-lineage rendering under
@@ -115,7 +169,7 @@ class PlansSpec extends SparkSpec {
     def contentPos(l: String): Int = l.indexWhere(ch => !" :+-".contains(ch))
     val sb = new StringBuilder
     var skipBelow = -1 // content-position of the InMemoryRelation being elided
-    for (l <- plans(name).linesIterator) {
+    for (l <- built(name)._1.linesIterator) {
       val p = contentPos(l)
       if (skipBelow >= 0 && (p < 0 || p > skipBelow)) ()
       else {
@@ -364,14 +418,12 @@ class PlansSpec extends SparkSpec {
     // every remaining join is a tiny-side BNLJ and the former
     // subspace-keyed BroadcastHashJoins are gone entirely — with them
     // went the two corpus-sized assignment Exchanges per pass.
-    // round-18: the codebook ARRAY is folded ONCE per query and persisted
+    // round-18: the codebook ARRAY is folded ONCE per query and scaffolded
     // (was: each consumer re-derived cbArray over the cached raw rows).
-    // Exactly three BNLJs EXECUTE: the encode cross, the LUT-build cross,
-    // and the LUT onto the code stream — pinned via liveCount because the
-    // cached training lineage under each InMemoryTableScan re-renders the
-    // two per-iteration crosses once per reference, and how many references
-    // render depends on session cache state (raw count: 7 isolated, more
-    // under the full suite)
+    // Exactly three BNLJs EXECUTE in the result: the encode cross, the
+    // LUT-build cross, and the LUT onto the code stream — pinned via
+    // liveCount because the scaffold's training lineage adds the
+    // per-iteration crosses to the plan text
     val pqTopkBnlj = liveCount("ann_pq_topk", "BroadcastNestedLoopJoin")
     assert(pqTopkBnlj === 3,
       "tiny-side BNLJs only: encode cross + LUT build + LUT onto the code " +
@@ -605,7 +657,7 @@ class PlansSpec extends SparkSpec {
   }
 
   test("incremental snapshot ranks via GlobalOrder and probes with a keyed join") {
-    // the rangepartitioning itself sits inside GlobalOrder's cached subplan
+    // the rangepartitioning itself sits inside GlobalOrder's scaffold
     assert(count("cdc_incremental_snapshot", "BroadcastNestedLoopJoin Cross") <= 8,
       "cross BNLJs are only the 1-row cut/step parameter broadcasts")
     assert(count("cdc_incremental_snapshot", "BroadcastNestedLoopJoin LeftOuter") <= 1,
@@ -760,11 +812,10 @@ class PlansSpec extends SparkSpec {
 
   test("attribution: one user-partitioned window, channel agg, totals broadcast") {
     // the windowed corpus pass materializes once: BOTH consumers (the
-    // output projection and the revenue total) read the cached channel
-    // ledger — the InMemoryRelation prints its Window child per consumer,
-    // so the structural claim is cache reads, not text scan counts
-    assert(count("events_attribution", "InMemoryTableScan") >= 2,
-      "output and share total must both read the cached channel ledger")
+    // output projection and the revenue total) read the scaffolded channel
+    // ledger, so the structural claim is checkpoint reads
+    assert(count("events_attribution", "Scan ExistingRDD") >= 2,
+      "output and share total must both read the scaffolded channel ledger")
     assert(count("events_attribution", "SortMergeJoin") === 0)
     assert(count("events_attribution", "BroadcastNestedLoopJoin") === 1,
       "only the 1-row revenue total may nested-loop broadcast")
@@ -779,8 +830,8 @@ class PlansSpec extends SparkSpec {
       "the cumsum window must carry the cohort partition spec")
     assert(count("events_cohort_ltv", "BroadcastHashJoin") >= 1,
       "cohort sizes must broadcast")
-    assert(count("events_cohort_ltv", "InMemoryTableScan") >= 2,
-      "purchase join and size rollup must both read the cached cohorts")
+    assert(count("events_cohort_ltv", "Scan ExistingRDD") >= 2,
+      "purchase join and size rollup must both read the scaffolded cohorts")
   }
 
   test("interarrival: (user,type)-partitioned lag, |types|-row aggregate") {
@@ -798,8 +849,9 @@ class PlansSpec extends SparkSpec {
   }
 
   test("corpus drift is ONE corpus pass: bucket agg + 1-row totals broadcast") {
-    assert(count("corpus_drift", "InMemoryTableScan") >= 2,
-      "output and totals must both read the cached bucket frame")
+    assert(reusedExchanges("corpus_drift") >= 1,
+      "output and totals must share the bucket aggregate's exchange")
+    assert(count("corpus_drift", "InMemoryTableScan") === 0)
     assert(count("corpus_drift", "BroadcastNestedLoopJoin") === 1)
     assert(count("corpus_drift", "SortMergeJoin") === 0)
   }
@@ -844,8 +896,8 @@ class PlansSpec extends SparkSpec {
   }
 
   test("cohorted funnel rides the funnel's cached stages; tops broadcast") {
-    assert(count("events_funnel_cohorted", "InMemoryTableScan") >= 2,
-      "stage frames must be cached, not re-derived per consumer")
+    assert(count("events_funnel_cohorted", "Scan ExistingRDD") >= 2,
+      "stage frames must be scaffolded, not re-derived per consumer")
     assert(count("events_funnel_cohorted", "CartesianProduct") === 0)
     assert(count("events_funnel_cohorted", "BroadcastHashJoin") >= 1,
       "per-cohort tops must broadcast")
@@ -858,14 +910,13 @@ class PlansSpec extends SparkSpec {
   }
 
   test("pack efficiency curve: ONE distributed prefix sum for all windows") {
-    // toString reprints the cached prefix-sum relation's child under every
-    // InMemoryTableScan, so "one corpus pass" pins as: every printed scan
-    // sits inside the (single) cached relation, and no per-window branch
-    // re-reads the corpus (a Union of per-window scans would add parquet
-    // scans without matching InMemoryRelation reprints).
-    assert(count("pack_efficiency_curve", "Scan parquet") ===
-      count("pack_efficiency_curve", "InMemoryRelation"),
-      "every window's bins derive from the same cached cumulative column")
+    // "one corpus pass": the corpus is scanned once, inside GlobalOrder's
+    // scaffolded prefix scan, and no per-window branch of the result
+    // re-reads it (a Union of per-window scans would add parquet scans to
+    // the result's own plan)
+    assert(resultCount("pack_efficiency_curve", "Scan parquet") === 0,
+      "every window's bins derive from the same scaffolded cumulative column")
+    assert(count("pack_efficiency_curve", "Scan parquet") === 1)
     assert(count("pack_efficiency_curve", "Union") === 0,
       "the sweep is one aggregate unpivoted, never per-window passes")
     assert(count("pack_efficiency_curve", "CartesianProduct") === 0)
@@ -920,23 +971,23 @@ class PlansSpec extends SparkSpec {
     // pixel profile has one consumer: exactly one index scan
     assert(count("mm_pixel_profile", "Scan parquet") === 1)
     assert(count("mm_pixel_profile", "SortMergeJoin") === 0)
-    // modality mix caches its ≤3-row aggregate so the share denominator
-    // does not re-decode the corpus: every printed scan sits under a
-    // cached-relation reprint (the pack_efficiency_curve pin pattern)
-    assert(count("mm_modality_mix", "Scan parquet") ===
-      count("mm_modality_mix", "InMemoryRelation"),
-      "the totals branch must read the cached aggregate, not re-decode")
+    // modality mix scaffolds its ≤3-row aggregate so the share denominator
+    // does not re-decode the corpus: the result reads no parquet itself
+    // (the pack_efficiency_curve pin pattern)
+    assert(resultCount("mm_modality_mix", "Scan parquet") === 0,
+      "the totals branch must read the scaffolded aggregate, not re-decode")
+    assert(count("mm_modality_mix", "Scan ExistingRDD") >= 2)
     for (n <- Seq("mm_modality_mix", "mm_pixel_profile"))
       assert(count(n, "CartesianProduct") === 0, s"$n cartesian")
   }
 
   test("kfold: doc↔cluster join cached at the fold aggregate; totals reuse it") {
     assert(count("split_kfold_clustered", "CartesianProduct") === 0)
-    assert(count("split_kfold_clustered", "InMemoryRelation") >= 1,
-      "the k-row fold aggregate must be cached so totals skip the join")
-    assert(count("split_kfold_clustered", "Scan parquet") ===
-      count("split_kfold_clustered", "InMemoryRelation") * 2,
-      "each cached reprint holds the one doc↔cluster join's two scans")
+    assert(count("split_kfold_clustered", "Scan ExistingRDD") >= 2,
+      "the k-row fold aggregate must be scaffolded so totals skip the join")
+    assert(resultCount("split_kfold_clustered", "Scan parquet") === 0 &&
+      count("split_kfold_clustered", "Scan parquet") === 2,
+      "the scaffold holds the one doc↔cluster join's two scans")
   }
 
   test("temporal split: conditional aggregates, no keyed join at all") {
@@ -975,7 +1026,7 @@ class PlansSpec extends SparkSpec {
   test("growth ledgers: user-keyed aggregates, no shuffled joins") {
     assert(count("events_new_vs_returning", "CartesianProduct") === 0)
     assert(count("quality_source_matrix", "SortMergeJoin") === 0,
-      "the per-source totals must broadcast onto the cached cells")
+      "the per-source totals must broadcast onto the scaffolded cells")
     assert(count("quality_source_matrix", "CartesianProduct") === 0)
   }
 
@@ -1024,13 +1075,15 @@ class PlansSpec extends SparkSpec {
   }
 
   test("pageRank: the ten rounds are ONE in-row fold — no iteration joins") {
-    // exactly the pairs⨝outflow broadcast; the cached edge frame is read
-    // twice (outflow totals + the graph collapse) and the power iteration
-    // adds zero operators beyond the single-row projection
+    // exactly the pairs⨝outflow broadcast; the edge counts are read twice
+    // (outflow totals + the graph collapse) through one shared exchange,
+    // and the power iteration adds zero operators beyond the single-row
+    // projection
     assert(count("events_pagerank", "BroadcastHashJoin") === 1,
       "only the outflow-share broadcast joins")
-    assert(count("events_pagerank", "InMemoryTableScan") === 2,
-      "the persisted edge counts are read exactly twice")
+    assert(reusedExchanges("events_pagerank") >= 1,
+      "both readers of the edge counts share the pair aggregate's exchange")
+    assert(count("events_pagerank", "InMemoryTableScan") === 0)
     assert(count("events_pagerank", "CartesianProduct") === 0)
   }
 
