@@ -548,7 +548,10 @@ object Similarity {
           col("embedding").as("b_emb"), col("nrm").as("b_nrm"))
           .withColumn("_blk", explode(array(
             expr(s"b_rnk div $band"), expr(s"b_rnk div $band - 1"))))
-        a.join(b, Seq("list_id", "_blk"))
+        // a sort-merge join over its own exchange: a broadcast of the
+        // two-column (list_id, _blk) key would hold a full page of heap
+        // (BandJoin's NO BROADCAST rule)
+        a.hint("merge").join(b, Seq("list_id", "_blk"))
           .filter(col("a_rnk") < col("b_rnk") &&
             col("a_rnk") >= col("b_rnk") - band)
       }

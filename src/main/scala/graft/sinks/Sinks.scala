@@ -130,23 +130,47 @@ object Sinks {
     * twice yields the same state (replay-safe, the canonical sink's dedup +
     * upsert contract). Latest event per key by `seqCol` wins; deletes remove.
     * For a real external store this is the `foreachBatch { MERGE }` body —
-    * here it returns the post-merge state for a table-valued destination. */
+    * here it returns the post-merge state for a table-valued destination.
+    *
+    * One keyed pass: `current` rows (`_src` 0) and `batch` rows (`_src` 1)
+    * are unioned and windowed over (tbl, pk), ordered `_src desc, seq
+    * desc`, so a touched key's first row is the batch's latest. A key's
+    * `current` rows stay when no batch row shares the key; the batch's
+    * latest row stays unless its `op_code` is "d". One (tbl, pk) exchange
+    * and one sort, and no join: an anti-join against the batch's keys is
+    * small enough for AQE to broadcast, and a two-column broadcast key
+    * costs a full page of live heap however few rows it has (the NO
+    * BROADCAST paragraph of [[graft.operators.BandJoin]]).
+    *
+    * The rules of an equi-join on (tbl, pk) hold exactly:
+    *   - a `current` row with a null `tbl` or `pk` matches no batch row,
+    *     so it always stays;
+    *   - batch rows with a null in the key still dedup among themselves,
+    *     and the latest upserts as its own key;
+    *   - a latest batch row with a null `op_code` neither upserts nor
+    *     deletes, but still removes the key's `current` rows;
+    *   - duplicate `current` rows of an untouched key all stay.
+    * Which of two batch rows of one key with equal `seqCol` wins is
+    * unspecified. */
   def idempotentUpsert(
       current: DataFrame, // tbl, pk, payload cols
       batch: DataFrame, // tbl, pk, op_code, payload cols, seqCol
       seqCol: String,
       payloadCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("tbl", "pk").orderBy(col(seqCol).desc)
-    val latest = batch
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-    val upserts = latest.filter(col("op_code") =!= "d")
-      .select((Seq(col("tbl"), col("pk")) ++ payloadCols.map(col)): _*)
-    val deletes = latest.filter(col("op_code") === "d").select("tbl", "pk")
-    current
-      .join(latest.select("tbl", "pk"), Seq("tbl", "pk"), "left_anti") // untouched rows
-      .unionByName(upserts)
-      .join(deletes, Seq("tbl", "pk"), "left_anti") // ensure deleted keys gone
+    val row = Seq(col("tbl"), col("pk")) ++ payloadCols.map(col)
+    val w = Window.partitionBy("tbl", "pk").orderBy(col("_src").desc, col(seqCol).desc)
+    val keyed = current.select(row :+ lit(0).as("_src"): _*)
+      .unionByName(batch.select(row ++ Seq(col("op_code"), col(seqCol), lit(1).as("_src")): _*),
+        allowMissingColumns = true)
+      .withColumn("_rn", row_number().over(w))
+      // a running max under `_src desc`: the key's first row, so 1 on every
+      // row of a key the batch touches
+      .withColumn("_touched", max(col("_src")).over(w) === 1)
+    val nullKey = col("tbl").isNull || col("pk").isNull
+    keyed
+      .filter(col("_src") === 0 && (nullKey || !col("_touched")) ||
+        col("_src") === 1 && col("_rn") === 1 && col("op_code") =!= "d")
+      .select(current.columns.map(col): _*)
   }
 }

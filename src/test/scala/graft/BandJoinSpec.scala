@@ -1,40 +1,17 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
-import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 
 import graft.llm.Dedup
 import graft.operators.BandJoin
+import graft.testutil.PlanNodes.broadcasts
 
 /** [[BandJoin]]: the hot-bucket cap boundary, star edges against a
   * group-and-join-back reference, and the no-broadcast plan contract. */
 class BandJoinSpec extends SparkSpec {
 
   import spark.implicits._
-
-  /** Every node of an executed plan: AQE's current (after an action, the
-    * final) plan, its query stages, subqueries and the cached plans of
-    * in-memory scans. */
-  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-    case q: QueryStageExec => nodes(q.plan)
-    case m: InMemoryTableScanExec => nodes(m.relation.cachedPlan)
-    case other => (other.children ++ other.subqueries).flatMap(nodes)
-  })
-
-  private def broadcasts(df: DataFrame): Seq[String] = {
-    val all = nodes(df.queryExecution.executedPlan)
-    assert(all.exists(_.isInstanceOf[AdaptiveSparkPlanExec]), "AQE plan expected")
-    all.collect {
-      case b: BroadcastExchangeExec => b.nodeName
-      case j: BroadcastHashJoinExec => j.nodeName
-    }
-  }
 
   private def pairSet(df: DataFrame): Set[(Long, Long)] =
     df.select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet

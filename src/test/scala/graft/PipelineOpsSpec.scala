@@ -837,6 +837,14 @@ class PipelineOpsSpec extends SparkSpec {
       "the banded lower bound may only KEEP more, never drop more")
   }
 
+  test("semDedupBanded: no multi-column broadcast hash join in the final plan") {
+    val out = Similarity.semDedupBanded(
+      graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001"))
+    out.collect()
+    assert(graft.testutil.PlanNodes.multiKeyBroadcastJoins(out).isEmpty,
+      out.queryExecution.executedPlan.treeString)
+  }
+
   test("pathTopK: 3-step windows per user, counts weight repeats, rank total order") {
     // u1 timeline: a b a b -> paths (a,b,a), (b,a,b); u2: a b a -> (a,b,a)
     val events = Seq(

@@ -1,9 +1,12 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sinks.Sinks
 import graft.sources.{DebeziumSource, ScenarioSource, WorkloadGen}
+import graft.testutil.PlanNodes
 
 /** Scenario fixture IO + normaliser, Debezium envelope decode, NDJSON export,
   * idempotent upsert, workload generators. */
@@ -162,6 +165,68 @@ class SourcesSinksSpec extends SparkSpec {
     val expected = Set(("t0", "1", 10.0), ("t0", "3", 30.0))
     assert(state(once) === expected)
     assert(state(twice) === expected)
+  }
+
+  /** The two-anti-join form of [[Sinks.idempotentUpsert]]: drop every
+    * `current` row whose key the batch touches, add the batch's latest
+    * non-delete rows, drop the deleted keys. The reference the window pass
+    * must equal, duplicates and null keys included. */
+  private def antiJoinUpsert(current: DataFrame, batch: DataFrame, seqCol: String,
+      payloadCols: Seq[String]): DataFrame = {
+    val w = Window.partitionBy("tbl", "pk").orderBy(col(seqCol).desc)
+    val latest = batch.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+    val upserts = latest.filter(col("op_code") =!= "d")
+      .select((Seq(col("tbl"), col("pk")) ++ payloadCols.map(col)): _*)
+    val deletes = latest.filter(col("op_code") === "d").select("tbl", "pk")
+    current
+      .join(latest.select("tbl", "pk"), Seq("tbl", "pk"), "left_anti")
+      .unionByName(upserts)
+      .join(deletes, Seq("tbl", "pk"), "left_anti")
+  }
+
+  test("idempotent upsert: equals the anti-join reference on seeded random inputs") {
+    type Key = (Option[String], Option[String])
+    def sorted(df: DataFrame): Seq[(Option[String], Option[String], Long)] =
+      df.select("tbl", "pk", "v").collect()
+        .map(r => (Option(r.getString(0)), Option(r.getString(1)), r.getLong(2))).toSeq.sorted
+    val opCodes = Seq(Some("c"), Some("u"), Some("u"), Some("d"), Some("d"), None)
+    Seq(3, 17, 29).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      def key(): Key = (
+        if (rnd.nextInt(10) == 0) None else Some(s"t${rnd.nextInt(2)}"),
+        if (rnd.nextInt(10) == 0) None else Some(rnd.nextInt(40).toString))
+      val cur = Seq.fill(100)(key() -> rnd.nextInt(1000).toLong)
+      // distinct seqs, so the latest row of every key is defined
+      val bat = rnd.shuffle((0L until 100L).toList)
+        .map(seq => (key(), opCodes(rnd.nextInt(opCodes.size)), rnd.nextInt(1000).toLong, seq))
+      def nullKey(k: Key) = k._1.isEmpty || k._2.isEmpty
+      val curKeys = cur.map(_._1)
+      val batKeys = bat.map(_._1)
+      assert(curKeys.exists(nullKey) && batKeys.exists(nullKey), s"seed $seed: null keys")
+      assert(curKeys.filterNot(nullKey).distinct.size < curKeys.count(!nullKey(_)),
+        s"seed $seed: duplicate current keys")
+      assert(batKeys.filterNot(nullKey).distinct.size < batKeys.count(!nullKey(_)),
+        s"seed $seed: several ops per key")
+      assert(bat.exists(b => b._2.contains("d") && !curKeys.contains(b._1)),
+        s"seed $seed: a delete of an absent key")
+      assert(bat.exists(_._2.isEmpty), s"seed $seed: a null op_code")
+
+      val current = cur.map { case ((t, p), v) => (t, p, v) }.toDF("tbl", "pk", "v")
+      val batch = bat.map { case ((t, p), op, v, seq) => (t, p, op, v, seq) }
+        .toDF("tbl", "pk", "op_code", "v", "seq")
+      val got = sorted(Sinks.idempotentUpsert(current, batch, "seq", Seq("v")))
+      assert(got.exists(r => r._1.isEmpty || r._2.isEmpty), s"seed $seed: null keys survive")
+      assert(got === sorted(antiJoinUpsert(current, batch, "seq", Seq("v"))), s"seed $seed")
+    }
+  }
+
+  test("idempotent upsert: no broadcast relation in the final plan") {
+    val current = (0 until 20).map(i => ("t0", i.toString, i.toDouble)).toDF("tbl", "pk", "v")
+    val batch = (10 until 30).map(i => ("t0", i.toString, if (i % 3 == 0) "d" else "u", -i.toDouble,
+      i.toLong)).toDF("tbl", "pk", "op_code", "v", "seq")
+    val merged = Sinks.idempotentUpsert(current, batch, "seq", Seq("v"))
+    assert(merged.collect().length === 10 + 14) // untouched 0-9; 20 batch keys, 6 deleted
+    assert(PlanNodes.broadcasts(merged).isEmpty, merged.queryExecution.executedPlan.treeString)
   }
 
   test("events.ts magnitude bands: in-band units normalize, out-of-band raises both sides") {
