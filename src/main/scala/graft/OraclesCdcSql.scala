@@ -466,16 +466,19 @@ private[graft] trait OraclesCdcSql {
     ORDER BY method"""
 
   /** Data-contract assertion — mirrors `CdcOps.contractViolations`: set-ops
-    * with null payloads and per-key lsn/t order inversions, both 0 on
-    * conforming input. */
+    * with null payloads, per-key lsn/t order inversions and per-key
+    * duplicate lsns, all 0 on conforming input. */
   val cdcContracts: String = s"""WITH $opsCte,
     seq AS (
-      SELECT *, lag(t) OVER (PARTITION BY tbl, pk ORDER BY event_id) AS prev_t
+      SELECT *,
+        lag(t) OVER (PARTITION BY tbl, pk ORDER BY event_id, t) AS prev_t,
+        lag(lsn) OVER (PARTITION BY tbl, pk ORDER BY event_id, t) AS prev_lsn
       FROM ops)
     SELECT
       count(CASE WHEN (sets_val AND val IS NULL) OR (sets_k AND k IS NULL) THEN 1 END)
         AS null_set_payloads,
-      count(CASE WHEN prev_t > t THEN 1 END) AS lsn_t_inversions
+      count(CASE WHEN prev_t > t THEN 1 END) AS lsn_t_inversions,
+      count(CASE WHEN prev_lsn = lsn THEN 1 END) AS dup_lsns
     FROM seq"""
 
   /** Cross-lane summary (`web/App.tsx:985-1020`) — mirrors the Spark

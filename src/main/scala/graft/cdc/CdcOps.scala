@@ -30,6 +30,9 @@ import graft.sources.Tables
   *   - `lsn` is monotone in `t` only if `event_id` is assigned in ts order
   *     (true for the driver's generator). An out-of-order or reused
   *     `event_id` would silently reorder the per-key fold.
+  *   - `lsn` is unique within (tbl, pk): a replayed op (a redelivery with
+  *     the same `t` and `event_id`) would be folded twice, and
+  *     `Capture`'s primitive-max rewrite assumes a key's max lsn is one row.
   *   - `sets_val ⇒ val IS NOT NULL` and `sets_k ⇒ k IS NOT NULL` (i.e.
   *     `events.value` is never null and `props` always contains digits).
   *     [[withState]]'s sentinel scan skips null set-values
@@ -143,20 +146,28 @@ object CdcOps {
         .as("after_json"))
 
   /** One-row diagnostic for the data contracts above: count of set-ops with
-    * a null payload (would diverge sentinel-scan vs merge-fold semantics)
-    * and of ops where lsn order inverts (t, event_id) order (would silently
-    * reorder the per-key fold). Both must be 0 on conforming input. Cheap —
-    * a single scan + partial agg, intended for ingestion-time assertion. */
+    * a null payload (would diverge sentinel-scan vs merge-fold semantics),
+    * of ops where lsn order inverts (t, event_id) order (would silently
+    * reorder the per-key fold), and of ops whose lsn repeats the previous
+    * op's within the key (`dup_lsns`). All must be 0 on conforming input.
+    * Cheap — one per-key window pass + a global agg, intended for
+    * ingestion-time assertion. The first two columns keep their positions.
+    *
+    * The window orders each key by (event_id, t), so the inversion count is
+    * deterministic when an event_id repeats. With no inversions, two ops of
+    * a key with one lsn have equal (t, event_id) (`t·10⁶ + event_id` is
+    * injective while `event_id < 10⁶`), so they are adjacent in that order
+    * and the adjacent comparison counts every duplicate. */
   def contractViolations(ops: DataFrame): DataFrame = {
-    // event_id order must agree with t order (per key — the order the fold
-    // consumes; a per-key window keeps the check shuffle-friendly at scale)
-    val w = Window.partitionBy("tbl", "pk").orderBy("event_id")
+    val w = Window.partitionBy("tbl", "pk").orderBy("event_id", "t")
     ops
       .withColumn("prev_t", lag(col("t"), 1).over(w))
+      .withColumn("prev_lsn", lag(col("lsn"), 1).over(w))
       .agg(
         count(when((col("sets_val") && col("val").isNull) ||
           (col("sets_k") && col("k").isNull), 1)).as("null_set_payloads"),
-        count(when(col("prev_t") > col("t"), 1)).as("lsn_t_inversions"))
+        count(when(col("prev_t") > col("t"), 1)).as("lsn_t_inversions"),
+        count(when(col("prev_lsn") === col("lsn"), 1)).as("dup_lsns"))
   }
 
   /** Map the canonical op kind to the Debezium-style single-letter op code

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.operators.CacheLifecycle.scaffold
+
 /** Connected components over the near-duplicate candidate graph — the
   * clustering stage of a fuzzy-dedup pipeline. LSH candidates (e.g.
   * [[Dedup.minhashCandidates]]) are PAIRS; retention policies need
@@ -38,6 +40,10 @@ object Clusters {
     * 32–41 s) and at twice it (8.0–8.8 s vs 64–68 s); the bound is set by
     * the task's memory, not by speed. */
   val FinishEdges: Long = 1L << 20
+
+  /** Cap on the contraction rounds of [[starEdges]]; the loop needs
+    * O(log n) of them. */
+  private val MaxRounds = 20
 
   /** Both orientations of an undirected edge list with columns (u, v). */
   private def symmetric(e: DataFrame): DataFrame =
@@ -89,57 +95,31 @@ object Clusters {
     * union-find in one task (long ids only; other id types always run the
     * loop).
     *
-    * Each round is checkpointed: without lineage truncation the logical
-    * plan grows by a constant factor PER ROUND (each star references its
-    * input several times) and planning itself blows up long before the
-    * data does. The one-task finish is checkpointed the same way, so
-    * consumers that read the edges twice ([[assign]]) run it once.
-    *
-    * @param checkpointDir when set, rounds use RELIABLE `checkpoint()`
-    *        into this directory (setCheckpointDir once per context) —
-    *        the right durability on a multi-executor cluster, where
-    *        `localCheckpoint` blocks die with a decommissioned executor
-    *        and a 100-round-hour job would restart from zero. When
-    *        absent, `localCheckpoint` (lazy) — cheapest on a single
-    *        node, and the per-round test right after is the job that
-    *        materializes each round (eager would pay a second,
-    *        redundant job; reliable checkpoint() is always eager, its
-    *        write IS the materializing job). Dropped generations are
-    *        reclaimed by the ContextCleaner once unreferenced. */
-  def starEdges(
-      pairs: DataFrame,
-      maxIter: Int = 20,
-      checkpointDir: Option[String] = None): DataFrame =
-    starEdgesWithRounds(pairs, maxIter, checkpointDir)._1
+    * Each round is truncated by [[graft.operators.CacheLifecycle.scaffold]]:
+    * without lineage truncation the logical plan grows by a constant
+    * factor PER ROUND (each star references its input several times) and
+    * planning itself blows up long before the data does. The one-task
+    * finish is scaffolded the same way, so consumers that read the edges
+    * twice ([[assign]]) run it once. With a checkpoint directory set on
+    * the context (`sc.setCheckpointDir`, the deployment's durability
+    * choice on a multi-executor cluster, where local blocks die with a
+    * decommissioned executor) the rounds are reliable checkpoints; else
+    * lazy local ones, which the per-round test right after materializes.
+    * Dropped generations are reclaimed by the ContextCleaner once
+    * unreferenced. */
+  def starEdges(pairs: DataFrame): DataFrame = starEdgesWithRounds(pairs)._1
 
   /** [[starEdges]] plus the number of Large∘Small contraction rounds it
     * ran before the structural fixed-point test passed or the union-find
     * finish took over — the observable the O(log n) claim is tested
     * against. 0 when the input graph was already under [[FinishEdges]]. */
-  def starEdgesWithRounds(
-      pairs: DataFrame,
-      maxIter: Int = 20,
-      checkpointDir: Option[String] = None): (DataFrame, Int) =
-    contract(pairs, maxIter, checkpointDir, FinishEdges)
+  def starEdgesWithRounds(pairs: DataFrame): (DataFrame, Int) =
+    contract(pairs, FinishEdges)
 
   /** [[starEdgesWithRounds]] with the finish bound as a parameter: tests
     * pass 0 to run the contraction loop to the fixed point on graphs far
     * smaller than [[FinishEdges]]. */
-  private[graft] def contract(
-      pairs: DataFrame,
-      maxIter: Int,
-      checkpointDir: Option[String],
-      finishEdges: Long): (DataFrame, Int) = {
-    val persist: DataFrame => DataFrame = checkpointDir match {
-      case Some(dir) =>
-        val sc = pairs.sparkSession.sparkContext
-        // setCheckpointDir is JVM-global: honor the caller's dir rather
-        // than silently writing rounds somewhere else when a different
-        // dir is already set.
-        if (!sc.getCheckpointDir.exists(_.contains(dir))) sc.setCheckpointDir(dir)
-        df => df.checkpoint()
-      case None => df => df.localCheckpoint(false)
-    }
+  private[graft] def contract(pairs: DataFrame, finishEdges: Long): (DataFrame, Int) = {
     // canonical orientation (u > v) from the start: the structural test
     // below relies on it, and both star operators preserve it
     val canonical = pairs
@@ -153,11 +133,11 @@ object Clusters {
     def loop(e: DataFrame, it: Int): (DataFrame, Int) = {
       val (starForest, edges) = forestStats(e)
       if (starForest) (e, it)
-      else if (finishable && edges <= finishEdges) (persist(unionFindStars(e)), it)
-      else if (it >= maxIter) (e, it)
-      else loop(persist(smallStar(largeStar(e))), it + 1)
+      else if (finishable && edges <= finishEdges) (scaffold(unionFindStars(e)), it)
+      else if (it >= MaxRounds) (e, it)
+      else loop(scaffold(smallStar(largeStar(e))), it + 1)
     }
-    loop(persist(canonical), 0)
+    loop(scaffold(canonical), 0)
   }
 
   /** Union-find over the whole (deduplicated, canonical) edge set in ONE
@@ -224,12 +204,8 @@ object Clusters {
     * clusters of themselves. The final graph is a star per component, so
     * the root is just the minimum of each node's closed neighborhood —
     * one aggregation, no more iteration. */
-  def assign(
-      docs: DataFrame,
-      pairs: DataFrame,
-      maxIter: Int = 20,
-      checkpointDir: Option[String] = None): DataFrame =
-    assignStars(docs, starEdges(pairs, maxIter, checkpointDir))
+  def assign(docs: DataFrame, pairs: DataFrame): DataFrame =
+    assignStars(docs, starEdges(pairs))
 
   /** [[assign]] over star edges already computed (by [[starEdges]] or, in
     * tests, by [[contract]]). */

@@ -35,38 +35,41 @@ object Similarity {
 
   private def norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** Exact cosine top-`k` neighbors for the `nQueries` lowest vec_ids. */
-  def cosineTopK(emb: DataFrame, nQueries: Int = 10, k: Int = 5): DataFrame = {
-    val withNorm = emb.select(
-      col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
-    val queries = withNorm
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
-    val cand = withNorm.select(
-      col("vec_id").as("n_id"), col("embedding").as("n_emb"), col("nrm").as("n_nrm"))
-    val scored = cand
-      .join(broadcast(queries), col("q_id") =!= col("n_id"))
-      .withColumn("cos", dot(col("q_emb"), col("n_emb")) / (col("q_nrm") * col("n_nrm")))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-    scored
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk").cast("long").as("rnk"), col("n_id"), col("cos").as("cos_sim"))
+  /** Cosine of a query row against a candidate row, over the `q_emb`,
+    * `q_nrm`, `n_emb` and `n_nrm` columns. */
+  private val qnCos: Column =
+    dot(col("q_emb"), col("n_emb")) / (col("q_nrm") * col("n_nrm"))
+
+  /** The two sides of an exact float scan: the `nQueries` lowest vec_ids as
+    * `(q_id, q_emb, q_nrm)` and the whole corpus as `(n_id, n_emb, n_nrm)`,
+    * plus `q_label`/`n_label` when `labels` is set. */
+  private def exactSides(emb: DataFrame, nQueries: Int,
+      labels: Boolean): (DataFrame, DataFrame) = {
+    val keep = Seq("vec_id", "embedding") ++ (if (labels) Seq("label") else Nil)
+    val withNorm = emb.select(keep.map(col) :+ norm(col("embedding")).as("nrm"): _*)
+    val short = Map("vec_id" -> "id", "embedding" -> "emb")
+    def side(p: String): Seq[Column] =
+      withNorm.columns.toSeq.map(c => col(c).as(s"${p}_${short.getOrElse(c, c)}"))
+    (withNorm.filter(col("vec_id") < nQueries).select(side("q"): _*),
+      withNorm.select(side("n"): _*))
   }
 
-  /** Hard-negative mining for contrastive embedding training: for each of
-    * the `nQueries` lowest vec_ids, the `k` most-similar vectors whose
-    * `label` DIFFERS from the query's — the near-miss negatives that teach
-    * the margin (a random negative is trivially far; the hard ones sit
-    * just across the class boundary). The join predicate is the label
-    * mismatch itself, so same-label rows never reach scoring.
-    *
-    * Same shape as [[cosineTopK]]: the query set broadcasts, the corpus
-    * streams once through a codegen'd `ArrayDot`, and per-query top-k is
-    * a window rank over the per-query candidate stream. At 100 TB the
-    * production form swaps the exact scan for the IVF/LSH candidate path
-    * with the label filter applied to the probed lists — the mining
-    * predicate composes unchanged. */
+  /** Per-query rank of a scored candidate frame: `score` descending, ties
+    * to the smaller `n_id`, as a long `rnk` — the order every top-k here
+    * and its DuckDB oracle share. */
+  private def rankPerQuery(scored: DataFrame, score: String): DataFrame =
+    scored.withColumn("rnk", row_number().over(
+      Window.partitionBy("q_id").orderBy(col(score).desc, col("n_id"))).cast("long"))
+
+  /** Exact cosine top-`k` neighbors for the `nQueries` lowest vec_ids. */
+  def cosineTopK(emb: DataFrame, nQueries: Int = 10, k: Int = 5): DataFrame = {
+    val (queries, cand) = exactSides(emb, nQueries, labels = false)
+    rankPerQuery(cand.join(broadcast(queries), col("q_id") =!= col("n_id"))
+        .withColumn("cos", qnCos), "cos")
+      .filter(col("rnk") <= k)
+      .select(col("q_id"), col("rnk"), col("n_id"), col("cos").as("cos_sim"))
+  }
+
   /** Filtered-search recall audit — vector search's pre-filter vs
     * post-filter question as a measured table: a metadata-filtered query
     * ("top-k most similar WITH my label") answered by filtering AFTER a
@@ -85,22 +88,9 @@ object Similarity {
     * integers + one IEEE division. */
   def filteredSearchAudit(emb: DataFrame, nQueries: Int = 10,
       k: Int = 5): DataFrame = {
-    val withNorm = emb.select(
-      col("vec_id"), col("label"), col("embedding"),
-      norm(col("embedding")).as("nrm"))
-    val queries = withNorm
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("label").as("q_label"),
-        col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
-    val cand = withNorm.select(
-      col("vec_id").as("n_id"), col("label").as("n_label"),
-      col("embedding").as("n_emb"), col("nrm").as("n_nrm"))
-    val scored = cand
-      .join(broadcast(queries), col("q_id") =!= col("n_id"))
-      .withColumn("cos", dot(col("q_emb"), col("n_emb")) / (col("q_nrm") * col("n_nrm")))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-    scored
-      .withColumn("rnk", row_number().over(w))
+    val (queries, cand) = exactSides(emb, nQueries, labels = true)
+    rankPerQuery(cand.join(broadcast(queries), col("q_id") =!= col("n_id"))
+        .withColumn("cos", qnCos), "cos")
       .groupBy("q_id", "q_label")
       .agg(
         count(when(col("n_label") === col("q_label"), 1)).as("n_label_pool"),
@@ -124,22 +114,9 @@ object Similarity {
     * or conclude the filter must push into the index. */
   def overfetchCurve(emb: DataFrame, nQueries: Int = 10,
       k: Int = 5, factors: Seq[Int] = Seq(1, 2, 4, 8)): DataFrame = {
-    val withNorm = emb.select(
-      col("vec_id"), col("label"), col("embedding"),
-      norm(col("embedding")).as("nrm"))
-    val queries = withNorm
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("label").as("q_label"),
-        col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
-    val cand = withNorm.select(
-      col("vec_id").as("n_id"), col("label").as("n_label"),
-      col("embedding").as("n_emb"), col("nrm").as("n_nrm"))
-    val scored = cand
-      .join(broadcast(queries), col("q_id") =!= col("n_id"))
-      .withColumn("cos", dot(col("q_emb"), col("n_emb")) / (col("q_nrm") * col("n_nrm")))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-    val ranked = scored
-      .withColumn("rnk", row_number().over(w))
+    val (queries, cand) = exactSides(emb, nQueries, labels = true)
+    val ranked = rankPerQuery(cand.join(broadcast(queries), col("q_id") =!= col("n_id"))
+        .withColumn("cos", qnCos), "cos")
       .groupBy("q_id", "q_label")
       .agg(
         count(when(col("n_label") === col("q_label"), 1)).as("_pool"),
@@ -157,24 +134,25 @@ object Similarity {
           least(lit(k.toLong), col("_pool"))).as("recall"))
   }
 
+  /** Hard-negative mining for contrastive embedding training: for each of
+    * the `nQueries` lowest vec_ids, the `k` most-similar vectors whose
+    * `label` DIFFERS from the query's — the near-miss negatives that teach
+    * the margin (a random negative is trivially far; the hard ones sit
+    * just across the class boundary). The join predicate is the label
+    * mismatch itself, so same-label rows never reach scoring.
+    *
+    * Same shape as [[cosineTopK]]: the query set broadcasts, the corpus
+    * streams once through a codegen'd `ArrayDot`, and per-query top-k is
+    * a window rank over the per-query candidate stream. At 100 TB the
+    * production form swaps the exact scan for the IVF/LSH candidate path
+    * with the label filter applied to the probed lists — the mining
+    * predicate composes unchanged. */
   def hardNegatives(emb: DataFrame, nQueries: Int = 10, k: Int = 5): DataFrame = {
-    val withNorm = emb.select(
-      col("vec_id"), col("label"), col("embedding"), norm(col("embedding")).as("nrm"))
-    val queries = withNorm
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("label").as("q_label"),
-        col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
-    val cand = withNorm.select(
-      col("vec_id").as("n_id"), col("label").as("n_label"),
-      col("embedding").as("n_emb"), col("nrm").as("n_nrm"))
-    val scored = cand
-      .join(broadcast(queries), col("q_label") =!= col("n_label"))
-      .withColumn("cos", dot(col("q_emb"), col("n_emb")) / (col("q_nrm") * col("n_nrm")))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-    scored
-      .withColumn("rnk", row_number().over(w))
+    val (queries, cand) = exactSides(emb, nQueries, labels = true)
+    rankPerQuery(cand.join(broadcast(queries), col("q_label") =!= col("n_label"))
+        .withColumn("cos", qnCos), "cos")
       .filter(col("rnk") <= k)
-      .select(col("q_id"), col("q_label"), col("rnk").cast("long").as("rnk"),
+      .select(col("q_id"), col("q_label"), col("rnk"),
         col("n_id"), col("n_label"), col("cos").as("cos_sim"))
   }
 
@@ -202,15 +180,21 @@ object Similarity {
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_vecs"))
 
-  /** Rank all centroids per input vector by cosine (deterministic tie-break
-    * on c_id); ranks ≤ nProbe = probe set. Sort-window shape — use only on
-    * small inputs (the query set); assignment over the corpus goes through
-    * [[assignNearest]]. */
-  private def rankCentroids(vectors: DataFrame, centroids: DataFrame): DataFrame = {
-    val scored = vectors.join(broadcast(centroids), col("vec_id").isNotNull)
-      .withColumn("c_cos", dot(col("embedding"), col("c_emb")) / (col("nrm") * col("c_nrm")))
+  /** The IVF probe set: each query's `nProbe` nearest lists by cosine,
+    * ties to the smaller c_id. Sort-window shape over the query×centroid
+    * cross — use only on small inputs (the query set); assignment over the
+    * corpus goes through [[assignNearest]]. `queries` needs (vec_id,
+    * embedding); returns (q_id, embedding, nrm, list_id). */
+  private def probeLists(queries: DataFrame, centroids: DataFrame,
+      nProbe: Int): DataFrame = {
     val w = Window.partitionBy("vec_id").orderBy(col("c_cos").desc, col("c_id"))
-    scored.withColumn("c_rank", row_number().over(w))
+    queries.select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
+      .join(broadcast(centroids), col("vec_id").isNotNull)
+      .withColumn("c_cos", dot(col("embedding"), col("c_emb")) / (col("nrm") * col("c_nrm")))
+      .withColumn("c_rank", row_number().over(w))
+      .filter(col("c_rank") <= nProbe)
+      .select(col("vec_id").as("q_id"), col("embedding"), col("nrm"),
+        col("c_id").as("list_id"))
   }
 
   /** The centroid table folded to ONE sorted-array row (ascending c_id —
@@ -234,14 +218,17 @@ object Similarity {
     * that: a consumer that joins on `list_id` gets an inferred
     * `isnotnull(list_id)`, which lands in the same join condition
     * (`semDedupBanded`'s band self-join over its copy of this projection
-    * does: `isnotnull(nearest_centroid(…).c_id)` in its plan). Returns
-    * (vec_id, list_id, embedding, nrm). */
+    * does: `isnotnull(nearest_centroid(…).c_id)` in its plan). `vectors`
+    * needs `embedding` and `nrm`; returns its columns plus the winner's
+    * `list_id` and cosine `c_cos`. The only nearest-centroid assignment:
+    * Lloyd rounds, the IVF lists, incremental assignment, the cluster
+    * profile and SemDeDup all go through it. */
   private def assignNearest(vectors: DataFrame, centroids: DataFrame): DataFrame =
     vectors.crossJoin(broadcast(centArray(centroids)))
       .withColumn("_best", graft.functions.GraftFunctions.nearestCentroid(
         col("embedding"), col("nrm"), col("_cands")))
-      .select(col("vec_id"), col("_best.c_id").as("list_id"),
-        col("embedding"), col("nrm"))
+      .select(vectors.columns.toSeq.map(col) ++ Seq(
+        col("_best.c_id").as("list_id"), col("_best.c_cos").as("c_cos")): _*)
 
   /** Lloyd's k-means over the corpus, deterministically seeded with the
     * first `nLists` vectors. Each iteration: assign every vector to its
@@ -305,9 +292,11 @@ object Similarity {
 
   /** Build half of the IVF index: the k-means centroid table (tiny —
     * `nLists` rows) and the per-vector inverted-list assignment (one row per
-    * corpus vector). Centroids are scaffolded: their Lloyd rounds (an
-    * iterated-aggregation lineage every consumer would otherwise rebuild)
-    * run once, when the index is built.
+    * corpus vector: vec_id, embedding, nrm, list_id, c_cos). Centroids are
+    * scaffolded: their Lloyd rounds (an iterated-aggregation lineage every
+    * consumer would otherwise rebuild) run once, when the index is built.
+    * Every consumer that reads the centroids more than once trains them
+    * here.
     *
     * A real pipeline builds this ONCE and amortizes it across every probe
     * batch — that is [[ivfIndexWrite]] / [[ivfIndexLoad]]: written as
@@ -318,8 +307,9 @@ object Similarity {
     */
   def ivfIndexBuild(emb: DataFrame, nLists: Int = 16, kmeansIters: Int = 2): (DataFrame, DataFrame) = {
     val centroids = CacheLifecycle.scaffold(kmeansCentroids(emb, nLists, kmeansIters))
-    val withNorm = emb.select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
-    (centroids, assignNearest(withNorm, centroids))
+    (centroids, assignNearest(
+      emb.select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm")),
+      centroids))
   }
 
   /** Build the IVF index and write it under `path` (`centroids/` +
@@ -327,7 +317,8 @@ object Similarity {
   def ivfIndexWrite(emb: DataFrame, path: String, nLists: Int = 16, kmeansIters: Int = 2): Unit = {
     val (centroids, assigned) = ivfIndexBuild(emb, nLists, kmeansIters)
     centroids.write.mode("overwrite").parquet(s"$path/centroids")
-    assigned.write.mode("overwrite").partitionBy("list_id").parquet(s"$path/lists")
+    assigned.drop("c_cos").write.mode("overwrite").partitionBy("list_id")
+      .parquet(s"$path/lists")
   }
 
   /** Load a prebuilt IVF index written by [[ivfIndexWrite]]. */
@@ -343,18 +334,14 @@ object Similarity {
     *
     * Shape at 100 TB: the nLists-row centroid table folds to one sorted
     * array and broadcasts; the arrivals stream through ONE codegen'd
-    * argmax projection ([[assignNearest]]'s shape — no shuffle at all, an
-    * ingest batch can be arbitrarily large). Same cosine + tie-break
-    * (smaller c_id) as the build-time assignment, so the delta is exactly
-    * what a rebuild would have produced. */
+    * argmax projection ([[assignNearest]] — no shuffle at all, an ingest
+    * batch can be arbitrarily large). The build-time assignment itself, so
+    * the delta is exactly what a rebuild would have produced. */
   def ivfIncrementalAssign(newVecs: DataFrame, centroids: DataFrame): DataFrame =
-    newVecs
-      .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
-      .crossJoin(broadcast(centArray(centroids)))
-      .withColumn("_best", graft.functions.GraftFunctions.nearestCentroid(
-        col("embedding"), col("nrm"), col("_cands")))
-      .select(col("vec_id"), col("_best.c_id").as("list_id"),
-        col("_best.c_cos").as("cos_c"))
+    assignNearest(
+      newVecs.select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm")),
+      centroids)
+      .select(col("vec_id"), col("list_id"), col("c_cos").as("cos_c"))
 
   /** Per-cluster corpus profile over the deterministic k-means index — the
     * topic-distribution view a curation pass reads before deciding what to
@@ -378,16 +365,14 @@ object Similarity {
     * winner's own cosine — the identical double the rejoin recomputed. */
   def clusterProfile(emb: DataFrame, nLists: Int = 16, kmeansIters: Int = 2): DataFrame = {
     val q = 1048576.0 // 2^20
-    // consumed exactly once (the 1-row centArray fold) — no persist needed
-    val centroids = kmeansCentroids(emb, nLists, kmeansIters)
-    val member = emb
-      .select(col("vec_id"), col("label"), col("embedding"),
-        norm(col("embedding")).as("nrm"))
-      .crossJoin(broadcast(centArray(centroids)))
-      .withColumn("_best", graft.functions.GraftFunctions.nearestCentroid(
-        col("embedding"), col("nrm"), col("_cands")))
-      .select(col("vec_id"), col("label"), col("_best.c_id").as("list_id"),
-        floor(col("_best.c_cos") * lit(q)).cast("long").as("qcos"))
+    // the centroids are read exactly once (the 1-row centArray fold), so
+    // they are trained here, not through ivfIndexBuild's scaffold
+    val member = assignNearest(
+        emb.select(col("vec_id"), col("label"), col("embedding"),
+          norm(col("embedding")).as("nrm")),
+        kmeansCentroids(emb, nLists, kmeansIters))
+      .select(col("vec_id"), col("label"), col("list_id"),
+        floor(col("c_cos") * lit(q)).cast("long").as("qcos"))
     val byLabel = member.groupBy("list_id", "label")
       .agg(count(lit(1)).as("n"), sum("qcos").as("qsum"))
     byLabel.groupBy("list_id")
@@ -402,30 +387,25 @@ object Similarity {
         (col("_qall").cast("double") / (lit(q) * col("n_vecs"))).as("cohesion"))
   }
 
-  /** Probe half of IVF: rank centroids per query (sort-window over the tiny
-    * query×centroid cross — fine), keep the `nProbe` nearest lists, equality
-    * join into the inverted lists, score exactly, per-query top-`k`.
+  /** Probe half of IVF: the `nProbe` nearest lists per query
+    * ([[probeLists]]), equality join into the inverted lists, score
+    * exactly, per-query top-`k`.
     * `queries` needs (vec_id, embedding); `centroids`/`assigned` come from
     * [[ivfIndexBuild]] or [[ivfIndexLoad]] — with a loaded index the
     * `list_id` equality join prunes to the probed parquet partitions.
     */
   def ivfProbe(queries: DataFrame, centroids: DataFrame, assigned: DataFrame,
       nProbe: Int = 4, k: Int = 3): DataFrame = {
-    val qNorm = queries.select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
-    val probes = rankCentroids(qNorm, centroids)
-      .filter(col("c_rank") <= nProbe)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"), col("c_id").as("list_id"))
+    val probes = probeLists(queries, centroids, nProbe)
+      .select(col("q_id"), col("embedding").as("q_emb"), col("nrm").as("q_nrm"),
+        col("list_id"))
     val lists = assigned.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"),
       col("nrm").as("n_nrm"), col("list_id"))
-    val scored = probes.join(lists, "list_id")
-      .filter(col("q_id") =!= col("n_id"))
-      .withColumn("cos", dot(col("q_emb"), col("n_emb")) / (col("q_nrm") * col("n_nrm")))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-    scored
-      .withColumn("rnk", row_number().over(w))
+    rankPerQuery(probes.join(lists, "list_id")
+        .filter(col("q_id") =!= col("n_id"))
+        .withColumn("cos", qnCos), "cos")
       .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk").cast("long").as("rnk"), col("n_id"), col("cos").as("cos_sim"))
+      .select(col("q_id"), col("rnk"), col("n_id"), col("cos").as("cos_sim"))
   }
 
   /** Recall@k of the IVF probe against the brute-force exact top-k — the
@@ -476,8 +456,10 @@ object Similarity {
     * Returns every vector with its cluster, rank, max similarity to any
     * prior-ranked cluster-mate (−1 when first), and the kept verdict.
     *
-    * Scale shape: centroids broadcast; assignment is the one-shuffle
-    * `max_by` aggregation; the screen is a list_id-keyed self-join whose
+    * Scale shape: the index is [[ivfIndexBuild]]'s (centroids trained
+    * once behind its scaffold, then broadcast into the per-row argmax
+    * projection), so the three branches that read the ranked members never
+    * re-run the Lloyd rounds; the screen is a list_id-keyed self-join whose
     * cost is Σ|cluster|²/2 — SemDeDup's documented cost, CONTROLLED by
     * nLists (size k ∝ corpus/target-cluster-size at 100 TB so clusters
     * stay ~10⁴-10⁵ and the quadratic term stays per-cluster-bounded, with
@@ -519,16 +501,7 @@ object Similarity {
   private def semDedupImpl(
       emb: DataFrame, nLists: Int, eps: Double,
       kmeansIters: Int, band: Int): DataFrame = {
-    val cents = kmeansCentroids(emb, nLists, kmeansIters)
-    val withNorm = emb.select(
-      col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
-    // per-row argmax projection (round-17): same winner + cosine as the
-    // former broadcast-join + max_by aggregation, minus its corpus Exchange
-    val assigned = withNorm.crossJoin(broadcast(centArray(cents)))
-      .withColumn("_best", graft.functions.GraftFunctions.nearestCentroid(
-        col("embedding"), col("nrm"), col("_cands")))
-      .select(col("vec_id"), col("_best.c_id").as("list_id"),
-        col("embedding"), col("nrm"), col("_best.c_cos").as("c_cos"))
+    val (_, assigned) = ivfIndexBuild(emb, nLists, kmeansIters)
     val w = Window.partitionBy("list_id").orderBy(col("c_cos").asc, col("vec_id"))
     val memb = assigned.withColumn("rnk", row_number().over(w))
     val pairs =
@@ -771,14 +744,11 @@ object Similarity {
       .filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("qvec").as("q_q"), col("qnrm").as("q_nrm"))
     val cand = q.select(col("vec_id").as("n_id"), col("qvec").as("n_q"), col("qnrm").as("n_nrm"))
-    val scored = cand
-      .join(broadcast(queries), col("q_id") =!= col("n_id"))
-      .withColumn("cos_q", dot(col("q_q"), col("n_q")) / (col("q_nrm") * col("n_nrm")))
-    val w = Window.partitionBy("q_id").orderBy(col("cos_q").desc, col("n_id"))
-    scored
-      .withColumn("rnk", row_number().over(w))
+    rankPerQuery(cand.join(broadcast(queries), col("q_id") =!= col("n_id"))
+        .withColumn("cos_q", dot(col("q_q"), col("n_q")) / (col("q_nrm") * col("n_nrm"))),
+        "cos_q")
       .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk").cast("long").as("rnk"), col("n_id"), col("cos_q"))
+      .select(col("q_id"), col("rnk"), col("n_id"), col("cos_q"))
   }
 
   /** Add `qscale`/`qvec`/`qnrm` int8-quantization columns to any frame
@@ -824,19 +794,15 @@ object Similarity {
     val lists = withQuantized(assigned)
       .select(col("vec_id").as("n_id"), col("list_id"),
         col("qvec").as("n_q"), col("qnrm").as("n_qnrm"))
-    val qNorm = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
-    val probes = withQuantized(rankCentroids(qNorm, centroids).filter(col("c_rank") <= nProbe))
-      .select(col("vec_id").as("q_id"), col("c_id").as("list_id"),
-        col("qvec").as("q_q"), col("qnrm").as("q_qnrm"))
-    val scored = lists.join(broadcast(probes), Seq("list_id"))
-      .filter(col("q_id") =!= col("n_id"))
-      .withColumn("cos_q", dot(col("q_q"), col("n_q")) / (col("q_qnrm") * col("n_qnrm")))
-    val w = Window.partitionBy("q_id").orderBy(col("cos_q").desc, col("n_id"))
-    scored
-      .withColumn("rnk", row_number().over(w))
+    val probes = withQuantized(
+        probeLists(emb.filter(col("vec_id") < nQueries), centroids, nProbe))
+      .select(col("q_id"), col("list_id"), col("qvec").as("q_q"), col("qnrm").as("q_qnrm"))
+    rankPerQuery(lists.join(broadcast(probes), Seq("list_id"))
+        .filter(col("q_id") =!= col("n_id"))
+        .withColumn("cos_q", dot(col("q_q"), col("n_q")) / (col("q_qnrm") * col("n_qnrm"))),
+        "cos_q")
       .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk").cast("long").as("rnk"), col("n_id"), col("cos_q"))
+      .select(col("q_id"), col("rnk"), col("n_id"), col("cos_q"))
   }
 
   /** Write the packed int8 code index under `path`: (vec_id, scale, code)
@@ -868,14 +834,11 @@ object Similarity {
       .filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("code").as("q_c"), col("qnrm").as("q_nrm"))
     val cand = withNrm.select(col("vec_id").as("n_id"), col("code").as("n_c"), col("qnrm").as("n_nrm"))
-    val scored = cand
-      .join(broadcast(queries), col("q_id") =!= col("n_id"))
-      .withColumn("cos_q", dot8(col("q_c"), col("n_c")) / (col("q_nrm") * col("n_nrm")))
-    val w = Window.partitionBy("q_id").orderBy(col("cos_q").desc, col("n_id"))
-    scored
-      .withColumn("rnk", row_number().over(w))
+    rankPerQuery(cand.join(broadcast(queries), col("q_id") =!= col("n_id"))
+        .withColumn("cos_q", dot8(col("q_c"), col("n_c")) / (col("q_nrm") * col("n_nrm"))),
+        "cos_q")
       .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk").cast("long").as("rnk"), col("n_id"), col("cos_q"))
+      .select(col("q_id"), col("rnk"), col("n_id"), col("cos_q"))
   }
 
   /** Recall of the quantized top-`k` against the exact float top-`k` — the
@@ -924,24 +887,12 @@ object Similarity {
     * float cosine. The corpus is read, never shuffled. */
   private def rescoreExact(emb: DataFrame, coarse: DataFrame,
       nQueries: Int, k: Int): DataFrame = {
-    val withNorm = emb.select(
-      col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
-    val queries = withNorm
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
-    val cand = withNorm.select(
-      col("vec_id").as("n_id"), col("embedding").as("n_emb"), col("nrm").as("n_nrm"))
-    val scored = cand
-      .join(broadcast(coarse), "n_id")
-      .join(broadcast(queries), "q_id")
-      .withColumn("cos_exact",
-        dot(col("q_emb"), col("n_emb")) / (col("q_nrm") * col("n_nrm")))
-    val w = Window.partitionBy("q_id").orderBy(col("cos_exact").desc, col("n_id"))
-    scored
-      .withColumn("rnk", row_number().over(w))
+    val (queries, cand) = exactSides(emb, nQueries, labels = false)
+    rankPerQuery(cand.join(broadcast(coarse), "n_id")
+        .join(broadcast(queries), "q_id")
+        .withColumn("cos_exact", qnCos), "cos_exact")
       .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk").cast("long").as("rnk"), col("n_id"),
-        col("cos_exact"), col("coarse_rnk"))
+      .select(col("q_id"), col("rnk"), col("n_id"), col("cos_exact"), col("coarse_rnk"))
   }
 
   /** PQ-then-rerank — the recall-repair composition PQ serving actually
@@ -960,15 +911,6 @@ object Similarity {
         .select(col("q_id"), col("n_id"), col("rnk").as("coarse_rnk")),
       nQueries, k)
 
-  /** IVF recall-vs-nProbe sweep — the tuning curve read before fixing the
-    * probe count: total exact-top-k hits (and pooled recall) at each probe
-    * setting, over ONE index build. The index (centroids + assignment) is
-    * scaffolded and the exact baseline's exchange is reused by every probe
-    * setting, so the sweep costs one k-means + |probes| cheap probe joins
-    * instead of |probes| full index builds.
-    *
-    * Pooled recall = Σ hits / (nQueries·k) — integer sums, one exact
-    * division (per-query recall already exists as `ann_ivf_recall`). */
   /** Matryoshka truncation sweep — the embedding-width tradeoff curve
     * (Kusupati et al. 2022's MRL serving trick: score on a PREFIX of the
     * embedding, cutting memory traffic proportionally): pooled recall of
@@ -994,6 +936,15 @@ object Similarity {
         col("n_hits").cast("double") / lit((nQueries * k).toDouble))
   }
 
+  /** IVF recall-vs-nProbe sweep — the tuning curve read before fixing the
+    * probe count: total exact-top-k hits (and pooled recall) at each probe
+    * setting, over ONE index build. The index (centroids + assignment) is
+    * scaffolded and the exact baseline's exchange is reused by every probe
+    * setting, so the sweep costs one k-means + |probes| cheap probe joins
+    * instead of |probes| full index builds.
+    *
+    * Pooled recall = Σ hits / (nQueries·k) — integer sums, one exact
+    * division (per-query recall already exists as `ann_ivf_recall`). */
   def ivfProbeCurve(emb: DataFrame, nLists: Int = 16,
       probes: Seq[Int] = Seq(1, 2, 4, 8), nQueries: Int = 10, k: Int = 3,
       kmeansIters: Int = 2): DataFrame = {
@@ -1249,14 +1200,11 @@ object Similarity {
       m: Int, nQueries: Int, k: Int): DataFrame = {
     val codes = codesIn
       .select(col("vec_id").as("n_id"), col("codes"), col("r_nrm"))
-    val scored = codes.join(broadcast(pqLutsFolded(emb, cbA, m, nQueries)),
+    rankPerQuery(codes.join(broadcast(pqLutsFolded(emb, cbA, m, nQueries)),
         col("q_id") =!= col("n_id"))
-      .withColumn("cos_pq", adcScore(m))
-    val w = Window.partitionBy("q_id").orderBy(col("cos_pq").desc, col("n_id"))
-    scored
-      .withColumn("rnk", row_number().over(w))
+        .withColumn("cos_pq", adcScore(m)), "cos_pq")
       .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk").cast("long").as("rnk"), col("n_id"), col("cos_pq"))
+      .select(col("q_id"), col("rnk"), col("n_id"), col("cos_pq"))
   }
 
   /** Per-query ADC lookup tables: one row per query `(q_id, q_nrm, lut)`
@@ -1312,40 +1260,37 @@ object Similarity {
   def ivfPqTopK(emb: DataFrame, nLists: Int = 16, nProbe: Int = 4,
       m: Int = 8, kSub: Int = 32, nQueries: Int = 10, k: Int = 5,
       kmeansIters: Int = 2, pqIters: Int = 2): DataFrame = {
-    val (centroids, _) = ivfIndexBuild(emb, nLists, kmeansIters)
+    val (centroids, assigned) = ivfIndexBuild(emb, nLists, kmeansIters)
     // one scaffolded FOLD of the trained codebooks, shared by the fused
     // list build and the LUT build (round-18 fold dedup)
     val cbA = CacheLifecycle.scaffold(cbArray(pqCodebooks(emb, m, kSub, pqIters)))
     // FUSED list build (round-17): the coarse assignment and the PQ encode
-    // are both per-row projections now, so computing them in ONE pass over
-    // the corpus replaces the former assigned ⋈ pqEncode corpus self-join
-    // on vec_id (row-identical: both sides were deterministic per-row
-    // functions of the same scan)
-    val lists = emb
-      .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
-      .crossJoin(broadcast(centArray(centroids)))
+    // are both per-row projections, so the encode rides the assignment's
+    // ONE pass over the corpus instead of an assigned ⋈ pqEncode corpus
+    // self-join on vec_id
+    val lists = assigned
       .crossJoin(broadcast(cbA))
-      .withColumn("_best", graft.functions.GraftFunctions.nearestCentroid(
-        col("embedding"), col("nrm"), col("_cands")))
       .withColumn("_bc", graft.functions.GraftFunctions.pqBestCodes(
         col("embedding"), col("_cb"), m))
-      .select(col("vec_id").as("n_id"), col("_best.c_id").as("list_id"),
-        col("_bc.codes").as("codes"),
+      .select(col("vec_id").as("n_id"), col("list_id"), col("_bc.codes").as("codes"),
         greatest(sqrt(col("_bc.dotsum")), lit(1e-300)).as("r_nrm"))
-    val qNorm = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
-    val probes = rankCentroids(qNorm, centroids)
-      .filter(col("c_rank") <= nProbe)
-      .select(col("vec_id").as("q_id"), col("c_id").as("list_id"))
+    ivfAdcTopK(emb, centroids, cbA, lists, m, nProbe, nQueries, k)
+  }
+
+  /** The IVF-PQ scoring stage shared by [[ivfPqTopK]] and
+    * [[ivfPqPersistedTopK]]: each query's probe lists ([[probeLists]])
+    * carry its LUT into the equality join with `lists` (n_id, list_id,
+    * codes, r_nrm), candidates score by ADC lookups, per-query top-`k`. */
+  private def ivfAdcTopK(emb: DataFrame, centroids: DataFrame, cbA: DataFrame,
+      lists: DataFrame, m: Int, nProbe: Int, nQueries: Int, k: Int): DataFrame = {
+    val probes = probeLists(emb.filter(col("vec_id") < nQueries), centroids, nProbe)
+      .select(col("q_id"), col("list_id"))
       .join(broadcast(pqLutsFolded(emb, cbA, m, nQueries)), "q_id")
-    val scored = lists.join(broadcast(probes), Seq("list_id"))
-      .filter(col("q_id") =!= col("n_id"))
-      .withColumn("cos_pq", adcScore(m))
-    val w = Window.partitionBy("q_id").orderBy(col("cos_pq").desc, col("n_id"))
-    scored
-      .withColumn("rnk", row_number().over(w))
+    rankPerQuery(lists.join(broadcast(probes), Seq("list_id"))
+        .filter(col("q_id") =!= col("n_id"))
+        .withColumn("cos_pq", adcScore(m)), "cos_pq")
       .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk").cast("long").as("rnk"), col("n_id"), col("cos_pq"))
+      .select(col("q_id"), col("rnk"), col("n_id"), col("cos_pq"))
   }
 
   /** Write the PQ index under `path`: `codebooks/` (m·kSub tiny rows) and
@@ -1392,20 +1337,7 @@ object Similarity {
     val listCodes = lists.select(col("vec_id"), col("list_id"))
       .join(codes, "vec_id")
       .select(col("vec_id").as("n_id"), col("list_id"), col("codes"), col("r_nrm"))
-    val qNorm = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
-    val probes = rankCentroids(qNorm, centroids)
-      .filter(col("c_rank") <= nProbe)
-      .select(col("vec_id").as("q_id"), col("c_id").as("list_id"))
-      .join(broadcast(pqLutsFolded(emb, cbArray(cb), m, nQueries)), "q_id")
-    val scored = listCodes.join(broadcast(probes), Seq("list_id"))
-      .filter(col("q_id") =!= col("n_id"))
-      .withColumn("cos_pq", adcScore(m))
-    val w = Window.partitionBy("q_id").orderBy(col("cos_pq").desc, col("n_id"))
-    scored
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk").cast("long").as("rnk"), col("n_id"), col("cos_pq"))
+    ivfAdcTopK(emb, centroids, cbArray(cb), listCodes, m, nProbe, nQueries, k)
   }
 
   /** Recall of the PQ/ADC top-`k` against the exact float top-`k` — the

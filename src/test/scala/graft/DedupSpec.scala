@@ -976,7 +976,7 @@ class DedupSpec extends SparkSpec {
     val pairs = (1L until 64L).map(i => (i, i + 1)).toDF("a_id", "b_id")
     val docs = (1L to 64L).toDF("doc_id")
     val out = graft.llm.Clusters.assignStars(
-      docs, graft.llm.Clusters.contract(pairs, 20, None, finishEdges = 0)._1).collect()
+      docs, graft.llm.Clusters.contract(pairs, finishEdges = 0)._1).collect()
     assert(out.length === 64)
     assert(out.forall(r => r.getLong(1) == 1L && r.getLong(2) == 64L))
   }
@@ -986,10 +986,14 @@ class DedupSpec extends SparkSpec {
     // ~127 rounds; alternating stars must land well inside 2·log2(128)+2.
     val pairs = (1L until 128L).map(i => (i, i + 1)).toDF("a_id", "b_id")
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    // the checkpoint directory belongs to the context every suite shares:
+    // set it for the reliable runs only, and unset it after each
+    def run[T](reliable: Boolean)(body: => T): T =
+      if (reliable) org.apache.spark.CheckpointDir.during(spark.sparkContext, dir)(body)
+      else body
     // finishEdges = 0: the star loop runs, not the one-task finish
-    for (ckpt <- Seq(None, Some(dir))) {
-      val (stars, rounds) = graft.llm.Clusters.contract(
-        pairs, maxIter = 20, checkpointDir = ckpt, finishEdges = 0)
+    for (ckpt <- Seq(false, true)) run(ckpt) {
+      val (stars, rounds) = graft.llm.Clusters.contract(pairs, finishEdges = 0)
       assert(rounds <= 16, s"chain must collapse in O(log n) rounds, took $rounds (ckpt=$ckpt)")
       // final graph is a star: every node points at root 1
       val edges = stars.collect().map(r => (r.getLong(0), r.getLong(1))).sorted
@@ -1001,12 +1005,14 @@ class DedupSpec extends SparkSpec {
     assert(wrote > 0, "reliable checkpoint must persist round blocks to the dir")
     // at the default bound the chain is small: the one-task union-find
     // finish returns the same star edges without a contraction round
-    for (ckpt <- Seq(None, Some(dir))) {
-      val (stars, rounds) = graft.llm.Clusters.starEdgesWithRounds(pairs, checkpointDir = ckpt)
+    for (ckpt <- Seq(false, true)) run(ckpt) {
+      val (stars, rounds) = graft.llm.Clusters.starEdgesWithRounds(pairs)
       assert(rounds === 0, s"a graph under the edge bound runs no star round (ckpt=$ckpt)")
       assert(stars.collect().map(r => (r.getLong(0), r.getLong(1))).sorted ===
         (2L to 128L).map(i => (i, 1L)).toArray, s"ckpt=$ckpt")
     }
+    assert(spark.sparkContext.getCheckpointDir.isEmpty,
+      "the shared session must be left with no checkpoint directory")
   }
 
   test("connected components: one-task finish and star loop return identical rows") {
@@ -1043,7 +1049,7 @@ class DedupSpec extends SparkSpec {
         out.orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
       // the graph is no star forest (the loop needs rounds), so a 0-round
       // result at the default bound is the finish's
-      val (loopStars, loopRounds) = graft.llm.Clusters.contract(pairs, 20, None, finishEdges = 0)
+      val (loopStars, loopRounds) = graft.llm.Clusters.contract(pairs, finishEdges = 0)
       assert(loopRounds > 0, s"seed $seed")
       assert(graft.llm.Clusters.starEdgesWithRounds(pairs)._2 === 0, s"seed $seed: finish path")
       val loop = rows(graft.llm.Clusters.assignStars(docs, loopStars))
@@ -1074,8 +1080,8 @@ class DedupSpec extends SparkSpec {
       (for (a <- q; b <- q if a < b) yield (a, b)) ++ (if (c > 0) Seq((5 * c - 1, 5 * c)) else Nil)
     }
     val pairs = cliques.toDF("a_id", "b_id")
-    val (loopStars, loopRounds) = graft.llm.Clusters.contract(pairs, 20, None, finishEdges = 0)
-    val (stars, rounds) = graft.llm.Clusters.contract(pairs, 20, None, finishEdges = cliques.size - 1)
+    val (loopStars, loopRounds) = graft.llm.Clusters.contract(pairs, finishEdges = 0)
+    val (stars, rounds) = graft.llm.Clusters.contract(pairs, finishEdges = cliques.size - 1)
     assert(rounds === 1 && loopRounds > 1, s"finish after $rounds rounds, loop took $loopRounds")
     def edges(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted

@@ -845,6 +845,18 @@ class PipelineOpsSpec extends SparkSpec {
       out.queryExecution.executedPlan.treeString)
   }
 
+  test("semDedupBanded: the Lloyd rounds run once, behind the centroid scaffold") {
+    val out = Similarity.semDedupBanded(
+      graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001"))
+    out.collect()
+    // each Lloyd round's mean explodes every vector into its components;
+    // trained through ivfIndexBuild, those rounds sit behind a checkpoint
+    // and the final plan keeps only the band join's two-block explode
+    val gens = graft.testutil.PlanNodes.generators(out)
+    assert(gens.contains("explode"), gens)
+    assert(!gens.contains("posexplode"), out.queryExecution.executedPlan.treeString)
+  }
+
   test("pathTopK: 3-step windows per user, counts weight repeats, rank total order") {
     // u1 timeline: a b a b -> paths (a,b,a), (b,a,b); u2: a b a -> (a,b,a)
     val events = Seq(

@@ -1,16 +1,18 @@
 package graft.testutil
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 
-/** The nodes of an executed plan, for the no-broadcast contract: a
-  * multi-column broadcast key holds a full `spark.buffer.pageSize` page of
-  * heap however few rows it has ([[graft.operators.BandJoin]]). Run an
-  * action on the frame first, so AQE's plan is the final one. */
+/** The nodes of an executed plan, for plan-shape contracts: the
+  * no-broadcast one (a multi-column broadcast key holds a full
+  * `spark.buffer.pageSize` page of heap however few rows it has,
+  * [[graft.operators.BandJoin]]) and what runs above a scaffold (a
+  * checkpointed subtree is a leaf here). Run an action on the frame first,
+  * so AQE's plan is the final one. */
 object PlanNodes {
 
   /** Every node: AQE's current plan, its query stages, subqueries and the
@@ -39,4 +41,9 @@ object PlanNodes {
     * each builds a full page. */
   def multiKeyBroadcastJoins(df: DataFrame): Seq[BroadcastHashJoinExec] =
     executed(df).collect { case j: BroadcastHashJoinExec if j.leftKeys.size > 1 => j }
+
+  /** The generator of each `GenerateExec` node of `df`'s plan, by name
+    * (`explode`, `posexplode`, ...). */
+  def generators(df: DataFrame): Seq[String] =
+    executed(df).collect { case g: GenerateExec => g.generator.prettyName }
 }
